@@ -1,4 +1,4 @@
-"""Release helper for checkpointed frames (r14).
+"""BSP loop scope and release helpers for checkpointed frames.
 
 ``DataFrame.unpersist()`` only removes catalog-cached queries; the blocks
 behind ``localCheckpoint`` (eager or lazy) register as *persistent RDDs*
@@ -17,15 +17,27 @@ CAUTION: a locally-checkpointed RDD's lineage is truncated — its blocks
 cannot be recomputed after release. Only release a frame once every
 frame derived from it has materialized (the kernels' "one round behind"
 discipline).
+
+``bsp`` is the one place the iterative GDS kernels get their superstep
+template from: static plan and loop width, pinned edge layouts, the
+state-side join, release one round behind, the checkpoint/probe fixpoint
+and cleanup on exit (see ``BSPLoop``).
 """
 
 from __future__ import annotations
 
 import math
-import os
 from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Bytes of edge frame per loop partition. Deliberately smaller than AQE's
+# 64 MB advisory: AQE coalescing only resizes a post-shuffle reduce side,
+# while the loop width also carries the whole superstep's join compute over
+# the co-partitioned edge cache (measured sf0.1: pagerank needs ≥4 even
+# though its edge cache is ~53 MiB; 64 MB would pick 1 and run 2× slower).
+LOOP_TARGET_PARTITION_BYTES = 8 << 20
 
 
 def _loop_width(spark: SparkSession, sized_by: DataFrame | None) -> int:
@@ -36,19 +48,15 @@ def _loop_width(spark: SparkSession, sized_by: DataFrame | None) -> int:
     the session's full ``spark.sql.shuffle.partitions`` — a constant tuned
     for the whole cluster, paying ~width empty tasks per round on small
     graphs. Re-derive the width the way AQE's coalescing would: enough
-    partitions to keep each at the advisory size, floored at the ceiling
-    of ``defaultParallelism`` (the loop's join compute runs over the
-    co-partitioned edge cache, so width is also its parallelism), capped
-    at the session setting so a cluster-tuned config is never exceeded.
-    ``sized_by`` is the kernel's edge frame — the one large input every
-    per-round join streams through. Sizing uses Catalyst's estimate for
-    that frame (same signal AQE plans from); unknown/huge estimates hit
-    the cap, so at the 100 TB target this is a no-op.
+    partitions to keep each at ``LOOP_TARGET_PARTITION_BYTES``, at least
+    1, capped at the session setting so a cluster-tuned config is never
+    exceeded. ``sized_by`` is the kernel's edge frame — the one large
+    input every per-round join streams through. Sizing uses Catalyst's
+    estimate for that frame (same signal AQE plans from); ``None`` and
+    unknown/huge estimates hit the cap, so at the 100 TB target this is a
+    no-op.
     """
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    forced = os.environ.get("SPARK_GRAFT_LOOP_PARTS", "")
-    if forced:
-        return max(1, int(forced))
     if sized_by is None:
         return cap
     try:
@@ -57,21 +65,7 @@ def _loop_width(spark: SparkSession, sized_by: DataFrame | None) -> int:
         )
         # py4j converts scala.math.BigInt to int when it fits; be defensive.
         size = raw if isinstance(raw, int) else int(str(raw))
-        # Deliberately smaller than AQE's 64 MB advisory: AQE coalescing
-        # only resizes a post-shuffle reduce side, while this width also
-        # carries the whole superstep's join compute over the
-        # co-partitioned edge cache (measured sf0.1: pagerank needs ≥4
-        # even though its edge cache is ~53 MiB; 64 MB would pick 1 and
-        # run 2× slower).
-        target = int(
-            spark.conf.get(
-                "spark.graft.loop.targetPartitionBytes", str(8 << 20)
-            )
-        )
-        width = max(min(math.ceil(size / target), cap), 1)
-        if os.environ.get("SPARK_GRAFT_LOOP_DEBUG"):
-            print(f"[loop_width] size={size} width={width} cap={cap}")
-        return width
+        return max(min(math.ceil(size / LOOP_TARGET_PARTITION_BYTES), cap), 1)
     except Exception:  # noqa: BLE001 - sizing is best-effort
         return cap
 
@@ -112,8 +106,8 @@ def static_loop_plan(spark: SparkSession, sized_by: DataFrame | None = None):
     constant — every ``repartition(key)``/``groupBy`` inside the body
     resolves its width from it at plan time, so the state↔edge
     co-partitioning (and the zero-exchange rounds) hold at ANY width.
-    Kernels with multiplicative per-round state (betweenness, closeness,
-    CELF) pass no ``sized_by`` and keep the session width."""
+    Kernels with multiplicative per-round state (betweenness, closeness)
+    pass no ``sized_by`` and keep the session width."""
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -125,6 +119,134 @@ def static_loop_plan(spark: SparkSession, sized_by: DataFrame | None = None):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+
+
+class BSPLoop:
+    """The superstep template one ``bsp`` scope owns (Pregelix-shaped:
+    state ⋈ edges → group-by → convergence check, physical choices made
+    once). Every frame the kernel caches or checkpoints goes through the
+    scope, which is what lets it free them on exit:
+
+    - normal exit frees the pinned frames and every checkpoint the frames
+      passed to ``result`` do not read (superseded states, scratch levels);
+    - an exception frees all of them, so a failed call leaves nothing
+      pinned on a shared session.
+    """
+
+    def __init__(self) -> None:
+        self._pinned: list[DataFrame] = []
+        self._ckpts: list[DataFrame] = []
+        self._kept: list[DataFrame] = []
+        self._chains: dict[str, DataFrame] = {}
+        self.converged = False
+
+    def pin(self, frame: DataFrame, key: str | None = None) -> DataFrame:
+        """``repartition(key).cache()`` a frame every round reads (just
+        ``cache()`` without a key); freed on exit."""
+        out = (frame if key is None else frame.repartition(key)).cache()
+        self._pinned.append(out)
+        return out
+
+    def ckpt(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        """``localCheckpoint`` — the superstep barrier that truncates
+        lineage (plan depth would otherwise grow with every round)."""
+        out = df.localCheckpoint(eager=eager)
+        self._ckpts.append(out)
+        return out
+
+    @staticmethod
+    def join(
+        state: DataFrame, edges: DataFrame, key: str = "id", edge_key: str = "src"
+    ) -> DataFrame:
+        """The superstep join, state side hinted ``shuffle_hash``.
+
+        A checkpoint-derived state has no size stats, so the planner would
+        otherwise broadcast the cached EDGE frame — a fresh |E|-row
+        BroadcastExchange every round. The state is hash(key)-partitioned
+        by last round's groupBy (``localCheckpoint`` preserves it) and the
+        pinned edges by ``repartition(edge_key)``, so a ShuffledHashJoin
+        that builds over the state streams the edges in place with no
+        exchange on either side (see ``static_loop_plan``)."""
+        return state.hint("shuffle_hash").join(edges, state[key] == edges[edge_key])
+
+    def advance(self, new: DataFrame, chain: str = "state") -> DataFrame:
+        """Make ``new`` the chain's current state and release the state it
+        supersedes, one round behind. Call only after the action that
+        materializes ``new``: until then a lazy checkpoint still reads its
+        predecessor's blocks."""
+        release(self._chains.get(chain))
+        self._chains[chain] = new
+        return new
+
+    def fixpoint(
+        self,
+        state: DataFrame,
+        update: Callable[[DataFrame], DataFrame],
+        max_iter: int,
+        flag: str,
+    ) -> DataFrame:
+        """Iterate ``state ← checkpoint(update(state))`` until no row of the
+        new state has ``flag`` set, at most ``max_iter`` rounds.
+
+        One job per round: the eager checkpoint materializes through a
+        plain RDD job and the probe is an exchange-free ``take(1)`` over
+        the flag filter (A/B-measured faster than a lazy checkpoint whose
+        ``count()`` adds an aggregate exchange per round). Sets
+        ``converged`` when the probe, not the cap, ended the loop."""
+        state = self.advance(self.ckpt(state))
+        for _ in range(max_iter):
+            state = self.ckpt(update(state))
+            done = state.where(flag).isEmpty()
+            self.advance(state)
+            if done:
+                self.converged = True
+                break
+        return state
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Mark ``df`` as returned: the checkpoints it reads outlive the
+        scope (the caller owns them)."""
+        self._kept.append(df)
+        return df
+
+    def _close(self, ok: bool) -> None:
+        for frame in self._pinned:
+            release(frame)
+        kept = {r.id() for df in self._kept for r in _checkpoint_rdds(df)} if ok else set()
+        for df in self._ckpts:
+            if not any(r.id() in kept for r in _checkpoint_rdds(df)):
+                release(df)
+
+
+@contextmanager
+def bsp(edges: DataFrame, sized: bool = True) -> Iterator[BSPLoop]:
+    """Run a BSP kernel body under ``static_loop_plan`` with a ``BSPLoop``.
+
+    ``sized=False`` keeps the session width, for kernels whose per-round
+    state is multiplicative (source × node rows), which the edge frame
+    undersizes."""
+    loop = BSPLoop()
+    with static_loop_plan(edges.sparkSession, sized_by=edges if sized else None):
+        try:
+            yield loop
+        except BaseException:
+            loop._close(ok=False)
+            raise
+        loop._close(ok=True)
+
+
+def _checkpoint_rdds(df: DataFrame) -> list:
+    """The RDD of every checkpointed (``LogicalRDD``) leaf of ``df``."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+        rdds = []
+        while leaves.hasNext():
+            leaf = leaves.next()
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                rdds.append(leaf.rdd())
+        return rdds
+    except Exception:  # noqa: BLE001 - plan inspection is best-effort
+        return []
 
 
 def release(df: DataFrame | None) -> None:
@@ -156,12 +278,8 @@ def release_deep(df: DataFrame | None) -> None:
     frames whose whole derivation chain is private and fully consumed."""
     if df is None:
         return
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        it = leaves.iterator()
-        while it.hasNext():
-            leaf = it.next()
-            if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 - releasing is best-effort
-        pass
+    for rdd in _checkpoint_rdds(df):
+        try:
+            rdd.unpersist(False)
+        except Exception:  # noqa: BLE001 - releasing is best-effort
+            pass

@@ -1,16 +1,26 @@
 """Graph algorithms (the reference surface's gds.* — SURVEY.md §2.B.10).
 
 BSP-on-DataFrames design: every iterative algorithm is a driver-side loop
-over a small state DataFrame (id → value) with ``localCheckpoint(eager)``
-each round to truncate lineage (without it, plan depth grows linearly and
-the optimizer re-walks the whole history every iteration). Convergence
-checks are aggregated scalars (``isEmpty``/``count``) — never a collect of
-data rows.
+over a small state DataFrame (id → value) with ``localCheckpoint`` each
+round to truncate lineage (without it, plan depth grows linearly and the
+optimizer re-walks the whole history every iteration). Convergence checks
+are aggregated scalars or exchange-free ``isEmpty`` probes — never a
+collect of data rows.
+
+The superstep template lives in one place, ``_mem.bsp``: the loop body
+runs under the static planner at a width derived from the edge frame's
+size; the edge frame is pinned once in the partitioning of the per-round
+join key; each round joins the ``shuffle_hash``-hinted state side against
+it (the state is hash(id)-partitioned by last round's groupBy, so neither
+side is exchanged), aggregates by node id and checkpoints; the state one
+round behind is released once the new one has materialized, and on exit
+(including on error) the scope frees every pinned frame and every
+checkpoint the result does not read. ``BSPLoop.fixpoint`` is the
+checkpoint + flag-probe loop most label/frontier kernels share.
 
 Scale notes (100 TB):
-- state frames are (id, value) — tiny next to the edge set; the edge frame
-  is re-joined each round and Catalyst/AQE picks the join strategy, with
-  the state side broadcast while it fits;
+- state frames are (id, value) — tiny next to the edge set, which never
+  moves after it is pinned;
 - each BSP round is one shuffle on the node id (groupBy min/sum) — the
   textbook Pregel cost model;
 - triangle counting / node similarity are bounded block joins (co-group by
@@ -27,14 +37,22 @@ from ..localframe import local_df
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._mem import bsp
 from ._mem import release as _release
 from ._mem import release_deep as _release_deep
-from ._mem import static_loop_plan as _static_plan
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
     """Materialize + truncate lineage (the BSP superstep barrier)."""
     return df.localCheckpoint(eager=True)
+
+
+def _improved(state: DataFrame, *cols: str) -> DataFrame:
+    """Frontier of a relaxation fixpoint: the whole seed in round 1, then
+    the rows last round's merge flagged ``_imp``."""
+    if "_imp" not in state.columns:
+        return state
+    return state.where("_imp").select("id", *cols)
 
 
 def undirect(edges: DataFrame) -> DataFrame:
@@ -57,47 +75,35 @@ def bfs(
 
     ``sources``: DataFrame with an ``id`` column (dist 0 seeds).
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _bfs_body(edges, sources, max_depth, undirected)
-
-
-def _bfs_body(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_depth: int,
-    undirected: bool,
-) -> DataFrame:
-    e = (undirect(edges) if undirected else edges.select("src", "dst")).repartition("src").cache()
-    frontier = _ckpt(sources.select("id").distinct())
-    # One checkpoint per level (the frontier); `visited` and the result stay
-    # lazy unions of the already-materialized levels, so each superstep
-    # materializes only the new frontier instead of frontier + full dist.
-    levels = [frontier.select("id", F.lit(0).cast("long").alias("dist"))]
-    visited = frontier
-    for depth in range(1, max_depth + 1):
-        # (r14 note: a lazy-checkpoint + count() fusion was A/B-measured
-        # SLOWER here — the count adds a partial/final aggregate exchange
-        # per level, while the eager checkpoint materializes through a
-        # plain RDD job and isEmpty is an exchange-free take(1).)
-        # shuffle_hash on the frontier side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per level.
-        nxt = (
-            frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-        )
-        nxt = _ckpt(nxt)
-        if nxt.isEmpty():
-            break
-        levels.append(nxt.select("id", F.lit(depth).cast("long").alias("dist")))
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    _release(e)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    with bsp(edges) as loop:
+        e = loop.pin(undirect(edges) if undirected else edges.select("src", "dst"), "src")
+        frontier = loop.ckpt(sources.select("id").distinct())
+        # One checkpoint per level (the frontier); `visited` and the result
+        # stay lazy unions of the already-materialized levels, so each
+        # superstep materializes only the new frontier instead of frontier +
+        # full dist.
+        levels = [frontier.select("id", F.lit(0).cast("long").alias("dist"))]
+        visited = frontier
+        for depth in range(1, max_depth + 1):
+            # (r14 note: a lazy-checkpoint + count() fusion was A/B-measured
+            # SLOWER here — the count adds a partial/final aggregate exchange
+            # per level, while the eager checkpoint materializes through a
+            # plain RDD job and isEmpty is an exchange-free take(1).)
+            nxt = loop.ckpt(
+                loop.join(frontier, e)
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(visited, "id", "left_anti")
+            )
+            if nxt.isEmpty():
+                break
+            levels.append(nxt.select("id", F.lit(depth).cast("long").alias("dist")))
+            visited = visited.unionByName(nxt)
+            frontier = nxt
+        out = levels[0]
+        for lv in levels[1:]:
+            out = out.unionByName(lv)
+        return loop.result(out)
 
 
 def sssp(
@@ -117,67 +123,37 @@ def sssp(
     detection pass need the distinction (a bound-stopped run still has
     improvable nodes on perfectly cycle-free graphs).
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _sssp_body(edges, sources, weight_col, max_iter, return_converged)
+    with bsp(edges) as loop:
+        e = loop.pin(edges.select("src", "dst", F.col(weight_col).alias("_w")), "src")
 
-
-def _sssp_body(
-    edges: DataFrame,
-    sources: DataFrame,
-    weight_col: str,
-    max_iter: int,
-    return_converged: bool,
-):
-    e = edges.select("src", "dst", F.col(weight_col).alias("_w")).repartition("src").cache()
-    dist = _ckpt(sources.select("id", F.lit(0).cast("long").alias("dist")))
-    # Delta/frontier Bellman-Ford: only nodes whose distance improved last
-    # round relax their out-edges — classic full Bellman-Ford re-relaxed
-    # every settled node every round (|settled|×deg join work per round) and
-    # needed a separate convergence-check job; here the improved frontier IS
-    # the convergence check (empty → fixpoint).
-    frontier = dist
-    converged = False
-    # One merge per superstep (r14, guide §2.4): improvement check and
-    # dist merge are a single full-outer join + eager checkpoint; the
-    # emptiness probe is an exchange-free take(1) over the improved filter
-    # (the former separate improvement-check checkpoint job is gone).
-    prev = None
-    for _ in range(max_iter):
-        # shuffle_hash on the frontier side (r14, _mem.static_loop_plan):
-        # the checkpoint-derived frontier has no size stats, so the planner
-        # would otherwise re-broadcast the cached edge frame every round.
-        cand = (
-            frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
-            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("_w")).alias("_new"))
-            .groupBy("id")
-            .agg(F.min("_new").alias("_new"))
-        )
-        imp = F.col("_new").isNotNull() & (
-            F.col("dist").isNull() | (F.col("_new") < F.col("dist"))
-        )
-        new_dist = _ckpt(
-            dist.join(cand, "id", "full")
-            .select(
+        # Delta/frontier Bellman-Ford: only nodes whose distance improved
+        # last round relax their out-edges — classic full Bellman-Ford
+        # re-relaxed every settled node every round (|settled|×deg join work
+        # per round) and needed a separate convergence-check job; here the
+        # improved frontier IS the convergence check (empty → fixpoint).
+        # One merge per superstep (r14, guide §2.4): improvement check and
+        # dist merge are a single full-outer join + eager checkpoint.
+        def relax(dist: DataFrame) -> DataFrame:
+            cand = (
+                loop.join(_improved(dist, "dist"), e)
+                .select(F.col("dst").alias("id"), (F.col("dist") + F.col("_w")).alias("_new"))
+                .groupBy("id")
+                .agg(F.min("_new").alias("_new"))
+            )
+            imp = F.col("_new").isNotNull() & (
+                F.col("dist").isNull() | (F.col("_new") < F.col("dist"))
+            )
+            return dist.join(cand, "id", "full").select(
                 "id",
                 F.when(imp, F.col("_new")).otherwise(F.col("dist")).alias("dist"),
                 imp.alias("_imp"),
             )
-        )
-        if prev is not None:
-            _release(prev)
-        prev = dist
-        dist = new_dist
-        if new_dist.where("_imp").isEmpty():
-            converged = True
-            break
-        frontier = new_dist.where("_imp").select("id", "dist")
-    if prev is not None:
-        _release(prev)
-    dist = dist.select("id", "dist")
-    _release(e)
-    if return_converged:
-        return dist, converged
-    return dist
+
+        seed = sources.select("id", F.lit(0).cast("long").alias("dist"))
+        dist = loop.result(loop.fixpoint(seed, relax, max_iter, "_imp").select("id", "dist"))
+        if return_converged:
+            return dist, loop.converged
+        return dist
 
 
 def bellman_ford(
@@ -270,53 +246,28 @@ def dag_longest_path(
     that is ≤ longest-hop-count supersteps, each one edge-partitioned
     join + groupBy-max shuffle.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _dag_longest_path_body(edges, sources, weight_col, max_iter)
+    with bsp(edges) as loop:
+        e = loop.pin(edges.select("src", "dst", F.col(weight_col).alias("_w")), "src")
 
-
-def _dag_longest_path_body(
-    edges: DataFrame,
-    sources: DataFrame,
-    weight_col: str,
-    max_iter: int,
-) -> DataFrame:
-    e = edges.select("src", "dst", F.col(weight_col).alias("_w")).repartition("src").cache()
-    dist = _ckpt(sources.select("id", F.lit(0).cast("long").alias("dist")))
-    frontier = dist
-    # Same fused superstep as ``sssp`` (r14): single full-outer merge
-    # checkpoint + exchange-free emptiness probe, max-relaxation.
-    prev = None
-    for _ in range(max_iter):
-        # shuffle_hash on the frontier side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        cand = (
-            frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
-            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("_w")).alias("_new"))
-            .groupBy("id")
-            .agg(F.max("_new").alias("_new"))
-        )
-        imp = F.col("_new").isNotNull() & (
-            F.col("dist").isNull() | (F.col("_new") > F.col("dist"))
-        )
-        new_dist = _ckpt(
-            dist.join(cand, "id", "full")
-            .select(
+        # Same fused superstep as ``sssp`` (r14), max-relaxation.
+        def relax(dist: DataFrame) -> DataFrame:
+            cand = (
+                loop.join(_improved(dist, "dist"), e)
+                .select(F.col("dst").alias("id"), (F.col("dist") + F.col("_w")).alias("_new"))
+                .groupBy("id")
+                .agg(F.max("_new").alias("_new"))
+            )
+            imp = F.col("_new").isNotNull() & (
+                F.col("dist").isNull() | (F.col("_new") > F.col("dist"))
+            )
+            return dist.join(cand, "id", "full").select(
                 "id",
                 F.when(imp, F.col("_new")).otherwise(F.col("dist")).alias("dist"),
                 imp.alias("_imp"),
             )
-        )
-        if prev is not None:
-            _release(prev)
-        prev = dist
-        dist = new_dist
-        if new_dist.where("_imp").isEmpty():
-            break
-        frontier = new_dist.where("_imp").select("id", "dist")
-    if prev is not None:
-        _release(prev)
-    _release(e)
-    return dist.select("id", "dist")
+
+        seed = sources.select("id", F.lit(0).cast("long").alias("dist"))
+        return loop.result(loop.fixpoint(seed, relax, max_iter, "_imp").select("id", "dist"))
 
 
 def wcc(edges: DataFrame, nodes: DataFrame, max_iter: int = 30) -> DataFrame:
@@ -326,55 +277,30 @@ def wcc(edges: DataFrame, nodes: DataFrame, max_iter: int = 30) -> DataFrame:
     Min-label propagation over the undirected edge set; each superstep is
     one groupBy-min shuffle. Converges in O(diameter) rounds.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _wcc_body(edges, nodes, max_iter)
+    with bsp(edges) as loop:
+        e = loop.pin(undirect(edges).distinct(), "src")
 
+        # One merged superstep (r14, guide §2.4): the union rows carry an
+        # `_own` tag so the SAME groupBy-min that computes the new label also
+        # recovers the old one (min over the own-tagged row), so change
+        # detection needs no extra join.
+        def step(comp: DataFrame) -> DataFrame:
+            prop = loop.join(comp, e).select(
+                F.col("dst").alias("id"), "comp", F.lit(False).alias("_own")
+            )
+            return (
+                comp.select("id", "comp", F.lit(True).alias("_own"))
+                .unionByName(prop)
+                .groupBy("id")
+                .agg(
+                    F.min("comp").alias("comp"),
+                    F.min(F.when(F.col("_own"), F.col("comp"))).alias("_old"),
+                )
+                .select("id", "comp", (F.col("comp") != F.col("_old")).alias("_chg"))
+            )
 
-def _wcc_body(edges: DataFrame, nodes: DataFrame, max_iter: int) -> DataFrame:
-    e = undirect(edges).distinct().repartition("src").cache()
-    comp = _ckpt(nodes.select("id", F.col("id").alias("comp")))
-    # One merged superstep (r14, guide §2.4): the union rows carry an
-    # `_own` tag so the SAME groupBy-min that computes the new label also
-    # recovers the old one (min over the own-tagged row) — the former
-    # separate change-detection join is an exchange-free filtered take(1)
-    # over the checkpointed output.
-    prev = None
-    for _ in range(max_iter):
-        # shuffle_hash on the label side (r14, _mem.static_loop_plan): the
-        # checkpointed comp frame is hash(id)-partitioned from last round's
-        # groupBy and e is the hash(src) cache → zero-exchange SHJ instead
-        # of a fresh edge-frame broadcast per round.
-        prop = (
-            comp.hint("shuffle_hash").join(e, comp["id"] == e["src"])
-            .select(F.col("dst").alias("id"), "comp", F.lit(False).alias("_own"))
-        )
-        new_comp = (
-            comp.select("id", "comp", F.lit(True).alias("_own"))
-            .unionByName(prop)
-            .groupBy("id")
-            .agg(
-                F.min("comp").alias("comp"),
-                F.min(F.when(F.col("_own"), F.col("comp"))).alias("_old"),
-            )
-            .select(
-                "id", "comp", (F.col("comp") != F.col("_old")).alias("_chg")
-            )
-        )
-        # Eager checkpoint (plain RDD materialization job) + exchange-free
-        # take(1) emptiness probe — A/B-measured faster than a lazy
-        # checkpoint whose count() adds an aggregate exchange per round.
-        new_comp = _ckpt(new_comp)
-        no_change = new_comp.where("_chg").isEmpty()
-        if prev is not None:
-            _release(prev)
-        prev = comp
-        comp = new_comp
-        if no_change:
-            break
-    if prev is not None:
-        _release(prev)
-    _release(e)
-    return comp.select("id", "comp")
+        seed = nodes.select("id", F.col("id").alias("comp"))
+        return loop.result(loop.fixpoint(seed, step, max_iter, "_chg").select("id", "comp"))
 
 
 def personalized_pagerank(
@@ -394,106 +320,79 @@ def personalized_pagerank(
     + a scalar dangling aggregate); the teleport set rides as a small
     cached frame unioned into each update.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _personalized_pagerank_body(edges, sources, nodes, iterations, damping)
-
-
-def _personalized_pagerank_body(
-    edges: DataFrame,
-    sources: DataFrame,
-    nodes: DataFrame,
-    iterations: int,
-    damping: float,
-) -> DataFrame:
-    e = edges.select("src", "dst")
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg")).withColumnRenamed("src", "_did")
-    src_set_raw = e.select("src").distinct()
-    s = sources.select("id").distinct().cache()
-    n_sources = s.count()
-    dangling_ids = nodes.select("id").join(
-        src_set_raw, nodes["id"] == src_set_raw["src"], "left_anti"
-    ).cache()
-    # Carried dangling flag (r14, guide §2.4 — same fusion as ``pagerank``):
-    # every update row is tagged with "its node is dangling", so the next
-    # round's dangling mass is a flag-filtered aggregate over the freshly
-    # built pr frame — the per-round broadcast-join scalar job is gone.
-    e_deg = (
-        e.join(deg, e["src"] == deg["_did"])
-        .select("src", "dst", (F.lit(1.0) / F.col("_deg")).alias("_invdeg"))
-        .join(
-            dangling_ids.select(F.col("id").alias("_dgid"), F.lit(True).alias("_dg")),
-            F.col("dst") == F.col("_dgid"),
-            "left",
+    with bsp(edges) as loop:
+        e = edges.select("src", "dst")
+        deg = e.groupBy("src").agg(F.count("*").alias("_deg")).withColumnRenamed("src", "_did")
+        src_set_raw = e.select("src").distinct()
+        s = loop.pin(sources.select("id").distinct())
+        n_sources = s.count()
+        dangling_ids = loop.pin(
+            nodes.select("id").join(src_set_raw, nodes["id"] == src_set_raw["src"], "left_anti")
         )
-        .select(
-            "src", "dst", "_invdeg", F.coalesce(F.col("_dg"), F.lit(False)).alias("_dang")
-        )
-        .repartition("src")
-        .cache()
-    )
-    teleport = (
-        s.join(
-            dangling_ids.select(F.col("id").alias("_dgid"), F.lit(True).alias("_dg")),
-            s["id"] == F.col("_dgid"),
-            "left",
-        )
-        .select(
-            "id",
-            F.lit(1.0 / n_sources).alias("_t"),
-            F.coalesce(F.col("_dg"), F.lit(False)).alias("_dang"),
-        )
-        .cache()
-    )
-    pr = _ckpt(teleport.select("id", F.col("_t").alias("pr"), "_dang"))
-    # round-0 dangling mass: the start vector IS the teleport distribution
-    dangling = (
-        pr.where("_dang").agg(F.coalesce(F.sum("pr"), F.lit(0.0))).first()[0]
-    )
-    prev = None
-    for _ in range(iterations):
-        # shuffle_hash on the state side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        contribs = (
-            pr.hint("shuffle_hash").join(e_deg, pr["id"] == e_deg["src"])
+        # Carried dangling flag (r14, guide §2.4 — same fusion as
+        # ``pagerank``): every update row is tagged with "its node is
+        # dangling", so the next round's dangling mass is a flag-filtered
+        # aggregate over the freshly built pr frame — the per-round
+        # broadcast-join scalar job is gone.
+        e_deg = loop.pin(
+            e.join(deg, e["src"] == deg["_did"])
+            .select("src", "dst", (F.lit(1.0) / F.col("_deg")).alias("_invdeg"))
+            .join(
+                dangling_ids.select(F.col("id").alias("_dgid"), F.lit(True).alias("_dg")),
+                F.col("dst") == F.col("_dgid"),
+                "left",
+            )
             .select(
+                "src", "dst", "_invdeg", F.coalesce(F.col("_dg"), F.lit(False)).alias("_dang")
+            ),
+            "src",
+        )
+        teleport = loop.pin(
+            s.join(
+                dangling_ids.select(F.col("id").alias("_dgid"), F.lit(True).alias("_dg")),
+                s["id"] == F.col("_dgid"),
+                "left",
+            ).select(
+                "id",
+                F.lit(1.0 / n_sources).alias("_t"),
+                F.coalesce(F.col("_dg"), F.lit(False)).alias("_dang"),
+            )
+        )
+        pr = loop.advance(loop.ckpt(teleport.select("id", F.col("_t").alias("pr"), "_dang")))
+        # round-0 dangling mass: the start vector IS the teleport distribution
+        dangling = (
+            pr.where("_dang").agg(F.coalesce(F.sum("pr"), F.lit(0.0))).first()[0]
+        )
+        for _ in range(iterations):
+            contribs = loop.join(pr, e_deg).select(
                 F.col("dst").alias("id"),
                 (F.col("pr") * F.col("_invdeg")).alias("c"),
                 e_deg["_dang"].alias("_cdang"),
             )
-        )
-        # teleport share: (1-d) plus the dangling mass re-teleported
-        scale = (1.0 - damping) + damping * dangling
-        # lazy checkpoint materialized by the flag-filtered dangling
-        # aggregate below — one fused job per round
-        new_pr = (
-            contribs.select(
-                "id", (F.lit(damping) * F.col("c")).alias("pr"), F.col("_cdang")
-            )
-            .unionByName(
-                teleport.select(
-                    "id",
-                    (F.lit(scale) * F.col("_t")).alias("pr"),
-                    F.col("_dang").alias("_cdang"),
+            # teleport share: (1-d) plus the dangling mass re-teleported
+            scale = (1.0 - damping) + damping * dangling
+            # lazy checkpoint materialized by the flag-filtered dangling
+            # aggregate below — one fused job per round
+            pr = loop.ckpt(
+                contribs.select(
+                    "id", (F.lit(damping) * F.col("c")).alias("pr"), F.col("_cdang")
                 )
+                .unionByName(
+                    teleport.select(
+                        "id",
+                        (F.lit(scale) * F.col("_t")).alias("pr"),
+                        F.col("_dang").alias("_cdang"),
+                    )
+                )
+                .groupBy("id")
+                .agg(F.sum("pr").alias("pr"), F.max("_cdang").alias("_dang")),
+                eager=False,
             )
-            .groupBy("id")
-            .agg(F.sum("pr").alias("pr"), F.max("_cdang").alias("_dang"))
-            .localCheckpoint(eager=False)
-        )
-        dangling = new_pr.where("_dang").agg(
-            F.coalesce(F.sum("pr"), F.lit(0.0))
-        ).first()[0]
-        if prev is not None:
-            _release(prev)
-        prev = pr
-        pr = new_pr
-    if prev is not None:
-        _release(prev)
-    _release(e_deg)
-    _release(s)
-    _release(teleport)
-    _release(dangling_ids)
-    return pr.select("id", "pr")
+            dangling = pr.where("_dang").agg(
+                F.coalesce(F.sum("pr"), F.lit(0.0))
+            ).first()[0]
+            loop.advance(pr)
+        return loop.result(pr.select("id", "pr"))
 
 
 def wcc_star(edges: DataFrame, nodes: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -586,159 +485,133 @@ def pagerank(
     out-edge carries weight/Σweight(src) of the node's rank instead of
     1/deg (identical when all weights are equal).
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _pagerank_body(edges, nodes, iterations, damping, weight_col, tolerance)
-
-
-def _pagerank_body(
-    edges: DataFrame,
-    nodes: DataFrame,
-    iterations: int,
-    damping: float,
-    weight_col: str | None,
-    tolerance: float | None,
-) -> DataFrame:
-    if weight_col is None:
-        e = edges.select("src", "dst", F.lit(1.0).alias("_w"))
-    else:
-        e = edges.select("src", "dst", F.col(weight_col).cast("double").alias("_w"))
-    deg = e.groupBy("src").agg(F.sum("_w").alias("_wsum")).withColumnRenamed("src", "_did")
-    # (src, dst, w/Σw(src)) is static across iterations — join deg into the
-    # edge list ONCE, partitioned by the per-round join key, instead of
-    # re-joining deg inside every power iteration (15 joins → 1).
-    e_deg = e.join(deg, e["src"] == deg["_did"]).select(
-        "src", "dst", (F.col("_w") / F.col("_wsum")).alias("_invdeg")
-    )
-    n = nodes.select("id").cache()
-    n_total = n.count()
-    # Two static node sets, computed once and reused every round:
-    # - dangling (no OUT-edges): their mass redistributes uniformly
-    # - sink-only (no IN-edges): they receive exactly the base term, so the
-    #   per-round update is `contribs ∪ no_in` — a union, not an N-row
-    #   outer join (the join was a SortMergeJoin that re-exchanged and
-    #   re-sorted all N node ids every iteration).
-    # Anti-join against the DISTINCT endpoint sets (≤N rows; AQE broadcasts
-    # them when they fit) rather than the raw edge list — the naive
-    # anti-join sort-merge-shuffles all |E| edges twice just to derive two
-    # ≤N-row node sets. No broadcast hint: at cluster scale the id set can
-    # exceed driver memory and AQE must be free to keep the shuffle join.
-    # Derived from the RAW edge frame, not e_deg: the deg join preserves
-    # every endpoint, and going through e would otherwise re-run that join
-    # once per distinct (e_deg itself stays an unmaterialized plan — its
-    # only consumer is the cached e_run below).
-    src_set = e.select("src").distinct()
-    dst_set = e.select("dst").distinct()
-    dangling_ids = n.join(src_set, n["id"] == src_set["src"], "left_anti").cache()
-    dangling_ids.count()
-    no_in_ids = n.join(dst_set, n["id"] == dst_set["dst"], "left_anti").cache()
-    no_in_ids.count()
-    # Zero-weight self-rows for sink-only nodes fold the "receives exactly
-    # the base term" case INTO the contribution aggregate (pr·0 = 0 →
-    # base + d·0 = base, bit-identical to the old union branch). The win
-    # is partitioning, not arithmetic: the update becomes pure
-    # join→groupBy(id), whose output hash-partitioning survives
-    # localCheckpoint, so the next round's join on pr.id needs NO N-row
-    # exchange — the old unionByName erased the partitioning and forced a
-    # full pr shuffle every iteration.
-    #
-    # r14 (guide §2.4/§1): the dst side additionally carries a static
-    # `_dang` flag (dst ∈ dangling set), so the NEXT round's dangling mass
-    # is a flag-filtered scalar over the freshly built pr frame — no
-    # per-round broadcast build of dangling_ids, no per-round join.
-    e_run = (
-        e_deg.unionByName(
-            no_in_ids.select(
-                F.col("id").alias("src"),
-                F.col("id").alias("dst"),
-                F.lit(0.0).alias("_invdeg"),
+    with bsp(edges) as loop:
+        if weight_col is None:
+            e = edges.select("src", "dst", F.lit(1.0).alias("_w"))
+        else:
+            e = edges.select("src", "dst", F.col(weight_col).cast("double").alias("_w"))
+        deg = e.groupBy("src").agg(F.sum("_w").alias("_wsum")).withColumnRenamed("src", "_did")
+        # (src, dst, w/Σw(src)) is static across iterations — join deg into
+        # the edge list ONCE, partitioned by the per-round join key, instead
+        # of re-joining deg inside every power iteration (15 joins → 1).
+        e_deg = e.join(deg, e["src"] == deg["_did"]).select(
+            "src", "dst", (F.col("_w") / F.col("_wsum")).alias("_invdeg")
+        )
+        n = loop.pin(nodes.select("id"))
+        n_total = n.count()
+        # Two static node sets, computed once and reused every round:
+        # - dangling (no OUT-edges): their mass redistributes uniformly
+        # - sink-only (no IN-edges): they receive exactly the base term, so
+        #   the per-round update is `contribs ∪ no_in` — a union, not an
+        #   N-row outer join (the join was a SortMergeJoin that re-exchanged
+        #   and re-sorted all N node ids every iteration).
+        # Anti-join against the DISTINCT endpoint sets (≤N rows) rather than
+        # the raw edge list — the naive anti-join sort-merge-shuffles all
+        # |E| edges twice just to derive two ≤N-row node sets. No broadcast
+        # hint: at cluster scale the id set can exceed driver memory and the
+        # planner must be free to keep the shuffle join.
+        # Derived from the RAW edge frame, not e_deg: the deg join preserves
+        # every endpoint, and going through e would otherwise re-run that
+        # join once per distinct (e_deg itself stays an unmaterialized plan —
+        # its only consumer is the pinned e_run below).
+        src_set = e.select("src").distinct()
+        dst_set = e.select("dst").distinct()
+        dangling_ids = loop.pin(n.join(src_set, n["id"] == src_set["src"], "left_anti"))
+        dangling_ids.count()
+        no_in_ids = loop.pin(n.join(dst_set, n["id"] == dst_set["dst"], "left_anti"))
+        no_in_ids.count()
+        # Zero-weight self-rows for sink-only nodes fold the "receives
+        # exactly the base term" case INTO the contribution aggregate
+        # (pr·0 = 0 → base + d·0 = base, bit-identical to the old union
+        # branch). The win is partitioning, not arithmetic: the update
+        # becomes pure join→groupBy(id), whose output hash-partitioning
+        # survives localCheckpoint, so the next round's join on pr.id needs
+        # NO N-row exchange — the old unionByName erased the partitioning
+        # and forced a full pr shuffle every iteration.
+        #
+        # r14 (guide §2.4/§1): the dst side additionally carries a static
+        # `_dang` flag (dst ∈ dangling set), so the NEXT round's dangling
+        # mass is a flag-filtered scalar over the freshly built pr frame —
+        # no per-round broadcast build of dangling_ids, no per-round join.
+        e_run = loop.pin(
+            e_deg.unionByName(
+                no_in_ids.select(
+                    F.col("id").alias("src"),
+                    F.col("id").alias("dst"),
+                    F.lit(0.0).alias("_invdeg"),
+                )
             )
-        )
-        .join(
-            dangling_ids.select(F.col("id").alias("_dgid"), F.lit(True).alias("_dg")),
-            F.col("dst") == F.col("_dgid"),
-            "left",
-        )
-        .select(
-            "src", "dst", "_invdeg", F.coalesce(F.col("_dg"), F.lit(False)).alias("_dang")
-        )
-        .repartition("src")
-        .cache()
-    )
-    pr = _ckpt(n.select("id", F.lit(1.0).alias("pr")))
-    # Round 0 dangling mass is closed-form (every pr is 1.0): |dangling|.
-    # Subsequent rounds read it from the just-materialized pr frame via the
-    # carried flag. One fused job per round (r14, guide §2.4/§1.2): the
-    # update is built on a LAZY localCheckpoint and the flag-filtered
-    # dangling aggregate is the action that materializes it — replacing the
-    # former eager-checkpoint job + broadcast-build + scalar-join job per
-    # round. (The earlier measured-slower variant folded the dangling mass
-    # into the update join as a broadcast subquery, which blocked AQE's
-    # re-planning of the big join; this form keeps the scalar read OUT of
-    # the join — it is a plain filtered aggregate over the checkpointed
-    # output.)
-    dangling = float(dangling_ids.count())
-    prev = None
-    for _ in range(iterations):
-        base = (1.0 - damping) + damping * dangling / n_total
-        # shuffle_hash on the STATE side (r14, _mem.static_loop_plan): the
-        # checkpointed pr frame's LogicalRDD has no size stats, so the
-        # planner would otherwise broadcast the cached EDGE frame — a fresh
-        # |E|-row BroadcastExchange per round. Pinning a ShuffledHashJoin
-        # that builds over pr makes the round exchange-free on both sides
-        # (pr: hash(id) from last round's groupBy, preserved by the
-        # checkpoint; e_run: the hash(src) cache) — edges stream in place.
-        contribs = (
-            pr.hint("shuffle_hash").join(e_run, pr["id"] == e_run["src"])
+            .join(
+                dangling_ids.select(F.col("id").alias("_dgid"), F.lit(True).alias("_dg")),
+                F.col("dst") == F.col("_dgid"),
+                "left",
+            )
             .select(
-                F.col("dst").alias("id"),
-                (F.col("pr") * F.col("_invdeg")).alias("c"),
-                e_run["_dang"],
-            )
-            # Group on id ALONE: the groupBy's hash(id) output partitioning
-            # is what makes next round's pr⋈e_run join exchange-free (the
-            # r13 contract above). `_dang` is functionally determined by id
-            # (dst ∈ dangling set), so max() recovers it without widening
-            # the grouping key — grouping by (id,_dang) was A/B-measured
-            # SLOWER because hash(id,_dang) ≠ hash(id) re-exchanged the
-            # whole pr frame every iteration.
-            .groupBy("id")
-            .agg(F.sum("c").alias("c"), F.max("_dang").alias("_dang"))
+                "src", "dst", "_invdeg", F.coalesce(F.col("_dg"), F.lit(False)).alias("_dang")
+            ),
+            "src",
         )
-        # `_dang` is re-aliased to `_prdang` (fresh exprId): the lazy
-        # checkpoint keeps the original attribute ids, so carrying e_run's
-        # `_dang` id into next round's pr⋈e_run join would self-collide.
-        new_pr = contribs.select(
-            "id",
-            (F.lit(base) + F.lit(damping) * F.col("c")).alias("pr"),
-            F.col("_dang").alias("_prdang"),
-        ).localCheckpoint(eager=False)
-        # Full-scan action: materializes every partition of the lazy
-        # checkpoint in this same job AND yields next round's dangling mass.
-        dangling = new_pr.where("_prdang").agg(
-            F.coalesce(F.sum("pr"), F.lit(0.0))
-        ).first()[0]
-        if tolerance is not None:
-            delta = (
-                new_pr.join(pr.withColumnRenamed("pr", "_old"), "id")
-                .agg(F.sum(F.abs(F.col("pr") - F.col("_old"))))
-                .first()[0]
+        pr = loop.advance(loop.ckpt(n.select("id", F.lit(1.0).alias("pr"))))
+        # Round 0 dangling mass is closed-form (every pr is 1.0): |dangling|.
+        # Subsequent rounds read it from the just-materialized pr frame via
+        # the carried flag. One fused job per round (r14, guide §2.4/§1.2):
+        # the update is built on a LAZY localCheckpoint and the
+        # flag-filtered dangling aggregate is the action that materializes
+        # it — replacing the former eager-checkpoint job + broadcast-build +
+        # scalar-join job per round. (The earlier measured-slower variant
+        # folded the dangling mass into the update join as a broadcast
+        # subquery, which blocked AQE's re-planning of the big join; this form
+        # keeps the scalar read OUT of the join — it is a plain filtered
+        # aggregate over the checkpointed output.)
+        dangling = float(dangling_ids.count())
+        for _ in range(iterations):
+            base = (1.0 - damping) + damping * dangling / n_total
+            contribs = (
+                loop.join(pr, e_run)
+                .select(
+                    F.col("dst").alias("id"),
+                    (F.col("pr") * F.col("_invdeg")).alias("c"),
+                    e_run["_dang"],
+                )
+                # Group on id ALONE: the groupBy's hash(id) output
+                # partitioning is what makes next round's pr⋈e_run join
+                # exchange-free (the r13 contract above). `_dang` is
+                # functionally determined by id (dst ∈ dangling set), so
+                # max() recovers it without widening the grouping key —
+                # grouping by (id,_dang) was A/B-measured SLOWER because
+                # hash(id,_dang) ≠ hash(id) re-exchanged the whole pr frame
+                # every iteration.
+                .groupBy("id")
+                .agg(F.sum("c").alias("c"), F.max("_dang").alias("_dang"))
             )
-        # The PREVIOUS round's frame feeds new_pr's (now materialized)
-        # checkpoint; with lazy checkpoints it must only be released after
-        # the materializing action above — one round behind.
-        if prev is not None:
-            _release(prev)
-        prev = pr
-        pr = new_pr
-        if tolerance is not None and delta is not None and delta < tolerance * n_total:
-            break
-    if prev is not None:
-        _release(prev)
-    _release(e_run)
-    _release(n)
-    _release(dangling_ids)
-    _release(no_in_ids)
-    return pr.select("id", "pr")
+            # `_dang` is re-aliased to `_prdang` (fresh exprId): the lazy
+            # checkpoint keeps the original attribute ids, so carrying
+            # e_run's `_dang` id into next round's pr⋈e_run join would
+            # self-collide.
+            new_pr = loop.ckpt(
+                contribs.select(
+                    "id",
+                    (F.lit(base) + F.lit(damping) * F.col("c")).alias("pr"),
+                    F.col("_dang").alias("_prdang"),
+                ),
+                eager=False,
+            )
+            # Full-scan action: materializes every partition of the lazy
+            # checkpoint in this same job AND yields next round's dangling
+            # mass.
+            dangling = new_pr.where("_prdang").agg(
+                F.coalesce(F.sum("pr"), F.lit(0.0))
+            ).first()[0]
+            if tolerance is not None:
+                delta = (
+                    new_pr.join(pr.withColumnRenamed("pr", "_old"), "id")
+                    .agg(F.sum(F.abs(F.col("pr") - F.col("_old"))))
+                    .first()[0]
+                )
+            pr = loop.advance(new_pr)
+            if tolerance is not None and delta is not None and delta < tolerance * n_total:
+                break
+        return loop.result(pr.select("id", "pr"))
 
 
 def article_rank(
@@ -760,56 +633,40 @@ def article_rank(
     ``localCheckpoint`` (zero-share self-rows keep sink-only nodes inside
     the aggregate, so no N-row union/exchange per round).
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _article_rank_body(edges, nodes, iterations, damping)
-
-
-def _article_rank_body(
-    edges: DataFrame,
-    nodes: DataFrame,
-    iterations: int,
-    damping: float,
-) -> DataFrame:
-    e = edges.select("src", "dst")
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg")).withColumnRenamed("src", "_did")
-    n = nodes.select("id").cache()
-    n_total = n.count()
-    avg_deg = e.count() / n_total
-    e_share = e.join(deg, e["src"] == deg["_did"]).select(
-        "src",
-        "dst",
-        (F.lit(1.0) / (F.col("_deg").cast("double") + F.lit(avg_deg))).alias("_share"),
-    )
-    dst_set = e.select("dst").distinct()
-    no_in_ids = n.join(dst_set, n["id"] == dst_set["dst"], "left_anti")
-    e_run = (
-        e_share.unionByName(
-            no_in_ids.select(
-                F.col("id").alias("src"),
-                F.col("id").alias("dst"),
-                F.lit(0.0).alias("_share"),
-            )
+    with bsp(edges) as loop:
+        e = edges.select("src", "dst")
+        deg = e.groupBy("src").agg(F.count("*").alias("_deg")).withColumnRenamed("src", "_did")
+        n = loop.pin(nodes.select("id"))
+        n_total = n.count()
+        avg_deg = e.count() / n_total
+        e_share = e.join(deg, e["src"] == deg["_did"]).select(
+            "src",
+            "dst",
+            (F.lit(1.0) / (F.col("_deg").cast("double") + F.lit(avg_deg))).alias("_share"),
         )
-        .repartition("src")
-        .cache()
-    )
-    base = 1.0 - damping
-    pr = _ckpt(n.select("id", F.lit(1.0).alias("pr")))
-    for _ in range(iterations):
-        # shuffle_hash on the state side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        new_pr = _ckpt(
-            pr.hint("shuffle_hash").join(e_run, pr["id"] == e_run["src"])
-            .select(F.col("dst").alias("id"), (F.col("pr") * F.col("_share")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("c"))
-            .select("id", (F.lit(base) + F.lit(damping) * F.col("c")).alias("pr"))
+        dst_set = e.select("dst").distinct()
+        no_in_ids = n.join(dst_set, n["id"] == dst_set["dst"], "left_anti")
+        e_run = loop.pin(
+            e_share.unionByName(
+                no_in_ids.select(
+                    F.col("id").alias("src"),
+                    F.col("id").alias("dst"),
+                    F.lit(0.0).alias("_share"),
+                )
+            ),
+            "src",
         )
-        _release(pr)
-        pr = new_pr
-    _release(e_run)
-    _release(n)
-    return pr
+        base = 1.0 - damping
+        pr = loop.advance(loop.ckpt(n.select("id", F.lit(1.0).alias("pr"))))
+        for _ in range(iterations):
+            pr = loop.advance(loop.ckpt(
+                loop.join(pr, e_run)
+                .select(F.col("dst").alias("id"), (F.col("pr") * F.col("_share")).alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("c"))
+                .select("id", (F.lit(base) + F.lit(damping) * F.col("c")).alias("pr"))
+            ))
+        return loop.result(pr)
 
 
 def eigenvector(
@@ -834,55 +691,36 @@ def eigenvector(
     undirected edge set (``gds.undirect``) for the classical symmetric
     formulation, which is the GDS default orientation use-case.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _eigenvector_body(edges, nodes, iterations, weight_col)
-
-
-def _eigenvector_body(
-    edges: DataFrame,
-    nodes: DataFrame,
-    iterations: int,
-    weight_col: str | None,
-) -> DataFrame:
-    w = (
-        F.col(weight_col).cast("double")
-        if weight_col is not None
-        else F.lit(1.0)
-    )
-    e = edges.select("src", "dst", w.alias("_w")).repartition("src").cache()
-    x = _ckpt(nodes.select("id", F.lit(1.0).alias("score")))
-    seed: DataFrame | None = x  # released once folded into round 1's y
-    prev: DataFrame | None = None
-    for _ in range(iterations):
-        # One job per round (r14, guide §2.4): the checkpoint is lazy and
-        # the norm aggregate is the action that materializes it (the norm
-        # scans every row, so every partition persists in that same job).
-        # shuffle_hash on the state side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        y = (
-            x.hint("shuffle_hash").join(e, x["id"] == e["src"])
-            .select(F.col("dst").alias("id"), (F.col("score") * F.col("_w")).alias("m"))
-            .groupBy("id")
-            .agg(F.sum("m").alias("score"))
-            .localCheckpoint(eager=False)
+    with bsp(edges) as loop:
+        w = (
+            F.col(weight_col).cast("double")
+            if weight_col is not None
+            else F.lit(1.0)
         )
-        norm = y.agg(F.sqrt(F.sum(F.col("score") * F.col("score")))).first()[0]
-        if prev is not None:
-            _release(prev)  # y is checkpointed; don't pin every round
-        prev = y
-        if norm is None or norm == 0.0:
-            x = y.limit(0)  # vector died (DAG ran out of paths): all zeros
-            break
-        x = y.select("id", (F.col("score") / F.lit(norm)).alias("score"))
-        if seed is not None:
-            _release(seed)  # the x₀ seed checkpoint is folded into y now
-            seed = None
-    _release(e)
-    return (
-        nodes.select("id")
-        .join(x, "id", "left")
-        .select("id", F.coalesce("score", F.lit(0.0)).alias("score"))
-    )
+        e = loop.pin(edges.select("src", "dst", w.alias("_w")), "src")
+        x = loop.advance(loop.ckpt(nodes.select("id", F.lit(1.0).alias("score"))))
+        for _ in range(iterations):
+            # One job per round (r14, guide §2.4): the checkpoint is lazy and
+            # the norm aggregate is the action that materializes it (the norm
+            # scans every row, so every partition persists in that same job).
+            y = loop.ckpt(
+                loop.join(x, e)
+                .select(F.col("dst").alias("id"), (F.col("score") * F.col("_w")).alias("m"))
+                .groupBy("id")
+                .agg(F.sum("m").alias("score")),
+                eager=False,
+            )
+            norm = y.agg(F.sqrt(F.sum(F.col("score") * F.col("score")))).first()[0]
+            loop.advance(y)
+            if norm is None or norm == 0.0:
+                x = y.limit(0)  # vector died (DAG ran out of paths): all zeros
+                break
+            x = y.select("id", (F.col("score") / F.lit(norm)).alias("score"))
+        return loop.result(
+            nodes.select("id")
+            .join(x, "id", "left")
+            .select("id", F.coalesce("score", F.lit(0.0)).alias("score"))
+        )
 
 
 def hits(
@@ -901,81 +739,60 @@ def hits(
     edge frame is joined on ``src`` for the authority step and on ``dst``
     for the hub step, so it is cached in BOTH partitionings once (at 100 TB
     two partitioned copies of (src,dst) beat re-shuffling the edge set
-    every half-step; state frames stay (id, score) and broadcast when they
-    fit). On a DAG both vectors stay strictly positive on their support
+    every half-step; state frames stay (id, score), the build side of each
+    half-step's join). On a DAG both vectors stay strictly positive on their support
     (unlike eigenvector's directed collapse) because each half-step reads
     the OTHER vector, so no norm-death guard is needed beyond the zero
     check.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _hits_body(edges, nodes, iterations)
-
-
-def _hits_body(
-    edges: DataFrame,
-    nodes: DataFrame,
-    iterations: int,
-) -> DataFrame:
-    e_src = edges.select("src", "dst").repartition("src").cache()
-    e_dst = edges.select("src", "dst").repartition("dst").cache()
-    h = _ckpt(nodes.select("id", F.lit(1.0).alias("hub")))
-    a = nodes.select("id", F.lit(0.0).alias("auth")).limit(0)
-    seed: DataFrame | None = h  # released once folded into round 1's a_raw
-    prev_h, prev_a = None, None
-    for _ in range(iterations):
-        # authority: a(v) = Σ_{u→v} h(u), then L2-normalize
-        # lazy checkpoint materialized by the norm job — one job per
-        # half-step instead of two (r14, guide §2.4)
-        # shuffle_hash on the vector sides (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge copies per
-        # half-step; each copy is read in place in its own partitioning.
-        a_raw = (
-            h.hint("shuffle_hash").join(e_src, h["id"] == e_src["src"])
-            .select(F.col("dst").alias("id"), F.col("hub").alias("m"))
-            .groupBy("id")
-            .agg(F.sum("m").alias("auth"))
-            .localCheckpoint(eager=False)
+    with bsp(edges) as loop:
+        e_src = loop.pin(edges.select("src", "dst"), "src")
+        e_dst = loop.pin(edges.select("src", "dst"), "dst")
+        h = loop.advance(loop.ckpt(nodes.select("id", F.lit(1.0).alias("hub"))), "hub")
+        a = nodes.select("id", F.lit(0.0).alias("auth")).limit(0)
+        for _ in range(iterations):
+            # authority: a(v) = Σ_{u→v} h(u), then L2-normalize
+            # lazy checkpoint materialized by the norm job — one job per
+            # half-step instead of two (r14, guide §2.4); each edge copy is
+            # read in place in its own partitioning.
+            a_raw = loop.ckpt(
+                loop.join(h, e_src)
+                .select(F.col("dst").alias("id"), F.col("hub").alias("m"))
+                .groupBy("id")
+                .agg(F.sum("m").alias("auth")),
+                eager=False,
+            )
+            norm_a = a_raw.agg(F.sqrt(F.sum(F.col("auth") * F.col("auth")))).first()[0]
+            loop.advance(a_raw, "auth")
+            if norm_a is None or norm_a == 0.0:
+                a = a_raw.limit(0)
+                h = h.limit(0)
+                break
+            a = a_raw.select("id", (F.col("auth") / F.lit(norm_a)).alias("auth"))
+            # hub: h(u) = Σ_{u→v} a(v), then L2-normalize
+            h_raw = loop.ckpt(
+                loop.join(a, e_dst, edge_key="dst")
+                .select(F.col("src").alias("id"), F.col("auth").alias("m"))
+                .groupBy("id")
+                .agg(F.sum("m").alias("hub")),
+                eager=False,
+            )
+            norm_h = h_raw.agg(F.sqrt(F.sum(F.col("hub") * F.col("hub")))).first()[0]
+            loop.advance(h_raw, "hub")
+            if norm_h is None or norm_h == 0.0:
+                h = h_raw.limit(0)
+                break
+            h = h_raw.select("id", (F.col("hub") / F.lit(norm_h)).alias("hub"))
+        out = (
+            nodes.select("id")
+            .join(h.withColumnRenamed("hub", "_h"), "id", "left")
+            .join(a.withColumnRenamed("auth", "_a"), "id", "left")
         )
-        norm_a = a_raw.agg(F.sqrt(F.sum(F.col("auth") * F.col("auth")))).first()[0]
-        if prev_a is not None:
-            _release(prev_a)
-        prev_a = a_raw
-        if norm_a is None or norm_a == 0.0:
-            a = a_raw.limit(0)
-            h = h.limit(0)  # round 1: still the seed — keep it pinned then
-            break
-        a = a_raw.select("id", (F.col("auth") / F.lit(norm_a)).alias("auth"))
-        if seed is not None:
-            _release(seed)  # the h₀ seed checkpoint is folded into a_raw now
-            seed = None
-        # hub: h(u) = Σ_{u→v} a(v), then L2-normalize
-        h_raw = (
-            a.hint("shuffle_hash").join(e_dst, a["id"] == e_dst["dst"])
-            .select(F.col("src").alias("id"), F.col("auth").alias("m"))
-            .groupBy("id")
-            .agg(F.sum("m").alias("hub"))
-            .localCheckpoint(eager=False)
-        )
-        norm_h = h_raw.agg(F.sqrt(F.sum(F.col("hub") * F.col("hub")))).first()[0]
-        if prev_h is not None:
-            _release(prev_h)
-        prev_h = h_raw
-        if norm_h is None or norm_h == 0.0:
-            h = h_raw.limit(0)
-            break
-        h = h_raw.select("id", (F.col("hub") / F.lit(norm_h)).alias("hub"))
-    _release(e_src)
-    _release(e_dst)
-    out = (
-        nodes.select("id")
-        .join(h.withColumnRenamed("hub", "_h"), "id", "left")
-        .join(a.withColumnRenamed("auth", "_a"), "id", "left")
-    )
-    return out.select(
-        "id",
-        F.coalesce("_h", F.lit(0.0)).alias("hub"),
-        F.coalesce("_a", F.lit(0.0)).alias("auth"),
-    )
+        return loop.result(out.select(
+            "id",
+            F.coalesce("_h", F.lit(0.0)).alias("hub"),
+            F.coalesce("_a", F.lit(0.0)).alias("auth"),
+        ))
 
 
 def label_propagation(
@@ -993,73 +810,47 @@ def label_propagation(
     incident edge weights instead of counting edges. Integer weights keep
     the argmax exact (the catalog row casts l_quantity to BIGINT).
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _label_propagation_body(edges, nodes, max_iter, weight_col)
-
-
-def _label_propagation_body(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int,
-    weight_col: str | None,
-) -> DataFrame:
-    if weight_col is None:
-        e = undirect(edges).repartition("src").cache()
-    else:
-        d = edges.select("src", "dst", F.col(weight_col).alias("_w"))
-        e = (
-            d.unionByName(
-                d.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "_w"
-                )
+    with bsp(edges) as loop:
+        if weight_col is None:
+            e = loop.pin(undirect(edges), "src")
+        else:
+            d = edges.select("src", "dst", F.col(weight_col).alias("_w"))
+            e = loop.pin(
+                d.unionByName(
+                    d.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "_w")
+                ),
+                "src",
             )
-            .repartition("src")
-            .cache()
-        )
-    vote = F.count("*") if weight_col is None else F.sum("_w")
-    lab = _ckpt(nodes.select("id", F.col("id").alias("community")))
-    # Change detection rides the merge itself (r14, guide §2.4, as in
-    # ``wcc``): the merge select computes a `_chg` flag, so the former
-    # per-round change-detection join is an exchange-free take(1) probe
-    # over the checkpointed output. Superseded label frames are released
-    # once the eager checkpoint derived from them has materialized.
-    prev = None
-    for _ in range(max_iter):
-        # shuffle_hash on the label side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        votes = (
-            lab.hint("shuffle_hash").join(e, lab["id"] == e["src"])
-            .groupBy(F.col("dst").alias("id"), "community")
-            .agg(vote.alias("_n"))
-        )
-        # max over (n, -community): most frequent label, ties → smallest label
-        best = votes.groupBy("id").agg(
-            F.max_by(
-                "community",
-                F.struct(F.col("_n").alias("n"), (-F.col("community")).alias("t")),
-            ).alias("_cand")
-        )
-        new_lab = _ckpt(
-            lab.join(best, "id", "left").select(
+        vote = F.count("*") if weight_col is None else F.sum("_w")
+
+        # Change detection rides the merge itself (r14, guide §2.4, as in
+        # ``wcc``): the merge select computes a `_chg` flag for the
+        # fixpoint's probe, so change detection needs no extra join.
+        def step(lab: DataFrame) -> DataFrame:
+            votes = (
+                loop.join(lab, e)
+                .groupBy(F.col("dst").alias("id"), "community")
+                .agg(vote.alias("_n"))
+            )
+            # max over (n, -community): most frequent label, ties → smallest label
+            best = votes.groupBy("id").agg(
+                F.max_by(
+                    "community",
+                    F.struct(F.col("_n").alias("n"), (-F.col("community")).alias("t")),
+                ).alias("_cand")
+            )
+            return lab.join(best, "id", "left").select(
                 "id",
                 F.coalesce(F.col("_cand"), F.col("community")).alias("community"),
                 (
-                    F.col("_cand").isNotNull()
-                    & (F.col("_cand") != F.col("community"))
+                    F.col("_cand").isNotNull() & (F.col("_cand") != F.col("community"))
                 ).alias("_chg"),
             )
+
+        seed = nodes.select("id", F.col("id").alias("community"))
+        return loop.result(
+            loop.fixpoint(seed, step, max_iter, "_chg").select("id", "community")
         )
-        no_change = new_lab.where("_chg").isEmpty()
-        if prev is not None:
-            _release(prev)
-        prev = lab
-        lab = new_lab
-        if no_change:
-            break
-    if prev is not None:
-        _release(prev)
-    _release(e)
-    return lab.select("id", "community")
 
 
 def louvain(
@@ -1091,106 +882,89 @@ def louvain(
 
     Stops at a fixpoint (a full even+odd pair with no moves) or ``max_iter``.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _louvain_body(edges, nodes, max_iter)
-
-
-def _louvain_body(
-    edges: DataFrame, nodes: DataFrame, max_iter: int
-) -> DataFrame:
-    e = undirect(edges).distinct().repartition("src").cache()
-    two_m = e.count()  # each undirected edge counted twice = 2m
-    # k_in keys the edge set on dst every round — cache that partitioning
-    # once (as in ``hits``) instead of re-exchanging the edges per round
-    # (r14, _mem.static_loop_plan).
-    e_dst = e.repartition("dst").cache()
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg")).withColumnRenamed("src", "_did").cache()
-    comm = _ckpt(nodes.select("id", F.col("id").alias("community")))
-    stable = 0
-    prev = None
-    for it in range(max_iter):
-        # community degree mass Σtot(C)
-        # shuffle_hash on the community/state sides (r14,
-        # _mem.static_loop_plan): zero-exchange SHJs against the cached
-        # edge/degree partitionings instead of per-round re-planning.
-        sigma = (
-            comm.hint("shuffle_hash").join(deg, comm["id"] == deg["_did"])
-            .groupBy("community")
-            .agg(F.sum("_deg").alias("_sigma"))
-            .withColumnRenamed("community", "cand")
+    with bsp(edges) as loop:
+        e = loop.pin(undirect(edges).distinct(), "src")
+        two_m = e.count()  # each undirected edge counted twice = 2m
+        # k_in keys the edge set on dst every round — pin that partitioning
+        # once (as in ``hits``) instead of re-exchanging the edges per round.
+        e_dst = loop.pin(e, "dst")
+        deg = loop.pin(
+            e.groupBy("src").agg(F.count("*").alias("_deg")).withColumnRenamed("src", "_did")
         )
-        # k_in(v → C): edges from v into each neighboring community, plus a
-        # zero row for v's own community so "stay" is always a candidate
-        nbr_comm = comm.select(F.col("id").alias("_nid"), F.col("community").alias("_c"))
-        k_in = (
-            e_dst.join(nbr_comm.hint("shuffle_hash"), e_dst["dst"] == nbr_comm["_nid"])
-            .groupBy(F.col("src").alias("id"), F.col("_c").alias("cand"))
-            .agg(F.count("*").alias("_kin"))
-            .unionByName(
-                comm.select("id", F.col("community").alias("cand"), F.lit(0).cast("long").alias("_kin"))
+        comm = loop.advance(loop.ckpt(nodes.select("id", F.col("id").alias("community"))))
+        stable = 0
+        for it in range(max_iter):
+            # community degree mass Σtot(C)
+            sigma = (
+                loop.join(comm, deg, edge_key="_did")
+                .groupBy("community")
+                .agg(F.sum("_deg").alias("_sigma"))
+                .withColumnRenamed("community", "cand")
             )
-            .groupBy("id", "cand")
-            .agg(F.max("_kin").alias("_kin"))
-        )
-        own = comm.withColumnRenamed("community", "_own")
-        # exact integer gain: G = 2m·k_in − deg·(Σtot − [cand = own]·deg)
-        scored = (
-            k_in.join(deg, k_in["id"] == deg["_did"])
-            .join(sigma, "cand")
-            .join(own, "id")
-            .select(
-                "id",
-                "cand",
-                "_own",
-                (
-                    F.lit(int(two_m)) * F.col("_kin")
-                    - F.col("_deg")
-                    * (
-                        F.col("_sigma")
-                        - F.when(F.col("cand") == F.col("_own"), F.col("_deg")).otherwise(F.lit(0))
-                    )
-                ).alias("_gain"),
+            # k_in(v → C): edges from v into each neighboring community, plus
+            # a zero row for v's own community so "stay" is always a candidate
+            # (state side hinted as in ``BSPLoop.join``, built on the right)
+            nbr_comm = comm.select(F.col("id").alias("_nid"), F.col("community").alias("_c"))
+            k_in = (
+                e_dst.join(nbr_comm.hint("shuffle_hash"), e_dst["dst"] == nbr_comm["_nid"])
+                .groupBy(F.col("src").alias("id"), F.col("_c").alias("cand"))
+                .agg(F.count("*").alias("_kin"))
+                .unionByName(
+                    comm.select("id", F.col("community").alias("cand"), F.lit(0).cast("long").alias("_kin"))
+                )
+                .groupBy("id", "cand")
+                .agg(F.max("_kin").alias("_kin"))
             )
-        )
-        best = scored.groupBy("id").agg(
-            F.max_by(
-                "cand", F.struct(F.col("_gain").alias("g"), (-F.col("cand")).alias("t"))
-            ).alias("_best"),
-        )
-        movable = F.pmod(F.col("id"), F.lit(2)) == F.lit(it % 2)
-        # left join keeps isolated nodes (absent from deg/k_in) in place.
-        # `_chg` rides the merge (r14, guide §2.4): the move-detection
-        # probe is an exchange-free take(1) instead of a join job, and
-        # superseded community frames release one round behind.
-        moved = movable & F.col("_best").isNotNull() & (
-            F.col("_best") != F.col("community")
-        )
-        new_comm = _ckpt(
-            comm.join(best, "id", "left").select(
-                "id",
-                F.when(movable & F.col("_best").isNotNull(), F.col("_best"))
-                .otherwise(F.col("community"))
-                .alias("community"),
-                moved.alias("_chg"),
+            own = comm.withColumnRenamed("community", "_own")
+            # exact integer gain: G = 2m·k_in − deg·(Σtot − [cand = own]·deg)
+            scored = (
+                k_in.join(deg, k_in["id"] == deg["_did"])
+                .join(sigma, "cand")
+                .join(own, "id")
+                .select(
+                    "id",
+                    "cand",
+                    "_own",
+                    (
+                        F.lit(int(two_m)) * F.col("_kin")
+                        - F.col("_deg")
+                        * (
+                            F.col("_sigma")
+                            - F.when(F.col("cand") == F.col("_own"), F.col("_deg")).otherwise(F.lit(0))
+                        )
+                    ).alias("_gain"),
+                )
             )
-        )
-        no_change = new_comm.where("_chg").isEmpty()
-        if prev is not None:
-            _release(prev)
-        prev = comm
-        comm = new_comm
-        if no_change:
-            stable += 1
-            if stable >= 2:  # a full even+odd pair with no moves
-                break
-        else:
-            stable = 0
-    if prev is not None:
-        _release(prev)
-    _release(e)
-    _release(e_dst)
-    _release(deg)
-    return comm.select("id", "community")
+            best = scored.groupBy("id").agg(
+                F.max_by(
+                    "cand", F.struct(F.col("_gain").alias("g"), (-F.col("cand")).alias("t"))
+                ).alias("_best"),
+            )
+            movable = F.pmod(F.col("id"), F.lit(2)) == F.lit(it % 2)
+            # left join keeps isolated nodes (absent from deg/k_in) in place.
+            # `_chg` rides the merge (r14, guide §2.4): the move-detection
+            # probe is an exchange-free take(1) instead of a join job.
+            moved = movable & F.col("_best").isNotNull() & (
+                F.col("_best") != F.col("community")
+            )
+            comm = loop.ckpt(
+                comm.join(best, "id", "left").select(
+                    "id",
+                    F.when(movable & F.col("_best").isNotNull(), F.col("_best"))
+                    .otherwise(F.col("community"))
+                    .alias("community"),
+                    moved.alias("_chg"),
+                )
+            )
+            no_change = comm.where("_chg").isEmpty()
+            loop.advance(comm)
+            if no_change:
+                stable += 1
+                if stable >= 2:  # a full even+odd pair with no moves
+                    break
+            else:
+                stable = 0
+        return loop.result(comm.select("id", "community"))
 
 
 def modularity(edges: DataFrame, assignment: DataFrame) -> DataFrame:
@@ -1286,45 +1060,25 @@ def topological_layers(
     BSP: one join + groupBy-max per round, rounds = longest-path length
     (the frontier relaxes one level per superstep, like BFS with max/+1
     instead of min). State stays (id, layer)."""
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _topological_layers_body(edges, nodes, max_iter)
+    with bsp(edges) as loop:
+        e = loop.pin(edges.select("src", "dst"), "src")
 
-
-def _topological_layers_body(
-    edges: DataFrame, nodes: DataFrame, max_iter: int
-) -> DataFrame:
-    e = edges.select("src", "dst").repartition("src").cache()
-    lay = _ckpt(nodes.select("id", F.lit(0).cast("long").alias("layer")))
-    # `_chg` rides the merge (r14, guide §2.4): change detection is an
-    # exchange-free take(1) probe instead of a join job; superseded layer
-    # frames release once the checkpoint built from them materializes.
-    prev = None
-    for _ in range(max_iter):
-        # shuffle_hash on the layer side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        cand = (
-            lay.hint("shuffle_hash").join(e, lay["id"] == e["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg((F.max("layer") + F.lit(1)).alias("_cand"))
-        )
-        new_lay = _ckpt(
-            lay.join(cand, "id", "left").select(
+        # `_chg` rides the merge (r14, guide §2.4): change detection is the
+        # fixpoint's flag probe instead of a join job.
+        def step(lay: DataFrame) -> DataFrame:
+            cand = (
+                loop.join(lay, e)
+                .groupBy(F.col("dst").alias("id"))
+                .agg((F.max("layer") + F.lit(1)).alias("_cand"))
+            )
+            return lay.join(cand, "id", "left").select(
                 "id",
                 F.greatest(F.col("layer"), F.coalesce("_cand", F.lit(0))).alias("layer"),
                 (F.coalesce("_cand", F.lit(0)) > F.col("layer")).alias("_chg"),
             )
-        )
-        no_change = new_lay.where("_chg").isEmpty()
-        if prev is not None:
-            _release(prev)
-        prev = lay
-        lay = new_lay
-        if no_change:
-            break
-    if prev is not None:
-        _release(prev)
-    _release(e)
-    return lay.select("id", "layer")
+
+        seed = nodes.select("id", F.lit(0).cast("long").alias("layer"))
+        return loop.result(loop.fixpoint(seed, step, max_iter, "_chg").select("id", "layer"))
 
 
 def _min_label_fixpoint(
@@ -1334,47 +1088,28 @@ def _min_label_fixpoint(
     lab(v) = min({v} ∪ {lab(u) : u→v}) — "smallest id that can reach v"
     when given forward edges, "smallest id v can reach" when given the
     reversed edge set. One join + groupBy-min shuffle per round."""
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _min_label_fixpoint_body(edges, nodes, max_iter, out)
+    with bsp(edges) as loop:
+        # Callers (scc peels, leiden refine) hand in ad-hoc edge frames; own
+        # the loop partitioning here so every round's label⋈edges join is a
+        # zero-exchange SHJ instead of a per-round edge exchange/broadcast.
+        e = loop.pin(edges.select("src", "dst"), "src")
 
-
-def _min_label_fixpoint_body(
-    edges: DataFrame, nodes: DataFrame, max_iter: int, out: str
-) -> DataFrame:
-    # Callers (scc peels, leiden refine) hand in ad-hoc edge frames; own
-    # the loop partitioning here so every round's label⋈edges join is a
-    # zero-exchange SHJ instead of a per-round edge exchange/broadcast.
-    e = edges.select("src", "dst").repartition("src").cache()
-    lab = _ckpt(nodes.select("id", F.col("id").alias(out)))
-    # `_chg` rides the merge; change probe is an exchange-free take(1)
-    # (r14, guide §2.4 — same fold as ``wcc``/``label_propagation``).
-    prev = None
-    for _ in range(max_iter):
-        cand = (
-            lab.hint("shuffle_hash").join(e, lab["id"] == e["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(out).alias("_cand"))
-        )
-        new_lab = _ckpt(
-            lab.join(cand, "id", "left").select(
+        # `_chg` rides the merge (r14, guide §2.4 — same fold as
+        # ``wcc``/``label_propagation``).
+        def step(lab: DataFrame) -> DataFrame:
+            cand = (
+                loop.join(lab, e)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min(out).alias("_cand"))
+            )
+            return lab.join(cand, "id", "left").select(
                 "id",
                 F.least(F.col(out), F.coalesce("_cand", F.col(out))).alias(out),
-                (
-                    F.col("_cand").isNotNull() & (F.col("_cand") < F.col(out))
-                ).alias("_chg"),
+                (F.col("_cand").isNotNull() & (F.col("_cand") < F.col(out))).alias("_chg"),
             )
-        )
-        no_change = new_lab.where("_chg").isEmpty()
-        if prev is not None:
-            _release(prev)
-        prev = lab
-        lab = new_lab
-        if no_change:
-            break
-    if prev is not None:
-        _release(prev)
-    _release(e)
-    return lab.select("id", out)
+
+        seed = nodes.select("id", F.col("id").alias(out))
+        return loop.result(loop.fixpoint(seed, step, max_iter, "_chg").select("id", out))
 
 
 def scc(
@@ -1708,6 +1443,21 @@ def random_walk(
     return acc
 
 
+# Source count up to which ``betweenness`` sums its per-level σ/δ arrays as
+# S per-slot ``sum(col[i])`` aggregates (generated code); above it, one
+# ``aggregate(collect_list, zip_with)`` HOF fold (interpreted per element).
+# The slot form's plan is an S-wide expression tree whose analyze/optimize/
+# plan cost grows with S and is paid again every level; the fold's plan
+# cost is flat. Measured on a 4-vCPU VM (local[2], one groupBy over 2,000
+# rows): slot form 436 ms to plan at S=512, 822 ms at 1024, 2.0 s at 2048;
+# fold ~35 ms at every S. The fold's extra cost is per row × element
+# executed, so the slot form pays off on the large per-level inputs the
+# sweep has, and 512 caps its planning at ~0.4 s per level. The two forms
+# add doubles in a different order, so runs just above and just below the
+# switch can differ in the last bits of bc.
+BETWEENNESS_SLOT_SUM_MAX_SOURCES = 512
+
+
 def betweenness(
     edges: DataFrame,
     sources: DataFrame,
@@ -1743,259 +1493,219 @@ def betweenness(
     truncates identically, so the pairing stays exact even if the true
     diameter exceeds the cap.
     """
-    # sized_by deliberately omitted: per-round state is multiplicative
-    # (source × node rows), so the edge frame undersizes the loop width.
-    with _static_plan(edges.sparkSession):
-        return _betweenness_body(edges, sources, max_depth, undirected)
-
-
-def _betweenness_body(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_depth: int,
-    undirected: bool,
-) -> DataFrame:
     from pyspark.sql import Window
 
-    e = (
-        (undirect(edges) if undirected else edges.select("src", "dst"))
-        .distinct()
-        .repartition("src")
-        .cache()
-    )
-    src_ids = sources.select(F.col("id")).distinct()
-    n_src = src_ids.count()
-    if n_src == 0:
-        _release(e)
-        return src_ids.select("id", F.lit(0.0).alias("bc"))
-    # source → array slot. The single-partition window is over the
-    # (bounded, gds samplingSize-style) source set only — never |V|.
-    idx = src_ids.select(
-        "id", (F.row_number().over(Window.orderBy("id")) - 1).alias("_j")
-    )
-    zeros_l = F.array_repeat(F.lit(0).cast("long"), n_src)
-    zeros_d = F.array_repeat(F.lit(0.0), n_src)
-    falses = F.array_repeat(F.lit(False), n_src)
+    # sized=False: per-round state is multiplicative (source × node rows),
+    # so the edge frame undersizes the loop width.
+    with bsp(edges, sized=False) as loop:
+        e = loop.pin(
+            (undirect(edges) if undirected else edges.select("src", "dst")).distinct(), "src"
+        )
+        src_ids = sources.select(F.col("id")).distinct()
+        n_src = src_ids.count()
+        if n_src == 0:
+            return src_ids.select("id", F.lit(0.0).alias("bc"))
+        # source → array slot. The single-partition window is over the
+        # (bounded, gds samplingSize-style) source set only — never |V|.
+        idx = src_ids.select(
+            "id", (F.row_number().over(Window.orderBy("id")) - 1).alias("_j")
+        )
+        zeros_l = F.array_repeat(F.lit(0).cast("long"), n_src)
+        zeros_d = F.array_repeat(F.lit(0.0), n_src)
+        falses = F.array_repeat(F.lit(False), n_src)
 
-    def arr_sum(df, col, zero):
-        """groupBy(v) element-wise array sum.
+        def arr_sum(df, col, zero):
+            """groupBy(v) element-wise array sum.
 
-        r15 (guide §1.2 "per-task work"): S independent ``sum(col[i])``
-        aggregates reassembled into the array, instead of the former
-        ``aggregate(collect_list, zip_with)`` fold. Higher-order functions
-        are CodegenFallback — the fold evaluated interpreted lambdas with
-        per-step array allocation over every element of every input row
-        (the measured bulk of each level's checkpoint job) — while
-        ``sum(getItem(i))`` updates a primitive hash-aggregate buffer slot
-        through generated code, with map-side partial aggregation intact.
-        Values are identical: long sums are exact and commutative, and the
-        double sums differ only in fold ORDER from the collect_list fold,
-        which was already arrival-order-nondeterministic. Very large
-        source sets fall back to the HOF fold rather than building an
-        S-wide expression tree (plan/analyzer cost grows with S; the gds
-        samplingSize contract keeps S in the hundreds)."""
-        if n_src > 512:
-            return df.groupBy("v").agg(
-                F.aggregate(
-                    F.collect_list(col),
-                    zero,
-                    lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-                ).alias(col)
-            )
-        return df.groupBy("v").agg(
-            F.array(*[F.sum(F.col(col)[i]) for i in range(n_src)]).alias(col)
-        )
-
-    # Forward sweep state is ONE frame per level: (v, seen[bool S], new[long S])
-    # — the former separate `visited` frame is folded in, so each level is a
-    # single full-outer merge + eager checkpoint instead of two checkpoint
-    # jobs (r14, guide §2.4: one superstep = one job). The per-level σ views
-    # the backward sweep needs are lazy filters over the checkpointed states.
-    state = _ckpt(
-        idx.select(
-            F.col("id").alias("v"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_src - 1)),
-                lambda i: F.when(i == F.col("_j"), F.lit(1).cast("long")).otherwise(
-                    F.lit(0).cast("long")
-                ),
-            ).alias("new"),
-        ).select(
-            "v", F.transform("new", lambda x: x > 0).alias("seen"), "new"
-        )
-    )
-    states = [state]
-
-    def _lvl_view(st: DataFrame) -> DataFrame:
-        return st.where(F.col("new").isNotNull()).select(
-            "v", F.col("new").alias("sig")
-        )
-
-    levels = [_lvl_view(state)]
-    for _ in range(max_depth):
-        frontier = _lvl_view(state)
-        # shuffle_hash on the frontier side (r14, _mem.static_loop_plan):
-        # the view over the checkpointed state has no size stats, so the
-        # planner would otherwise re-broadcast the cached edge frame every
-        # level; both sides are already hash-partitioned (state: hash(v)
-        # from the merge, e: the hash(src) cache) → zero-exchange SHJ.
-        summed = arr_sum(
-            frontier.hint("shuffle_hash").join(e, frontier["v"] == e["src"]).select(
-                e["dst"].alias("v"), "sig"
-            ),
-            "sig",
-            zeros_l,
-        )
-        merged = state.join(
-            summed.withColumnRenamed("sig", "_sg"), "v", "full"
-        )
-        masked = F.zip_with(
-            F.col("_sg"),
-            F.coalesce("seen", falses),
-            lambda x, sn: F.when(sn, F.lit(0).cast("long")).otherwise(x),
-        )
-        # Settled nodes (no new σ this level) store `new` as NULL instead
-        # of an all-zero array[S] — at later levels |reached| ≈ |V| while
-        # the frontier is tiny, so checkpointing zero arrays for every
-        # settled node was 8·S bytes/node/level of dead weight (the bulk
-        # of the full-outer merge's write). The level view filters on
-        # IS NOT NULL; values in non-null arrays are unchanged.
-        #
-        # r15 (guide §1.2 "per-task work"): rows with NO contribution this
-        # level (`_sg` null — the settled majority at later levels) pass
-        # `seen` through and store a null `new` WITHOUT evaluating any
-        # array lambda: higher-order functions are CodegenFallback
-        # (interpreted per element), and CaseWhen evaluates only the taken
-        # branch, so the per-level HOF work shrinks from O(|V|·S) to
-        # O(|touched|·S). `seen` folds the unmasked `_sg` directly
-        # (sn | (x>0 ∧ ¬sn) ≡ sn | x>0), dropping the former
-        # masked-intermediate re-evaluation; values are unchanged.
-        new_state = _ckpt(
-            merged.select(
-                "v",
-                F.when(F.col("_sg").isNull(), F.col("seen"))
-                .otherwise(
-                    F.zip_with(
-                        F.coalesce("seen", falses),
-                        F.col("_sg"),
-                        lambda sn, x: sn | (x > 0),
-                    )
+            r15 (guide §1.2 "per-task work"): S independent ``sum(col[i])``
+            aggregates reassembled into the array, instead of the former
+            ``aggregate(collect_list, zip_with)`` fold. Higher-order
+            functions are CodegenFallback — the fold evaluated interpreted
+            lambdas with per-step array allocation over every element of
+            every input row (the measured bulk of each level's checkpoint
+            job) — while ``sum(getItem(i))`` updates a primitive
+            hash-aggregate buffer slot through generated code, with map-side
+            partial aggregation intact. Values are identical: long sums are
+            exact and commutative, and the double sums differ only in fold
+            ORDER from the collect_list fold, which was already
+            arrival-order-nondeterministic. Source sets above
+            ``BETWEENNESS_SLOT_SUM_MAX_SOURCES`` fall back to the HOF fold
+            rather than building an S-wide expression tree."""
+            if n_src > BETWEENNESS_SLOT_SUM_MAX_SOURCES:
+                return df.groupBy("v").agg(
+                    F.aggregate(
+                        F.collect_list(col),
+                        zero,
+                        lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
+                    ).alias(col)
                 )
-                .alias("seen"),
-                F.when(
-                    F.col("_sg").isNotNull()
-                    & F.exists(masked, lambda x: x > 0),
-                    masked,
+            return df.groupBy("v").agg(
+                F.array(*[F.sum(F.col(col)[i]) for i in range(n_src)]).alias(col)
+            )
+
+        # Forward sweep state is ONE frame per level: (v, seen[bool S],
+        # new[long S]) — the former separate `visited` frame is folded in, so
+        # each level is a single full-outer merge + eager checkpoint instead
+        # of two checkpoint jobs (r14, guide §2.4: one superstep = one job).
+        # The per-level σ views the backward sweep needs are lazy filters
+        # over the checkpointed states.
+        state = loop.ckpt(
+            idx.select(
+                F.col("id").alias("v"),
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(n_src - 1)),
+                    lambda i: F.when(i == F.col("_j"), F.lit(1).cast("long")).otherwise(
+                        F.lit(0).cast("long")
+                    ),
                 ).alias("new"),
+            ).select(
+                "v", F.transform("new", lambda x: x > 0).alias("seen"), "new"
             )
         )
-        if _lvl_view(new_state).isEmpty():
-            _release(new_state)
-            break
-        states.append(new_state)
-        levels.append(_lvl_view(new_state))
-        state = new_state
-    # Backward dependency sweep: each level's δ frame is a LAZY local
-    # checkpoint materialized by the NEXT level's score-fold job (one eager
-    # job per level instead of two), with the scalar score fold keeping the
-    # pinned array-state bounded: the sweep holds at most two array-level δ
-    # frames plus the states (which the forward sweep already pinned). δ at
-    # depth 0 (the sources, endpoint-excluded by Brandes) is never computed.
-    if len(levels) == 1:
-        _release(e)
-        for st in states:
-            _release(st)
-        return src_ids.select("id", F.lit(0.0).alias("bc"))
-    # backward joins key on dst — cache that partitioning once for all
-    # levels instead of re-exchanging the edge set per round
-    e_by_dst = e.repartition("dst").cache()
+        states = [state]
 
-    def _fold(score: DataFrame | None, delta_frame: DataFrame) -> DataFrame:
-        contrib = delta_frame.select(
-            "v", F.aggregate("delta", F.lit(0.0), lambda a, x: a + x).alias("delta")
-        )
-        merged = contrib if score is None else score.unionByName(contrib)
-        out = _ckpt(merged.groupBy("v").agg(F.sum("delta").alias("delta")))
-        # the eager checkpoint above has materialized; the superseded
-        # running-score frame it folded in is dead — release it (r14)
-        _release(score)
-        return out
+        def _lvl_view(st: DataFrame) -> DataFrame:
+            return st.where(F.col("new").isNotNull()).select(
+                "v", F.col("new").alias("sig")
+            )
 
-    score: DataFrame | None = None
-    delta_next = levels[-1].select("v", "sig", zeros_d.alias("delta"))
-    pending: list[DataFrame] = []
-    pending_state: DataFrame | None = None
-    for d in range(len(levels) - 2, 0, -1):
-        cur = levels[d]
-        # per-(source) successor message m = (1+δ_w)/σ_w where σ_w>0
-        msgs = delta_next.select(
-            "v",
-            F.zip_with(
+        levels = [_lvl_view(state)]
+        for _ in range(max_depth):
+            summed = arr_sum(
+                loop.join(_lvl_view(state), e, "v").select(e["dst"].alias("v"), "sig"),
                 "sig",
-                "delta",
-                lambda sg, dl: F.when(
-                    sg > 0, (F.lit(1.0) + dl) / sg.cast("double")
-                ).otherwise(F.lit(0.0)),
-            ).alias("_m"),
-        )
-        # messages flow along the PREDECESSOR relation: w's dependency
-        # reaches v iff the forward edge v→w exists, so join on e.dst==w
-        # and emit e.src — joining on e.src would walk w's out-edges,
-        # which is only equivalent when e is the symmetric undirected set
-        # same zero-exchange SHJ shape as the forward sweep: build over the
-        # (checkpoint-derived, stat-less) message side, stream the hash(dst)
-        # edge cache in place instead of re-broadcasting it per level.
-        acc = arr_sum(
-            msgs.hint("shuffle_hash").join(e_by_dst, msgs["v"] == e_by_dst["dst"]).select(
-                e_by_dst["src"].alias("v"), "_m"
-            ),
-            "_m",
-            zeros_d,
-        )
-        delta_cur = (
-            cur.join(acc, "v", "left")
-            .select(
+                zeros_l,
+            )
+            merged = state.join(
+                summed.withColumnRenamed("sig", "_sg"), "v", "full"
+            )
+            masked = F.zip_with(
+                F.col("_sg"),
+                F.coalesce("seen", falses),
+                lambda x, sn: F.when(sn, F.lit(0).cast("long")).otherwise(x),
+            )
+            # Settled nodes (no new σ this level) store `new` as NULL instead
+            # of an all-zero array[S] — at later levels |reached| ≈ |V| while
+            # the frontier is tiny, so checkpointing zero arrays for every
+            # settled node was 8·S bytes/node/level of dead weight (the bulk
+            # of the full-outer merge's write). The level view filters on
+            # IS NOT NULL; values in non-null arrays are unchanged.
+            #
+            # r15 (guide §1.2 "per-task work"): rows with NO contribution
+            # this level (`_sg` null — the settled majority at later levels)
+            # pass `seen` through and store a null `new` WITHOUT evaluating
+            # any array lambda: higher-order functions are CodegenFallback
+            # (interpreted per element), and CaseWhen evaluates only the
+            # taken branch, so the per-level HOF work shrinks from O(|V|·S)
+            # to O(|touched|·S). `seen` folds the unmasked `_sg` directly
+            # (sn | (x>0 ∧ ¬sn) ≡ sn | x>0), dropping the former
+            # masked-intermediate re-evaluation; values are unchanged.
+            new_state = loop.ckpt(
+                merged.select(
+                    "v",
+                    F.when(F.col("_sg").isNull(), F.col("seen"))
+                    .otherwise(
+                        F.zip_with(
+                            F.coalesce("seen", falses),
+                            F.col("_sg"),
+                            lambda sn, x: sn | (x > 0),
+                        )
+                    )
+                    .alias("seen"),
+                    F.when(
+                        F.col("_sg").isNotNull()
+                        & F.exists(masked, lambda x: x > 0),
+                        masked,
+                    ).alias("new"),
+                )
+            )
+            if _lvl_view(new_state).isEmpty():
+                _release(new_state)
+                break
+            states.append(new_state)
+            levels.append(_lvl_view(new_state))
+            state = new_state
+        # Backward dependency sweep: each level's δ frame is a LAZY local
+        # checkpoint materialized by the NEXT level's score-fold job (one
+        # eager job per level instead of two), with the scalar score fold
+        # keeping the pinned array-state bounded: the sweep holds at most two
+        # array-level δ frames plus the states (which the forward sweep
+        # already pinned). δ at depth 0 (the sources, endpoint-excluded by
+        # Brandes) is never computed.
+        if len(levels) == 1:
+            return src_ids.select("id", F.lit(0.0).alias("bc"))
+        # backward joins key on dst — pin that partitioning once for all
+        # levels instead of re-exchanging the edge set per round
+        e_by_dst = loop.pin(e, "dst")
+
+        def _fold(score: DataFrame | None, delta_frame: DataFrame) -> DataFrame:
+            contrib = delta_frame.select(
+                "v", F.aggregate("delta", F.lit(0.0), lambda a, x: a + x).alias("delta")
+            )
+            merged = contrib if score is None else score.unionByName(contrib)
+            # the eager checkpoint materializes; the superseded running-score
+            # frame it folded in is dead from then on (r14)
+            return loop.advance(
+                loop.ckpt(merged.groupBy("v").agg(F.sum("delta").alias("delta"))), "score"
+            )
+
+        score: DataFrame | None = None
+        delta_next = levels[-1].select("v", "sig", zeros_d.alias("delta"))
+        for d in range(len(levels) - 2, 0, -1):
+            cur = levels[d]
+            # per-(source) successor message m = (1+δ_w)/σ_w where σ_w>0
+            msgs = delta_next.select(
                 "v",
-                "sig",
                 F.zip_with(
                     "sig",
-                    F.coalesce("_m", zeros_d),
-                    lambda sg, a: F.when(sg > 0, sg.cast("double") * a).otherwise(
-                        F.lit(0.0)
-                    ),
-                ).alias("delta"),
+                    "delta",
+                    lambda sg, dl: F.when(
+                        sg > 0, (F.lit(1.0) + dl) / sg.cast("double")
+                    ).otherwise(F.lit(0.0)),
+                ).alias("_m"),
             )
-            .localCheckpoint(eager=False)
-        )
-        # The fold's groupBy scans every row of delta_next, materializing
-        # its lazy checkpoint in the same job. delta_next's own inputs
-        # (the previous δ) can only be released AFTER that — one round late.
-        score = _fold(score, delta_next)  # depth d+1 ≥ 1: interior, counts
-        for fr in pending:
-            _release(fr)
-        pending = [delta_next]
-        # States release ONE ROUND BEHIND, like the δ frames: the backward
-        # start's delta_next is a lazy VIEW over states[-1] (not a
-        # checkpoint), consumed only when the NEXT round's δ materializes —
-        # and with the zero-exchange loop plans (r14 static_loop_plan) there
-        # is no shuffle file between a δ frame and the state checkpoints
-        # under it to mask an early release (releasing states[d+1] here
-        # crashed the next fold with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND once
-        # the exchanges were gone). The pinned set still shrinks level by
-        # level — just one level later.
-        if pending_state is not None:
-            _release(pending_state)
-        pending_state = states[d + 1]
-        delta_next = delta_cur
-    score = _fold(score, delta_next)  # depth 1 (materializes the last δ)
-    for fr in pending:
-        _release(fr)
-    _release(delta_next)
-    for st in states:
-        _release(st)
-    _release(e)
-    _release(e_by_dst)
-    return score.select(F.col("v").alias("id"), F.col("delta").alias("bc"))
+            # messages flow along the PREDECESSOR relation: w's dependency
+            # reaches v iff the forward edge v→w exists, so join on e.dst==w
+            # and emit e.src — joining on e.src would walk w's out-edges,
+            # which is only equivalent when e is the symmetric undirected set
+            acc = arr_sum(
+                loop.join(msgs, e_by_dst, "v", "dst").select(e_by_dst["src"].alias("v"), "_m"),
+                "_m",
+                zeros_d,
+            )
+            delta_cur = loop.ckpt(
+                cur.join(acc, "v", "left").select(
+                    "v",
+                    "sig",
+                    F.zip_with(
+                        "sig",
+                        F.coalesce("_m", zeros_d),
+                        lambda sg, a: F.when(sg > 0, sg.cast("double") * a).otherwise(
+                            F.lit(0.0)
+                        ),
+                    ).alias("delta"),
+                ),
+                eager=False,
+            )
+            # The fold's groupBy scans every row of delta_next, materializing
+            # its lazy checkpoint in the same job. delta_next's own inputs
+            # (the previous δ) can only be released AFTER that — one round
+            # late.
+            score = _fold(score, delta_next)  # depth d+1 ≥ 1: interior, counts
+            loop.advance(delta_next, "delta")
+            # States release ONE ROUND BEHIND, like the δ frames: the
+            # backward start's delta_next is a lazy VIEW over states[-1] (not
+            # a checkpoint), consumed only when the NEXT round's δ
+            # materializes — and with the zero-exchange loop plans there is
+            # no shuffle file between a δ frame and the state checkpoints
+            # under it to mask an early release (releasing states[d+1] here
+            # crashed the next fold with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+            # once the exchanges were gone). The pinned set still shrinks
+            # level by level — just one level later.
+            loop.advance(states[d + 1], "level")
+            delta_next = delta_cur
+        score = _fold(score, delta_next)  # depth 1 (materializes the last δ)
+        return loop.result(score.select(F.col("v").alias("id"), F.col("delta").alias("bc")))
 
 
 def kcore(edges: DataFrame, k: int = 3, max_rounds: int = 20) -> DataFrame:
@@ -2182,46 +1892,33 @@ def closeness_walk(
     the harmonic-centrality catalog row. Frontier BSP with the source
     dimension riding in the key; state is |sources| × |reached|, which is
     why callers pass a bounded source set (landmark sampling at scale)."""
-    # sized_by deliberately omitted: per-round state is multiplicative
-    # (source × node rows), so the edge frame undersizes the loop width.
-    with _static_plan(edges.sparkSession):
-        return _closeness_walk_body(edges, sources, max_depth, undirected)
-
-
-def _closeness_walk_body(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_depth: int,
-    undirected: bool,
-) -> DataFrame:
-    e = (undirect(edges) if undirected else edges.select("src", "dst")).repartition("src").cache()
-    frontier = _ckpt(
-        sources.select(F.col("id").alias("source")).distinct().select(
-            "source", F.col("source").alias("id")
+    # sized=False: per-round state is multiplicative (source × node rows),
+    # so the edge frame undersizes the loop width.
+    with bsp(edges, sized=False) as loop:
+        e = loop.pin(undirect(edges) if undirected else edges.select("src", "dst"), "src")
+        frontier = loop.ckpt(
+            sources.select(F.col("id").alias("source")).distinct().select(
+                "source", F.col("source").alias("id")
+            )
         )
-    )
-    levels = [frontier.select("source", "id", F.lit(0).cast("long").alias("dist"))]
-    visited = frontier
-    for depth in range(1, max_depth + 1):
-        # shuffle_hash on the frontier side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per level.
-        nxt = (
-            frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
-            .select("source", F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, ["source", "id"], "left_anti")
-        )
-        nxt = _ckpt(nxt)
-        if nxt.isEmpty():
-            break
-        levels.append(nxt.select("source", "id", F.lit(depth).cast("long").alias("dist")))
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    _release(e)
-    walk = levels[0]
-    for lv in levels[1:]:
-        walk = walk.unionByName(lv)
-    return walk
+        levels = [frontier.select("source", "id", F.lit(0).cast("long").alias("dist"))]
+        visited = frontier
+        for depth in range(1, max_depth + 1):
+            nxt = loop.ckpt(
+                loop.join(frontier, e)
+                .select("source", F.col("dst").alias("id"))
+                .distinct()
+                .join(visited, ["source", "id"], "left_anti")
+            )
+            if nxt.isEmpty():
+                break
+            levels.append(nxt.select("source", "id", F.lit(depth).cast("long").alias("dist")))
+            visited = visited.unionByName(nxt)
+            frontier = nxt
+        walk = levels[0]
+        for lv in levels[1:]:
+            walk = walk.unionByName(lv)
+        return loop.result(walk)
 
 
 def closeness(
@@ -2563,93 +2260,68 @@ def sllpa(
     replica explode + two groupBys — the LPA shuffle shape with a
     bounded constant factor.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _sllpa_body(edges, nodes, rounds, threshold_num, threshold_den, salt)
-
-
-def _sllpa_body(
-    edges: DataFrame,
-    nodes: DataFrame,
-    rounds: int,
-    threshold_num: int,
-    threshold_den: int,
-    salt: str,
-) -> DataFrame:
-    e = undirect(edges).distinct().repartition("src").cache()
-    mem = _ckpt(
-        nodes.select(
-            F.col("id").alias("node"),
-            F.col("id").alias("label"),
-            F.lit(1).cast("long").alias("cnt"),
-        )
-    )
-    # superseded memory frames are released one round behind (r14,
-    # guide §5): each round's eager checkpoint fully replaces the last
-    prev = None
-    for k in range(1, rounds + 1):
-        # shuffle_hash on the memory side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        cand = e.join(mem.hint("shuffle_hash"), e["src"] == mem["node"]).select(
-            "src", "dst", "label", "cnt"
-        )
-        reps = cand.select(
-            "src",
-            "dst",
-            "label",
-            F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_j"),
-        )
-        draw = F.md5(
-            F.concat_ws(
-                "|",
-                F.lit(salt),
-                F.lit(str(k)),
-                F.col("src"),
-                F.col("dst"),
-                F.col("label"),
-                F.col("_j"),
+    with bsp(edges) as loop:
+        e = loop.pin(undirect(edges).distinct(), "src")
+        mem = loop.advance(loop.ckpt(
+            nodes.select(
+                F.col("id").alias("node"),
+                F.col("id").alias("label"),
+                F.lit(1).cast("long").alias("cnt"),
             )
-        )
-        spoken = reps.select("src", "dst", "label", draw.alias("_h")).groupBy(
-            "src", "dst"
-        ).agg(F.min_by("label", F.col("_h")).alias("label"))
-        heard = (
-            spoken.groupBy(F.col("dst").alias("node"), "label")
-            .agg(F.count("*").alias("_n"))
-            .groupBy("node")
-            .agg(
-                F.max_by(
-                    "label",
-                    F.struct(F.col("_n").alias("n"), (-F.col("label")).alias("t")),
-                ).alias("label")
+        ))
+        for k in range(1, rounds + 1):
+            # memory side hinted as in ``BSPLoop.join``, built on the right
+            cand = e.join(mem.hint("shuffle_hash"), e["src"] == mem["node"]).select(
+                "src", "dst", "label", "cnt"
             )
-            .select("node", "label", F.lit(1).cast("long").alias("_inc"))
-        )
-        new_mem = _ckpt(
-            mem.join(heard, ["node", "label"], "full")
-            .select(
-                "node",
+            reps = cand.select(
+                "src",
+                "dst",
                 "label",
-                (F.coalesce("cnt", F.lit(0)) + F.coalesce("_inc", F.lit(0))).alias(
-                    "cnt"
-                ),
+                F.explode(F.sequence(F.lit(1), F.col("cnt"))).alias("_j"),
             )
+            draw = F.md5(
+                F.concat_ws(
+                    "|",
+                    F.lit(salt),
+                    F.lit(str(k)),
+                    F.col("src"),
+                    F.col("dst"),
+                    F.col("label"),
+                    F.col("_j"),
+                )
+            )
+            spoken = reps.select("src", "dst", "label", draw.alias("_h")).groupBy(
+                "src", "dst"
+            ).agg(F.min_by("label", F.col("_h")).alias("label"))
+            heard = (
+                spoken.groupBy(F.col("dst").alias("node"), "label")
+                .agg(F.count("*").alias("_n"))
+                .groupBy("node")
+                .agg(
+                    F.max_by(
+                        "label",
+                        F.struct(F.col("_n").alias("n"), (-F.col("label")).alias("t")),
+                    ).alias("label")
+                )
+                .select("node", "label", F.lit(1).cast("long").alias("_inc"))
+            )
+            # each round's eager checkpoint fully replaces the last memory
+            mem = loop.advance(loop.ckpt(
+                mem.join(heard, ["node", "label"], "full").select(
+                    "node",
+                    "label",
+                    (F.coalesce("cnt", F.lit(0)) + F.coalesce("_inc", F.lit(0))).alias("cnt"),
+                )
+            ))
+        totals = mem.groupBy("node").agg(F.sum("cnt").alias("_tot"))
+        return loop.result(
+            mem.join(totals, "node")
+            .where(
+                F.col("cnt") * F.lit(threshold_den) >= F.col("_tot") * F.lit(threshold_num)
+            )
+            .select(F.col("node").alias("id"), "label", "cnt")
         )
-        if prev is not None:
-            _release(prev)
-        prev = mem
-        mem = new_mem
-    if prev is not None:
-        _release(prev)
-    totals = mem.groupBy("node").agg(F.sum("cnt").alias("_tot"))
-    out = (
-        mem.join(totals, "node")
-        .where(
-            F.col("cnt") * F.lit(threshold_den) >= F.col("_tot") * F.lit(threshold_num)
-        )
-        .select(F.col("node").alias("id"), "label", "cnt")
-    )
-    _release(e)
-    return out
 
 
 def node_similarity_metrics(edges: DataFrame) -> DataFrame:
@@ -2922,88 +2594,62 @@ def k1coloring(
     monochrome edges (r6 ADVICE — long id-ordered conflict chains can
     outlast any fixed round count).
     """
-    # sized_by deliberately omitted: per-round state is multiplicative
-    # (source × node rows), so the edge frame undersizes the loop width.
-    with _static_plan(edges.sparkSession):
-        return _k1coloring_body(edges, nodes, max_rounds)
+    with bsp(edges) as loop:
+        e = loop.pin(undirect(edges).distinct(), "src")
 
-
-def _k1coloring_body(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_rounds: int,
-) -> DataFrame:
-    e = undirect(edges).distinct().repartition("src").cache()
-    color = _ckpt(nodes.select("id", F.lit(0).cast("long").alias("color")))
-    # r14 fusion (guide §2.4): conflict detection, recolor and merge are
-    # ONE lineage per round ending in a single eager checkpoint that
-    # carries a `_chg` flag; the probe is an exchange-free take(1) over
-    # the checkpointed output (the former separate conflict-frame
-    # checkpoint job is gone). Equivalence: a conflicted node ALWAYS
-    # changes color — its old color is present in its neighborhood, so
-    # the smallest absent color differs — hence "no conflicts" ⟺
-    # "no _chg rows". Superseded color frames release one round behind.
-    prev = None
-    for rnd in range(max_rounds + 1):
-        ca = color.select(F.col("id").alias("_ia"), F.col("color").alias("_ca"))
-        cb = color.select(F.col("id").alias("_ib"), F.col("color").alias("_cb"))
-        # shuffle_hash on the color/conflict (state) sides (r14,
-        # _mem.static_loop_plan): e is read in its cached hash(src)
-        # partitioning instead of being re-broadcast per round.
-        conflicts = (
-            e.join(ca.hint("shuffle_hash"), e["src"] == ca["_ia"])
-            .join(cb.hint("shuffle_hash"), e["dst"] == cb["_ib"])
-            .where((F.col("_ca") == F.col("_cb")) & (F.col("_ia") < F.col("_ib")))
-            .select(F.col("_ib").alias("id"))
-            .distinct()
-        )
-        nb = (
-            e.join(conflicts.hint("shuffle_hash"), e["src"] == conflicts["id"])
-            .join(
-                color.select(F.col("id").alias("_n"), F.col("color").alias("_nc")).hint(
-                    "shuffle_hash"
-                ),
-                F.col("dst") == F.col("_n"),
+        # r14 fusion (guide §2.4): conflict detection, recolor and merge are
+        # ONE lineage per round ending in a single eager checkpoint that
+        # carries a `_chg` flag, probed by the fixpoint — no separate
+        # conflict-frame checkpoint job. Equivalence: a conflicted
+        # node ALWAYS changes color — its old color is present in its
+        # neighborhood, so the smallest absent color differs — hence "no
+        # conflicts" ⟺ "no _chg rows".
+        def step(color: DataFrame) -> DataFrame:
+            ca = color.select(F.col("id").alias("_ia"), F.col("color").alias("_ca"))
+            cb = color.select(F.col("id").alias("_ib"), F.col("color").alias("_cb"))
+            # color/conflict (state) sides hinted as in ``BSPLoop.join``,
+            # built on the right of the pinned edges
+            conflicts = (
+                e.join(ca.hint("shuffle_hash"), e["src"] == ca["_ia"])
+                .join(cb.hint("shuffle_hash"), e["dst"] == cb["_ib"])
+                .where((F.col("_ca") == F.col("_cb")) & (F.col("_ia") < F.col("_ib")))
+                .select(F.col("_ib").alias("id"))
+                .distinct()
             )
-            .groupBy(e["src"].alias("id"))
-            .agg(F.collect_set("_nc").alias("_used"))
-        )
-        # smallest color not in _used: scan 0..size(_used) — one of them
-        # must be free (pigeonhole), filter+array_min keeps it JVM-side
-        free = F.array_min(
-            F.filter(
-                F.sequence(F.lit(0).cast("long"), F.size("_used").cast("long")),
-                lambda c: ~F.exists(F.col("_used"), lambda u: u == c),
+            nb = (
+                e.join(conflicts.hint("shuffle_hash"), e["src"] == conflicts["id"])
+                .join(
+                    color.select(F.col("id").alias("_n"), F.col("color").alias("_nc")).hint(
+                        "shuffle_hash"
+                    ),
+                    F.col("dst") == F.col("_n"),
+                )
+                .groupBy(e["src"].alias("id"))
+                .agg(F.collect_set("_nc").alias("_used"))
             )
-        )
-        recolored = nb.select("id", free.cast("long").alias("color"))
-        new_color = _ckpt(
-            color.join(recolored.withColumnRenamed("color", "_new"), "id", "left")
-            .select(
+            # smallest color not in _used: scan 0..size(_used) — one of them
+            # must be free (pigeonhole), filter+array_min keeps it JVM-side
+            free = F.array_min(
+                F.filter(
+                    F.sequence(F.lit(0).cast("long"), F.size("_used").cast("long")),
+                    lambda c: ~F.exists(F.col("_used"), lambda u: u == c),
+                )
+            )
+            recolored = nb.select("id", free.cast("long").alias("color"))
+            return color.join(recolored.withColumnRenamed("color", "_new"), "id", "left").select(
                 "id",
                 F.coalesce("_new", "color").alias("color"),
                 F.col("_new").isNotNull().alias("_chg"),
             )
-        )
-        changed = not new_color.where("_chg").isEmpty()
-        if prev is not None:
-            _release(prev)
-        prev = color
-        color = new_color
-        if not changed:
-            break
-        if rnd == max_rounds:
-            _release(prev)
-            _release(color)
-            _release(e)
+
+        seed = nodes.select("id", F.lit(0).cast("long").alias("color"))
+        color = loop.fixpoint(seed, step, max_rounds + 1, "_chg")
+        if not loop.converged:
             raise RuntimeError(
                 f"k1coloring did not converge within max_rounds={max_rounds}: "
                 "conflicts remain — raise max_rounds"
             )
-    if prev is not None:
-        _release(prev)
-    _release(e)
-    return color.select("id", "color")
+        return loop.result(color.select("id", "color"))
 
 
 def hashgnn(
@@ -3418,85 +3064,58 @@ def steiner_tree(
     are exact and deterministic, but an MST inside a recursive CTE is not
     SQL-expressible — pytest replays an exact Python twin instead.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _steiner_tree_body(edges, terminals, weight_col, max_iter)
-
-
-def _steiner_tree_body(
-    edges: DataFrame,
-    terminals: DataFrame,
-    weight_col: str,
-    max_iter: int,
-) -> DataFrame:
-    und = (
-        edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                F.col(weight_col).cast("double").alias("w"),
-            )
-        )
-        .where(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition("src")
-        .cache()
-    )
-    # -- 1. multi-source Dijkstra: state (id, dist, term, parent, pw)
-    state = _ckpt(
-        terminals.select("id").distinct().select(
-            "id",
-            F.lit(0.0).alias("dist"),
-            F.col("id").alias("term"),
-            F.lit(None).cast("long").alias("parent"),
-            F.lit(0.0).alias("pw"),
-        )
-    )
-    # One merge per superstep (r14, guide §2.4, the ``sssp`` template):
-    # improvement check and state merge are a single full-outer join +
-    # eager checkpoint carrying an ``_imp`` flag; the emptiness probe is
-    # an exchange-free take(1) over the improved filter and the frontier
-    # is a lazy filter over the merged state (the former separate
-    # improved-frame checkpoint job is gone). Superseded state frames
-    # release one round behind.
-    frontier = state
-    prev = None
-    for _ in range(max_iter):
-        # shuffle_hash on the frontier side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        cand = (
-            frontier.hint("shuffle_hash").join(und, frontier["id"] == und["src"])
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("w")).alias("_nd"),
-                F.col("term").alias("_nt"),
-                F.col("src").alias("_np"),
-                F.col("w").alias("_npw"),
-            )
-            .groupBy("id")
-            .agg(
-                F.min_by(
-                    F.struct("_nd", "_nt", "_np", "_npw"),
-                    F.struct("_nd", "_nt", "_np"),
-                ).alias("s")
-            )
-            .select("id", "s._nd", "s._nt", "s._np", "s._npw")
-        )
-        imp = F.col("_nd").isNotNull() & (
-            F.col("dist").isNull()
-            | (
-                F.struct(
-                    F.col("_nd").alias("dist"),
-                    F.col("_nt").alias("term"),
-                    F.col("_np").alias("parent"),
+    with bsp(edges) as loop:
+        und = loop.pin(
+            edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
+            .unionByName(
+                edges.select(
+                    F.col("dst").alias("src"),
+                    F.col("src").alias("dst"),
+                    F.col(weight_col).cast("double").alias("w"),
                 )
-                < F.struct("dist", "term", "parent")
             )
+            .where(F.col("src") != F.col("dst"))
+            .groupBy("src", "dst")
+            .agg(F.min("w").alias("w")),
+            "src",
         )
-        new_state = _ckpt(
-            state.join(cand, "id", "full")
-            .select(
+
+        # -- 1. multi-source Dijkstra: state (id, dist, term, parent, pw)
+        # One merge per superstep (r14, guide §2.4, the ``sssp`` template):
+        # improvement check and state merge are a single full-outer join +
+        # eager checkpoint carrying an ``_imp`` flag; the frontier is a lazy
+        # filter over the merged state.
+        def relax(state: DataFrame) -> DataFrame:
+            cand = (
+                loop.join(_improved(state, "dist", "term"), und)
+                .select(
+                    F.col("dst").alias("id"),
+                    (F.col("dist") + F.col("w")).alias("_nd"),
+                    F.col("term").alias("_nt"),
+                    F.col("src").alias("_np"),
+                    F.col("w").alias("_npw"),
+                )
+                .groupBy("id")
+                .agg(
+                    F.min_by(
+                        F.struct("_nd", "_nt", "_np", "_npw"),
+                        F.struct("_nd", "_nt", "_np"),
+                    ).alias("s")
+                )
+                .select("id", "s._nd", "s._nt", "s._np", "s._npw")
+            )
+            imp = F.col("_nd").isNotNull() & (
+                F.col("dist").isNull()
+                | (
+                    F.struct(
+                        F.col("_nd").alias("dist"),
+                        F.col("_nt").alias("term"),
+                        F.col("_np").alias("parent"),
+                    )
+                    < F.struct("dist", "term", "parent")
+                )
+            )
+            return state.join(cand, "id", "full").select(
                 "id",
                 F.when(imp, F.col("_nd")).otherwise(F.col("dist")).alias("dist"),
                 F.when(imp, F.col("_nt")).otherwise(F.col("term")).alias("term"),
@@ -3504,125 +3123,111 @@ def _steiner_tree_body(
                 F.when(imp, F.col("_npw")).otherwise(F.col("pw")).alias("pw"),
                 imp.alias("_imp"),
             )
-        )
-        if prev is not None:
-            _release(prev)
-        prev = state
-        state = new_state
-        if new_state.where("_imp").isEmpty():
-            break
-        frontier = new_state.where("_imp").select("id", "dist", "term")
-    if prev is not None:
-        _release(prev)
 
-    # -- 2. terminal-graph proposals (keep the bridging edge for unfold)
-    su = state.select(
-        F.col("id").alias("src"),
-        F.col("dist").alias("_du"),
-        F.col("term").alias("_tu"),
-    )
-    sv = state.select(
-        F.col("id").alias("dst"),
-        F.col("dist").alias("_dv"),
-        F.col("term").alias("_tv"),
-    )
-    cross = (
-        und.join(su, "src")
-        .join(sv, "dst")
-        .where(F.col("_tu") != F.col("_tv"))
-        .select(
-            F.least("_tu", "_tv").alias("ta"),
-            F.greatest("_tu", "_tv").alias("tb"),
-            (F.col("_du") + F.col("w") + F.col("_dv")).alias("tw"),
-            "src",
-            "dst",
-            "w",
+        seed = terminals.select("id").distinct().select(
+            "id",
+            F.lit(0.0).alias("dist"),
+            F.col("id").alias("term"),
+            F.lit(None).cast("long").alias("parent"),
+            F.lit(0.0).alias("pw"),
         )
-    )
-    best = _ckpt(
-        cross.groupBy("ta", "tb")
-        .agg(
-            F.min_by(
-                F.struct("tw", "src", "dst", "w"), F.struct("tw", "src", "dst")
-            ).alias("b")
-        )
-        .select("ta", "tb", "b.tw", "b.src", "b.dst", "b.w")
-    )
+        state = loop.fixpoint(seed, relax, max_iter, "_imp")
 
-    # -- 3. MST over the terminal graph
-    tnodes = terminals.select("id").distinct()
-    mst = spanning_forest(
-        best.select(F.col("ta").alias("src"), F.col("tb").alias("dst"), "tw"),
-        tnodes,
-        weight_col="tw",
-    )
-    chosen = mst.select(
-        F.least("src", "dst").alias("ta"), F.greatest("src", "dst").alias("tb")
-    ).join(best, ["ta", "tb"])
+        # -- 2. terminal-graph proposals (keep the bridging edge for unfold)
+        su = state.select(
+            F.col("id").alias("src"),
+            F.col("dist").alias("_du"),
+            F.col("term").alias("_tu"),
+        )
+        sv = state.select(
+            F.col("id").alias("dst"),
+            F.col("dist").alias("_dv"),
+            F.col("term").alias("_tv"),
+        )
+        cross = (
+            und.join(su, "src")
+            .join(sv, "dst")
+            .where(F.col("_tu") != F.col("_tv"))
+            .select(
+                F.least("_tu", "_tv").alias("ta"),
+                F.greatest("_tu", "_tv").alias("tb"),
+                (F.col("_du") + F.col("w") + F.col("_dv")).alias("tw"),
+                "src",
+                "dst",
+                "w",
+            )
+        )
+        best = loop.ckpt(
+            cross.groupBy("ta", "tb")
+            .agg(
+                F.min_by(
+                    F.struct("tw", "src", "dst", "w"), F.struct("tw", "src", "dst")
+                ).alias("b")
+            )
+            .select("ta", "tb", "b.tw", "b.src", "b.dst", "b.w")
+        )
 
-    # -- 4. unfold: bridging edges + both parent-pointer walks
-    bridge = chosen.select("src", "dst", "w")
-    walk_seed = chosen.select(F.col("src").alias("id")).unionByName(
-        chosen.select(F.col("dst").alias("id"))
-    ).distinct()
-    parts = [bridge]
-    seed = _ckpt(walk_seed)
-    cur = seed
-    steps: list[DataFrame] = []
-    ps = state.select("id", "parent", "pw")
-    for _ in range(max_iter):
-        step = _ckpt(cur.join(ps, "id").where(F.col("parent").isNotNull()))
-        if step.isEmpty():
-            _release(step)
-            break
-        steps.append(step)
-        parts.append(
-            step.select(F.col("id").alias("src"), F.col("parent").alias("dst"), F.col("pw").alias("w"))
+        # -- 3. MST over the terminal graph
+        tnodes = terminals.select("id").distinct()
+        mst = spanning_forest(
+            best.select(F.col("ta").alias("src"), F.col("tb").alias("dst"), "tw"),
+            tnodes,
+            weight_col="tw",
         )
-        # the next frontier is a lazy distinct over the checkpointed step —
-        # the next round's step checkpoint materializes it (r14, guide §2.4:
-        # the former per-level frontier checkpoint job is gone)
-        cur = step.select(F.col("parent").alias("id")).distinct()
-    tree = parts[0]
-    for p in parts[1:]:
-        tree = tree.unionByName(p)
-    tree = _ckpt(
-        tree.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"), "w"
-        ).groupBy("src", "dst")
-        .agg(F.min("w").alias("weight"))
-    )
-    # everything the tree checkpoint was derived from is now consumed
-    # (r14, guide §5): the Dijkstra state, the walk seed + step levels,
-    # the terminal-graph best frame and the MST's internal state
-    _release(state)
-    _release(seed)
-    for s in steps:
-        _release(s)
-    _release(best)
-    _release_deep(mst)
+        chosen = mst.select(
+            F.least("src", "dst").alias("ta"), F.greatest("src", "dst").alias("tb")
+        ).join(best, ["ta", "tb"])
 
-    # -- 5. peel non-terminal leaves; superseded tree frames release one
-    # round behind (the new checkpoint fully replaces them)
-    for _ in range(max_iter):
-        deg = (
-            tree.select(F.col("src").alias("id"))
-            .unionByName(tree.select(F.col("dst").alias("id")))
-            .groupBy("id")
-            .agg(F.count("*").alias("_d"))
-        )
-        drop = deg.where(F.col("_d") == 1).join(tnodes, "id", "left_anti")
-        if drop.isEmpty():
-            break
-        leaf = drop.select(F.col("id").alias("_leaf"))
-        new_tree = _ckpt(
-            tree.join(leaf, tree["src"] == F.col("_leaf"), "left_anti")
-            .join(leaf, tree["dst"] == F.col("_leaf"), "left_anti")
-        )
-        _release(tree)
-        tree = new_tree
-    _release(und)
-    return tree.select("src", "dst", "weight")
+        # -- 4. unfold: bridging edges + both parent-pointer walks
+        bridge = chosen.select("src", "dst", "w")
+        walk_seed = chosen.select(F.col("src").alias("id")).unionByName(
+            chosen.select(F.col("dst").alias("id"))
+        ).distinct()
+        parts = [bridge]
+        cur = loop.ckpt(walk_seed)
+        ps = state.select("id", "parent", "pw")
+        for _ in range(max_iter):
+            step = loop.ckpt(cur.join(ps, "id").where(F.col("parent").isNotNull()))
+            if step.isEmpty():
+                break
+            parts.append(
+                step.select(F.col("id").alias("src"), F.col("parent").alias("dst"), F.col("pw").alias("w"))
+            )
+            # the next frontier is a lazy distinct over the checkpointed
+            # step — the next round's step checkpoint materializes it (r14,
+            # guide §2.4: no per-level frontier checkpoint job)
+            cur = step.select(F.col("parent").alias("id")).distinct()
+        tree = parts[0]
+        for p in parts[1:]:
+            tree = tree.unionByName(p)
+        tree = loop.advance(loop.ckpt(
+            tree.select(
+                F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"), "w"
+            ).groupBy("src", "dst")
+            .agg(F.min("w").alias("weight"))
+        ), "tree")
+        # the MST's internal state is folded into the tree checkpoint now;
+        # the Dijkstra state, walk levels and terminal-graph frame go on exit
+        _release_deep(mst)
+
+        # -- 5. peel non-terminal leaves; each checkpoint fully replaces the
+        # tree before it
+        for _ in range(max_iter):
+            deg = (
+                tree.select(F.col("src").alias("id"))
+                .unionByName(tree.select(F.col("dst").alias("id")))
+                .groupBy("id")
+                .agg(F.count("*").alias("_d"))
+            )
+            drop = deg.where(F.col("_d") == 1).join(tnodes, "id", "left_anti")
+            if drop.isEmpty():
+                break
+            leaf = drop.select(F.col("id").alias("_leaf"))
+            tree = loop.advance(loop.ckpt(
+                tree.join(leaf, tree["src"] == F.col("_leaf"), "left_anti")
+                .join(leaf, tree["dst"] == F.col("_leaf"), "left_anti")
+            ), "tree")
+        return loop.result(tree.select("src", "dst", "weight"))
 
 
 def astar(
@@ -3650,135 +3255,103 @@ def astar(
     Returns one row: (total_cost, path) with path = csv of node ids
     source→target. Empty frame if the target is unreachable.
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _astar_body(edges, coords, source, target, weight_col, max_iter)
-
-
-def _astar_body(
-    edges: DataFrame,
-    coords: DataFrame,
-    source: int,
-    target: int,
-    weight_col: str,
-    max_iter: int,
-) -> DataFrame:
-    e = (
-        edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
-        .repartition("src")
-        .cache()
-    )
-    trow = coords.where(F.col("id") == target).select("x", "y").first()
-    if trow is None:
-        raise ValueError(f"astar: target {target} has no coordinates")
-    hx, hy = float(trow[0]), float(trow[1])
-    h = F.sqrt(
-        (F.col("x") - F.lit(hx)) * (F.col("x") - F.lit(hx))
-        + (F.col("y") - F.lit(hy)) * (F.col("y") - F.lit(hy))
-    )
-    hcol = coords.select("id", h.alias("_h"))
-    state = _ckpt(
-        local_df(e.sparkSession, 
-            [(source, 0.0, None)], "id long, dist double, parent long"
+    with bsp(edges) as loop:
+        e = loop.pin(
+            edges.select("src", "dst", F.col(weight_col).cast("double").alias("w")), "src"
         )
-    )
-    # One merge per superstep (r14, guide §2.4, the ``sssp`` template):
-    # improvement check, A*-prune and state merge are a single join
-    # lineage ending in ONE eager checkpoint carrying an ``_imp`` flag
-    # (the former separate improved-frame checkpoint job is gone); the
-    # emptiness probe and the goal-cost read are exchange-free reads over
-    # the checkpoint. Superseded state frames release one round behind.
-    frontier = state
-    best = float("inf")
-    prev = None
-    for _ in range(max_iter):
-        # shuffle_hash on the frontier side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        cand = (
-            frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("w")).alias("_nd"),
-                F.col("src").alias("_np"),
-            )
-            .groupBy("id")
-            .agg(
-                F.min_by(F.struct("_nd", "_np"), F.struct("_nd", "_np")).alias("s")
-            )
-            .select("id", "s._nd", "s._np")
+        trow = coords.where(F.col("id") == target).select("x", "y").first()
+        if trow is None:
+            raise ValueError(f"astar: target {target} has no coordinates")
+        hx, hy = float(trow[0]), float(trow[1])
+        h = F.sqrt(
+            (F.col("x") - F.lit(hx)) * (F.col("x") - F.lit(hx))
+            + (F.col("y") - F.lit(hy)) * (F.col("y") - F.lit(hy))
         )
-        imp = F.col("_nd").isNotNull() & (
-            F.col("dist").isNull()
-            | (
-                F.struct(F.col("_nd").alias("dist"), F.col("_np").alias("parent"))
-                < F.struct("dist", "parent")
+        hcol = coords.select("id", h.alias("_h"))
+        state = loop.advance(loop.ckpt(
+            local_df(e.sparkSession, [(source, 0.0, None)], "id long, dist double, parent long")
+        ))
+        # One merge per superstep (r14, guide §2.4, the ``sssp`` template):
+        # improvement check, A*-prune and state merge are a single join
+        # lineage ending in ONE eager checkpoint carrying an ``_imp`` flag;
+        # the emptiness probe and the goal-cost read are exchange-free reads
+        # over the checkpoint.
+        best = float("inf")
+        for _ in range(max_iter):
+            cand = (
+                loop.join(_improved(state, "dist"), e)
+                .select(
+                    F.col("dst").alias("id"),
+                    (F.col("dist") + F.col("w")).alias("_nd"),
+                    F.col("src").alias("_np"),
+                )
+                .groupBy("id")
+                .agg(
+                    F.min_by(F.struct("_nd", "_np"), F.struct("_nd", "_np")).alias("s")
+                )
+                .select("id", "s._nd", "s._np")
             )
-        )
-        merged = state.join(cand, "id", "full")
-        if best != float("inf"):
-            # admissible-heuristic prune: an improvement whose optimistic
-            # total exceeds the best goal cost so far is NOT entered
-            merged = merged.join(hcol, "id", "left")
-            imp = imp & (
-                F.col("_h").isNull() | (F.col("_nd") + F.col("_h") <= F.lit(best))
+            imp = F.col("_nd").isNotNull() & (
+                F.col("dist").isNull()
+                | (
+                    F.struct(F.col("_nd").alias("dist"), F.col("_np").alias("parent"))
+                    < F.struct("dist", "parent")
+                )
             )
-        new_state = _ckpt(
-            merged.select(
-                "id",
-                F.when(imp, F.col("_nd")).otherwise(F.col("dist")).alias("dist"),
-                F.when(imp, F.col("_np")).otherwise(F.col("parent")).alias("parent"),
-                imp.alias("_imp"),
-            )
-        )
-        if prev is not None:
-            _release(prev)
-        prev = state
-        state = new_state
-        if new_state.where("_imp").isEmpty():
-            break
-        frontier = new_state.where("_imp").select("id", "dist")
+            merged = state.join(cand, "id", "full")
+            if best != float("inf"):
+                # admissible-heuristic prune: an improvement whose optimistic
+                # total exceeds the best goal cost so far is NOT entered
+                merged = merged.join(hcol, "id", "left")
+                imp = imp & (
+                    F.col("_h").isNull() | (F.col("_nd") + F.col("_h") <= F.lit(best))
+                )
+            state = loop.advance(loop.ckpt(
+                merged.select(
+                    "id",
+                    F.when(imp, F.col("_nd")).otherwise(F.col("dist")).alias("dist"),
+                    F.when(imp, F.col("_np")).otherwise(F.col("parent")).alias("parent"),
+                    imp.alias("_imp"),
+                )
+            ))
+            if state.where("_imp").isEmpty():
+                break
+            goal = state.where(F.col("id") == target).select("dist").first()
+            if goal is not None:
+                best = float(goal[0])
         goal = state.where(F.col("id") == target).select("dist").first()
-        if goal is not None:
-            best = float(goal[0])
-    if prev is not None:
-        _release(prev)
-    _release(e)
-    goal = state.where(F.col("id") == target).select("dist").first()
-    if goal is None:
-        return local_df(state.sparkSession, 
-            [], "total_cost double, path string"
-        )
-    # parent-pointer walk target→source (path-length-bounded supersteps)
-    ps = state.select("id", "parent")
-    cur = _ckpt(
-        local_df(state.sparkSession, [(target, 0)], "id long, k int")
-    )
-    hops = [cur]
-    for _ in range(max_iter):
-        nxt = _ckpt(
-            cur.join(ps, "id")
-            .where(F.col("parent").isNotNull())
-            .select(F.col("parent").alias("id"), (F.col("k") + 1).alias("k"))
-        )
-        if nxt.isEmpty():
-            break
-        hops.append(nxt)
-        cur = nxt
-    walk = hops[0]
-    for hdf in hops[1:]:
-        walk = walk.unionByName(hdf)
-    return walk.agg(
-        F.lit(float(goal[0])).alias("total_cost"),
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("k").alias("k"), F.col("id").alias("i"))),
-                    asc=False,
+        if goal is None:
+            return local_df(state.sparkSession, [], "total_cost double, path string")
+        # parent-pointer walk target→source (path-length-bounded supersteps)
+        ps = state.select("id", "parent")
+        cur = loop.ckpt(local_df(state.sparkSession, [(target, 0)], "id long, k int"))
+        hops = [cur]
+        for _ in range(max_iter):
+            nxt = loop.ckpt(
+                cur.join(ps, "id")
+                .where(F.col("parent").isNotNull())
+                .select(F.col("parent").alias("id"), (F.col("k") + 1).alias("k"))
+            )
+            if nxt.isEmpty():
+                break
+            hops.append(nxt)
+            cur = nxt
+        walk = hops[0]
+        for hdf in hops[1:]:
+            walk = walk.unionByName(hdf)
+        return loop.result(walk.agg(
+            F.lit(float(goal[0])).alias("total_cost"),
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.sort_array(
+                        F.collect_list(F.struct(F.col("k").alias("k"), F.col("id").alias("i"))),
+                        asc=False,
+                    ),
+                    lambda s: s["i"].cast("string"),
                 ),
-                lambda s: s["i"].cast("string"),
-            ),
-        ).alias("path"),
-    )
+            ).alias("path"),
+        ))
 
 
 def triangle_list(edges: DataFrame) -> DataFrame:
@@ -3961,61 +3534,38 @@ def dfs_preorder(
     Reference: GDS dfs procedure (plugin namespace gds.*,
     calver/coredb/neo4j-plugins.json).
     """
-    with _static_plan(edges.sparkSession, sized_by=edges):
-        return _dfs_preorder_body(edges, sources, max_iter)
+    from .curation import global_rank
 
+    with bsp(edges) as loop:
+        e = loop.pin(edges.select("src", "dst").distinct(), "src")
 
-def _dfs_preorder_body(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_iter: int,
-) -> DataFrame:
-    e = edges.select("src", "dst").distinct().repartition("src").cache()
-    best = _ckpt(sources.select("id", F.array("id").alias("path")))
-    frontier = best
-    # One merge per superstep (r14, guide §2.4): the former
-    # improvement-check checkpoint + anti-join/union merge checkpoint
-    # collapse into a single full-outer merge checkpoint; the emptiness
-    # probe is an exchange-free take(1) over the improved filter.
-    prev = None
-    for _ in range(max_iter):
-        # shuffle_hash on the frontier side (r14, _mem.static_loop_plan):
-        # stops the planner re-broadcasting the cached edge frame per round.
-        cand = (
-            frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
-            .where(~F.array_contains(F.col("path"), F.col("dst")))
-            .select(
-                F.col("dst").alias("id"),
-                F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
+        # One merge per superstep (r14, guide §2.4): improvement check and
+        # merge are a single full-outer join + eager checkpoint.
+        def relax(best: DataFrame) -> DataFrame:
+            cand = (
+                loop.join(_improved(best, "path"), e)
+                .where(~F.array_contains(F.col("path"), F.col("dst")))
+                .select(
+                    F.col("dst").alias("id"),
+                    F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
+                )
+                .groupBy("id")
+                .agg(F.min("path").alias("_new"))
             )
-            .groupBy("id")
-            .agg(F.min("path").alias("_new"))
-        )
-        imp = F.col("_new").isNotNull() & (
-            F.col("path").isNull() | (F.col("_new") < F.col("path"))
-        )
-        new_best = _ckpt(
-            best.join(cand, "id", "full")
-            .select(
+            imp = F.col("_new").isNotNull() & (
+                F.col("path").isNull() | (F.col("_new") < F.col("path"))
+            )
+            return best.join(cand, "id", "full").select(
                 "id",
                 F.when(imp, F.col("_new")).otherwise(F.col("path")).alias("path"),
                 imp.alias("_imp"),
             )
-        )
-        if prev is not None:
-            _release(prev)
-        prev = best
-        best = new_best
-        if new_best.where("_imp").isEmpty():
-            break
-        frontier = new_best.where("_imp").select("id", "path")
-    if prev is not None:
-        _release(prev)
-    best = best.select("id", "path")
-    _release(e)
-    from .curation import global_rank
 
-    ranked = global_rank(best.select("id", "path"), ["path"], rank_name="_pre1")
-    return ranked.select(
-        "id", "path", (F.col("_pre1") - 1).cast("long").alias("pre")
-    )
+        seed = sources.select("id", F.array("id").alias("path"))
+        best = loop.fixpoint(seed, relax, max_iter, "_imp").select("id", "path")
+        ranked = global_rank(best.select("id", "path"), ["path"], rank_name="_pre1")
+        return loop.result(ranked.select(
+            "id", "path", (F.col("_pre1") - 1).cast("long").alias("pre")
+        ))
+
+

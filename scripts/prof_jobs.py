@@ -18,6 +18,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    if len(sys.argv) < 2:
+        print("usage: python scripts/prof_jobs.py <query> [sf_dir]", file=sys.stderr)
+        return 2
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"

@@ -19,6 +19,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    if len(sys.argv) < 2:
+        print("usage: python scripts/prof_stages.py <query> [sf_dir]", file=sys.stderr)
+        return 2
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")

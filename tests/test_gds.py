@@ -353,7 +353,15 @@ def test_kcore_peels_cascading_tail(spark):
     assert out1[5] == 2 and out1[6] == 1 and out1[4] == 4
 
 
-def test_betweenness_path_star_and_cycle(spark):
+@pytest.fixture(params=["slot_sum", "hof_fold"])
+def betweenness_sum(request, monkeypatch):
+    """Run a betweenness test through both per-level array-sum forms: the
+    per-slot sums, and (switch forced to 0) the HOF fold."""
+    if request.param == "hof_fold":
+        monkeypatch.setattr(gds, "BETWEENNESS_SLOT_SUM_MAX_SOURCES", 0)
+
+
+def test_betweenness_path_star_and_cycle(spark, betweenness_sum):
     # path 1-2-3, all sources: bc(2) = 2 raw (ordered pairs (1,3),(3,1))
     e = _edges(spark, [(1, 2), (2, 3)])
     n = _nodes(spark, [1, 2, 3])
@@ -877,7 +885,7 @@ def test_bfs_tree_parents(spark):
             assert out[parent][0] == dist - 1
 
 
-def test_betweenness_directed_path(spark):
+def test_betweenness_directed_path(spark, betweenness_sum):
     """Directed 0->1->2 with source {0}: Brandes gives delta(1) = 1
     (sigma_1/sigma_2 * (1 + 0)); the array-state backward sweep must walk
     the PREDECESSOR relation (edge v->w), not w's out-edges — a directed

@@ -164,6 +164,32 @@ def test_astar_releases_superseded_state(spark):
     _clear(spark)
 
 
+def test_kernel_error_releases_pinned_frames(spark, monkeypatch):
+    """A kernel that raises mid-loop frees its edge cache and every state
+    checkpoint on the way out: the served path shares one session, so a
+    failed call must not leave frames pinned on it."""
+    # the concrete (classic) class: it overrides isEmpty, so patching the
+    # pyspark.sql.DataFrame base would not reach live frames
+    DataFrame = type(spark.range(0))
+    _clear(spark)
+    start = _pinned(spark)
+    calls = []
+    real_is_empty = DataFrame.isEmpty
+
+    def failing_is_empty(self):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("probe failed")
+        return real_is_empty(self)
+
+    monkeypatch.setattr(DataFrame, "isEmpty", failing_is_empty)
+    with pytest.raises(RuntimeError, match="probe failed"):
+        gds.wcc(_edges(spark, _PAIRS), _nodes(spark, _IDS))
+    assert len(calls) == 2
+    assert _pinned_settled(spark, start) == start
+    _clear(spark)
+
+
 def test_leakage_free_split_releases_superseded_labels(spark):
     """curation.leakage_free_split's min-label fixpoint releases
     superseded label checkpoints one round behind (pre-r14 it pinned one
@@ -226,15 +252,8 @@ class TestLoopWidth:
         huge = spark.range(10_000_000).selectExpr("id as src", "id+1 as dst")
         assert _loop_width(spark, huge) == cap
 
-    def test_forced_override_and_restore(self, spark, monkeypatch):
-        from docker_neo4j_spark.operators._mem import (
-            _loop_width,
-            static_loop_plan,
-        )
-
-        monkeypatch.setenv("SPARK_GRAFT_LOOP_PARTS", "3")
-        assert _loop_width(spark, None) == 3
-        monkeypatch.delenv("SPARK_GRAFT_LOOP_PARTS")
+    def test_forced_override_and_restore(self, spark):
+        from docker_neo4j_spark.operators._mem import static_loop_plan
 
         before = spark.conf.get("spark.sql.shuffle.partitions")
         tiny = spark.range(10).selectExpr("id as src", "id+1 as dst")
@@ -253,6 +272,18 @@ class TestLoopWidth:
             edges.selectExpr("dst as id")).distinct())
         assert out.rdd.getNumPartitions() == 1
         assert [r["comp"] for r in out.orderBy("id").collect()] == [1] * 5
+
+    def test_k1coloring_runs_at_derived_width(self, spark):
+        """k1coloring's state is (id, color) — not source-multiplied — so
+        it is sized from its edge frame like the other kernels."""
+        from docker_neo4j_spark.operators._mem import _loop_width
+
+        edges = spark.range(1, 5).selectExpr("id as src", "id+1 as dst")
+        nodes = edges.selectExpr("src as id").union(edges.selectExpr("dst as id")).distinct()
+        out = gds.k1coloring(edges, nodes)
+        assert out.rdd.getNumPartitions() == _loop_width(spark, edges) == 1
+        # a path 1-2-3-4-5 colors properly with two alternating colors
+        assert [r["color"] for r in out.orderBy("id").collect()] == [0, 1, 0, 1, 0]
 
 
 class TestCodegenCacheSizing:

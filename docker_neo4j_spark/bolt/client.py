@@ -68,16 +68,23 @@ class BoltClient:
         self.sock.sendall(msg + b"\x00\x00")
 
     def recv(self) -> Structure:
-        body = b""
-        while True:
-            size = struct.unpack(">H", self._recv_exact(2))[0]
-            if size == 0:
-                if body:
-                    break
-                continue  # NOOP keepalive
-            body += self._recv_exact(size)
-        msg, _ = unpack(body)
-        return msg
+        """Read one message. Any error (a timeout included) closes the
+        socket: the rest of the reply is still unread on it, and a later
+        call would take it as its own, so later calls raise instead."""
+        try:
+            body = b""
+            while True:
+                size = struct.unpack(">H", self._recv_exact(2))[0]
+                if size == 0:
+                    if body:
+                        break
+                    continue  # NOOP keepalive
+                body += self._recv_exact(size)
+            msg, _ = unpack(body)
+            return msg
+        except BaseException:
+            self.sock.close()
+            raise
 
     # -- driver ops --------------------------------------------------------
     def hello(self, with_scheme: bool = True, user: str = "neo4j", password: str = "") -> dict:
@@ -114,6 +121,7 @@ class BoltClient:
                     rows.append(msg.fields[0])
                     continue
                 if msg.tag != SUCCESS:
+                    self.sock.close()  # the reply's remainder is unread
                     raise RuntimeError(f"unexpected message {msg!r}")
                 break
             if not msg.fields[0].get("has_more"):

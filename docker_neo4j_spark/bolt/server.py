@@ -103,6 +103,10 @@ class _Conn(socketserver.BaseRequestHandler):
 
     def handle(self):  # noqa: C901 - protocol state machine
         sock: socket.socket = self.request
+        # A reply is several small writes (RECORDs, then SUCCESS): without
+        # NODELAY, Nagle holds the last one until the client's delayed ACK
+        # (~40 ms on every short reply).
+        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         try:
             if not self._handshake(sock):
                 return

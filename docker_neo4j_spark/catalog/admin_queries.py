@@ -1948,8 +1948,8 @@ def proc_schema_visualization(spark, sf_dir):
 def proc_gds_graph_catalog(spark, sf_dir):
     """gds.graph.project / list / drop lifecycle through the façade: a
     named label/type-filtered projection lands in the in-memory catalog
-    as CACHED frames (endpoint-filtered rels, left-semi joins), lists
-    its counts, and drop unpersists (procedures/registry.py)."""
+    as CHECKPOINTED frames (endpoint-filtered rels, left-semi joins), lists
+    its counts, and drop frees them (procedures/registry.py)."""
     from ..cypher.session import Session
     from ..procedures.registry import _graphs_for
     from ..sources.tpch import build_graph

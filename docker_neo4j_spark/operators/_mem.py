@@ -21,7 +21,9 @@ discipline).
 ``bsp`` is the one place the iterative GDS kernels get their superstep
 template from: static plan and loop width, pinned edge layouts, the
 state-side join, release one round behind, the checkpoint/probe fixpoint
-and cleanup on exit (see ``BSPLoop``).
+and cleanup on exit (see ``BSPLoop``). Every frame a round reads is a
+checkpoint leaf (the pins, the state), so each superstep plans against a
+scan of materialized rows rather than the inputs' whole derivation.
 """
 
 from __future__ import annotations
@@ -40,8 +42,9 @@ from pyspark.sql import DataFrame, SparkSession
 LOOP_TARGET_PARTITION_BYTES = 8 << 20
 
 
-def _loop_width(spark: SparkSession, sized_by: DataFrame | None) -> int:
-    """Static shuffle width for a BSP loop body, derived from input size.
+def _loop_width(spark: SparkSession, sized_by: DataFrame | None, slots: int = 1) -> int:
+    """Static shuffle width for a BSP loop body, derived from the bytes its
+    rounds move.
 
     With AQE off inside ``static_loop_plan`` there is no partition
     coalescing, so a loop would otherwise run every per-round shuffle at
@@ -51,10 +54,13 @@ def _loop_width(spark: SparkSession, sized_by: DataFrame | None) -> int:
     partitions to keep each at ``LOOP_TARGET_PARTITION_BYTES``, at least
     1, capped at the session setting so a cluster-tuned config is never
     exceeded. ``sized_by`` is the kernel's edge frame — the one large
-    input every per-round join streams through. Sizing uses Catalyst's
-    estimate for that frame (same signal AQE plans from); ``None`` and
-    unknown/huge estimates hit the cap, so at the 100 TB target this is a
-    no-op.
+    input every per-round join streams through — and ``slots`` the number
+    of per-node state slots a round carries through it: 1 for (id, value)
+    kernels, the source count S for the multi-source sweeps, whose rounds
+    move S values per edge (source-indexed arrays or source × node rows).
+    Sizing uses Catalyst's estimate for that frame (same signal AQE plans
+    from); ``None`` and unknown/huge estimates hit the cap, so at the
+    100 TB target this is a no-op.
     """
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     if sized_by is None:
@@ -64,21 +70,23 @@ def _loop_width(spark: SparkSession, sized_by: DataFrame | None) -> int:
             sized_by._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
         # py4j converts scala.math.BigInt to int when it fits; be defensive.
-        size = raw if isinstance(raw, int) else int(str(raw))
+        size = (raw if isinstance(raw, int) else int(str(raw))) * slots
         return max(min(math.ceil(size / LOOP_TARGET_PARTITION_BYTES), cap), 1)
     except Exception:  # noqa: BLE001 - sizing is best-effort
         return cap
 
 
 @contextmanager
-def static_loop_plan(spark: SparkSession, sized_by: DataFrame | None = None):
+def static_loop_plan(
+    spark: SparkSession, sized_by: DataFrame | None = None, slots: int = 1
+):
     """Plan a BSP kernel body with the static planner (AQE off, restored).
 
     The iterative kernels engineer their per-round physical shape by hand:
-    the edge frame is ``repartition(key).cache()``-ed once, and each round's
-    state checkpoint comes out of a ``groupBy(key)`` whose hash partitioning
-    ``localCheckpoint`` preserves — so the round's state⋈edges join needs no
-    exchange on either side. AQE silently defeats both halves (measured r14,
+    the edge frame is pinned once as a ``repartition(key)`` checkpoint, and
+    each round's state checkpoint comes out of a ``groupBy(key)`` whose hash
+    partitioning ``localCheckpoint`` preserves — so the round's state⋈edges
+    join needs no exchange on either side. AQE silently defeats both halves (measured r14,
     gds_pagerank at sf0.1):
 
     - a join against a checkpointed state sees ``LogicalRDD``'s unknown
@@ -99,20 +107,19 @@ def static_loop_plan(spark: SparkSession, sized_by: DataFrame | None = None):
     skew-join splitting only rewrites sort-merge joins, which these loops
     deliberately do not contain, so nothing is lost at cluster scale.
 
-    ``sized_by`` (r14, guide §2.2 "derive partitioning from input size"):
-    with AQE off there is no partition coalescing, so the loop body also
-    runs under a ``spark.sql.shuffle.partitions`` re-derived from the
-    kernel's edge-frame size (see ``_loop_width``) instead of the session
-    constant — every ``repartition(key)``/``groupBy`` inside the body
-    resolves its width from it at plan time, so the state↔edge
-    co-partitioning (and the zero-exchange rounds) hold at ANY width.
-    Kernels with multiplicative per-round state (betweenness, closeness)
-    pass no ``sized_by`` and keep the session width."""
+    ``sized_by`` and ``slots``: with AQE off there is no partition
+    coalescing, so the loop body also runs under a
+    ``spark.sql.shuffle.partitions`` re-derived from the kernel's
+    edge-frame size times its per-node state slots (see ``_loop_width``)
+    instead of the session constant — every ``repartition(key)``/``groupBy``
+    inside the body resolves its width from it at plan time, so the
+    state↔edge co-partitioning (and the zero-exchange rounds) hold at ANY
+    width. Only ``sized_by=None`` runs at the session width."""
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_loop_width(spark, sized_by))
+        "spark.sql.shuffle.partitions", str(_loop_width(spark, sized_by, slots))
     )
     try:
         yield
@@ -124,27 +131,35 @@ def static_loop_plan(spark: SparkSession, sized_by: DataFrame | None = None):
 class BSPLoop:
     """The superstep template one ``bsp`` scope owns (Pregelix-shaped:
     state ⋈ edges → group-by → convergence check, physical choices made
-    once). Every frame the kernel caches or checkpoints goes through the
+    once). Every frame the kernel pins or checkpoints goes through the
     scope, which is what lets it free them on exit:
 
-    - normal exit frees the pinned frames and every checkpoint the frames
-      passed to ``result`` do not read (superseded states, scratch levels);
+    - normal exit frees every pin and checkpoint the frames passed to
+      ``result`` do not read (superseded states, scratch levels);
     - an exception frees all of them, so a failed call leaves nothing
       pinned on a shared session.
     """
 
     def __init__(self) -> None:
-        self._pinned: list[DataFrame] = []
         self._ckpts: list[DataFrame] = []
         self._kept: list[DataFrame] = []
         self._chains: dict[str, DataFrame] = {}
         self.converged = False
 
     def pin(self, frame: DataFrame, key: str | None = None) -> DataFrame:
-        """``repartition(key).cache()`` a frame every round reads (just
-        ``cache()`` without a key); freed on exit."""
-        out = (frame if key is None else frame.repartition(key)).cache()
-        self._pinned.append(out)
+        """``repartition(key)`` a frame every round reads and take a lazy
+        ``localCheckpoint`` of it (no repartition without a key); freed on
+        exit unless a result reads it.
+
+        A checkpoint, not a cache: every round then plans against a scan
+        of materialized rows instead of re-analyzing the frame's whole
+        derivation (a catalog projection's edge frame carries hundreds of
+        plan lines). Lazy, because the first round's job materializes it
+        at no extra job, where an eager one costs a job per pin. The
+        checkpoint keeps the repartition's hash partitioning, so the
+        round's join against it stays exchange-free."""
+        out = (frame if key is None else frame.repartition(key)).localCheckpoint(eager=False)
+        self._ckpts.append(out)
         return out
 
     def ckpt(self, df: DataFrame, eager: bool = True) -> DataFrame:
@@ -204,14 +219,13 @@ class BSPLoop:
         return state
 
     def result(self, df: DataFrame) -> DataFrame:
-        """Mark ``df`` as returned: the checkpoints it reads outlive the
-        scope (the caller owns them)."""
+        """Mark ``df`` as returned: the pins and checkpoints it reads
+        outlive the scope (the caller owns them; ``release_deep`` frees
+        them). A released checkpoint cannot be recomputed from lineage."""
         self._kept.append(df)
         return df
 
     def _close(self, ok: bool) -> None:
-        for frame in self._pinned:
-            release(frame)
         kept = {r.id() for df in self._kept for r in _checkpoint_rdds(df)} if ok else set()
         for df in self._ckpts:
             if not any(r.id() in kept for r in _checkpoint_rdds(df)):
@@ -219,14 +233,13 @@ class BSPLoop:
 
 
 @contextmanager
-def bsp(edges: DataFrame, sized: bool = True) -> Iterator[BSPLoop]:
-    """Run a BSP kernel body under ``static_loop_plan`` with a ``BSPLoop``.
-
-    ``sized=False`` keeps the session width, for kernels whose per-round
-    state is multiplicative (source × node rows), which the edge frame
-    undersizes."""
+def bsp(edges: DataFrame, slots: int = 1) -> Iterator[BSPLoop]:
+    """Run a BSP kernel body under ``static_loop_plan`` with a ``BSPLoop``,
+    at a width sized from ``edges`` times ``slots``, the per-node state
+    slots a round moves (see ``_loop_width``): the multi-source sweeps pass
+    their source count, whose rounds carry S values per node."""
     loop = BSPLoop()
-    with static_loop_plan(edges.sparkSession, sized_by=edges if sized else None):
+    with static_loop_plan(edges.sparkSession, sized_by=edges, slots=slots):
         try:
             yield loop
         except BaseException:
@@ -265,8 +278,9 @@ def release(df: DataFrame | None) -> None:
         pass
 
 
-def release_deep(df: DataFrame | None) -> None:
-    """Free EVERY checkpointed (``LogicalRDD``) leaf under ``df``'s plan.
+def release_deep(df: DataFrame | None, keep: tuple[DataFrame, ...] = ()) -> None:
+    """Free EVERY checkpointed (``LogicalRDD``) leaf under ``df``'s plan,
+    except the checkpoints the ``keep`` frames read.
 
     For a frame that is a pure derivation over checkpoints — e.g. the
     projection a kernel returns over its final BSP state, abandoned by the
@@ -278,7 +292,10 @@ def release_deep(df: DataFrame | None) -> None:
     frames whose whole derivation chain is private and fully consumed."""
     if df is None:
         return
+    kept = {r.id() for k in keep for r in _checkpoint_rdds(k)}
     for rdd in _checkpoint_rdds(df):
+        if rdd.id() in kept:
+            continue
         try:
             rdd.unpersist(False)
         except Exception:  # noqa: BLE001 - releasing is best-effort

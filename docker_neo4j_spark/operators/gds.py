@@ -8,14 +8,17 @@ are aggregated scalars or exchange-free ``isEmpty`` probes — never a
 collect of data rows.
 
 The superstep template lives in one place, ``_mem.bsp``: the loop body
-runs under the static planner at a width derived from the edge frame's
-size; the edge frame is pinned once in the partitioning of the per-round
-join key; each round joins the ``shuffle_hash``-hinted state side against
-it (the state is hash(id)-partitioned by last round's groupBy, so neither
-side is exchanged), aggregates by node id and checkpoints; the state one
-round behind is released once the new one has materialized, and on exit
-(including on error) the scope frees every pinned frame and every
-checkpoint the result does not read. ``BSPLoop.fixpoint`` is the
+runs under the static planner at a width derived from the bytes its
+rounds move (edge-frame size × per-node state slots); the edge frame is
+repartitioned by the per-round join key and taken as a lazy
+``localCheckpoint`` that the first round materializes, so every round
+reads it as a leaf of materialized rows; each round joins the
+``shuffle_hash``-hinted state side against it (the state is
+hash(id)-partitioned by last round's groupBy, so neither side is
+exchanged), aggregates by node id and checkpoints; the state one round
+behind is released once the new one has materialized, and on exit
+(including on error) the scope frees every pin and checkpoint the result
+does not read. ``BSPLoop.fixpoint`` is the
 checkpoint + flag-probe loop most label/frontier kernels share.
 
 Scale notes (100 TB):
@@ -318,7 +321,7 @@ def personalized_pagerank(
 
     Same per-round shape as ``pagerank`` (one edge join + one groupBy-sum
     + a scalar dangling aggregate); the teleport set rides as a small
-    cached frame unioned into each update.
+    pinned frame unioned into each update.
     """
     with bsp(edges) as loop:
         e = edges.select("src", "dst")
@@ -737,7 +740,7 @@ def hits(
     Cost per round: two edge joins + two groupBy-sum shuffles + two scalar
     norm jobs — the same per-round shape as ``eigenvector`` run twice. The
     edge frame is joined on ``src`` for the authority step and on ``dst``
-    for the hub step, so it is cached in BOTH partitionings once (at 100 TB
+    for the hub step, so it is pinned in BOTH partitionings once (at 100 TB
     two partitioned copies of (src,dst) beat re-shuffling the edge set
     every half-step; state frames stay (id, score), the build side of each
     half-step's join). On a DAG both vectors stay strictly positive on their support
@@ -1495,16 +1498,15 @@ def betweenness(
     """
     from pyspark.sql import Window
 
-    # sized=False: per-round state is multiplicative (source × node rows),
-    # so the edge frame undersizes the loop width.
-    with bsp(edges, sized=False) as loop:
+    src_ids = sources.select(F.col("id")).distinct()
+    n_src = src_ids.count()
+    if n_src == 0:
+        return src_ids.select("id", F.lit(0.0).alias("bc"))
+    # every round moves an array[S] per node: size the loop by S slots
+    with bsp(edges, slots=n_src) as loop:
         e = loop.pin(
             (undirect(edges) if undirected else edges.select("src", "dst")).distinct(), "src"
         )
-        src_ids = sources.select(F.col("id")).distinct()
-        n_src = src_ids.count()
-        if n_src == 0:
-            return src_ids.select("id", F.lit(0.0).alias("bc"))
         # source → array slot. The single-partition window is over the
         # (bounded, gds samplingSize-style) source set only — never |V|.
         idx = src_ids.select(
@@ -1892,15 +1894,11 @@ def closeness_walk(
     the harmonic-centrality catalog row. Frontier BSP with the source
     dimension riding in the key; state is |sources| × |reached|, which is
     why callers pass a bounded source set (landmark sampling at scale)."""
-    # sized=False: per-round state is multiplicative (source × node rows),
-    # so the edge frame undersizes the loop width.
-    with bsp(edges, sized=False) as loop:
+    src_ids = sources.select(F.col("id").alias("source")).distinct()
+    # every round moves up to S (source, node) rows per node: size by S slots
+    with bsp(edges, slots=src_ids.count()) as loop:
         e = loop.pin(undirect(edges) if undirected else edges.select("src", "dst"), "src")
-        frontier = loop.ckpt(
-            sources.select(F.col("id").alias("source")).distinct().select(
-                "source", F.col("source").alias("id")
-            )
-        )
+        frontier = loop.ckpt(src_ids.select("source", F.col("source").alias("id")))
         levels = [frontier.select("source", "id", F.lit(0).cast("long").alias("dist"))]
         visited = frontier
         for depth in range(1, max_depth + 1):

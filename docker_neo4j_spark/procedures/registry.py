@@ -23,6 +23,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators._mem import release, release_deep
+
 
 @dataclass
 class Procedure:
@@ -1019,11 +1021,14 @@ def _db_schema_visualization(spark: SparkSession, graph=None) -> DataFrame:
 
 
 # ---- gds.graph catalog: named projections (project → list → drop) ------
-# Projections are CACHED filtered views keyed per SparkSession — the GDS
-# workflow's in-memory graph catalog, Spark-style: a projection is a lazy
-# label/type-filtered plan plus .cache(), so algorithms that consume it
-# re-read memory-resident frames instead of re-scanning parquet; drop
-# unpersists. Nothing is ever collected to the driver.
+# Projections are CHECKPOINTED filtered views keyed per SparkSession — the
+# GDS workflow's in-memory graph catalog, Spark-style: a projection is a
+# label/type-filtered plan stored as an eager localCheckpoint
+# (``_store_projection``), so algorithms that consume it scan
+# memory-resident rows and plan against one leaf instead of the store's
+# whole derivation (per-type parquet unions, endpoint semi-joins); mutate
+# replaces the node frame and drop frees the blocks. Nothing is ever
+# collected to the driver.
 _GRAPH_CATALOG: dict[int, dict[str, tuple]] = {}
 
 
@@ -1114,6 +1119,35 @@ def _graphs_for(spark: SparkSession) -> dict[str, tuple]:
     return _GRAPH_CATALOG.setdefault(id(spark), {})
 
 
+def _store_projection(
+    spark: SparkSession,
+    name: str,
+    nodes: DataFrame,
+    rels: DataFrame | None = None,
+    consumed: DataFrame | None = None,
+) -> tuple[int, int]:
+    """Store ``name``'s (nodes, rels) as eager localCheckpoints and free
+    what the entry replaces; returns (nodeCount, relationshipCount).
+
+    ``rels=None`` keeps the entry's relationship frame and counts (mutate
+    replaces only the nodes). Once the new frames have materialized, the
+    replaced frames and every checkpoint ``consumed`` reads (a kernel
+    result folded into the new nodes) are freed — except the entry's own
+    live frames, which a kernel result may read too."""
+    cat = _graphs_for(spark)
+    old = cat.get(name)
+    nodes = nodes.localCheckpoint(eager=True)
+    if rels is None:
+        _, rels, nc, rc = old
+    else:
+        rels = rels.localCheckpoint(eager=True)
+        nc, rc = nodes.count(), rels.count()
+    cat[name] = (nodes, rels, nc, rc)
+    for df in (*(old[:2] if old else ()), consumed):
+        release_deep(df, keep=(nodes, rels))
+    return nc, rc
+
+
 @procedure(
     "gds.graph.project",
     signature=(
@@ -1153,9 +1187,7 @@ def _gds_graph_project(
         rels.join(ids, rels["src"] == ids["_nid"], "left_semi")
         .join(ids.withColumnRenamed("_nid", "_nid2"), rels["dst"] == F.col("_nid2"), "left_semi")
     )
-    nodes, rels = nodes.cache(), rels.cache()
-    nc, rc = nodes.count(), rels.count()
-    cat[graphName] = (nodes, rels, nc, rc)
+    nc, rc = _store_projection(spark, graphName, nodes, rels)
     return local_df(spark, 
         [(graphName, nc, rc)],
         "graphName string, nodeCount long, relationshipCount long",
@@ -1208,9 +1240,7 @@ def _gds_graph_project_cypher(
         F.col("target").cast("long").alias("dst"),
         *[F.col(c) for c in extras],
     )
-    nodes, rels = nodes.cache(), rels.cache()
-    nc, rc = nodes.count(), rels.count()
-    cat[graphName] = (nodes, rels, nc, rc)
+    nc, rc = _store_projection(spark, graphName, nodes, rels)
     return local_df(
         spark,
         [(graphName, nc, rc)],
@@ -1248,8 +1278,8 @@ def _gds_graph_drop(spark: SparkSession, graphName: str = "") -> DataFrame:
     if graphName not in cat:
         raise ValueError(f"Graph with name '{graphName}' does not exist")
     nodes, rels, _, _ = cat.pop(graphName)
-    nodes.unpersist()
-    rels.unpersist()
+    release(nodes)
+    release(rels)
     return local_df(spark, [(graphName,)], "graphName string")
 
 
@@ -3129,21 +3159,24 @@ def _gds_triangle_stats(spark: SparkSession, graphName: str = "") -> DataFrame:
 def _mutate_node_property(
     spark: SparkSession, graphName: str, prop_frame: DataFrame, prop: str
 ):
-    """Attach (id, <prop>) to the named projection's cached node frame —
-    GDS mutate semantics: visible to later algorithms on the SAME
-    projection, never written to the database."""
+    """Attach (id, <prop>) to the named projection's node frame — GDS
+    mutate semantics: visible to later algorithms on the SAME projection,
+    never written to the database. The new node frame replaces the old
+    one in the catalog, which frees the old frame and the kernel result
+    ``prop_frame`` reads: the caller must be done with that result."""
     cat = _graphs_for(spark)
     if graphName not in cat:
         raise ValueError(
             f"Graph with name '{graphName}' does not exist in the catalog"
         )
-    nodes, rels, nc, rc = cat[graphName]
+    nodes = cat[graphName][0]
     if prop in nodes.columns:
         raise ValueError(
             f"Node property '{prop}' already exists in graph '{graphName}'"
         )
-    new_nodes = nodes.join(prop_frame, "id", "left").cache()
-    cat[graphName] = (new_nodes, rels, nc, rc)
+    _store_projection(
+        spark, graphName, nodes.join(prop_frame, "id", "left"), consumed=prop_frame
+    )
 
 
 @procedure(
@@ -3162,14 +3195,13 @@ def _gds_wcc_mutate(
 
     nodes, edges = _projected_graph(spark, graphName)
     out = gds.wcc(edges, nodes)
+    row = (out.select("comp").distinct().count(), out.count())
     _mutate_node_property(
         spark, graphName, out.select("id", F.col("comp").alias(mutateProperty)),
         mutateProperty,
     )
     return local_df(
-        spark,
-        [(out.select("comp").distinct().count(), out.count())],
-        "componentCount long, nodePropertiesWritten long",
+        spark, [row], "componentCount long, nodePropertiesWritten long",
     )
 
 
@@ -3193,13 +3225,13 @@ def _gds_pagerank_mutate(
     out = gds.pagerank(
         edges, nodes, iterations=int(maxIterations), damping=float(dampingFactor)
     )
+    row = (out.count(), int(maxIterations))
     _mutate_node_property(
         spark, graphName, out.select("id", F.col("pr").alias(mutateProperty)),
         mutateProperty,
     )
     return local_df(
-        spark, [(out.count(), int(maxIterations))],
-        "nodePropertiesWritten long, ranIterations long",
+        spark, [row], "nodePropertiesWritten long, ranIterations long",
     )
 
 

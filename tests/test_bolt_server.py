@@ -296,3 +296,39 @@ def test_entity_properties_typed_on_wire(bolt):
     assert props["age"] == 4 and isinstance(props["age"], int)
     assert props["w"] == 2.5 and isinstance(props["w"], float)
     assert props["name"] == "Arne"
+
+
+def test_client_timeout_closes_connection():
+    """A client timeout mid-reply leaves the reply unread on the socket;
+    the next ``run`` must raise rather than return that earlier
+    statement's reply as its own."""
+    import time
+
+    from docker_neo4j_spark.bolt import BoltClient
+
+    class _Result:
+        columns = ["x"]
+
+        def __init__(self, value):
+            self.value = value
+
+        def toLocalIterator(self):
+            return iter([(self.value,)])
+
+    class _SlowSession:
+        def run(self, text, params=None):
+            if text == "slow":
+                time.sleep(1.0)
+            return _Result(text)
+
+    server = BoltServer(_SlowSession()).start()
+    try:
+        c = BoltClient(server.port, timeout=0.5)
+        c.hello()
+        with pytest.raises(TimeoutError):
+            c.run("slow")
+        with pytest.raises(OSError):
+            c.run("fast")
+        c.close()
+    finally:
+        server.stop()

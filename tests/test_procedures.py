@@ -681,6 +681,36 @@ def test_gds_stream_procedures_over_projection(spark, sf_dir):
         s.run("CALL gds.wcc.stream('nope')")
 
 
+def test_gds_mutate_then_drop_releases_projection(spark, sf_dir):
+    """project → wcc.mutate → drop leaves no blocks pinned: mutate frees
+    the node frame it replaces and the kernel result it folded in, and
+    drop frees the entry's frames."""
+    import time
+
+    from docker_neo4j_spark.cypher.session import Session
+    from docker_neo4j_spark.sources.tpch import build_graph
+    from docker_neo4j_spark.storage.store import GraphStore
+
+    def pinned():
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    s = Session(spark, store=GraphStore(spark, build_graph(spark, sf_dir)))
+    start = pinned()
+    s.run("CALL gds.graph.project('mg', ['Nation', 'Region'], ['IN_REGION'])")
+    out = s.run("CALL gds.wcc.mutate('mg', 'comp')").collect()[0]
+    assert (out.componentCount, out.nodePropertiesWritten) == (5, 30)
+    props = s.run(
+        "CALL gds.graph.nodeProperties.stream('mg', ['comp']) "
+        "YIELD nodeId RETURN count(*) AS n"
+    ).collect()[0].n
+    assert props == 30
+    s.run("CALL gds.graph.drop('mg')")
+    deadline = time.time() + 15  # block removal is asynchronous
+    while pinned() > start and time.time() < deadline:
+        time.sleep(0.25)
+    assert pinned() == start
+
+
 def test_gds_write_mode_lands_on_store(spark, sf_dir):
     """r11: gds.wcc.write / gds.pageRank.write land node properties on
     the live store, readable by the next MATCH."""

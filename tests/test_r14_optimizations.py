@@ -190,6 +190,25 @@ def test_kernel_error_releases_pinned_frames(spark, monkeypatch):
     _clear(spark)
 
 
+def test_result_reading_a_pin_survives_scope_exit(spark):
+    """Pins are checkpoints, which cannot be recomputed once released: a
+    result that reads a pinned frame keeps it past scope exit, and the
+    caller's ``release_deep`` of the result frees it."""
+    from docker_neo4j_spark.operators._mem import bsp, release_deep
+
+    _clear(spark)
+    start = _pinned(spark)
+    edges = _edges(spark, _PAIRS)
+    with bsp(edges) as loop:
+        pinned = loop.pin(edges, "src")
+        assert pinned.count() == len(_PAIRS)  # materialize the pin in scope
+        out = loop.result(pinned.select((F.col("src") + F.col("dst")).alias("s")))
+    assert sorted(r["s"] for r in out.collect()) == sorted(a + b for a, b in _PAIRS)
+    release_deep(out)
+    assert _pinned_settled(spark, start) == start
+    _clear(spark)
+
+
 def test_leakage_free_split_releases_superseded_labels(spark):
     """curation.leakage_free_split's min-label fixpoint releases
     superseded label checkpoints one round behind (pre-r14 it pinned one
@@ -284,6 +303,39 @@ class TestLoopWidth:
         assert out.rdd.getNumPartitions() == _loop_width(spark, edges) == 1
         # a path 1-2-3-4-5 colors properly with two alternating colors
         assert [r["color"] for r in out.orderBy("id").collect()] == [0, 1, 0, 1, 0]
+
+    def test_betweenness_runs_at_source_slot_width(self, spark):
+        """betweenness moves an array[S] per node every round, so its loop
+        is sized by the edge frame times S slots, not the session width."""
+        from docker_neo4j_spark.operators._mem import _loop_width
+
+        edges = spark.range(1, 5).selectExpr("id as src", "id+1 as dst")
+        sources = spark.range(1, 4).selectExpr("id")
+        out = gds.betweenness(edges, sources)
+        assert out.rdd.getNumPartitions() == _loop_width(spark, edges, slots=3) == 1
+        # path 1-2-3-4-5 from sources 1..3: node 2 lies on 1→{3,4,5} and
+        # 3→1; node 3 on {1,2}→{4,5}; node 4 on {1,2,3}→5 (raw sums)
+        bc = {r["id"]: r["bc"] for r in out.collect()}
+        assert (bc[2], bc[3], bc[4]) == (4.0, 4.0, 3.0)
+
+    def test_closeness_walk_runs_at_source_slot_width(self, spark):
+        """closeness_walk carries (source, node) rows, S per node: every
+        BFS level checkpoint the returned walk unions comes out of the
+        loop at the edge frame × S-slot width."""
+        from docker_neo4j_spark.operators._mem import _checkpoint_rdds, _loop_width
+
+        edges = spark.range(1, 5).selectExpr("id as src", "id+1 as dst")
+        out = gds.closeness_walk(edges, _nodes(spark, [1, 2]))
+        rows = out.collect()
+        levels = _checkpoint_rdds(out)
+        assert len(levels) == 1 + max(r["dist"] for r in rows)
+        width = _loop_width(spark, edges, slots=2)
+        assert [r.getNumPartitions() for r in levels] == [width] * len(levels)
+        assert width == 1
+        # from 1: dists 0..4; from 2: 0..3 (undirected: 1 at dist 1)
+        assert sorted((r["source"], r["id"], r["dist"]) for r in rows if r["source"] == 2) == [
+            (2, 1, 1), (2, 2, 0), (2, 3, 1), (2, 4, 2), (2, 5, 3)
+        ]
 
 
 class TestCodegenCacheSizing:

@@ -18,17 +18,23 @@ cannot be recomputed after release. Only release a frame once every
 frame derived from it has materialized (the kernels' "one round behind"
 discipline).
 
-``bsp`` is the one place the iterative GDS kernels get their superstep
-template from: static plan and loop width, pinned edge layouts, the
-state-side join, release one round behind, the checkpoint/probe fixpoint
-and cleanup on exit (see ``BSPLoop``). Every frame a round reads is a
-checkpoint leaf (the pins, the state), so each superstep plans against a
-scan of materialized rows rather than the inputs' whole derivation.
+``scope`` owns the frame lifetimes of every GDS kernel: each pin and
+checkpoint a kernel takes goes through its ``BSPLoop``, which releases
+superseded states one round behind, frees on exit (including on error)
+everything the result does not read, and hands what the result does read
+to the enclosing scope, so a kernel that calls another frees the nested
+result once it is folded in. ``bsp`` is ``scope`` under
+``static_loop_plan``, the superstep template of the kernels whose rounds
+are planned statically: pinned edge layouts, the state-side join and the
+checkpoint/probe fixpoint (see ``BSPLoop``). Every frame a round reads is
+a checkpoint leaf (the pins, the state), so each superstep plans against
+a scan of materialized rows rather than the inputs' whole derivation.
 """
 
 from __future__ import annotations
 
 import math
+import threading
 from contextlib import contextmanager
 from typing import Callable, Iterator
 
@@ -129,19 +135,23 @@ def static_loop_plan(
 
 
 class BSPLoop:
-    """The superstep template one ``bsp`` scope owns (Pregelix-shaped:
-    state ⋈ edges → group-by → convergence check, physical choices made
-    once). Every frame the kernel pins or checkpoints goes through the
-    scope, which is what lets it free them on exit:
+    """The frame lifetimes one ``scope`` owns, and the superstep template
+    of a ``bsp`` scope (Pregelix-shaped: state ⋈ edges → group-by →
+    convergence check, physical choices made once). Every frame the kernel
+    pins or checkpoints goes through the scope, which is what lets it free
+    them:
 
-    - normal exit frees every pin and checkpoint the frames passed to
-      ``result`` do not read (superseded states, scratch levels);
+    - ``advance`` frees a chain's superseded state, ``free`` any owned
+      checkpoint once the frames derived from it have materialized;
+    - normal exit frees every owned checkpoint the frames passed to
+      ``result`` do not read (superseded states, scratch levels) and hands
+      the ones they do read to the enclosing scope, if any;
     - an exception frees all of them, so a failed call leaves nothing
       pinned on a shared session.
     """
 
     def __init__(self) -> None:
-        self._ckpts: list[DataFrame] = []
+        self._owned: dict[int, DataFrame] = {}  # checkpoint RDD id → frame
         self._kept: list[DataFrame] = []
         self._chains: dict[str, DataFrame] = {}
         self.converged = False
@@ -158,15 +168,14 @@ class BSPLoop:
         at no extra job, where an eager one costs a job per pin. The
         checkpoint keeps the repartition's hash partitioning, so the
         round's join against it stays exchange-free."""
-        out = (frame if key is None else frame.repartition(key)).localCheckpoint(eager=False)
-        self._ckpts.append(out)
-        return out
+        return self.ckpt(frame if key is None else frame.repartition(key), eager=False)
 
     def ckpt(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """``localCheckpoint`` — the superstep barrier that truncates
         lineage (plan depth would otherwise grow with every round)."""
         out = df.localCheckpoint(eager=eager)
-        self._ckpts.append(out)
+        for r in _checkpoint_rdds(out):
+            self._owned[r.id()] = out
         return out
 
     @staticmethod
@@ -189,9 +198,20 @@ class BSPLoop:
         supersedes, one round behind. Call only after the action that
         materializes ``new``: until then a lazy checkpoint still reads its
         predecessor's blocks."""
-        release(self._chains.get(chain))
+        self.free(self._chains.get(chain))
         self._chains[chain] = new
         return new
+
+    def free(self, df: DataFrame | None) -> None:
+        """Release now every owned checkpoint ``df`` reads — a superseded
+        state, or a nested kernel's result once it is folded in. Only
+        checkpoints this scope took (or a nested scope handed it) are
+        touched, never the caller's inputs. Call only once every frame
+        derived from them has materialized."""
+        if df is None:
+            return
+        for r in _checkpoint_rdds(df):
+            release(self._owned.pop(r.id(), None))
 
     def fixpoint(
         self,
@@ -220,32 +240,53 @@ class BSPLoop:
 
     def result(self, df: DataFrame) -> DataFrame:
         """Mark ``df`` as returned: the pins and checkpoints it reads
-        outlive the scope (the caller owns them; ``release_deep`` frees
-        them). A released checkpoint cannot be recomputed from lineage."""
+        outlive the scope (an enclosing scope takes them over; a top-level
+        caller owns them and ``release_deep`` frees them). A released
+        checkpoint cannot be recomputed from lineage."""
         self._kept.append(df)
         return df
 
-    def _close(self, ok: bool) -> None:
-        kept = {r.id() for df in self._kept for r in _checkpoint_rdds(df)} if ok else set()
-        for df in self._ckpts:
-            if not any(r.id() in kept for r in _checkpoint_rdds(df)):
+    def _close(self, outer: BSPLoop | None) -> None:
+        kept = {r.id() for df in self._kept for r in _checkpoint_rdds(df)}
+        for rid, df in self._owned.items():
+            if rid not in kept:
                 release(df)
+            elif outer is not None:
+                outer._owned[rid] = df
+
+
+# open scopes, innermost last; per thread, because the Bolt and HTTP servers
+# run statements on several threads at once
+_scopes = threading.local()
+
+
+@contextmanager
+def scope() -> Iterator[BSPLoop]:
+    """Own a kernel's frame lifetimes (see ``BSPLoop``) under the session
+    planner. Scopes nest per thread: a kernel called inside another's
+    scope hands the checkpoints its result reads to the caller's scope."""
+    stack = _scopes.__dict__.setdefault("stack", [])
+    loop = BSPLoop()
+    stack.append(loop)
+    try:
+        yield loop
+    except BaseException:
+        loop._kept.clear()
+        loop._close(None)
+        raise
+    finally:
+        stack.pop()
+    loop._close(stack[-1] if stack else None)
 
 
 @contextmanager
 def bsp(edges: DataFrame, slots: int = 1) -> Iterator[BSPLoop]:
-    """Run a BSP kernel body under ``static_loop_plan`` with a ``BSPLoop``,
-    at a width sized from ``edges`` times ``slots``, the per-node state
-    slots a round moves (see ``_loop_width``): the multi-source sweeps pass
-    their source count, whose rounds carry S values per node."""
-    loop = BSPLoop()
-    with static_loop_plan(edges.sparkSession, sized_by=edges, slots=slots):
-        try:
-            yield loop
-        except BaseException:
-            loop._close(ok=False)
-            raise
-        loop._close(ok=True)
+    """``scope`` under ``static_loop_plan``, at a width sized from
+    ``edges`` times ``slots``, the per-node state slots a round moves (see
+    ``_loop_width``): the multi-source sweeps pass their source count,
+    whose rounds carry S values per node."""
+    with static_loop_plan(edges.sparkSession, sized_by=edges, slots=slots), scope() as loop:
+        yield loop
 
 
 def _checkpoint_rdds(df: DataFrame) -> list:

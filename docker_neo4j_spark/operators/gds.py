@@ -7,19 +7,23 @@ optimizer re-walks the whole history every iteration). Convergence checks
 are aggregated scalars or exchange-free ``isEmpty`` probes — never a
 collect of data rows.
 
-The superstep template lives in one place, ``_mem.bsp``: the loop body
-runs under the static planner at a width derived from the bytes its
-rounds move (edge-frame size × per-node state slots); the edge frame is
-repartitioned by the per-round join key and taken as a lazy
-``localCheckpoint`` that the first round materializes, so every round
-reads it as a leaf of materialized rows; each round joins the
-``shuffle_hash``-hinted state side against it (the state is
+Every kernel that pins or checkpoints gets its frame lifetimes from one
+``_mem.scope``: each pin (a lazy ``localCheckpoint``, read by every round
+as a leaf of materialized rows) and each checkpoint goes through the
+scope's ``BSPLoop``; the state one round behind is released once the new
+one has materialized (``advance``), a nested kernel's result once it is
+folded in (``free``), and on exit (including on error) the scope frees
+every pin and checkpoint the result does not read.
+
+The kernels opened with ``_mem.bsp`` also share its superstep template:
+the loop body runs under the static planner at a width derived from the
+bytes its rounds move (edge-frame size × per-node state slots); the edge
+frame is pinned repartitioned by the per-round join key; each round
+joins the ``shuffle_hash``-hinted state side against it (the state is
 hash(id)-partitioned by last round's groupBy, so neither side is
-exchanged), aggregates by node id and checkpoints; the state one round
-behind is released once the new one has materialized, and on exit
-(including on error) the scope frees every pin and checkpoint the result
-does not read. ``BSPLoop.fixpoint`` is the
-checkpoint + flag-probe loop most label/frontier kernels share.
+exchanged), aggregates by node id and checkpoints. ``BSPLoop.fixpoint``
+is the checkpoint + flag-probe loop most label/frontier kernels share.
+The other kernels plan under the session planner (AQE on).
 
 Scale notes (100 TB):
 - state frames are (id, value) — tiny next to the edge set, which never
@@ -35,19 +39,20 @@ neighbor-set Jaccard similarity) expressed as DataFrame ops.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+
 from ..localframe import local_df
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._mem import bsp
-from ._mem import release as _release
-from ._mem import release_deep as _release_deep
+from ._mem import bsp, scope
 
 
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Materialize + truncate lineage (the BSP superstep barrier)."""
-    return df.localCheckpoint(eager=True)
+def _union(frames: list[DataFrame]) -> DataFrame:
+    """Union by name of per-level frames, in order."""
+    return reduce(lambda a, b: a.unionByName(b), frames)
 
 
 def _improved(state: DataFrame, *cols: str) -> DataFrame:
@@ -103,10 +108,7 @@ def bfs(
             levels.append(nxt.select("id", F.lit(depth).cast("long").alias("dist")))
             visited = visited.unionByName(nxt)
             frontier = nxt
-        out = levels[0]
-        for lv in levels[1:]:
-            out = out.unionByName(lv)
-        return loop.result(out)
+        return loop.result(_union(levels))
 
 
 def sssp(
@@ -195,40 +197,41 @@ def bellman_ford(
     )
     if max_iter is None:
         max_iter = v_bound
-    dist, converged = sssp(edges, sources, weight_col, max_iter, return_converged=True)
-    if not converged and max_iter < v_bound:
-        # Stopped by a caller bound below V-1: still-improvable nodes prove
-        # nothing about cycles (a cycle-free path can simply be longer than
-        # the bound in hops) — refuse rather than misflag.
-        raise ValueError(
-            f"bellman_ford: relaxation did not reach fixpoint within "
-            f"max_iter={max_iter} < V-1={v_bound} rounds — a negative cycle "
-            f"is only provable after V-1 rounds; raise max_iter (or leave it "
-            f"None for the V-1 default)"
+    with scope() as loop:
+        dist, converged = sssp(edges, sources, weight_col, max_iter, return_converged=True)
+        if not converged and max_iter < v_bound:
+            # Stopped by a caller bound below V-1: still-improvable nodes prove
+            # nothing about cycles (a cycle-free path can simply be longer than
+            # the bound in hops) — refuse rather than misflag.
+            raise ValueError(
+                f"bellman_ford: relaxation did not reach fixpoint within "
+                f"max_iter={max_iter} < V-1={v_bound} rounds — a negative cycle "
+                f"is only provable after V-1 rounds; raise max_iter (or leave it "
+                f"None for the V-1 default)"
+            )
+        e = edges.select("src", "dst", F.col(weight_col).alias("_w"))
+        cand = (
+            dist.join(e, dist["id"] == e["src"])
+            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("_w")).alias("_d2"))
+            .groupBy("id")
+            .agg(F.min("_d2").alias("_d2"))
         )
-    e = edges.select("src", "dst", F.col(weight_col).alias("_w"))
-    cand = (
-        dist.join(e, dist["id"] == e["src"])
-        .select(F.col("dst").alias("id"), (F.col("dist") + F.col("_w")).alias("_d2"))
-        .groupBy("id")
-        .agg(F.min("_d2").alias("_d2"))
-    )
-    still_improving = _ckpt(
-        cand.join(dist, "id").where(F.col("_d2") < F.col("dist")).select("id")
-    )
-    if still_improving.isEmpty():
-        return dist.select(
-            "id", "dist", F.lit(False).alias("on_negative_cycle")
+        still_improving = loop.ckpt(
+            cand.join(dist, "id").where(F.col("_d2") < F.col("dist")).select("id")
         )
-    tainted = bfs(edges, still_improving, max_depth=max_iter).select("id")
-    return (
-        dist.join(tainted.withColumn("_t", F.lit(True)), "id", "left")
-        .select(
-            "id",
-            F.when(F.col("_t"), F.lit(None).cast("long")).otherwise(F.col("dist")).alias("dist"),
-            F.coalesce(F.col("_t"), F.lit(False)).alias("on_negative_cycle"),
+        if still_improving.isEmpty():
+            return loop.result(
+                dist.select("id", "dist", F.lit(False).alias("on_negative_cycle"))
+            )
+        tainted = bfs(edges, still_improving, max_depth=max_iter).select("id")
+        return loop.result(
+            dist.join(tainted.withColumn("_t", F.lit(True)), "id", "left")
+            .select(
+                "id",
+                F.when(F.col("_t"), F.lit(None).cast("long")).otherwise(F.col("dist")).alias("dist"),
+                F.coalesce(F.col("_t"), F.lit(False)).alias("on_negative_cycle"),
+            )
         )
-    )
 
 
 def dag_longest_path(
@@ -411,56 +414,56 @@ def wcc_star(edges: DataFrame, nodes: DataFrame, max_iter: int = 50) -> DataFram
     Each round is two groupBy-min + join shuffles over the shrinking edge
     list.
     """
-    e = (
-        undirect(edges)
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    e = _ckpt(e.select(F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")))
-    for _ in range(max_iter):
-        # large-star: every node connects its LARGER neighbors to the
-        # minimum of its neighborhood (incl. itself)
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e1 = large.where(F.col("u") != F.col("v")).distinct()
-        # small-star: every node connects its smaller neighbors (and
-        # itself) to the minimum of those
-        sym1 = e1.unionByName(e1.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        sub = sym1.where(F.col("v") < F.col("u"))
-        mins_s = sub.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            sub.join(mins_s, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins_s.select("u", F.col("m").alias("v")))
-        )
-        new_e = _ckpt(
-            small.where(F.col("u") != F.col("v"))
-            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+    with scope() as loop:
+        e = (
+            undirect(edges)
+            .where(F.col("src") != F.col("dst"))
             .distinct()
         )
-        # fixpoint: the star forest stops changing
-        if (
-            new_e.count() == e.count()
-            and new_e.exceptAll(e).isEmpty()
-        ):
-            e = new_e
-            break
-        e = new_e
-    # at the fixpoint every edge is (member, root); isolated nodes root themselves
-    comp = e.groupBy("u").agg(F.min("v").alias("comp")).withColumnRenamed("u", "id")
-    roots = comp.select(F.col("comp").alias("id")).distinct().select(
-        "id", F.col("id").alias("comp")
-    )
-    covered = comp.unionByName(roots)
-    rest = nodes.select("id").join(covered, "id", "left_anti").select(
-        "id", F.col("id").alias("comp")
-    )
-    return covered.unionByName(rest)
+        e = loop.advance(
+            loop.ckpt(e.select(F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")))
+        )
+        for _ in range(max_iter):
+            # large-star: every node connects its LARGER neighbors to the
+            # minimum of its neighborhood (incl. itself)
+            sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+            large = (
+                sym.join(mins, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            )
+            e1 = large.where(F.col("u") != F.col("v")).distinct()
+            # small-star: every node connects its smaller neighbors (and
+            # itself) to the minimum of those
+            sym1 = e1.unionByName(e1.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            sub = sym1.where(F.col("v") < F.col("u"))
+            mins_s = sub.groupBy("u").agg(F.min("v").alias("m"))
+            small = (
+                sub.join(mins_s, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .unionByName(mins_s.select("u", F.col("m").alias("v")))
+            )
+            new_e = loop.ckpt(
+                small.where(F.col("u") != F.col("v"))
+                .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+                .distinct()
+            )
+            # fixpoint: the star forest stops changing
+            done = new_e.count() == e.count() and new_e.exceptAll(e).isEmpty()
+            e = loop.advance(new_e)
+            if done:
+                break
+        # at the fixpoint every edge is (member, root); isolated nodes root themselves
+        comp = e.groupBy("u").agg(F.min("v").alias("comp")).withColumnRenamed("u", "id")
+        roots = comp.select(F.col("comp").alias("id")).distinct().select(
+            "id", F.col("id").alias("comp")
+        )
+        covered = comp.unionByName(roots)
+        rest = nodes.select("id").join(covered, "id", "left_anti").select(
+            "id", F.col("id").alias("comp")
+        )
+        return loop.result(covered.unionByName(rest))
 
 
 def pagerank(
@@ -1136,38 +1139,38 @@ def scc(
     subgraph only — retired components are semi-joined out of the edge
     set, so dense cores stop paying for the long tail. State is
     (id, label) throughout; nothing driver-side but empty-checks."""
-    remaining = _ckpt(nodes.select("id"))
-    result: DataFrame | None = None
-    for _ in range(max_peels):
-        if remaining.isEmpty():
-            break
-        er = (
-            edges.select("src", "dst")
-            .join(remaining.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(remaining.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .cache()
-        )
-        fwd = _min_label_fixpoint(er, remaining, max_iter, "fmin")
-        bwd = _min_label_fixpoint(
-            er.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            remaining,
-            max_iter,
-            "bmin",
-        )
-        done = (
-            fwd.join(bwd, "id")
-            .where(F.col("fmin") == F.col("bmin"))
-            .select("id", F.col("fmin").alias("component"))
-        )
-        done = _ckpt(done)
-        result = done if result is None else result.unionByName(done)
-        remaining = _ckpt(remaining.join(done, "id", "left_anti"))
-        _release(er)
-    if result is None:
-        return nodes.select("id", F.col("id").alias("component")).limit(0)
-    # safety cap fallback: anything past max_peels keeps its own id
-    leftover = remaining.select("id", F.col("id").alias("component"))
-    return _ckpt(result.unionByName(leftover))
+    with scope() as loop:
+        remaining = loop.advance(loop.ckpt(nodes.select("id")))
+        result: DataFrame | None = None
+        for _ in range(max_peels):
+            if remaining.isEmpty():
+                break
+            er = loop.pin(
+                edges.select("src", "dst")
+                .join(remaining.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(remaining.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            )
+            fwd = _min_label_fixpoint(er, remaining, max_iter, "fmin")
+            bwd = _min_label_fixpoint(
+                er.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+                remaining,
+                max_iter,
+                "bmin",
+            )
+            done = loop.ckpt(
+                fwd.join(bwd, "id")
+                .where(F.col("fmin") == F.col("bmin"))
+                .select("id", F.col("fmin").alias("component"))
+            )
+            for folded in (fwd, bwd, er):
+                loop.free(folded)
+            result = done if result is None else result.unionByName(done)
+            remaining = loop.advance(loop.ckpt(remaining.join(done, "id", "left_anti")))
+        if result is None:
+            return nodes.select("id", F.col("id").alias("component")).limit(0)
+        # safety cap fallback: anything past max_peels keeps its own id
+        leftover = remaining.select("id", F.col("id").alias("component"))
+        return loop.result(loop.ckpt(result.unionByName(leftover)))
 
 
 def spanning_forest(
@@ -1190,85 +1193,76 @@ def spanning_forest(
     tiny) — the edge set is never rewritten, only relabeled through the
     state frame.
     """
-    e = edges.select(
-        "src", "dst", F.col(weight_col).cast("double").alias("w")
-    ).cache()
-    comp = _ckpt(nodes.select("id", F.col("id").alias("comp")))
-    chosen: DataFrame | None = None
-    # r14 (guide §2.4, §5): the former per-round ``lab.isEmpty()`` probe
-    # job is gone — ``pick`` is empty exactly when no cross-component
-    # edge remains (lab empty ⟹ cand empty ⟹ pick empty), so the
-    # checkpointed pick doubles as the termination probe and the
-    # relabel joins run ONCE per round instead of twice. Superseded
-    # comp/chosen frames and each round's abandoned wcc relabel state
-    # release as soon as the frames derived from them have materialized.
-    for _ in range(max_rounds):
-        lab = (
-            e.join(
-                comp.withColumnRenamed("id", "src").withColumnRenamed("comp", "cu"),
-                "src",
+    with scope() as loop:
+        e = loop.pin(edges.select("src", "dst", F.col(weight_col).cast("double").alias("w")))
+        comp = loop.advance(loop.ckpt(nodes.select("id", F.col("id").alias("comp"))), "comp")
+        chosen: DataFrame | None = None
+        # r14 (guide §2.4, §5): the former per-round ``lab.isEmpty()`` probe
+        # job is gone — ``pick`` is empty exactly when no cross-component
+        # edge remains (lab empty ⟹ cand empty ⟹ pick empty), so the
+        # checkpointed pick doubles as the termination probe and the
+        # relabel joins run ONCE per round instead of twice. Superseded
+        # comp/chosen frames and each round's abandoned wcc relabel state
+        # release as soon as the frames derived from them have materialized.
+        for _ in range(max_rounds):
+            lab = (
+                e.join(
+                    comp.withColumnRenamed("id", "src").withColumnRenamed("comp", "cu"),
+                    "src",
+                )
+                .join(
+                    comp.withColumnRenamed("id", "dst").withColumnRenamed("comp", "cv"),
+                    "dst",
+                )
+                .where(F.col("cu") != F.col("cv"))
             )
-            .join(
-                comp.withColumnRenamed("id", "dst").withColumnRenamed("comp", "cv"),
-                "dst",
+            cand = lab.select(F.col("cu").alias("c"), "src", "dst", "w").unionByName(
+                lab.select(F.col("cv").alias("c"), "src", "dst", "w")
             )
-            .where(F.col("cu") != F.col("cv"))
-        )
-        cand = lab.select(F.col("cu").alias("c"), "src", "dst", "w").unionByName(
-            lab.select(F.col("cv").alias("c"), "src", "dst", "w")
-        )
-        pick = _ckpt(
-            cand.groupBy("c")
-            .agg(
-                F.min_by(
-                    F.struct("src", "dst", "w"), F.struct("w", "src", "dst")
-                ).alias("e")
+            pick = loop.ckpt(
+                cand.groupBy("c")
+                .agg(
+                    F.min_by(
+                        F.struct("src", "dst", "w"), F.struct("w", "src", "dst")
+                    ).alias("e")
+                )
+                .select("e.src", "e.dst", "e.w")
+                .distinct()
             )
-            .select("e.src", "e.dst", "e.w")
-            .distinct()
-        )
-        if pick.isEmpty():
-            _release(pick)
-            break
+            if pick.isEmpty():
+                break
+            chosen = pick if chosen is None else loop.ckpt(chosen.unionByName(pick))
+            loop.advance(chosen, "chosen")
+            pe = (
+                pick.join(
+                    comp.withColumnRenamed("id", "src").withColumnRenamed("comp", "cu"),
+                    "src",
+                )
+                .join(
+                    comp.withColumnRenamed("id", "dst").withColumnRenamed("comp", "cv"),
+                    "dst",
+                )
+                .select(F.col("cu").alias("src"), F.col("cv").alias("dst"))
+            )
+            # unique column names: mapping shares lineage with comp, so joining
+            # on a same-named column would be an ambiguous self-reference
+            mapping = wcc(pe, comp.select(F.col("comp").alias("id")).distinct()).select(
+                F.col("id").alias("_oldc"), F.col("comp").alias("_newc")
+            )
+            comp = loop.advance(
+                loop.ckpt(comp.join(mapping, F.col("comp") == F.col("_oldc"), "left").select(
+                    "id", F.coalesce("_newc", F.col("comp")).alias("comp")
+                )),
+                "comp",
+            )
+            loop.free(mapping)  # the round's wcc relabel state, now folded in
+            if pick is not chosen:
+                loop.free(pick)
         if chosen is None:
-            chosen = pick
-        else:
-            new_chosen = _ckpt(chosen.unionByName(pick))
-            _release(chosen)
-            chosen = new_chosen
-        pe = (
-            pick.join(
-                comp.withColumnRenamed("id", "src").withColumnRenamed("comp", "cu"),
-                "src",
-            )
-            .join(
-                comp.withColumnRenamed("id", "dst").withColumnRenamed("comp", "cv"),
-                "dst",
-            )
-            .select(F.col("cu").alias("src"), F.col("cv").alias("dst"))
-        )
-        # unique column names: mapping shares lineage with comp, so joining
-        # on a same-named column would be an ambiguous self-reference
-        mapping = wcc(pe, comp.select(F.col("comp").alias("id")).distinct()).select(
-            F.col("id").alias("_oldc"), F.col("comp").alias("_newc")
-        )
-        new_comp = _ckpt(
-            comp.join(mapping, F.col("comp") == F.col("_oldc"), "left").select(
-                "id", F.coalesce("_newc", F.col("comp")).alias("comp")
-            )
-        )
-        _release_deep(mapping)  # the round's wcc relabel state, now folded in
-        _release(comp)
-        if pick is not chosen:
-            _release(pick)
-        comp = new_comp
-    _release(comp)
-    _release(e)
-    if chosen is None:
-        return edges.select(
-            "src", "dst", F.col(weight_col).cast("double").alias("weight")
-        ).limit(0)
-    return chosen.select("src", "dst", F.col("w").alias("weight"))
+            return edges.select(
+                "src", "dst", F.col(weight_col).cast("double").alias("weight")
+            ).limit(0)
+        return loop.result(chosen.select("src", "dst", F.col("w").alias("weight")))
 
 
 def fastrp(
@@ -1292,8 +1286,8 @@ def fastrp(
     embedding dimension scales by adding rows, not widening a column.
     """
     dims = F.sequence(F.lit(0), F.lit(dim - 1))
-    x = _ckpt(
-        nodes.select("id", F.explode(dims).alias("j")).select(
+    with scope() as loop:
+        x = loop.ckpt(nodes.select("id", F.explode(dims).alias("j")).select(
             "id",
             "j",
             F.when(
@@ -1313,31 +1307,28 @@ def fastrp(
             )
             .otherwise(F.lit(-1.0))
             .alias("v"),
+        ))
+        e = loop.pin(edges.select("src", "dst"), "src")
+        deg_in = e.groupBy("dst").agg(F.count("*").alias("_dg")).withColumnRenamed(
+            "dst", "_di"
         )
-    )
-    e = edges.select("src", "dst").repartition("src").cache()
-    deg_in = e.groupBy("dst").agg(F.count("*").alias("_dg")).withColumnRenamed(
-        "dst", "_di"
-    )
-    acc: DataFrame | None = None
-    for w in weights:
-        nxt = (
-            x.join(e, x["id"] == e["src"])
-            .groupBy(F.col("dst").alias("id"), "j")
-            .agg(F.sum("v").alias("_s"))
-        )
-        x = _ckpt(
-            nxt.join(deg_in, nxt["id"] == deg_in["_di"]).select(
-                "id", "j", (F.col("_s") / F.col("_dg")).alias("v")
+        acc: DataFrame | None = None
+        for w in weights:
+            nxt = (
+                x.join(e, x["id"] == e["src"])
+                .groupBy(F.col("dst").alias("id"), "j")
+                .agg(F.sum("v").alias("_s"))
             )
-        )
-        term = x.select("id", "j", (F.col("v") * F.lit(w)).alias("t"))
-        acc = term if acc is None else acc.unionByName(term)
-    res = acc.groupBy("id", "j").agg(F.sum("t").alias("v"))
-    base = nodes.select("id", F.explode(dims).alias("j"))
-    return base.join(res, ["id", "j"], "left").select(
-        "id", "j", F.coalesce("v", F.lit(0.0)).alias("v")
-    )
+            x = loop.ckpt(nxt.join(deg_in, nxt["id"] == deg_in["_di"]).select(
+                "id", "j", (F.col("_s") / F.col("_dg")).alias("v")
+            ))
+            term = x.select("id", "j", (F.col("v") * F.lit(w)).alias("t"))
+            acc = term if acc is None else acc.unionByName(term)
+        res = acc.groupBy("id", "j").agg(F.sum("t").alias("v"))
+        base = nodes.select("id", F.explode(dims).alias("j"))
+        return loop.result(base.join(res, ["id", "j"], "left").select(
+            "id", "j", F.coalesce("v", F.lit(0.0)).alias("v")
+        ))
 
 
 def scale_properties(
@@ -1415,35 +1406,29 @@ def random_walk(
     concurrent walks is a million-row state frame regardless of graph
     size.
     """
-    e = (undirect(edges) if undirected else edges.select("src", "dst")).repartition("src").cache()
-    cur = _ckpt(
-        sources.select(F.col("id").alias("walk_id")).distinct().select(
+    with scope() as loop:
+        e = loop.pin(undirect(edges) if undirected else edges.select("src", "dst"), "src")
+        cur = loop.ckpt(sources.select(F.col("id").alias("walk_id")).distinct().select(
             "walk_id", F.col("walk_id").alias("id")
-        )
-    )
-    out = [cur.select("walk_id", F.lit(0).cast("long").alias("step"), "id")]
-    for k in range(1, steps + 1):
-        draw = F.md5(
-            F.concat_ws("|", F.lit(salt), F.lit(str(k)), F.col("id"), F.col("dst"))
-        )
-        nxt = _ckpt(
-            cur.join(e, cur["id"] == e["src"])
-            .select("walk_id", "id", "dst", draw.alias("_h"))
-            .groupBy("walk_id")
-            .agg(F.min_by("dst", F.col("_h")).alias("id"))
-        )
-        if nxt.isEmpty():
-            break
-        out.append(nxt.select("walk_id", F.lit(k).cast("long").alias("step"), "id"))
-        # NOTE: cur is NOT released here — every per-step checkpoint is
-        # referenced by the final union (it IS the result); releasing it
-        # would drop blocks the lineage-truncated union cannot recompute.
-        cur = nxt
-    _release(e)
-    acc = out[0]
-    for fr in out[1:]:
-        acc = acc.unionByName(fr)
-    return acc
+        ))
+        out = [cur.select("walk_id", F.lit(0).cast("long").alias("step"), "id")]
+        for k in range(1, steps + 1):
+            draw = F.md5(
+                F.concat_ws("|", F.lit(salt), F.lit(str(k)), F.col("id"), F.col("dst"))
+            )
+            nxt = loop.ckpt(
+                cur.join(e, cur["id"] == e["src"])
+                .select("walk_id", "id", "dst", draw.alias("_h"))
+                .groupBy("walk_id")
+                .agg(F.min_by("dst", F.col("_h")).alias("id"))
+            )
+            if nxt.isEmpty():
+                break
+            out.append(nxt.select("walk_id", F.lit(k).cast("long").alias("step"), "id"))
+            # every per-step checkpoint is read by the final union (it IS
+            # the result), so the steps stay pinned past the scope
+            cur = nxt
+        return loop.result(_union(out))
 
 
 # Source count up to which ``betweenness`` sums its per-level σ/δ arrays as
@@ -1622,7 +1607,7 @@ def betweenness(
                 )
             )
             if _lvl_view(new_state).isEmpty():
-                _release(new_state)
+                loop.free(new_state)
                 break
             states.append(new_state)
             levels.append(_lvl_view(new_state))
@@ -1731,44 +1716,39 @@ def kcore(edges: DataFrame, k: int = 3, max_rounds: int = 20) -> DataFrame:
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    sym = _ckpt(
-        simple.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-            simple.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-    )
-    n_edges = sym.count()
-    # One job per peel round (r14, guide §2.4, as in ``ktruss``): the
-    # surviving-edge count is the action that materializes the lazy
-    # checkpoint, and superseded edge frames release one round behind.
-    prev = None
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            break
-        keep = (
-            sym.groupBy("src")
-            .agg(F.count("*").alias("_d"))
-            .where(F.col("_d") >= k)
-            .select("src")
-        )
-        nxt = (
-            sym.join(keep, "src", "left_semi")
-            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        n_nxt = nxt.count()
-        if prev is not None:
-            _release(prev)
-        prev = sym
-        sym = nxt
-        if n_nxt == n_edges or n_nxt == 0:
+    with scope() as loop:
+        sym = loop.advance(loop.ckpt(
+            simple.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+                simple.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+            )
+        ))
+        n_edges = sym.count()
+        # One job per peel round (r14, guide §2.4, as in ``ktruss``): the
+        # surviving-edge count is the action that materializes the lazy
+        # checkpoint, and the superseded edge frame is released right after.
+        for _ in range(max_rounds):
+            if n_edges == 0:
+                break
+            keep = (
+                sym.groupBy("src")
+                .agg(F.count("*").alias("_d"))
+                .where(F.col("_d") >= k)
+                .select("src")
+            )
+            sym = loop.ckpt(
+                sym.join(keep, "src", "left_semi").join(
+                    keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
+                ),
+                eager=False,
+            )
+            n_nxt = sym.count()
+            loop.advance(sym)
+            if n_nxt == n_edges or n_nxt == 0:
+                break
             n_edges = n_nxt
-            break
-        n_edges = n_nxt
-    if prev is not None:
-        _release(prev)
-    return sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("long").alias("deg")
-    )
+        return loop.result(
+            sym.groupBy(F.col("src").alias("id")).agg(F.count("*").cast("long").alias("deg"))
+        )
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -1778,13 +1758,18 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     two-join wedge closure (a<b<c), each triangle counted exactly once.
     The joins are equi-joins on node ids — degree-bounded, not all-pairs.
     """
+    # No pin: the three reads of ``e`` are one query, so Spark reuses its
+    # exchange, and AQE sizes the joins from that exchange's runtime stats
+    # (a checkpoint leaf plans from the estimate, here a self-join's, and
+    # picks sort-merge joins). Same for ``local_clustering``, ``triangle_list``
+    # and the node-similarity kernels; ``link_prediction`` measured faster
+    # with its edge frame pinned.
     e = (
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .cache()
     )
     ab = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     bc = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -1809,7 +1794,6 @@ def local_clustering(edges: DataFrame) -> DataFrame:
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .cache()
     )
     deg = (
         e.select(F.col("a").alias("id"))
@@ -1851,7 +1835,7 @@ def node_similarity(
     bucket-join shape — cost is Σ_neighbor deg², never |V|²). Returns
     (node_a, node_b, jaccard) with node_a < node_b.
     """
-    ne = edges.select("src", "dst").distinct().cache()
+    ne = edges.select("src", "dst").distinct()
     sizes = ne.groupBy("src").agg(F.count("*").alias("_sz"))
     a = ne.select(F.col("src").alias("node_a"), F.col("dst").alias("_n"))
     b = ne.select(F.col("src").alias("node_b"), F.col("dst").alias("_n"))
@@ -1913,10 +1897,7 @@ def closeness_walk(
             levels.append(nxt.select("source", "id", F.lit(depth).cast("long").alias("dist")))
             visited = visited.unionByName(nxt)
             frontier = nxt
-        walk = levels[0]
-        for lv in levels[1:]:
-            walk = walk.unionByName(lv)
-        return loop.result(walk)
+        return loop.result(_union(levels))
 
 
 def closeness(
@@ -2004,32 +1985,32 @@ def kmeans(
     previous centroid (COALESCE over the old grid) — no resampling, no
     driver-side data.
     """
-    pts = _ckpt(
-        points.select(
+    with scope() as loop:
+        pts = loop.ckpt(points.select(
             "id", "j", F.round(F.col("v") * F.lit(scale)).cast("long").alias("q")
+        ))
+        seeds = pts.select("id").distinct().orderBy("id").limit(k)
+        cent = loop.advance(
+            loop.ckpt(pts.join(F.broadcast(seeds), "id").select(
+                F.col("id").alias("c"), "j", "q"
+            )),
+            "cent",
         )
-    ).cache()
-    seeds = pts.select("id").distinct().orderBy("id").limit(k)
-    cent = _ckpt(
-        pts.join(F.broadcast(seeds), "id").select(
-            F.col("id").alias("c"), "j", "q"
-        )
-    )
-    assign = None
-    for _ in range(max_iter):
-        assign = _ckpt(_kmeans_assign(pts, cent))
-        means = (
-            assign.join(pts, "id")
-            .groupBy(F.col("cluster").alias("c"), "j")
-            .agg(F.round(F.avg("q")).cast("long").alias("_nq"))
-        )
-        cent = _ckpt(
-            cent.join(means, ["c", "j"], "left").select(
-                "c", "j", F.coalesce("_nq", "q").alias("q")
+        assign = None
+        for _ in range(max_iter):
+            assign = loop.advance(loop.ckpt(_kmeans_assign(pts, cent)), "assign")
+            means = (
+                assign.join(pts, "id")
+                .groupBy(F.col("cluster").alias("c"), "j")
+                .agg(F.round(F.avg("q")).cast("long").alias("_nq"))
             )
-        )
-    _release(pts)
-    return assign
+            cent = loop.advance(
+                loop.ckpt(cent.join(means, ["c", "j"], "left").select(
+                    "c", "j", F.coalesce("_nq", "q").alias("q")
+                )),
+                "cent",
+            )
+        return loop.result(assign)
 
 
 def node2vec_walk(
@@ -2058,74 +2039,68 @@ def node2vec_walk(
     left-join (the distance-1 test), a ≤max(w)-fold replica explode, and
     one min_by per walk — frontier state stays |walks| rows.
     """
-    base = (undirect(edges) if undirected else edges.select("src", "dst")).distinct()
-    e = base.repartition("src").cache()
-    t_adj = base.select(
-        F.col("src").alias("_ts"), F.col("dst").alias("_td"), F.lit(1).alias("_near")
-    )
-    cur = _ckpt(
-        sources.select(F.col("id").alias("walk_id")).distinct().select(
+    with scope() as loop:
+        base = (undirect(edges) if undirected else edges.select("src", "dst")).distinct()
+        e = loop.pin(base, "src")
+        t_adj = base.select(
+            F.col("src").alias("_ts"), F.col("dst").alias("_td"), F.lit(1).alias("_near")
+        )
+        cur = loop.ckpt(sources.select(F.col("id").alias("walk_id")).distinct().select(
             "walk_id",
             F.lit(None).cast("long").alias("prev"),
             F.col("walk_id").alias("id"),
-        )
-    )
-    out = [cur.select("walk_id", F.lit(0).cast("long").alias("step"), "id")]
-    for k in range(1, steps + 1):
-        cand = (
-            cur.join(e, cur["id"] == e["src"])
-            .join(
-                t_adj,
-                (cur["prev"] == t_adj["_ts"]) & (e["dst"] == t_adj["_td"]),
-                "left",
+        ))
+        out = [cur.select("walk_id", F.lit(0).cast("long").alias("step"), "id")]
+        for k in range(1, steps + 1):
+            cand = (
+                cur.join(e, cur["id"] == e["src"])
+                .join(
+                    t_adj,
+                    (cur["prev"] == t_adj["_ts"]) & (e["dst"] == t_adj["_td"]),
+                    "left",
+                )
+                .select(
+                    "walk_id",
+                    "id",
+                    "dst",
+                    F.when(F.col("dst") == F.col("prev"), F.lit(w_return))
+                    .when(F.col("_near").isNotNull(), F.lit(w_common))
+                    .otherwise(F.lit(w_far))
+                    .alias("_m"),
+                )
             )
-            .select(
+            reps = cand.select(
                 "walk_id",
                 "id",
                 "dst",
-                F.when(F.col("dst") == F.col("prev"), F.lit(w_return))
-                .when(F.col("_near").isNotNull(), F.lit(w_common))
-                .otherwise(F.lit(w_far))
-                .alias("_m"),
+                F.explode(F.sequence(F.lit(1), F.col("_m"))).alias("_j"),
             )
-        )
-        reps = cand.select(
-            "walk_id",
-            "id",
-            "dst",
-            F.explode(F.sequence(F.lit(1), F.col("_m"))).alias("_j"),
-        )
-        draw = F.md5(
-            F.concat_ws(
-                "|",
-                F.lit(salt),
-                F.lit(str(k)),
-                F.col("walk_id"),
-                F.col("id"),
-                F.col("dst"),
-                F.col("_j"),
+            draw = F.md5(
+                F.concat_ws(
+                    "|",
+                    F.lit(salt),
+                    F.lit(str(k)),
+                    F.col("walk_id"),
+                    F.col("id"),
+                    F.col("dst"),
+                    F.col("_j"),
+                )
             )
-        )
-        nxt = _ckpt(
-            reps.select("walk_id", "id", "dst", draw.alias("_h"))
-            .groupBy("walk_id")
-            .agg(
-                F.min("id").alias("prev"),
-                F.min_by("dst", F.col("_h")).alias("id"),
+            nxt = loop.ckpt(
+                reps.select("walk_id", "id", "dst", draw.alias("_h"))
+                .groupBy("walk_id")
+                .agg(
+                    F.min("id").alias("prev"),
+                    F.min_by("dst", F.col("_h")).alias("id"),
+                )
             )
-        )
-        if nxt.isEmpty():
-            break
-        out.append(nxt.select("walk_id", F.lit(k).cast("long").alias("step"), "id"))
-        # NOTE: cur is NOT released here — every per-step checkpoint is
-        # referenced by the final union (it IS the result); releasing it
-        # would drop blocks the lineage-truncated union cannot recompute.
-        cur = nxt
-    _release(e)
-    acc = out[0]
-    for fr in out[1:]:
-        acc = acc.unionByName(fr)
-    return acc
+            if nxt.isEmpty():
+                break
+            out.append(nxt.select("walk_id", F.lit(k).cast("long").alias("step"), "id"))
+            # every per-step checkpoint is read by the final union (it IS
+            # the result), so the steps stay pinned past the scope
+            cur = nxt
+        return loop.result(_union(out))
 
 
 def leiden(
@@ -2179,58 +2154,59 @@ def link_prediction(
     (array_sort + sequential F.aggregate), so the result is bit-stable
     across partitionings and engines — never a parallel float SUM.
     """
-    e = undirect(edges).distinct().cache()
-    deg = e.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
-    p = pairs.select(F.col("a").cast("long"), F.col("b").cast("long"))
-    az = e.select(F.col("src").alias("a"), F.col("dst").alias("z"))
-    zb = e.select(F.col("src").alias("z"), F.col("dst").alias("b"))
-    common = (
-        p.join(az, "a")
-        .join(zb, ["z", "b"])
-        .join(deg.withColumnRenamed("src", "z"), "z")
-        .groupBy("a", "b")
-        .agg(
-            F.count("*").cast("long").alias("common_neighbors"),
-            F.array_sort(F.collect_list(F.struct("z", "deg"))).alias("_zs"),
+    with scope() as loop:
+        e = loop.pin(undirect(edges).distinct())
+        deg = e.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
+        p = pairs.select(F.col("a").cast("long"), F.col("b").cast("long"))
+        az = e.select(F.col("src").alias("a"), F.col("dst").alias("z"))
+        zb = e.select(F.col("src").alias("z"), F.col("dst").alias("b"))
+        common = (
+            p.join(az, "a")
+            .join(zb, ["z", "b"])
+            .join(deg.withColumnRenamed("src", "z"), "z")
+            .groupBy("a", "b")
+            .agg(
+                F.count("*").cast("long").alias("common_neighbors"),
+                F.array_sort(F.collect_list(F.struct("z", "deg"))).alias("_zs"),
+            )
+            .select(
+                "a",
+                "b",
+                "common_neighbors",
+                F.aggregate(
+                    "_zs",
+                    F.lit(0.0),
+                    lambda acc, s: acc + F.lit(1.0) / s["deg"].cast("double"),
+                ).alias("resource_alloc"),
+                F.aggregate(
+                    "_zs",
+                    F.lit(0.0),
+                    lambda acc, s: acc + F.lit(1.0) / F.log(s["deg"].cast("double")),
+                ).alias("adamic_adar"),
+            )
         )
-        .select(
-            "a",
-            "b",
-            "common_neighbors",
-            F.aggregate(
-                "_zs",
-                F.lit(0.0),
-                lambda acc, s: acc + F.lit(1.0) / s["deg"].cast("double"),
-            ).alias("resource_alloc"),
-            F.aggregate(
-                "_zs",
-                F.lit(0.0),
-                lambda acc, s: acc + F.lit(1.0) / F.log(s["deg"].cast("double")),
-            ).alias("adamic_adar"),
+        da = deg.select(F.col("src").alias("a"), F.col("deg").alias("_da"))
+        db = deg.select(F.col("src").alias("b"), F.col("deg").alias("_db"))
+        out = (
+            p.join(da, "a", "left")
+            .join(db, "b", "left")
+            .join(common, ["a", "b"], "left")
+            .select(
+                "a",
+                "b",
+                F.coalesce("common_neighbors", F.lit(0)).cast("long").alias("common_neighbors"),
+                (
+                    F.coalesce("_da", F.lit(0)) + F.coalesce("_db", F.lit(0))
+                    - F.coalesce("common_neighbors", F.lit(0))
+                ).cast("long").alias("total_neighbors"),
+                (F.coalesce("_da", F.lit(0)) * F.coalesce("_db", F.lit(0)))
+                .cast("long")
+                .alias("pref_attachment"),
+                F.coalesce("resource_alloc", F.lit(0.0)).alias("resource_alloc"),
+                F.coalesce("adamic_adar", F.lit(0.0)).alias("adamic_adar"),
+            )
         )
-    )
-    da = deg.select(F.col("src").alias("a"), F.col("deg").alias("_da"))
-    db = deg.select(F.col("src").alias("b"), F.col("deg").alias("_db"))
-    out = (
-        p.join(da, "a", "left")
-        .join(db, "b", "left")
-        .join(common, ["a", "b"], "left")
-        .select(
-            "a",
-            "b",
-            F.coalesce("common_neighbors", F.lit(0)).cast("long").alias("common_neighbors"),
-            (
-                F.coalesce("_da", F.lit(0)) + F.coalesce("_db", F.lit(0))
-                - F.coalesce("common_neighbors", F.lit(0))
-            ).cast("long").alias("total_neighbors"),
-            (F.coalesce("_da", F.lit(0)) * F.coalesce("_db", F.lit(0)))
-            .cast("long")
-            .alias("pref_attachment"),
-            F.coalesce("resource_alloc", F.lit(0.0)).alias("resource_alloc"),
-            F.coalesce("adamic_adar", F.lit(0.0)).alias("adamic_adar"),
-        )
-    )
-    return out
+        return loop.result(out)
 
 
 def sllpa(
@@ -2333,7 +2309,7 @@ def node_similarity_metrics(edges: DataFrame) -> DataFrame:
     Returns (node_a, node_b, inter, jaccard_micro, overlap_micro,
     cosine_micro) with node_a < node_b.
     """
-    ne = edges.select("src", "dst").distinct().cache()
+    ne = edges.select("src", "dst").distinct()
     sizes = ne.groupBy("src").agg(F.count("*").alias("_sz"))
     a = ne.select(F.col("src").alias("node_a"), F.col("dst").alias("_n"))
     b = ne.select(F.col("src").alias("node_b"), F.col("dst").alias("_n"))
@@ -2435,136 +2411,136 @@ def influence_maximization(
     """
     import heapq
 
-    thr = (p_num * 0x10000) // p_den
-    e_all = undirect(edges).distinct()
-    alive = None
-    for s in range(n_sims):
-        coin = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit(salt), F.lit(str(s)), F.col("src"), F.col("dst")
-                    )
+    with scope() as loop:
+        thr = (p_num * 0x10000) // p_den
+        e_all = undirect(edges).distinct()
+        alive = None
+        for s in range(n_sims):
+            coin = F.conv(
+                F.substring(
+                    F.md5(
+                        F.concat_ws(
+                            "|", F.lit(salt), F.lit(str(s)), F.col("src"), F.col("dst")
+                        )
+                    ),
+                    1,
+                    4,
                 ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-        es = e_all.where(coin < F.lit(thr)).select(
-            F.lit(s).alias("sim"), "src", "dst"
-        )
-        alive = es if alive is None else alive.unionByName(es)
-    alive = alive.repartition("src").cache()
-    spark = nodes.sparkSession
-    sims = spark.range(n_sims).select(F.col("id").cast("long").alias("sim"))
-
-    def reach(seed_frame):
-        """(cand, sim, node) reachability over the alive subgraphs —
-        frontier BSP, one superstep per depth for EVERY (cand, sim)."""
-        frontier = _ckpt(seed_frame)
-        visited = frontier
-        for _ in range(max_depth):
-            nxt = (
-                frontier.join(alive, (frontier["node"] == alive["src"]) & (frontier["sim"] == alive["sim"]))
-                .select("cand", frontier["sim"], F.col("dst").alias("node"))
-                .distinct()
-                .join(visited, ["cand", "sim", "node"], "left_anti")
+                16,
+                10,
+            ).cast("long")
+            es = e_all.where(coin < F.lit(thr)).select(
+                F.lit(s).alias("sim"), "src", "dst"
             )
-            nxt = _ckpt(nxt)
-            if nxt.isEmpty():
+            alive = es if alive is None else alive.unionByName(es)
+        alive = loop.pin(alive, "src")
+        spark = nodes.sparkSession
+        sims = spark.range(n_sims).select(F.col("id").cast("long").alias("sim"))
+
+        def reach(seed_frame):
+            """(cand, sim, node) reachability over the alive subgraphs —
+            frontier BSP, one superstep per depth for EVERY (cand, sim)."""
+            frontier = loop.ckpt(seed_frame)
+            visited = frontier
+            for _ in range(max_depth):
+                nxt = (
+                    frontier.join(alive, (frontier["node"] == alive["src"]) & (frontier["sim"] == alive["sim"]))
+                    .select("cand", frontier["sim"], F.col("dst").alias("node"))
+                    .distinct()
+                    .join(visited, ["cand", "sim", "node"], "left_anti")
+                )
+                nxt = loop.ckpt(nxt)
+                if nxt.isEmpty():
+                    break
+                visited = visited.unionByName(nxt)
+                frontier = nxt
+            return visited
+
+        n = loop.pin(nodes.select("id"))
+        queue_cap = max(64, 8 * k)
+
+        def all_candidate_gains(exclude: list, base):
+            """Full pass: marginal gain of every non-chosen candidate vs
+            ``base``, zero-gain candidates included (left join + coalesce —
+            absent rows would break the ties→smallest-id rule and empty
+            gains would IndexError). Returns the top ``queue_cap`` rows by
+            (gain desc, id asc) plus the cutoff tuple below which truncated
+            candidates are known to sit."""
+            cands = n if not exclude else n.where(~F.col("id").isin(*exclude))
+            seeds = cands.select(F.col("id").alias("cand")).crossJoin(sims).select(
+                "cand", "sim", F.col("cand").alias("node")
+            )
+            reached = reach(seeds)
+            marginal = (
+                reached if base is None else reached.join(base, ["sim", "node"], "left_anti")
+            )
+            gains = (
+                cands.select(F.col("id").alias("cand"))
+                .join(marginal.groupBy("cand").agg(F.count("*").alias("_g")), "cand", "left")
+                .select("cand", F.coalesce("_g", F.lit(0)).alias("_g"))
+            )
+            top = gains.orderBy(F.desc("_g"), F.asc("cand")).limit(queue_cap + 1).collect()
+            cutoff = (-1, 0)  # nothing truncated
+            if len(top) > queue_cap:
+                cutoff = (int(top[queue_cap]["_g"]), -int(top[queue_cap]["cand"]))
+                top = top[:queue_cap]
+            return reached, top, cutoff
+
+        def single_candidate_reach(cand: int):
+            seed = local_df(spark, [(cand,)], "cand long").crossJoin(sims).select(
+                "cand", "sim", F.col("cand").alias("node")
+            )
+            return reach(seed)
+
+        chosen: list = []
+        out_rows = []
+        base_reached = None  # (sim, node) reached by the chosen set
+        reached_r1, top, cutoff = all_candidate_gains([], None)
+        # heap entries: (-gain, cand, fresh_round); gains are upper bounds
+        # for rounds after the one they were evaluated in (submodularity)
+        heap = [(-int(r["_g"]), int(r["cand"]), 1) for r in top]
+        heapq.heapify(heap)
+        cand_reach: dict = {}  # selected candidate's own (sim, node) reach
+        for rank in range(1, k + 1):
+            if not heap:
                 break
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-        return visited
-
-    n = nodes.select("id").cache()
-    queue_cap = max(64, 8 * k)
-
-    def all_candidate_gains(exclude: list, base):
-        """Full pass: marginal gain of every non-chosen candidate vs
-        ``base``, zero-gain candidates included (left join + coalesce —
-        absent rows would break the ties→smallest-id rule and empty
-        gains would IndexError). Returns the top ``queue_cap`` rows by
-        (gain desc, id asc) plus the cutoff tuple below which truncated
-        candidates are known to sit."""
-        cands = n if not exclude else n.where(~F.col("id").isin(*exclude))
-        seeds = cands.select(F.col("id").alias("cand")).crossJoin(sims).select(
-            "cand", "sim", F.col("cand").alias("node")
-        )
-        reached = reach(seeds)
-        marginal = (
-            reached if base is None else reached.join(base, ["sim", "node"], "left_anti")
-        )
-        gains = (
-            cands.select(F.col("id").alias("cand"))
-            .join(marginal.groupBy("cand").agg(F.count("*").alias("_g")), "cand", "left")
-            .select("cand", F.coalesce("_g", F.lit(0)).alias("_g"))
-        )
-        top = gains.orderBy(F.desc("_g"), F.asc("cand")).limit(queue_cap + 1).collect()
-        cutoff = (-1, 0)  # nothing truncated
-        if len(top) > queue_cap:
-            cutoff = (int(top[queue_cap]["_g"]), -int(top[queue_cap]["cand"]))
-            top = top[:queue_cap]
-        return reached, top, cutoff
-
-    def single_candidate_reach(cand: int):
-        seed = local_df(spark, [(cand,)], "cand long").crossJoin(sims).select(
-            "cand", "sim", F.col("cand").alias("node")
-        )
-        return reach(seed)
-
-    chosen: list = []
-    out_rows = []
-    base_reached = None  # (sim, node) reached by the chosen set
-    reached_r1, top, cutoff = all_candidate_gains([], None)
-    # heap entries: (-gain, cand, fresh_round); gains are upper bounds
-    # for rounds after the one they were evaluated in (submodularity)
-    heap = [(-int(r["_g"]), int(r["cand"]), 1) for r in top]
-    heapq.heapify(heap)
-    cand_reach: dict = {}  # selected candidate's own (sim, node) reach
-    for rank in range(1, k + 1):
-        if not heap:
-            break
-        while True:
-            neg_g, cand, fresh = heap[0]
-            if fresh == rank:
-                break  # head is fresh → exact greedy argmax this round
-            heapq.heappop(heap)
-            # a candidate's own reach is base-independent — computed once,
-            # reused across rounds; only the anti-join vs base is per-round
-            r_single = cand_reach.get(cand)
-            if r_single is None:
-                r_single = single_candidate_reach(cand)
-            g = r_single.join(base_reached, ["sim", "node"], "left_anti").count()
-            cand_reach[cand] = r_single
-            heapq.heappush(heap, (-int(g), cand, rank))
-            if (-heap[0][0], -heap[0][1]) <= cutoff:
-                # fresh best fell below the truncation cutoff: the true
-                # argmax may be a truncated candidate — re-run the full
-                # pass (provably rare at queue_cap ≥ 8k)
-                reached_r1, top, cutoff = all_candidate_gains(chosen, base_reached)
-                heap = [(-int(r["_g"]), int(r["cand"]), rank) for r in top]
-                heapq.heapify(heap)
-                cand_reach = {}
-        neg_g, best_cand, _ = heapq.heappop(heap)
-        chosen.append(best_cand)
-        out_rows.append((rank, best_cand, -neg_g))
-        best_reach = cand_reach.pop(best_cand, None)
-        if best_reach is None:  # selected straight from a full pass
-            best_reach = reached_r1.where(F.col("cand") == best_cand)
-        add = best_reach.select("sim", "node")
-        base_reached = _ckpt(
-            add.distinct()
-            if base_reached is None
-            else base_reached.unionByName(add).distinct()
-        )
-    _release(alive)
-    _release(n)
-    return local_df(spark, 
-        out_rows, "rank long, id long, spread_gain_x_sims long"
-    )
+            while True:
+                neg_g, cand, fresh = heap[0]
+                if fresh == rank:
+                    break  # head is fresh → exact greedy argmax this round
+                heapq.heappop(heap)
+                # a candidate's own reach is base-independent — computed once,
+                # reused across rounds; only the anti-join vs base is per-round
+                r_single = cand_reach.get(cand)
+                if r_single is None:
+                    r_single = single_candidate_reach(cand)
+                g = r_single.join(base_reached, ["sim", "node"], "left_anti").count()
+                cand_reach[cand] = r_single
+                heapq.heappush(heap, (-int(g), cand, rank))
+                if (-heap[0][0], -heap[0][1]) <= cutoff:
+                    # fresh best fell below the truncation cutoff: the true
+                    # argmax may be a truncated candidate — re-run the full
+                    # pass (provably rare at queue_cap ≥ 8k)
+                    reached_r1, top, cutoff = all_candidate_gains(chosen, base_reached)
+                    heap = [(-int(r["_g"]), int(r["cand"]), rank) for r in top]
+                    heapq.heapify(heap)
+                    cand_reach = {}
+            neg_g, best_cand, _ = heapq.heappop(heap)
+            chosen.append(best_cand)
+            out_rows.append((rank, best_cand, -neg_g))
+            best_reach = cand_reach.pop(best_cand, None)
+            if best_reach is None:  # selected straight from a full pass
+                best_reach = reached_r1.where(F.col("cand") == best_cand)
+            add = best_reach.select("sim", "node")
+            base_reached = loop.advance(
+                loop.ckpt(
+                    add.distinct()
+                    if base_reached is None
+                    else base_reached.unionByName(add).distinct()
+                ),
+                "base",
+            )
+        return local_df(spark, out_rows, "rank long, id long, spread_gain_x_sims long")
 
 
 def k1coloring(
@@ -2679,48 +2655,49 @@ def hashgnn(
     pool) + one groupBy(id, slot) argmin — PageRank's cost times
     n_slots, all exact integers.
     """
-    e = (undirect(edges) if undirected else edges.select("src", "dst")).distinct()
-    feats = nodes.select(
-        "id", F.explode(F.sequence(F.lit(0), F.lit(n_features - 1))).alias("j")
-    ).where(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|", F.lit(salt), F.lit("init"), F.col("id"), F.col("j")
-                )
-            ),
-            1,
-            1,
-        ).isin(*"02468ace")
-    )
-    state = _ckpt(feats.select("id", "j"))
-    for t in range(1, iterations + 1):
-        nbr = (
-            state.join(e, state["id"] == e["src"])
-            .select(F.col("dst").alias("id"), "j")
+    with scope() as loop:
+        e = (undirect(edges) if undirected else edges.select("src", "dst")).distinct()
+        feats = nodes.select(
+            "id", F.explode(F.sequence(F.lit(0), F.lit(n_features - 1))).alias("j")
+        ).where(
+            F.substring(
+                F.md5(
+                    F.concat_ws(
+                        "|", F.lit(salt), F.lit("init"), F.col("id"), F.col("j")
+                    )
+                ),
+                1,
+                1,
+            ).isin(*"02468ace")
         )
-        pool = state.unionByName(nbr).distinct()
-        slots = pool.select(
-            "id",
-            "j",
-            F.explode(F.sequence(F.lit(0), F.lit(n_slots - 1))).alias("_s"),
-        )
-        h = F.md5(
-            F.concat_ws("|", F.lit(salt), F.lit(str(t)), F.col("_s"), F.col("j"))
-        )
-        state = _ckpt(
-            slots.select("id", "_s", "j", h.alias("_h"))
-            .groupBy("id", "_s")
-            .agg(F.min_by("j", F.col("_h")).alias("j"))
-            .select("id", "j")
-            .distinct()
-        )
-    # zero-padded feature ids so the sorted string form orders numerically
-    return state.groupBy("id").agg(
-        F.array_join(
-            F.array_sort(F.collect_list(F.format_string("%02d", "j"))), ","
-        ).alias("emb")
-    )
+        state = loop.advance(loop.ckpt(feats.select("id", "j")))
+        for t in range(1, iterations + 1):
+            nbr = (
+                state.join(e, state["id"] == e["src"])
+                .select(F.col("dst").alias("id"), "j")
+            )
+            pool = state.unionByName(nbr).distinct()
+            slots = pool.select(
+                "id",
+                "j",
+                F.explode(F.sequence(F.lit(0), F.lit(n_slots - 1))).alias("_s"),
+            )
+            h = F.md5(
+                F.concat_ws("|", F.lit(salt), F.lit(str(t)), F.col("_s"), F.col("j"))
+            )
+            state = loop.advance(loop.ckpt(
+                slots.select("id", "_s", "j", h.alias("_h"))
+                .groupBy("id", "_s")
+                .agg(F.min_by("j", F.col("_h")).alias("j"))
+                .select("id", "j")
+                .distinct()
+            ))
+        # zero-padded feature ids so the sorted string form orders numerically
+        return loop.result(state.groupBy("id").agg(
+            F.array_join(
+                F.array_sort(F.collect_list(F.format_string("%02d", "j"))), ","
+            ).alias("emb")
+        ))
 
 
 def bfs_tree(
@@ -2736,36 +2713,33 @@ def bfs_tree(
     oracle-checkable. Sources carry parent = NULL. Same frontier BSP as
     ``bfs`` with one extra min-aggregation per level.
     """
-    e = (undirect(edges) if undirected else edges.select("src", "dst")).repartition("src").cache()
-    frontier = _ckpt(sources.select("id").distinct())
-    levels = [
-        frontier.select(
-            "id",
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(None).cast("long").alias("parent"),
-        )
-    ]
-    visited = frontier
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(e, frontier["id"] == e["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(e["src"]).alias("parent"))
-            .join(visited, "id", "left_anti")
-        )
-        nxt = _ckpt(nxt)
-        if nxt.isEmpty():
-            break
-        levels.append(
-            nxt.select("id", F.lit(depth).cast("long").alias("dist"), "parent")
-        )
-        visited = visited.unionByName(nxt.select("id"))
-        frontier = nxt.select("id")
-    _release(e)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    with scope() as loop:
+        e = loop.pin(undirect(edges) if undirected else edges.select("src", "dst"), "src")
+        frontier = loop.ckpt(sources.select("id").distinct())
+        levels = [
+            frontier.select(
+                "id",
+                F.lit(0).cast("long").alias("dist"),
+                F.lit(None).cast("long").alias("parent"),
+            )
+        ]
+        visited = frontier
+        for depth in range(1, max_depth + 1):
+            nxt = (
+                frontier.join(e, frontier["id"] == e["src"])
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min(e["src"]).alias("parent"))
+                .join(visited, "id", "left_anti")
+            )
+            nxt = loop.ckpt(nxt)
+            if nxt.isEmpty():
+                break
+            levels.append(
+                nxt.select("id", F.lit(depth).cast("long").alias("dist"), "parent")
+            )
+            visited = visited.unionByName(nxt.select("id"))
+            frontier = nxt.select("id")
+        return loop.result(_union(levels))
 
 
 def biconnected_components(
@@ -2805,206 +2779,199 @@ def biconnected_components(
     """
     from pyspark.sql.window import Window
 
-    e0 = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .cache()
-    )
-    e_dir = e0.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    verts = (
-        e0.select(F.col("u").alias("id"))
-        .unionByName(e0.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    comp = wcc_star(e_dir, verts)
-    roots = comp.select(F.col("comp").alias("id")).distinct()
-    tree = _ckpt(bfs_tree(e_dir, roots, max_depth=max_depth, undirected=True))
-    maxd = tree.agg(F.max("dist")).first()[0] or 0
-
-    # -- bottom-up subtree sizes, one BFS level per superstep
-    sz_levels: list[DataFrame] = []
-    below: DataFrame | None = None
-    for d in range(maxd, -1, -1):
-        level = tree.where(F.col("dist") == d).select("id")
-        if below is None:
-            nd = level.select("id", F.lit(1).cast("long").alias("nd"))
-        else:
-            child_sum = (
-                tree.where(F.col("dist") == d + 1)
-                .select("id", "parent")
-                .join(below, "id")
-                .groupBy(F.col("parent").alias("id"))
-                .agg(F.sum("nd").alias("_c"))
+    with scope() as loop:
+        e0 = loop.pin(
+            edges.select(
+                F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
             )
-            nd = level.join(child_sum, "id", "left").select(
-                "id", (F.coalesce("_c", F.lit(0)) + 1).cast("long").alias("nd")
-            )
-        nd = _ckpt(nd)
-        sz_levels.append(nd)
-        below = nd
-    nd_all = sz_levels[0]
-    for lv in sz_levels[1:]:
-        nd_all = nd_all.unionByName(lv)
-
-    # -- preorder: per-parent sibling prefix offsets, then top-down
-    w_sib = (
-        Window.partitionBy("parent")
-        .orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = (
-        tree.where(F.col("parent").isNotNull())
-        .join(nd_all, "id")
-        .select(
-            "id",
-            "parent",
-            "dist",
-            F.coalesce(F.sum("nd").over(w_sib), F.lit(0)).alias("off"),
+            .where(F.col("u") != F.col("v"))
+            .distinct()
         )
-    )
-    # root offsets: exclusive prefix sum of subtree sizes over the roots
-    # (one per connected component — |V|-shaped on a graph of many small
-    # components, so NEVER a SinglePartition window; r11, the same
-    # range-repartition fix dfs_preorder got in r10)
-    from .curation import global_prefix_sum
-
-    pre_levels = [
-        _ckpt(
-            global_prefix_sum(
-                roots.join(nd_all, "id"), ["id"], "nd", out_name="pre"
-            ).select("id", "pre")
+        e_dir = e0.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        verts = (
+            e0.select(F.col("u").alias("id"))
+            .unionByName(e0.select(F.col("v").alias("id")))
+            .distinct()
         )
-    ]
-    cur = pre_levels[0]
-    for d in range(1, maxd + 1):
-        cur = _ckpt(
-            off.where(F.col("dist") == d)
-            .join(
-                cur.select(F.col("id").alias("parent"), F.col("pre").alias("_pp")),
+        comp = wcc_star(e_dir, verts)
+        roots = comp.select(F.col("comp").alias("id")).distinct()
+        levels = bfs_tree(e_dir, roots, max_depth=max_depth, undirected=True)
+        tree = loop.ckpt(levels)
+        loop.free(levels)  # the BFS levels, now folded into the tree
+        maxd = tree.agg(F.max("dist")).first()[0] or 0
+
+        # -- bottom-up subtree sizes, one BFS level per superstep
+        sz_levels: list[DataFrame] = []
+        below: DataFrame | None = None
+        for d in range(maxd, -1, -1):
+            level = tree.where(F.col("dist") == d).select("id")
+            if below is None:
+                nd = level.select("id", F.lit(1).cast("long").alias("nd"))
+            else:
+                child_sum = (
+                    tree.where(F.col("dist") == d + 1)
+                    .select("id", "parent")
+                    .join(below, "id")
+                    .groupBy(F.col("parent").alias("id"))
+                    .agg(F.sum("nd").alias("_c"))
+                )
+                nd = level.join(child_sum, "id", "left").select(
+                    "id", (F.coalesce("_c", F.lit(0)) + 1).cast("long").alias("nd")
+                )
+            nd = loop.ckpt(nd)
+            sz_levels.append(nd)
+            below = nd
+        nd_all = _union(sz_levels)
+
+        # -- preorder: per-parent sibling prefix offsets, then top-down
+        w_sib = (
+            Window.partitionBy("parent")
+            .orderBy("id")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        off = (
+            tree.where(F.col("parent").isNotNull())
+            .join(nd_all, "id")
+            .select(
+                "id",
                 "parent",
+                "dist",
+                F.coalesce(F.sum("nd").over(w_sib), F.lit(0)).alias("off"),
             )
-            .select("id", (F.col("_pp") + 1 + F.col("off")).alias("pre"))
         )
-        pre_levels.append(cur)
-    pre_all = pre_levels[0]
-    for lv in pre_levels[1:]:
-        pre_all = pre_all.unionByName(lv)
-    info = _ckpt(pre_all.join(nd_all, "id"))  # (id, pre, nd)
+        # root offsets: exclusive prefix sum of subtree sizes over the roots
+        # (one per connected component — |V|-shaped on a graph of many small
+        # components, so NEVER a SinglePartition window; r11, the same
+        # range-repartition fix dfs_preorder got in r10)
+        from .curation import global_prefix_sum
 
-    # -- non-tree edges and low/high initial values
-    te = tree.where(F.col("parent").isNotNull()).select(
-        F.least("parent", "id").alias("u"), F.greatest("parent", "id").alias("v")
-    )
-    nt = _ckpt(e0.join(te, ["u", "v"], "left_anti"))
-    nt_und = nt.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-        nt.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    nbext = (
-        nt_und.join(
-            info.select(F.col("id").alias("b"), F.col("pre").alias("_bp")), "b"
+        pre_levels = [
+            loop.ckpt(
+                global_prefix_sum(
+                    roots.join(nd_all, "id"), ["id"], "nd", out_name="pre"
+                ).select("id", "pre")
+            )
+        ]
+        cur = pre_levels[0]
+        for d in range(1, maxd + 1):
+            cur = loop.ckpt(
+                off.where(F.col("dist") == d)
+                .join(
+                    cur.select(F.col("id").alias("parent"), F.col("pre").alias("_pp")),
+                    "parent",
+                )
+                .select("id", (F.col("_pp") + 1 + F.col("off")).alias("pre"))
+            )
+            pre_levels.append(cur)
+        pre_all = _union(pre_levels)
+        info = loop.ckpt(pre_all.join(nd_all, "id"))  # (id, pre, nd)
+
+        # -- non-tree edges and low/high initial values
+        te = tree.where(F.col("parent").isNotNull()).select(
+            F.least("parent", "id").alias("u"), F.greatest("parent", "id").alias("v")
         )
-        .groupBy(F.col("a").alias("id"))
-        .agg(F.min("_bp").alias("_nlo"), F.max("_bp").alias("_nhi"))
-    )
-    init = _ckpt(
-        info.join(nbext, "id", "left").select(
+        nt = loop.ckpt(e0.join(te, ["u", "v"], "left_anti"))
+        nt_und = nt.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
+            nt.select(F.col("v").alias("a"), F.col("u").alias("b"))
+        )
+        nbext = (
+            nt_und.join(
+                info.select(F.col("id").alias("b"), F.col("pre").alias("_bp")), "b"
+            )
+            .groupBy(F.col("a").alias("id"))
+            .agg(F.min("_bp").alias("_nlo"), F.max("_bp").alias("_nhi"))
+        )
+        init = loop.ckpt(info.join(nbext, "id", "left").select(
             "id",
             F.least(F.col("pre"), F.coalesce("_nlo", F.col("pre"))).alias("lo0"),
             F.greatest(F.col("pre"), F.coalesce("_nhi", F.col("pre"))).alias("hi0"),
-        )
-    )
+        ))
 
-    # -- bottom-up low/high
-    lh_levels: list[DataFrame] = []
-    below = None
-    for d in range(maxd, -1, -1):
-        lvl = tree.where(F.col("dist") == d).select("id", "parent").join(init, "id")
-        if below is None:
-            lvl = lvl.select(
-                "id", "parent", F.col("lo0").alias("lo"), F.col("hi0").alias("hi")
-            )
-        else:
-            ch = (
-                tree.where(F.col("dist") == d + 1)
-                .select("id", "parent")
-                .join(below.select("id", "lo", "hi"), "id")
-                .groupBy(F.col("parent").alias("id"))
-                .agg(F.min("lo").alias("_clo"), F.max("hi").alias("_chi"))
-            )
-            lvl = lvl.join(ch, "id", "left").select(
-                "id",
-                "parent",
-                F.least("lo0", F.coalesce("_clo", F.col("lo0"))).alias("lo"),
-                F.greatest("hi0", F.coalesce("_chi", F.col("hi0"))).alias("hi"),
-            )
-        lvl = _ckpt(lvl)
-        lh_levels.append(lvl)
-        below = lvl
-    lh_all = lh_levels[0]
-    for lv in lh_levels[1:]:
-        lh_all = lh_all.unionByName(lv)
+        # -- bottom-up low/high
+        lh_levels: list[DataFrame] = []
+        below = None
+        for d in range(maxd, -1, -1):
+            lvl = tree.where(F.col("dist") == d).select("id", "parent").join(init, "id")
+            if below is None:
+                lvl = lvl.select(
+                    "id", "parent", F.col("lo0").alias("lo"), F.col("hi0").alias("hi")
+                )
+            else:
+                ch = (
+                    tree.where(F.col("dist") == d + 1)
+                    .select("id", "parent")
+                    .join(below.select("id", "lo", "hi"), "id")
+                    .groupBy(F.col("parent").alias("id"))
+                    .agg(F.min("lo").alias("_clo"), F.max("hi").alias("_chi"))
+                )
+                lvl = lvl.join(ch, "id", "left").select(
+                    "id",
+                    "parent",
+                    F.least("lo0", F.coalesce("_clo", F.col("lo0"))).alias("lo"),
+                    F.greatest("hi0", F.coalesce("_chi", F.col("hi0"))).alias("hi"),
+                )
+            lvl = loop.ckpt(lvl)
+            lh_levels.append(lvl)
+            below = lvl
+        lh_all = _union(lh_levels)
 
-    # -- auxiliary graph (vertex = non-root vertex w ≡ tree edge (p(w), w))
-    iu = info.select(
-        F.col("id").alias("u"), F.col("pre").alias("_up"), F.col("nd").alias("_un")
-    )
-    iv = info.select(
-        F.col("id").alias("v"), F.col("pre").alias("_vp"), F.col("nd").alias("_vn")
-    )
-    nt_i = _ckpt(nt.join(iu, "u").join(iv, "v"))
-    u_anc_v = (F.col("_up") <= F.col("_vp")) & (
-        F.col("_vp") < F.col("_up") + F.col("_un")
-    )
-    v_anc_u = (F.col("_vp") <= F.col("_up")) & (
-        F.col("_up") < F.col("_vp") + F.col("_vn")
-    )
-    aux_a = nt_i.where(~u_anc_v & ~v_anc_u).select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    )
-    pv = info.select(
-        F.col("id").alias("parent"), F.col("pre").alias("_pp"), F.col("nd").alias("_pn")
-    )
-    aux_b = (
-        lh_all.where(F.col("parent").isNotNull())
-        .join(roots.select(F.col("id").alias("parent")), "parent", "left_anti")
-        .join(pv, "parent")
-        .where(
-            (F.col("lo") < F.col("_pp"))
-            | (F.col("hi") >= F.col("_pp") + F.col("_pn"))
+        # -- auxiliary graph (vertex = non-root vertex w ≡ tree edge (p(w), w))
+        iu = info.select(
+            F.col("id").alias("u"), F.col("pre").alias("_up"), F.col("nd").alias("_un")
         )
-        .select(F.col("parent").alias("src"), F.col("id").alias("dst"))
-    )
-    aux_nodes = tree.where(F.col("parent").isNotNull()).select("id")
-    bcc = wcc_star(aux_a.unionByName(aux_b), aux_nodes)
-    lab_w = bcc.select(F.col("id").alias("_w"), F.col("comp").alias("bcc"))
+        iv = info.select(
+            F.col("id").alias("v"), F.col("pre").alias("_vp"), F.col("nd").alias("_vn")
+        )
+        nt_i = loop.ckpt(nt.join(iu, "u").join(iv, "v"))
+        u_anc_v = (F.col("_up") <= F.col("_vp")) & (
+            F.col("_vp") < F.col("_up") + F.col("_un")
+        )
+        v_anc_u = (F.col("_vp") <= F.col("_up")) & (
+            F.col("_up") < F.col("_vp") + F.col("_vn")
+        )
+        aux_a = nt_i.where(~u_anc_v & ~v_anc_u).select(
+            F.col("u").alias("src"), F.col("v").alias("dst")
+        )
+        pv = info.select(
+            F.col("id").alias("parent"), F.col("pre").alias("_pp"), F.col("nd").alias("_pn")
+        )
+        aux_b = (
+            lh_all.where(F.col("parent").isNotNull())
+            .join(roots.select(F.col("id").alias("parent")), "parent", "left_anti")
+            .join(pv, "parent")
+            .where(
+                (F.col("lo") < F.col("_pp"))
+                | (F.col("hi") >= F.col("_pp") + F.col("_pn"))
+            )
+            .select(F.col("parent").alias("src"), F.col("id").alias("dst"))
+        )
+        aux_nodes = tree.where(F.col("parent").isNotNull()).select("id")
+        bcc = wcc_star(aux_a.unionByName(aux_b), aux_nodes)
+        lab_w = bcc.select(F.col("id").alias("_w"), F.col("comp").alias("bcc"))
 
-    # -- every graph edge → its block
-    tree_lab = (
-        tree.where(F.col("parent").isNotNull())
-        .join(lab_w, tree["id"] == lab_w["_w"])
-        .select(
-            F.least("parent", "id").alias("src"),
-            F.greatest("parent", "id").alias("dst"),
-            "bcc",
+        # -- every graph edge → its block
+        tree_lab = (
+            tree.where(F.col("parent").isNotNull())
+            .join(lab_w, tree["id"] == lab_w["_w"])
+            .select(
+                F.least("parent", "id").alias("src"),
+                F.greatest("parent", "id").alias("dst"),
+                "bcc",
+            )
         )
-    )
-    nt_lab = (
-        nt_i.select(
-            "u",
-            "v",
-            F.when(F.col("_up") >= F.col("_vp"), F.col("u"))
-            .otherwise(F.col("v"))
-            .alias("_w"),
+        nt_lab = (
+            nt_i.select(
+                "u",
+                "v",
+                F.when(F.col("_up") >= F.col("_vp"), F.col("u"))
+                .otherwise(F.col("v"))
+                .alias("_w"),
+            )
+            .join(lab_w, "_w")
+            .select(F.col("u").alias("src"), F.col("v").alias("dst"), "bcc")
         )
-        .join(lab_w, "_w")
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"), "bcc")
-    )
-    out = tree_lab.unionByName(nt_lab)
-    _release(e0)
-    return out
+        out = tree_lab.unionByName(nt_lab)
+        return loop.result(out)
 
 
 def articulation_points(edges: DataFrame, max_depth: int = 40) -> DataFrame:
@@ -3195,9 +3162,7 @@ def steiner_tree(
             # step — the next round's step checkpoint materializes it (r14,
             # guide §2.4: no per-level frontier checkpoint job)
             cur = step.select(F.col("parent").alias("id")).distinct()
-        tree = parts[0]
-        for p in parts[1:]:
-            tree = tree.unionByName(p)
+        tree = _union(parts)
         tree = loop.advance(loop.ckpt(
             tree.select(
                 F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"), "w"
@@ -3206,7 +3171,7 @@ def steiner_tree(
         ), "tree")
         # the MST's internal state is folded into the tree checkpoint now;
         # the Dijkstra state, walk levels and terminal-graph frame go on exit
-        _release_deep(mst)
+        loop.free(mst)
 
         # -- 5. peel non-terminal leaves; each checkpoint fully replaces the
         # tree before it
@@ -3334,9 +3299,7 @@ def astar(
                 break
             hops.append(nxt)
             cur = nxt
-        walk = hops[0]
-        for hdf in hops[1:]:
-            walk = walk.unionByName(hdf)
+        walk = _union(hops)
         return loop.result(walk.agg(
             F.lit(float(goal[0])).alias("total_cost"),
             F.concat_ws(
@@ -3364,7 +3327,6 @@ def triangle_list(edges: DataFrame) -> DataFrame:
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .cache()
     )
     ab = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     bc = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -3399,36 +3361,30 @@ def rwr_sample(
     sampling cost is O(steps · walks) rows of state regardless of graph
     size.
     """
-    from .curation import hex_thr  # 4-hex-digit bucket boundary
+    with scope() as loop:
+        from .curation import hex_thr  # 4-hex-digit bucket boundary
 
-    thr = hex_thr(restart)
-    e = (
-        (undirect(edges) if undirected else edges.select("src", "dst"))
-        .repartition("src")
-        .cache()
-    )
-    spark = edges.sparkSession
-    cur = _ckpt(
-        spark.range(walks).select(
+        thr = hex_thr(restart)
+        e = loop.pin(undirect(edges) if undirected else edges.select("src", "dst"), "src")
+        spark = edges.sparkSession
+        cur = loop.ckpt(spark.range(walks).select(
             F.col("id").alias("walk_id"), F.lit(seed).cast("long").alias("id")
-        )
-    )
-    out = [cur]
-    for k in range(1, steps + 1):
-        draw = F.md5(
-            F.concat_ws("|", F.lit(salt), F.lit(str(k)), F.col("id"), F.col("dst"))
-        )
-        stepped = (
-            cur.join(e, cur["id"] == e["src"])
-            .select("walk_id", "dst", draw.alias("_h"))
-            .groupBy("walk_id")
-            .agg(F.min_by("dst", F.col("_h")).alias("_next"))
-        )
-        rdraw = F.md5(
-            F.concat_ws("|", F.lit(salt), F.lit("r"), F.lit(str(k)), F.col("walk_id"))
-        )
-        cur = _ckpt(
-            cur.join(stepped, "walk_id", "left").select(
+        ))
+        out = [cur]
+        for k in range(1, steps + 1):
+            draw = F.md5(
+                F.concat_ws("|", F.lit(salt), F.lit(str(k)), F.col("id"), F.col("dst"))
+            )
+            stepped = (
+                cur.join(e, cur["id"] == e["src"])
+                .select("walk_id", "dst", draw.alias("_h"))
+                .groupBy("walk_id")
+                .agg(F.min_by("dst", F.col("_h")).alias("_next"))
+            )
+            rdraw = F.md5(
+                F.concat_ws("|", F.lit(salt), F.lit("r"), F.lit(str(k)), F.col("walk_id"))
+            )
+            cur = loop.ckpt(cur.join(stepped, "walk_id", "left").select(
                 "walk_id",
                 F.when(
                     (rdraw < F.lit(thr)) | F.col("_next").isNull(),
@@ -3436,14 +3392,11 @@ def rwr_sample(
                 )
                 .otherwise(F.col("_next"))
                 .alias("id"),
-            )
+            ))
+            out.append(cur)
+        return loop.result(
+            _union(out).groupBy("id").agg(F.count("*").cast("long").alias("visits"))
         )
-        out.append(cur)
-    _release(e)
-    acc = out[0]
-    for fr in out[1:]:
-        acc = acc.unionByName(fr)
-    return acc.groupBy("id").agg(F.count("*").cast("long").alias("visits"))
 
 
 def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 20) -> DataFrame:
@@ -3457,48 +3410,43 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 20) -> DataFrame:
 
     Returns the surviving canonical edges (src < dst).
     """
-    e = _ckpt(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    need = k - 2
-    # r14 (guide §2.4): `support`'s (a,b) pairs are all drawn from e's rows
-    # (each triangle side IS an e-edge), so the former e ⋉ support semi-join
-    # was an identity — dropped, along with its per-round exchange. The
-    # surviving-edge count doubles as the lazy checkpoint's materializing
-    # action, and the previous round's count is a remembered int instead of
-    # a second count job.
-    n_e = e.count()
-    prev = None
-    for _ in range(max_rounds):
-        ab = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        bc = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-        ac = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-        tri = ab.join(bc, "y").join(ac, ["x", "z"])
-        kept = (
-            tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
-            .unionByName(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
-            .unionByName(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("_s"))
-            .where(F.col("_s") >= need)
-            .select("a", "b")
-            .localCheckpoint(eager=False)
-        )
-        n_kept = kept.count()
-        if prev is not None:
-            _release(prev)
-        prev = e
-        e = kept
-        if n_kept == n_e or n_kept == 0:
-            break
-        n_e = n_kept
-    if prev is not None:
-        _release(prev)
-    return e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    with scope() as loop:
+        e = loop.advance(loop.ckpt(
+            edges.select(
+                F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+            )
+            .where(F.col("a") != F.col("b"))
+            .distinct()
+        ))
+        need = k - 2
+        # r14 (guide §2.4): `support`'s (a,b) pairs are all drawn from e's rows
+        # (each triangle side IS an e-edge), so the former e ⋉ support semi-join
+        # was an identity — dropped, along with its per-round exchange. The
+        # surviving-edge count doubles as the lazy checkpoint's materializing
+        # action, and the previous round's count is a remembered int instead of
+        # a second count job.
+        n_e = e.count()
+        for _ in range(max_rounds):
+            ab = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
+            bc = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
+            ac = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
+            tri = ab.join(bc, "y").join(ac, ["x", "z"])
+            kept = loop.ckpt(
+                tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
+                .unionByName(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
+                .unionByName(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
+                .groupBy("a", "b")
+                .agg(F.count("*").alias("_s"))
+                .where(F.col("_s") >= need)
+                .select("a", "b"),
+                eager=False,
+            )
+            n_kept = kept.count()
+            e = loop.advance(kept)
+            if n_kept == n_e or n_kept == 0:
+                break
+            n_e = n_kept
+        return loop.result(e.select(F.col("a").alias("src"), F.col("b").alias("dst")))
 
 
 def dfs_preorder(

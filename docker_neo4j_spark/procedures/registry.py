@@ -23,7 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators._mem import release, release_deep
+from ..operators._mem import release, release_deep, scope
 
 
 @dataclass
@@ -3035,23 +3035,28 @@ def _gds_kcore_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
 
     nodes, edges = _projected_graph(spark, graphName)
     core = nodes.select(F.col("id"), F.lit(0).alias("coreValue"))
-    for k in range(1, 65):
-        members = gds.kcore(edges, k=k).select("id").cache()
-        if members.isEmpty():
-            break
-        core = (
-            core.join(members.withColumn("_in", F.lit(1)), "id", "left")
-            .select(
-                "id",
-                F.when(F.col("_in").isNotNull(), F.lit(k))
-                .otherwise(F.col("coreValue"))
-                .alias("coreValue"),
+    with scope() as loop:
+        for k in range(1, 65):
+            members = gds.kcore(edges, k=k)
+            if members.isEmpty():
+                break
+            core = loop.advance(
+                loop.ckpt(
+                    core.join(members.select("id", F.lit(1).alias("_in")), "id", "left")
+                    .select(
+                        "id",
+                        F.when(F.col("_in").isNotNull(), F.lit(k))
+                        .otherwise(F.col("coreValue"))
+                        .alias("coreValue"),
+                    )
+                )
+            )
+            loop.free(members)  # the layer, now folded into core
+        return loop.result(
+            core.select(
+                F.col("id").alias("nodeId"), F.col("coreValue").cast("long").alias("coreValue")
             )
         )
-        core = core.localCheckpoint(eager=False)
-    return core.select(
-        F.col("id").alias("nodeId"), F.col("coreValue").cast("long").alias("coreValue")
-    )
 
 
 @procedure(

@@ -22,6 +22,9 @@ import time
 
 
 def main() -> int:
+    if len(sys.argv) < 2:
+        print("usage: python scripts/codegen_count.py q1,q2,... [passes]", file=sys.stderr)
+        return 2
     names = sys.argv[1].split(",")
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -425,15 +425,14 @@ def test_dfs_superstep_is_grouped_equijoin(spark, sf_dir):
     """One dfs_preorder relaxation superstep = edge-partitioned equi-join
     + groupBy-min over the path arrays — no cartesian, no Python, and the
     array-min is a plain JVM aggregate (arrays are natively orderable)."""
-    from docker_neo4j_spark.operators.gds import _ckpt
     from docker_neo4j_spark.sources.tpch import build_graph
 
     g = build_graph(spark, sf_dir)
     e = g.rels.where(F.col("type") == "PLACED").select("src", "dst")
-    frontier = _ckpt(
+    frontier = (
         g.label_frames["Customer"].orderBy("id").limit(1)
         .select("id", F.array("id").alias("path"))
-    )
+    ).localCheckpoint(eager=True)
     cand = (
         frontier.join(e, frontier["id"] == e["src"])
         .where(~F.array_contains(F.col("path"), F.col("dst")))

@@ -681,6 +681,33 @@ def test_gds_stream_procedures_over_projection(spark, sf_dir):
         s.run("CALL gds.wcc.stream('nope')")
 
 
+def test_gds_kcore_stream_leaves_no_cached_layer(spark):
+    """gds.kcore.stream runs one fixed-k peel per core layer and folds
+    each layer into the core values: no layer may stay in the session's
+    CacheManager once the result is collected."""
+    from docker_neo4j_spark.cypher.session import Session
+
+    s = Session(spark)
+    # two 4-cliques joined by a 3-node path: the path nodes are core 2
+    s.run("UNWIND range(1, 11) AS i CREATE (:Kc {k: i})")
+    pairs = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    pairs += [(a, b) for a in range(8, 12) for b in range(a + 1, 12)]
+    pairs += [(4, 5), (5, 6), (6, 7), (7, 8)]
+    for a, b in pairs:
+        s.run(f"MATCH (a:Kc {{k: {a}}}), (b:Kc {{k: {b}}}) CREATE (a)-[:E]->(b)")
+    s.run("CALL gds.graph.project('kcg', 'Kc', 'E')")
+    try:
+        spark.catalog.clearCache()
+        cores = s.run(
+            "CALL gds.kcore.stream('kcg') YIELD coreValue "
+            "RETURN coreValue, count(*) AS n ORDER BY coreValue"
+        ).collect()
+        assert [(r.coreValue, r.n) for r in cores] == [(2, 3), (3, 8)]
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        s.run("CALL gds.graph.drop('kcg')")
+
+
 def test_gds_mutate_then_drop_releases_projection(spark, sf_dir):
     """project → wcc.mutate → drop leaves no blocks pinned: mutate frees
     the node frame it replaces and the kernel result it folded in, and

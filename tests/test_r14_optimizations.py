@@ -64,49 +64,55 @@ _IDS = list(range(1, 5)) + [6, 7, 8] + list(range(10, 14))
 
 
 @pytest.mark.parametrize(
-    "run",
+    "run, bound",
     [
         pytest.param(
-            lambda s, e, n: gds.pagerank(e, n, iterations=4), id="pagerank"
+            lambda s, e, n: gds.pagerank(e, n, iterations=4), 2, id="pagerank"
         ),
         pytest.param(
             lambda s, e, n: gds.personalized_pagerank(
                 e, _nodes(s, [1]), n, iterations=4
             ),
+            2,
             id="personalized",
         ),
-        pytest.param(lambda s, e, n: gds.wcc(e, n), id="wcc"),
+        pytest.param(lambda s, e, n: gds.wcc(e, n), 2, id="wcc"),
         pytest.param(
             lambda s, e, n: gds.sssp(
                 _edges(s, _PAIRS, weights=[1.0] * len(_PAIRS)), _nodes(s, [1])
             ),
+            2,
             id="sssp",
         ),
         pytest.param(
-            lambda s, e, n: gds.label_propagation(e, n, max_iter=4), id="lpa"
+            lambda s, e, n: gds.label_propagation(e, n, max_iter=4), 2, id="lpa"
         ),
         pytest.param(
             lambda s, e, n: gds.topological_layers(
                 _edges(s, [(1, 2), (2, 3), (3, 4), (1, 4)]), _nodes(s, [1, 2, 3, 4])
             ),
+            2,
             id="topological",
         ),
-        pytest.param(lambda s, e, n: gds.kcore(e, k=3), id="kcore"),
-        pytest.param(lambda s, e, n: gds.louvain(e, n, max_iter=4), id="louvain"),
+        pytest.param(lambda s, e, n: gds.kcore(e, k=3), 2, id="kcore"),
+        pytest.param(lambda s, e, n: gds.louvain(e, n, max_iter=4), 2, id="louvain"),
         pytest.param(
             lambda s, e, n: gds.eigenvector(gds.undirect(e), n, iterations=4),
+            2,
             id="eigenvector",
         ),
-        pytest.param(lambda s, e, n: gds.hits(e, n, iterations=3), id="hits"),
+        pytest.param(lambda s, e, n: gds.hits(e, n, iterations=3), 2, id="hits"),
         pytest.param(
             lambda s, e, n: gds.betweenness(e, _nodes(s, [1, 6, 10]), max_depth=8),
+            2,
             id="betweenness",
         ),
         pytest.param(
             lambda s, e, n: gds.dfs_preorder(e, _nodes(s, [1]), max_iter=8),
+            2,
             id="dfs",
         ),
-        pytest.param(lambda s, e, n: gds.ktruss(e, k=3), id="ktruss"),
+        pytest.param(lambda s, e, n: gds.ktruss(e, k=3), 2, id="ktruss"),
         # the r14 second-wave fusions: probe-free Borůvka rounds (plus
         # deep-release of each round's folded-in wcc relabel state),
         # single-checkpoint k1coloring rounds, sllpa memory frames, and
@@ -116,31 +122,57 @@ _IDS = list(range(1, 5)) + [6, 7, 8] + list(range(10, 14))
                 _edges(s, _PAIRS, weights=[float(i % 5 + 1) for i in range(len(_PAIRS))]),
                 n,
             ),
+            2,
             id="spanning_forest",
         ),
         pytest.param(
-            lambda s, e, n: gds.k1coloring(e, n, max_rounds=20), id="k1coloring"
+            lambda s, e, n: gds.k1coloring(e, n, max_rounds=20), 2, id="k1coloring"
         ),
-        pytest.param(lambda s, e, n: gds.sllpa(e, n, rounds=4), id="sllpa"),
+        pytest.param(lambda s, e, n: gds.sllpa(e, n, rounds=4), 2, id="sllpa"),
         pytest.param(
             lambda s, e, n: gds.steiner_tree(
                 _edges(s, _PAIRS, weights=[float(i % 5 + 1) for i in range(len(_PAIRS))]),
                 _nodes(s, [1, 10, 13]),
             ),
+            2,
             id="steiner",
         ),
+        # the kernels that hand-rolled their lifetimes: each may keep
+        # exactly the checkpoints its returned frame reads
+        pytest.param(lambda s, e, n: gds.scc(e, n), 1, id="scc"),
+        pytest.param(
+            lambda s, e, n: gds.kmeans(
+                n.select("id", F.lit(0).alias("j"), (F.col("id") % 3).cast("double").alias("v")),
+                k=3,
+            ),
+            1,
+            id="kmeans",
+        ),
+        pytest.param(lambda s, e, n: gds.wcc_star(e, n), 1, id="wcc_star"),
+        pytest.param(lambda s, e, n: gds.fastrp(e, n), 3, id="fastrp"),
+        pytest.param(
+            lambda s, e, n: gds.influence_maximization(e, n, k=2, n_sims=2),
+            0,
+            id="influence_maximization",
+        ),
+        pytest.param(lambda s, e, n: gds.triangle_count(e), 0, id="triangle_count"),
+        pytest.param(lambda s, e, n: gds.local_clustering(e), 0, id="local_clustering"),
     ],
 )
-def test_fused_kernels_release_superseded_state(spark, run):
+def test_fused_kernels_release_superseded_state(spark, run, bound):
     _clear(spark)
     e = _edges(spark, _PAIRS)
     n = _nodes(spark, _IDS)
     out = run(spark, e, n)
     out.collect()  # materialize fully (lazy-checkpoint results included)
-    # only the returned frame's checkpoint (≤2 RDDs: result + an internal
-    # rank/union stage some kernels checkpoint into the result) may stay
-    assert _pinned_settled(spark, 2) <= 2, (
+    # only the returned frame's checkpoints may stay: `bound` is how many
+    # it reads (2 for the BSP kernels: result + an internal rank/union
+    # stage some kernels checkpoint into the result)
+    assert _pinned_settled(spark, bound) <= bound, (
         "fused kernel leaked superseded state frames"
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        "kernel left a cached frame in the CacheManager"
     )
     _clear(spark)
 
@@ -164,8 +196,19 @@ def test_astar_releases_superseded_state(spark):
     _clear(spark)
 
 
-def test_kernel_error_releases_pinned_frames(spark, monkeypatch):
-    """A kernel that raises mid-loop frees its edge cache and every state
+@pytest.mark.parametrize(
+    "run",
+    [
+        pytest.param(lambda s: gds.wcc(_edges(s, _PAIRS), _nodes(s, _IDS)), id="wcc"),
+        pytest.param(
+            lambda s: gds.random_walk(_edges(s, _PAIRS), _nodes(s, [1, 6]), undirected=True),
+            id="random_walk",
+        ),
+        pytest.param(lambda s: gds.scc(_edges(s, _PAIRS), _nodes(s, _IDS)), id="scc"),
+    ],
+)
+def test_kernel_error_releases_pinned_frames(spark, monkeypatch, run):
+    """A kernel that raises mid-loop frees its edge pin and every state
     checkpoint on the way out: the served path shares one session, so a
     failed call must not leave frames pinned on it."""
     # the concrete (classic) class: it overrides isEmpty, so patching the
@@ -184,9 +227,10 @@ def test_kernel_error_releases_pinned_frames(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "isEmpty", failing_is_empty)
     with pytest.raises(RuntimeError, match="probe failed"):
-        gds.wcc(_edges(spark, _PAIRS), _nodes(spark, _IDS))
+        run(spark)
     assert len(calls) == 2
     assert _pinned_settled(spark, start) == start
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     _clear(spark)
 
 

@@ -3361,10 +3361,10 @@ def rwr_sample(
     sampling cost is O(steps · walks) rows of state regardless of graph
     size.
     """
-    with scope() as loop:
-        from .curation import hex_thr  # 4-hex-digit bucket boundary
+    from .curation import hex_thr  # 4-hex-digit bucket boundary
 
-        thr = hex_thr(restart)
+    thr = hex_thr(restart)
+    with scope() as loop:
         e = loop.pin(undirect(edges) if undirected else edges.select("src", "dst"), "src")
         spark = edges.sparkSession
         cur = loop.ckpt(spark.range(walks).select(

@@ -10,6 +10,10 @@ JSON line::
 Each query is materialized through the ``noop`` sink — full computation, no
 driver-side collect, so the timing is executor work, not result transfer
 (SURVEY.md §6: the reference publishes no numbers; this run IS the baseline).
+
+The harness steps are functions that ``scripts/prof.py`` and
+``scripts/stress_heavy.py`` import: ``settings``, ``session``, ``warm``,
+``clear`` and ``timed`` (one clear + build + noop write).
 """
 
 from __future__ import annotations
@@ -83,14 +87,6 @@ HEADLINE = [
 ]
 
 
-# r6 note: gds_pagerank carries ~+1.7s at sf0.1 versus r5 from the
-# per-round checkpoint RELEASE (superseded pr frames unpersist each
-# iteration — measured 23.0s with vs 21.3s without on this machine).
-# The release is kept deliberately: it bounds iterative-state memory to
-# O(1) node-frames instead of O(iterations), which is the difference
-# between finishing and OOMing at the 100 TB target; the bench pays the
-# honest price of that contract.
-
 # Timing-key → catalog-row substitutions (empty by design). The
 # gds_pagerank_serving row (maxIterations=20, tolerance=1e-7, the gds
 # defaults) was benchmarked as a candidate alias and measured SLOWER than
@@ -102,32 +98,69 @@ HEADLINE = [
 BENCH_ALIASES: dict[str, str] = {}
 
 
-def main() -> int:
+def settings() -> tuple[str, str]:
+    """The bench's two settings: ``$SPARK_GRAFT_SF_DIR`` and ``$SPARK_GRAFT_CPUS``."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    return sf_dir, cpus
 
-    import __spark_entry__ as e
+
+def session():
+    """The bench session: ``local[$SPARK_GRAFT_CPUS]``, shuffle width to match."""
     from docker_neo4j_spark import get_spark
 
-    spark = get_spark(
+    cpus = settings()[1]
+    return get_spark(
         app_name="bench",
         master=f"local[{cpus}]",
         extra_conf={"spark.sql.shuffle.partitions": str(max(int(cpus), 8))},
     )
-    qs = e.queries()
-    names = [n for n in HEADLINE if n in qs]
 
-    # Warm the session before timing: JVM/codegen warmup + parquet footer
-    # listing + graph-catalog construction are one-time startup costs, not
-    # query costs (they'd otherwise all land on whichever query runs
-    # first). build_graph is memoized per session, so constructing it here
-    # is exactly the engine-startup work a server does before serving.
+
+def warm(spark, sf: str) -> None:
+    """Warm the session before timing: JVM/codegen warmup + parquet footer
+    listing + graph-catalog construction are one-time startup costs, not
+    query costs (they'd otherwise all land on whichever query runs first).
+    build_graph is memoized per session, so constructing it here is exactly
+    the engine-startup work a server does before serving."""
     from docker_neo4j_spark.sources.tpch import build_graph, load_tables
 
-    for df in load_tables(spark, sf_dir).values():
+    for df in load_tables(spark, sf).values():
         df.limit(1).write.mode("overwrite").format("noop").save()
-    build_graph(spark, sf_dir)
+    build_graph(spark, sf)
+
+
+def clear(spark) -> None:
+    """Isolate queries from each other: cached frames and localCheckpoint
+    RDDs left behind by a previous query otherwise pressure executor memory
+    and skew later timings (measured ~8 s on gds_pagerank). clearCache()
+    misses localCheckpoint blocks — they register as persistent RDDs, not
+    catalog-cached frames — so drop those too."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+
+
+def timed(spark, query, sf: str) -> tuple[float, float]:
+    """One bench step: clear, then build ``query(spark, sf)`` and write it
+    through the ``noop`` sink. Returns (build seconds, build + write seconds)."""
+    clear(spark)
+    t0 = time.time()
+    df = query(spark, sf)
+    t1 = time.time()
+    df.write.mode("overwrite").format("noop").save()
+    return t1 - t0, time.time() - t0
+
+
+def main() -> int:
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    import __spark_entry__ as e
+
+    sf = settings()[0]
+    spark = session()
+    qs = e.queries()
+    names = [n for n in HEADLINE if n in qs]
+    warm(spark, sf)
 
     # Two timed passes per query, report the per-query MIN. The host is a
     # shared VM whose vCPUs are intermittently throttled from outside
@@ -139,28 +172,16 @@ def main() -> int:
     timings: dict[str, float] = {}
     for _pass in range(2):
         for name in names:
-            # Isolate queries from each other: cached frames and
-            # localCheckpoint RDDs left behind by a previous query otherwise
-            # pressure executor memory and skew later timings (measured ~8 s
-            # on gds_pagerank). clearCache() misses localCheckpoint blocks —
-            # they register as persistent RDDs, not catalog-cached frames —
-            # so drop those too.
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-            t0 = time.time()
-            df = qs[BENCH_ALIASES.get(name, name)](spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            t = round(time.time() - t0, 3)
+            t = round(timed(spark, qs[BENCH_ALIASES.get(name, name)], sf)[1], 3)
             timings[name] = min(timings.get(name, t), t)
 
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
+    sf_num = float(sf.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf else None
     out = {
         "metric": "headline_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": sf,
+        "sf": sf_num,
     }
     print(json.dumps(out))
     return 0

@@ -34,6 +34,7 @@ import socket
 import socketserver
 import struct as _s
 import threading
+import time
 
 from ..cypher.session import Session
 from .packstream import Structure, pack, unpack
@@ -147,6 +148,9 @@ class _Conn(socketserver.BaseRequestHandler):
         _DONE = object()
         row_iter = iter(())
         nextrow = _DONE
+        # SUCCESS timings: t_first is ms from RUN receipt to the first row
+        # being ready; t_last is ms from the stream's first PULL to its end
+        t_pull = None
 
         while True:
             payload = _recv_message(sock)
@@ -216,18 +220,22 @@ class _Conn(socketserver.BaseRequestHandler):
             elif tag == RUN:
                 text = msg.fields[0]
                 params = msg.fields[1] if len(msg.fields) > 1 else {}
+                t_run, t_pull = time.perf_counter(), None
                 try:
                     df = session.run(text, params or None)
                     fields = list(df.columns)
                     row_iter = iter(df.toLocalIterator())
                     nextrow = next(row_iter, _DONE)
                     state = "streaming"
-                    _send(sock, SUCCESS, {"fields": fields, "t_first": 0})
+                    t_first = round((time.perf_counter() - t_run) * 1000)
+                    _send(sock, SUCCESS, {"fields": fields, "t_first": t_first})
                 except Exception as ex:
                     state = "failed"
                     _send(sock, FAILURE, _err("Statement.SyntaxError", str(ex)))
             elif tag == PULL:
                 n = int((msg.fields[0] or {}).get("n", -1)) if msg.fields else -1
+                if t_pull is None:
+                    t_pull = time.perf_counter()
                 sent = 0
                 while nextrow is not _DONE and (n < 0 or sent < n):
                     # RECORD's single field IS the value list
@@ -238,7 +246,8 @@ class _Conn(socketserver.BaseRequestHandler):
                     _send(sock, SUCCESS, {"has_more": True})
                 else:
                     state = "ready"
-                    _send(sock, SUCCESS, {"type": "r", "t_last": 0})
+                    t_last = round((time.perf_counter() - t_pull) * 1000)
+                    _send(sock, SUCCESS, {"type": "r", "t_last": t_last})
             elif tag == DISCARD:
                 state = "ready"
                 row_iter, nextrow = iter(()), _DONE

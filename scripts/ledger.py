@@ -21,9 +21,8 @@ import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-
 ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def history() -> dict[str, tuple[int, str]]:

@@ -12,10 +12,11 @@ Usage: python scripts/stress_heavy.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEAVY = [
     "cartesian_product",
@@ -225,32 +226,22 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:] or HEAVY
 
+    import bench
     from docker_neo4j_spark import get_spark
     from docker_neo4j_spark.catalog import QUERIES, load_all
-    from docker_neo4j_spark.sources.tpch import build_graph, load_tables
 
     load_all()
     spark = get_spark(app_name="stress")
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).write.mode("overwrite").format("noop").save()
-    build_graph(spark, sf_dir)
-
-    def release_all_rdds() -> None:
-        """Free cached tables AND leaked localCheckpoint blocks between
-        queries — clearCache() alone leaves checkpointed RDDs pinned, so
-        a long stress sequence otherwise measures cumulative leakage, not
-        per-query behavior."""
-        spark.catalog.clearCache()
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rdd in jmap.values():
-            rdd.unpersist()
+    bench.warm(spark, sf_dir)
 
     failures = 0
     for name in names:
         if name not in QUERIES and name not in _SYNTHETIC:
             print(f"SKIP  {name}: not registered")
             continue
-        release_all_rdds()
+        # clear between queries, so a long stress sequence measures
+        # per-query behaviour, not cumulative leakage
+        bench.clear(spark)
         t0 = time.time()
         try:
             if name in _SYNTHETIC:

@@ -182,6 +182,51 @@ def test_pull_paging_has_more(bolt):
     assert got == list(range(1, 11))
 
 
+def _pull_all(client, n=-1):
+    """PULL pages of ``n`` until the stream ends; (rows, final SUCCESS metadata)."""
+    rows = []
+    while True:
+        client.send(PULL, {"n": n})
+        msg = client.recv()
+        while msg.tag == RECORD:
+            rows.append(msg.fields[0])
+            msg = client.recv()
+        assert msg.tag == SUCCESS, msg
+        if not msg.fields[0].get("has_more"):
+            return rows, msg.fields[0]
+
+
+def test_success_metadata_reports_t_first(bolt):
+    """t_first is the ms from RUN receipt to the first row being ready, so a
+    statement that sleeps 150 ms before yielding reports at least 150."""
+    bolt.hello()
+    bolt.send(RUN, "CALL apoc.util.sleep(150)", {}, {})
+    reply = bolt.recv()
+    assert reply.tag == SUCCESS, reply
+    assert reply.fields[0]["t_first"] >= 150
+    _, meta = _pull_all(bolt)
+    assert meta["t_last"] >= 0
+
+
+def test_success_metadata_reports_t_last(bolt):
+    """t_last is the ms from the stream's first PULL to its end: it spans
+    the client's pause between two pages."""
+    import time
+
+    bolt.hello()
+    bolt.send(RUN, "UNWIND range(1, 4) AS x RETURN x", {}, {})
+    assert bolt.recv().tag == SUCCESS
+    bolt.send(PULL, {"n": 2})
+    msg = bolt.recv()
+    while msg.tag == RECORD:
+        msg = bolt.recv()
+    assert msg.tag == SUCCESS and msg.fields[0].get("has_more")
+    time.sleep(0.2)
+    rows, meta = _pull_all(bolt)
+    assert rows == [[3], [4]]
+    assert meta["t_last"] >= 200
+
+
 def test_large_result_streams_bounded(bolt):
     """r9: RUN materializes NO rows driver-side (toLocalIterator with a
     one-row lookahead); a 50k-row result streams through chunked PULLs

@@ -17,12 +17,15 @@ plan like any DataFrame.
 from __future__ import annotations
 from ..localframe import local_df
 
+import inspect
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import cached_property, partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import gds
 from ..operators._mem import release, release_deep, scope
 
 
@@ -32,7 +35,6 @@ class Procedure:
     fn: Callable[..., DataFrame]
     signature: str = ""
     description: str = ""
-    defaults: dict = field(default_factory=dict)
 
 
 _REGISTRY: dict[str, Procedure] = {}
@@ -53,11 +55,11 @@ _CONTEXT_PARAMS = frozenset({"graph", "store", "session"})
 _SCALAR_ANNOTATIONS = {"str", "int", "float", "bool", str, int, float, bool}
 
 
-def procedure(name: str, signature: str = "", description: str = "", defaults: dict | None = None):
+def procedure(name: str, signature: str = "", description: str = ""):
     """Register a procedure under its Cypher-callable name."""
 
     def deco(fn):
-        _REGISTRY[name] = Procedure(name, fn, signature, description, defaults or {})
+        _REGISTRY[name] = Procedure(name, fn, signature, description)
         return fn
 
     return deco
@@ -82,10 +84,9 @@ def call(
     the declared parameters) is the canonical GDS configuration map —
     ``CALL gds.wcc.write('g', {writeProperty: 'cc'})`` — and unpacks into
     the procedure's remaining named parameters; unknown keys raise the
-    GDS error shape (r12, verdict task 1).
+    GDS error shape (r12, verdict task 1). Parameters left unbound take
+    the procedure function's own defaults.
     """
-    import inspect
-
     if name not in _REGISTRY:
         # Cypher error shape, not a raw Python KeyError (r12)
         raise ValueError(
@@ -124,7 +125,13 @@ def call(
                     f"(expected one of: {', '.join(sorted(valid)) or 'none'})"
                 )
             args[k] = v
-    merged = {**proc.defaults, **args}
+    # the function's defaults, spelled out so the error summary lists
+    # every bound value; context parameters stay unbound until injected
+    merged = {
+        p.name: p.default for p in sig.parameters.values()
+        if p.default is not p.empty and p.name not in _CONTEXT_PARAMS
+    }
+    merged.update(args)
     for ctx_key, ctx_val in (context or {}).items():
         if ctx_key in params and ctx_key not in merged:
             merged[ctx_key] = ctx_val
@@ -206,10 +213,10 @@ def _dbms_list_config(spark: SparkSession) -> DataFrame:
         "(string :: STRING, integer :: INTEGER, aFloat :: FLOAT, aBoolean :: BOOLEAN)"
     ),
     description="A procedure that always returns fixed values (stub plugin parity)",
-    defaults={"string": "a string", "integer": 42, "aFloat": 3.14, "aBoolean": True},
 )
 def _example_default_values(
-    spark: SparkSession, string: str, integer: int, aFloat: float, aBoolean: bool
+    spark: SparkSession, string: str = "a string", integer: int = 42,
+    aFloat: float = 3.14, aBoolean: bool = True,
 ) -> DataFrame:
     """ExampleNeo4jPlugin.defaultValues (ExampleNeo4jPlugin.java:52-59)."""
     return local_df(spark, 
@@ -433,7 +440,6 @@ _register_apoc_functions()
         "committedOperations :: INTEGER, failedBatches :: INTEGER)"
     ),
     description="Batched bulk execution: outer query rows drive the inner statement in batches",
-    defaults={"config": None},
 )
 def _periodic_iterate(
     spark: SparkSession,
@@ -526,7 +532,6 @@ def _periodic_iterate(
     "apoc.util.validate",
     signature="apoc.util.validate(predicate :: BOOLEAN, message :: STRING, params :: LIST) :: ()",
     description="Raise an exception with the formatted message when the predicate holds",
-    defaults={"params": None},
 )
 def _apoc_util_validate(
     spark: SparkSession, predicate=None, message: str = "", params=None
@@ -565,7 +570,6 @@ def _apoc_util_sleep(spark: SparkSession, duration=0) -> DataFrame:
         "(updates :: INTEGER, executions :: INTEGER, failedCommits :: INTEGER)"
     ),
     description="Repeat a limited write statement until it reports zero updates",
-    defaults={"params": None},
 )
 def _periodic_commit(
     spark: SparkSession, statement: str = "", params=None, session=None
@@ -622,11 +626,10 @@ def allowed_procedures(conf_value: str | None) -> "Callable[[str], bool]":
     "db.index.vector.queryNodes",
     signature=(
         "db.index.vector.queryNodes(indexName :: STRING, "
-        "numberOfNearestNeighbours :: INTEGER, query :: LIST<FLOAT>) :: "
+        "k :: INTEGER, query :: LIST<FLOAT>) :: "
         "(node :: INTEGER, score :: FLOAT)"
     ),
     description="Query the vector index for the k nearest nodes (genai surface)",
-    defaults={"indexName": "", "k": 5},
 )
 def _vector_query_nodes(
     spark: SparkSession, indexName: str = "", k: int = 5, query=None, graph=None,
@@ -698,7 +701,6 @@ def _vector_query_nodes(
         "n_hits :: INTEGER, score_milli :: INTEGER)"
     ),
     description="Query the full-text index: BM25-ranked nodes matching the terms",
-    defaults={"indexName": "", "k": 20},
 )
 def _fulltext_query_nodes(
     spark: SparkSession, indexName: str = "", queryString: str = "", k: int = 20,
@@ -816,7 +818,6 @@ def _fulltext_query_nodes(
         "(node :: INTEGER, level :: INTEGER)"
     ),
     description="Expand from the start label along filtered relationship types within level bounds",
-    defaults={"labelFilter": "", "minLevel": 1, "maxLevel": 3},
 )
 def _apoc_path_expand(
     spark: SparkSession, start: str = "", relationshipFilter: str = "",
@@ -880,7 +881,6 @@ def _apoc_path_expand(
         "All nodes reachable from the start within maxLevel hops along "
         "filtered relationship types (NODE_GLOBAL uniqueness)"
     ),
-    defaults={"config": None},
 )
 def _apoc_path_subgraph_nodes(
     spark: SparkSession, start=None, config: dict = None, graph=None
@@ -918,7 +918,6 @@ def _apoc_path_subgraph_nodes(
         "BFS spanning reach from the start: each reachable node once, at "
         "its minimum level"
     ),
-    defaults={"config": None},
 )
 def _apoc_path_spanning_tree(
     spark: SparkSession, start=None, config: dict = None, graph=None
@@ -1255,7 +1254,6 @@ def _gds_graph_project_cypher(
         "nodeCount :: INTEGER, relationshipCount :: INTEGER)"
     ),
     description="List graphs in the in-memory catalog (optionally one by name)",
-    defaults={"graphName": None},
 )
 def _gds_graph_list(spark: SparkSession, graphName: str = None) -> DataFrame:
     rows = sorted(
@@ -1281,6 +1279,17 @@ def _gds_graph_drop(spark: SparkSession, graphName: str = "") -> DataFrame:
     release(nodes)
     release(rels)
     return local_df(spark, [(graphName,)], "graphName string")
+
+
+def _catalog_entry(spark: SparkSession, graph_name: str) -> tuple:
+    """(nodes, rels, nodeCount, relationshipCount) of a named catalog
+    projection, or the GDS error shape when it doesn't exist."""
+    cat = _graphs_for(spark)
+    if graph_name not in cat:
+        raise ValueError(
+            f"Graph with name '{graph_name}' does not exist in the catalog"
+        )
+    return cat[graph_name]
 
 
 def _node_arg(v, what: str) -> int:
@@ -1309,18 +1318,14 @@ def _projected_graph(
     ``relationshipWeightProperty`` config) adds a double ``weight``
     column from the projected relationship property (missing values → 1.0,
     GDS's defaultValue convention; an unknown property fails loud)."""
-    cat = _graphs_for(spark)
-    if graph_name not in cat:
-        raise ValueError(
-            f"Graph with name '{graph_name}' does not exist in the catalog"
-        )
-    nodes, rels, nc, _ = cat[graph_name]
+    nodes, rels, nc, _ = _catalog_entry(spark, graph_name)
     if nc == 0:
         raise ValueError(
             f"Graph '{graph_name}' is empty (0 nodes) — nothing to compute on"
         )
     if weight_prop is None:
         return nodes.select("id"), rels.select("src", "dst")
+    weight_prop = str(weight_prop)
     if weight_prop not in rels.columns:
         raise ValueError(
             f"Relationship weight property '{weight_prop}' is not present "
@@ -1336,110 +1341,246 @@ def _projected_graph(
     )
 
 
-@procedure(
-    "gds.pageRank.stream",
-    signature=(
-        "gds.pageRank.stream(graphName :: STRING, maxIterations :: INTEGER, "
-        "dampingFactor :: FLOAT) :: (nodeId :: INTEGER, score :: FLOAT)"
-    ),
-    description="PageRank over a projected graph, streamed as (nodeId, score)",
-    defaults={
-        "maxIterations": 15,
-        "dampingFactor": 0.85,
-        "relationshipWeightProperty": None,
-    },
+# ---- GDS node algorithms: one declaration, generated execution modes -------
+# Each node algorithm is declared once, by ``node_algorithm`` over its run
+# function. ``run(nodes, edges, **config)`` holds the kernel call from
+# operators/gds.py plus the rename/coalesce the algorithm needs, and
+# returns an (id, <column>) frame. Run's own keyword parameters (name,
+# default, annotation) are the algorithm's configuration in every mode.
+# The modes are GDS's execution modes (SURVEY §2.B.10): stream yields
+# (nodeId, <column>); write, stats and mutate yield the summary columns
+# they declare, in order. The CALL layer is argument plumbing only, never
+# a second algorithm.
+
+_CYPHER_TYPES = {"str": "STRING", "int": "INTEGER", "float": "FLOAT"}
+
+
+@dataclass(frozen=True)
+class _NodeAlgorithm:
+    name: str  # registered as gds.<name>.<mode>
+    column: str  # run's value column: stream's second YIELD column
+    ctype: str  # its Cypher type
+    prop: str | None  # the property write and mutate default to
+    run: Callable[..., DataFrame]
+    config: tuple[inspect.Parameter, ...]  # run's keyword parameters
+
+
+class _ModeCall:
+    """One mode call: the projection, the bound configuration, and the
+    algorithm frame, built on first use (``gds.pageRank.stats`` and
+    ``gds.triangleCount.stats`` never run the per-node kernel)."""
+
+    def __init__(self, spark, algo, graph_name, prop, store, config):
+        self.nodes, self.edges = _projected_graph(
+            spark, graph_name, config.get("relationshipWeightProperty")
+        )
+        self.spark, self.algo, self.graph_name = spark, algo, graph_name
+        self.prop, self.store, self.config = prop, store, config
+
+    @cached_property
+    def out(self) -> DataFrame:
+        return self.algo.run(self.nodes, self.edges, **self.config)
+
+    @property
+    def ran(self) -> bool:
+        return "out" in vars(self)
+
+    def prop_frame(self) -> DataFrame:
+        return self.out.select("id", F.col(self.algo.column).alias(self.prop))
+
+    def summary(self, yields) -> DataFrame:
+        # one Spark action per column, in YIELD order
+        row = tuple(_SUMMARIES[c](self) for c in yields)
+        return local_df(self.spark, [row], ", ".join(f"{c} long" for c in yields))
+
+
+def _distinct_values(c: _ModeCall) -> int:
+    return c.out.select(c.algo.column).distinct().count()
+
+
+def _global_triangles(c: _ModeCall) -> int:
+    return int(gds.triangle_count(c.edges).collect()[0][0])
+
+
+# The summary YIELD columns of write, stats and mutate, all INTEGER.
+# nodeCount counts the algorithm frame when the mode has built it, else
+# the projection, so a stats mode that needs no per-node frame runs none.
+_SUMMARIES = {
+    "nodePropertiesWritten": lambda c: c.out.count(),
+    "nodeCount": lambda c: (c.out if c.ran else c.nodes).count(),
+    "componentCount": _distinct_values,
+    "communityCount": _distinct_values,
+    "ranIterations": lambda c: int(c.config["maxIterations"]),
+    "globalTriangleCount": _global_triangles,
+}
+
+
+def _stream(c: _ModeCall, yields) -> DataFrame:
+    return c.out.select(F.col("id").alias("nodeId"), c.algo.column)
+
+
+def _write(c: _ModeCall, yields) -> DataFrame:
+    """The values land on the live store via one set-based conditional
+    update (set_props_from_frame), readable by the next MATCH. The
+    store's node frame reads the kernel result until compaction, so the
+    result stays pinned."""
+    c.store.set_props_from_frame(c.prop_frame(), [c.prop])
+    return c.summary(yields)
+
+
+def _stats(c: _ModeCall, yields) -> DataFrame:
+    row = c.summary(yields)
+    if c.ran:  # nothing reads the kernel result once the row is built
+        release_deep(c.out, keep=_catalog_entry(c.spark, c.graph_name)[:2])
+    return row
+
+
+def _mutate(c: _ModeCall, yields) -> DataFrame:
+    """Attach (id, <prop>) to the projection's node frame — GDS mutate
+    semantics: visible to later algorithms on the SAME projection, never
+    written to the database. The new node frame replaces the old one in
+    the catalog, which frees the old frame and the kernel result, so the
+    row is computed first."""
+    row = c.summary(yields)
+    nodes = _catalog_entry(c.spark, c.graph_name)[0]
+    if c.prop in nodes.columns:
+        raise ValueError(
+            f"Node property '{c.prop}' already exists in graph '{c.graph_name}'"
+        )
+    prop_frame = c.prop_frame()
+    _store_projection(
+        c.spark, c.graph_name, nodes.join(prop_frame, "id", "left"), consumed=prop_frame
+    )
+    return row
+
+
+_MODES = {"stream": _stream, "write": _write, "stats": _stats, "mutate": _mutate}
+
+
+def node_algorithm(name: str, column: tuple[str, str], prop: str | None = None, **modes):
+    """Declare ``run`` as GDS node algorithm ``name`` and register one
+    ``gds.<name>.<mode>`` procedure per keyword: ``stream=description``,
+    or ``write|stats|mutate=(description, *summary YIELD columns)``.
+    ``column`` is (name, Cypher type) of run's value column; ``prop`` is
+    the property write and mutate default to."""
+
+    def deco(run):
+        config = tuple(inspect.signature(run).parameters.values())[2:]
+        algo = _NodeAlgorithm(name, *column, prop, run, config)
+        for mode, decl in modes.items():
+            description, *yields = (decl,) if mode == "stream" else decl
+            _register_mode(algo, mode, description, yields)
+        return run
+
+    return deco
+
+
+def _register_mode(algo, mode, description, yields) -> None:
+    """Register gds.<algo>.<mode>. Its parameters bind positionally as
+    graphName, then writeProperty/mutateProperty, then the configuration;
+    write also takes the engine-injected ``store``. The SHOW PROCEDURES
+    signature is rendered from the same parameters and YIELD columns."""
+    name = f"gds.{algo.name}.{mode}"
+    arg = partial(inspect.Parameter, kind=inspect.Parameter.POSITIONAL_OR_KEYWORD)
+    params = [arg("graphName", default="", annotation="str")]
+    if mode in ("write", "mutate"):
+        params.append(arg(f"{mode}Property", default=algo.prop, annotation="str"))
+    params += algo.config
+    context = [arg("store", default=None)] if mode == "write" else []
+    sig = inspect.Signature([arg("spark"), *params, *context])
+
+    def proc(spark, **kw):
+        bound = sig.bind(spark, **kw)
+        bound.apply_defaults()
+        config = dict(bound.arguments)
+        config.pop("spark")
+        graph_name, store = config.pop("graphName"), config.pop("store", None)
+        prop = config.pop(f"{mode}Property", None)
+        if mode == "write" and store is None:
+            raise ValueError(f"{name} requires a store context")
+        c = _ModeCall(spark, algo, graph_name, prop, store, config)
+        return _MODES[mode](c, yields)
+
+    proc.__signature__ = sig
+    if mode == "stream":
+        outs = [("nodeId", "INTEGER"), (algo.column, algo.ctype)]
+    else:
+        outs = [(c, "INTEGER") for c in yields]
+    ins = ", ".join(f"{p.name} :: {_CYPHER_TYPES[p.annotation]}" for p in params)
+    outs = ", ".join(f"{c} :: {t}" for c, t in outs)
+    _REGISTRY[name] = Procedure(name, proc, f"{name}({ins}) :: ({outs})", description)
+
+
+@node_algorithm(
+    "pageRank", ("score", "FLOAT"), prop="pagerank",
+    stream="PageRank over a projected graph, streamed as (nodeId, score)",
+    write=("PageRank over a projected graph, written back as a node property",
+           "nodePropertiesWritten"),
+    stats=("PageRank summary statistics over a projected graph",
+           "ranIterations", "nodeCount"),
+    mutate=("PageRank with scores stored on the in-catalog projection",
+            "nodePropertiesWritten", "ranIterations"),
 )
-def _gds_pagerank_stream(
-    spark: SparkSession, graphName: str = "",
-    maxIterations: int = 15, dampingFactor: float = 0.85,
+def _pagerank(
+    nodes, edges, maxIterations: int = 15, dampingFactor: float = 0.85,
     relationshipWeightProperty: str = None,
-) -> DataFrame:
-    """r11 — the GDS CALL execution surface: ``CALL gds.pageRank.stream('g')``
-    runs the same BSP kernel the DataFrame catalog uses
-    (`operators/gds.py:pagerank`), over the `gds.graph.project`-ed frames.
-    r12: ``relationshipWeightProperty`` drives the weighted variant (the
-    kernel's ``weight_col`` path — out-weights normalized per source)."""
-    from ..operators import gds
-
-    if relationshipWeightProperty is not None:
-        nodes, edges = _projected_graph(
-            spark, graphName, str(relationshipWeightProperty)
-        )
-        out = gds.pagerank(
-            edges, nodes, iterations=int(maxIterations),
-            damping=float(dampingFactor), weight_col="weight",
-        )
-        return out.select(
-            F.col("id").alias("nodeId"),
-            F.col("pr").cast("double").alias("score"),
-        )
-    nodes, edges = _projected_graph(spark, graphName)
+):
+    """The same BSP kernel the DataFrame catalog uses
+    (`operators/gds.py:pagerank`). ``relationshipWeightProperty`` drives
+    the weighted variant (the kernel's ``weight_col`` path — out-weights
+    normalized per source)."""
     out = gds.pagerank(
-        edges, nodes, iterations=int(maxIterations), damping=float(dampingFactor)
+        edges, nodes, iterations=int(maxIterations), damping=float(dampingFactor),
+        weight_col=None if relationshipWeightProperty is None else "weight",
     )
-    return out.select(
-        F.col("id").alias("nodeId"), F.col("pr").cast("double").alias("score")
-    )
+    return out.select("id", F.col("pr").cast("double").alias("score"))
 
 
-@procedure(
-    "gds.wcc.stream",
-    signature="gds.wcc.stream(graphName :: STRING) :: (nodeId :: INTEGER, componentId :: INTEGER)",
-    description="Weakly connected components over a projected graph",
+@node_algorithm(
+    "wcc", ("componentId", "INTEGER"), prop="componentId",
+    stream="Weakly connected components over a projected graph",
+    write=("WCC over a projected graph, written back as a node property",
+           "nodePropertiesWritten", "componentCount"),
+    stats=("WCC summary statistics over a projected graph",
+           "componentCount", "nodeCount"),
+    mutate=("WCC with the component id stored on the in-catalog projection",
+            "componentCount", "nodePropertiesWritten"),
 )
-def _gds_wcc_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.wcc(edges, nodes)
-    return out.select(
-        F.col("id").alias("nodeId"), F.col("comp").alias("componentId")
-    )
+def _wcc(nodes, edges):
+    return gds.wcc(edges, nodes).select("id", F.col("comp").alias("componentId"))
 
 
-@procedure(
-    "gds.labelPropagation.stream",
-    signature="gds.labelPropagation.stream(graphName :: STRING, maxIterations :: INTEGER) :: (nodeId :: INTEGER, communityId :: INTEGER)",
-    description="Label propagation over a projected graph",
-    defaults={"maxIterations": 10},
+@node_algorithm(
+    "labelPropagation", ("communityId", "INTEGER"), prop="communityId",
+    stream="Label propagation over a projected graph",
+    write=("Label propagation over a projected graph, written back as a node property",
+           "nodePropertiesWritten", "communityCount"),
 )
-def _gds_lpa_stream(
-    spark: SparkSession, graphName: str = "", maxIterations: int = 10
-) -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
+def _label_propagation(nodes, edges, maxIterations: int = 10):
     out = gds.label_propagation(edges, nodes, max_iter=int(maxIterations))
-    return out.select(
-        F.col("id").alias("nodeId"), F.col("community").alias("communityId")
-    )
+    return out.select("id", F.col("community").alias("communityId"))
 
 
-@procedure(
-    "gds.louvain.stream",
-    signature="gds.louvain.stream(graphName :: STRING) :: (nodeId :: INTEGER, communityId :: INTEGER)",
-    description="Louvain community detection over a projected graph",
+@node_algorithm(
+    "louvain", ("communityId", "INTEGER"), prop="communityId",
+    stream="Louvain community detection over a projected graph",
+    write=("Louvain over a projected graph, written back as a node property",
+           "nodePropertiesWritten", "communityCount"),
+    stats=("Louvain summary statistics over a projected graph",
+           "communityCount", "nodeCount"),
 )
-def _gds_louvain_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
+def _louvain(nodes, edges):
     out = gds.louvain(edges, nodes)
-    return out.select(
-        F.col("id").alias("nodeId"), F.col("community").alias("communityId")
-    )
+    return out.select("id", F.col("community").alias("communityId"))
 
 
-@procedure(
-    "gds.degree.stream",
-    signature="gds.degree.stream(graphName :: STRING, orientation :: STRING) :: (nodeId :: INTEGER, score :: FLOAT)",
-    description="Degree centrality over a projected graph (NATURAL/REVERSE/UNDIRECTED)",
-    defaults={"orientation": "NATURAL"},
+@node_algorithm(
+    "degree", ("score", "FLOAT"), prop="degree",
+    stream="Degree centrality over a projected graph (NATURAL/REVERSE/UNDIRECTED)",
+    write=("Degree centrality over a projected graph, written back as a node property",
+           "nodePropertiesWritten"),
 )
-def _gds_degree_stream(
-    spark: SparkSession, graphName: str = "", orientation: str = "NATURAL"
-) -> DataFrame:
-    nodes, edges = _projected_graph(spark, graphName)
+def _degree(nodes, edges, orientation: str = "NATURAL"):
     o = orientation.upper()
     if o == "NATURAL":
         ends = edges.select(F.col("src").alias("id"))
@@ -1453,71 +1594,167 @@ def _gds_degree_stream(
         raise ValueError(f"unknown orientation {orientation!r}")
     deg = ends.groupBy("id").agg(F.count(F.lit(1)).alias("_d"))
     return nodes.join(deg, "id", "left").select(
-        F.col("id").alias("nodeId"),
-        F.coalesce(F.col("_d"), F.lit(0)).cast("double").alias("score"),
+        "id", F.coalesce(F.col("_d"), F.lit(0)).cast("double").alias("score")
     )
 
 
-@procedure(
-    "gds.wcc.write",
-    signature=(
-        "gds.wcc.write(graphName :: STRING, writeProperty :: STRING) :: "
-        "(nodePropertiesWritten :: INTEGER, componentCount :: INTEGER)"
-    ),
-    description="WCC over a projected graph, written back as a node property",
-    defaults={"writeProperty": "componentId"},
+@node_algorithm(
+    "betweenness", ("score", "FLOAT"),
+    stream="Betweenness centrality (sampled-source Brandes) over a projected graph",
 )
-def _gds_wcc_write(
-    spark: SparkSession, graphName: str = "",
-    writeProperty: str = "componentId", store=None,
-) -> DataFrame:
-    """r11 — GDS write mode: the component labels land on the live store
-    via one set-based conditional update (set_props_from_frame), readable
-    by the next MATCH."""
-    from ..operators import gds
-
-    if store is None:
-        raise ValueError("gds.wcc.write requires a store context")
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.wcc(edges, nodes)
-    store.set_props_from_frame(
-        out.select("id", F.col("comp").alias(writeProperty)), [writeProperty]
-    )
-    n = out.count()
-    comps = out.select("comp").distinct().count()
-    return local_df(
-        spark, [(n, comps)],
-        "nodePropertiesWritten long, componentCount long",
+def _betweenness(nodes, edges, samplingSize: int = 64):
+    """Bounded source set (GDS samplingSize contract — exact only when it
+    covers every node; a landmark set is the honest 100 TB shape); the
+    undirected dependency sums halve like the catalog row does."""
+    srcs = nodes.orderBy("id").limit(int(samplingSize)).select("id")
+    out = gds.betweenness(edges, srcs)
+    return nodes.join(out, "id", "left").select(
+        "id",
+        (F.coalesce(F.col("bc"), F.lit(0.0)) / F.lit(2.0))
+        .cast("double")
+        .alias("score"),
     )
 
 
-@procedure(
-    "gds.pageRank.write",
-    signature=(
-        "gds.pageRank.write(graphName :: STRING, writeProperty :: STRING, "
-        "maxIterations :: INTEGER, dampingFactor :: FLOAT) :: "
-        "(nodePropertiesWritten :: INTEGER)"
-    ),
-    description="PageRank over a projected graph, written back as a node property",
-    defaults={"writeProperty": "pagerank", "maxIterations": 15, "dampingFactor": 0.85},
+@node_algorithm(
+    "triangleCount", ("triangleCount", "INTEGER"),
+    stream="Per-node triangle counts over a projected graph",
+    stats=("Global triangle count over a projected graph",
+           "globalTriangleCount", "nodeCount"),
 )
-def _gds_pagerank_write(
-    spark: SparkSession, graphName: str = "", writeProperty: str = "pagerank",
-    maxIterations: int = 15, dampingFactor: float = 0.85, store=None,
-) -> DataFrame:
-    from ..operators import gds
+def _triangle_count(nodes, edges):
+    out = gds.local_clustering(edges)
+    return nodes.join(out, "id", "left").select(
+        "id",
+        F.coalesce(F.col("triangles"), F.lit(0)).cast("long").alias("triangleCount"),
+    )
 
-    if store is None:
-        raise ValueError("gds.pageRank.write requires a store context")
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.pagerank(
+
+@node_algorithm(
+    "localClusteringCoefficient", ("localClusteringCoefficient", "FLOAT"),
+    stream="Local clustering coefficient over a projected graph",
+)
+def _local_clustering_coefficient(nodes, edges):
+    out = gds.local_clustering(edges)
+    return nodes.join(out, "id", "left").select(
+        "id",
+        F.coalesce(F.col("coeff"), F.lit(0.0))
+        .cast("double")
+        .alias("localClusteringCoefficient"),
+    )
+
+
+@node_algorithm(
+    "scc", ("componentId", "INTEGER"),
+    stream="Strongly connected components over a projected (directed) graph",
+)
+def _scc(nodes, edges):
+    return gds.scc(edges, nodes).select("id", F.col("component").alias("componentId"))
+
+
+@node_algorithm(
+    "eigenvector", ("score", "FLOAT"),
+    stream="Eigenvector centrality over a projected graph",
+)
+def _eigenvector(nodes, edges, maxIterations: int = 15):
+    out = gds.eigenvector(edges, nodes, iterations=int(maxIterations))
+    return out.select("id", F.col("score").cast("double").alias("score"))
+
+
+@node_algorithm(
+    "articleRank", ("score", "FLOAT"),
+    stream="ArticleRank over a projected graph",
+)
+def _article_rank(nodes, edges, maxIterations: int = 15, dampingFactor: float = 0.85):
+    out = gds.article_rank(
         edges, nodes, iterations=int(maxIterations), damping=float(dampingFactor)
     )
-    store.set_props_from_frame(
-        out.select("id", F.col("pr").cast("double").alias(writeProperty)),
-        [writeProperty],
+    return out.select("id", F.col("pr").cast("double").alias("score"))
+
+
+@node_algorithm(
+    "closeness", ("score", "FLOAT"),
+    stream="Closeness centrality over a projected graph",
+)
+def _closeness(nodes, edges):
+    out = gds.closeness(edges, nodes.select("id"))
+    return nodes.join(out, "id", "left").select(
+        "id",
+        F.coalesce(F.col("closeness"), F.lit(0.0)).cast("double").alias("score"),
     )
-    return local_df(spark, [(out.count(),)], "nodePropertiesWritten long")
+
+
+@node_algorithm(
+    "closeness.harmonic", ("centrality", "FLOAT"),
+    stream="Harmonic centrality (sum of inverse distances) over a projected graph",
+)
+def _harmonic_closeness(nodes, edges):
+    """Σ 1/d over the shared multi-source BFS walk; unreachable pairs
+    contribute 0 (harmonic's disconnected-graph grace)."""
+    walk = gds.closeness_walk(edges, nodes.select("id"), max_depth=20)
+    out = walk.where(F.col("dist") > 0).groupBy(
+        F.col("source").alias("id")
+    ).agg(F.sum(F.lit(1.0) / F.col("dist")).alias("centrality"))
+    return nodes.join(out, "id", "left").select(
+        "id",
+        F.coalesce(F.col("centrality"), F.lit(0.0)).cast("double").alias(
+            "centrality"
+        ),
+    )
+
+
+@node_algorithm(
+    "kcore", ("coreValue", "INTEGER"),
+    stream="K-core decomposition (core value per node) over a projected graph",
+)
+def _kcore(nodes, edges):
+    """Core value by layered peeling: coreValue(v) = max k with
+    v ∈ k-core. Each layer is the fixed-k peel kernel; the loop is
+    bounded by the degeneracy of the graph (≤ ~log-scale for real
+    graphs; a 64-layer cap guards the pathological clique case)."""
+    core = nodes.select(F.col("id"), F.lit(0).alias("coreValue"))
+    with scope() as loop:
+        for k in range(1, 65):
+            members = gds.kcore(edges, k=k)
+            if members.isEmpty():
+                break
+            core = loop.advance(
+                loop.ckpt(
+                    core.join(members.select("id", F.lit(1).alias("_in")), "id", "left")
+                    .select(
+                        "id",
+                        F.when(F.col("_in").isNotNull(), F.lit(k))
+                        .otherwise(F.col("coreValue"))
+                        .alias("coreValue"),
+                    )
+                )
+            )
+            loop.free(members)  # the layer, now folded into core
+        return loop.result(
+            core.select("id", F.col("coreValue").cast("long").alias("coreValue"))
+        )
+
+
+@node_algorithm(
+    "leiden", ("communityId", "INTEGER"),
+    stream="Leiden community detection over a projected graph",
+)
+def _leiden(nodes, edges):
+    out = gds.leiden(edges, nodes)
+    return out.select("id", F.col("community").alias("communityId"))
+
+
+@node_algorithm(
+    "dag.topologicalSort", ("maxDistanceFromSource", "INTEGER"),
+    stream="Topological layering of a DAG (longest distance from any source)",
+)
+def _topological_sort(nodes, edges):
+    """The level-scheduling layering: layer(v) = longest path from a
+    source, the order GDS's maxDistanceFromSource yields."""
+    out = gds.topological_layers(edges, nodes.select("id"))
+    return out.select(
+        "id", F.col("layer").cast("long").alias("maxDistanceFromSource")
+    )
 
 
 @procedure(
@@ -1534,100 +1771,14 @@ def _gds_graph_exists(spark: SparkSession, graphName: str = "") -> DataFrame:
 
 
 @procedure(
-    "gds.labelPropagation.write",
-    signature=(
-        "gds.labelPropagation.write(graphName :: STRING, writeProperty :: STRING, "
-        "maxIterations :: INTEGER) :: "
-        "(nodePropertiesWritten :: INTEGER, communityCount :: INTEGER)"
-    ),
-    description="Label propagation over a projected graph, written back as a node property",
-    defaults={"writeProperty": "communityId", "maxIterations": 10},
-)
-def _gds_lpa_write(
-    spark: SparkSession, graphName: str = "",
-    writeProperty: str = "communityId", maxIterations: int = 10, store=None,
-) -> DataFrame:
-    from ..operators import gds
-
-    if store is None:
-        raise ValueError("gds.labelPropagation.write requires a store context")
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.label_propagation(edges, nodes, max_iter=int(maxIterations))
-    store.set_props_from_frame(
-        out.select("id", F.col("community").alias(writeProperty)), [writeProperty]
-    )
-    n = out.count()
-    comms = out.select("community").distinct().count()
-    return local_df(
-        spark, [(n, comms)],
-        "nodePropertiesWritten long, communityCount long",
-    )
-
-
-@procedure(
-    "gds.louvain.write",
-    signature=(
-        "gds.louvain.write(graphName :: STRING, writeProperty :: STRING) :: "
-        "(nodePropertiesWritten :: INTEGER, communityCount :: INTEGER)"
-    ),
-    description="Louvain over a projected graph, written back as a node property",
-    defaults={"writeProperty": "communityId"},
-)
-def _gds_louvain_write(
-    spark: SparkSession, graphName: str = "",
-    writeProperty: str = "communityId", store=None,
-) -> DataFrame:
-    from ..operators import gds
-
-    if store is None:
-        raise ValueError("gds.louvain.write requires a store context")
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.louvain(edges, nodes)
-    store.set_props_from_frame(
-        out.select("id", F.col("community").alias(writeProperty)), [writeProperty]
-    )
-    n = out.count()
-    comms = out.select("community").distinct().count()
-    return local_df(
-        spark, [(n, comms)],
-        "nodePropertiesWritten long, communityCount long",
-    )
-
-
-@procedure(
-    "gds.degree.write",
-    signature=(
-        "gds.degree.write(graphName :: STRING, writeProperty :: STRING, "
-        "orientation :: STRING) :: (nodePropertiesWritten :: INTEGER)"
-    ),
-    description="Degree centrality over a projected graph, written back as a node property",
-    defaults={"writeProperty": "degree", "orientation": "NATURAL"},
-)
-def _gds_degree_write(
-    spark: SparkSession, graphName: str = "", writeProperty: str = "degree",
-    orientation: str = "NATURAL", store=None,
-) -> DataFrame:
-    if store is None:
-        raise ValueError("gds.degree.write requires a store context")
-    out = _gds_degree_stream(spark, graphName, orientation)
-    store.set_props_from_frame(
-        out.select(
-            F.col("nodeId").alias("id"), F.col("score").alias(writeProperty)
-        ),
-        [writeProperty],
-    )
-    return local_df(spark, [(out.count(),)], "nodePropertiesWritten long")
-
-
-@procedure(
     "gds.shortestPath.dijkstra.stream",
     signature=(
         "gds.shortestPath.dijkstra.stream(graphName :: STRING, "
-        "sourceNode :: INTEGER, targetNode :: INTEGER) :: "
+        "sourceNode :: INTEGER, targetNode :: INTEGER, "
+        "relationshipWeightProperty :: STRING) :: "
         "(sourceNode :: INTEGER, targetNode :: INTEGER, totalCost :: FLOAT)"
     ),
     description="Shortest-path cost from a source over a projected graph (unit weights)",
-    defaults={"targetNode": None},
 )
 def _gds_dijkstra_stream(
     spark: SparkSession, graphName: str = "",
@@ -1642,17 +1793,12 @@ def _gds_dijkstra_stream(
     ``sourceNode``/``targetNode`` accept ints (the façade resolves bound
     node variables to ids before dispatch — the canonical
     ``MATCH (source) CALL …{sourceNode: source}`` shape)."""
-    from ..operators import gds
-
     src_id = _node_arg(sourceNode, "sourceNode")
     src = local_df(spark, [(src_id,)], "id long")
+    _, edges = _projected_graph(spark, graphName, relationshipWeightProperty)
     if relationshipWeightProperty is not None:
-        _, edges = _projected_graph(
-            spark, graphName, str(relationshipWeightProperty)
-        )
         out = gds.sssp(edges, src, weight_col="weight")
     else:
-        _, edges = _projected_graph(spark, graphName)
         out = gds.bfs(edges, src)
     out = out.select(
         F.lit(src_id).alias("sourceNode"),
@@ -1668,11 +1814,10 @@ def _gds_dijkstra_stream(
     "gds.allShortestPaths.dijkstra.stream",
     signature=(
         "gds.allShortestPaths.dijkstra.stream(graphName :: STRING, "
-        "sourceNode :: INTEGER) :: (sourceNode :: INTEGER, "
-        "targetNode :: INTEGER, totalCost :: FLOAT)"
+        "sourceNode :: INTEGER, relationshipWeightProperty :: STRING) :: "
+        "(sourceNode :: INTEGER, targetNode :: INTEGER, totalCost :: FLOAT)"
     ),
     description="Single-source shortest-path costs to every reachable node",
-    defaults={"relationshipWeightProperty": None},
 )
 def _gds_all_shortest_paths_dijkstra_stream(
     spark: SparkSession, graphName: str = "", sourceNode: int = 0,
@@ -1688,12 +1833,11 @@ def _gds_all_shortest_paths_dijkstra_stream(
 @procedure(
     "gds.bellmanFord.stream",
     signature=(
-        "gds.bellmanFord.stream(graphName :: STRING, sourceNode :: INTEGER) "
-        ":: (sourceNode :: INTEGER, targetNode :: INTEGER, "
-        "totalCost :: FLOAT, isNegativeCycle :: BOOLEAN)"
+        "gds.bellmanFord.stream(graphName :: STRING, sourceNode :: INTEGER, "
+        "relationshipWeightProperty :: STRING) :: (sourceNode :: INTEGER, "
+        "targetNode :: INTEGER, totalCost :: FLOAT, isNegativeCycle :: BOOLEAN)"
     ),
     description="Bellman-Ford shortest paths (negative weights allowed) with cycle detection",
-    defaults={"relationshipWeightProperty": None},
 )
 def _gds_bellman_ford_stream(
     spark: SparkSession, graphName: str = "", sourceNode: int = 0,
@@ -1702,16 +1846,10 @@ def _gds_bellman_ford_stream(
     """``gds.bellmanFord.stream`` (r12) — negative weights allowed; the
     kernel's converged flag drives per-node negative-cycle marking (a
     non-converged improvable node sits on or behind a negative cycle)."""
-    from ..operators import gds
-
     src_id = _node_arg(sourceNode, "sourceNode")
     src = local_df(spark, [(src_id,)], "id long")
-    if relationshipWeightProperty is not None:
-        _, edges = _projected_graph(
-            spark, graphName, str(relationshipWeightProperty)
-        )
-    else:
-        _, edges = _projected_graph(spark, graphName)
+    _, edges = _projected_graph(spark, graphName, relationshipWeightProperty)
+    if relationshipWeightProperty is None:
         edges = edges.withColumn("weight", F.lit(1).cast("long"))
     out = gds.bellman_ford(edges, src, weight_col="weight")
     neg = "on_negative_cycle" if "on_negative_cycle" in out.columns else None
@@ -1727,12 +1865,12 @@ def _gds_bellman_ford_stream(
     "gds.shortestPath.yens.stream",
     signature=(
         "gds.shortestPath.yens.stream(graphName :: STRING, "
-        "sourceNode :: INTEGER, targetNode :: INTEGER, k :: INTEGER) :: "
+        "sourceNode :: INTEGER, targetNode :: INTEGER, k :: INTEGER, "
+        "relationshipWeightProperty :: STRING, maxHops :: INTEGER) :: "
         "(index :: INTEGER, sourceNode :: INTEGER, targetNode :: INTEGER, "
         "totalCost :: FLOAT, path :: STRING)"
     ),
     description="K-shortest loopless paths between a source and a target",
-    defaults={"k": 3, "relationshipWeightProperty": None, "maxHops": 8},
 )
 def _gds_yens_stream(
     spark: SparkSession, graphName: str = "", sourceNode: int = 0,
@@ -1748,14 +1886,8 @@ def _gds_yens_stream(
 
     src_id = _node_arg(sourceNode, "sourceNode")
     tgt_id = _node_arg(targetNode, "targetNode")
-    if relationshipWeightProperty is not None:
-        _, edges = _projected_graph(
-            spark, graphName, str(relationshipWeightProperty)
-        )
-        wcol = "weight"
-    else:
-        _, edges = _projected_graph(spark, graphName)
-        wcol = None
+    _, edges = _projected_graph(spark, graphName, relationshipWeightProperty)
+    wcol = None if relationshipWeightProperty is None else "weight"
     srcs = local_df(spark, [(src_id,)], "id long")
     tgts = local_df(spark, [(tgt_id,)], "id long")
     out = k_shortest_paths(
@@ -1775,15 +1907,13 @@ def _gds_yens_stream(
     "gds.shortestPath.astar.stream",
     signature=(
         "gds.shortestPath.astar.stream(graphName :: STRING, "
-        "sourceNode :: INTEGER, targetNode :: INTEGER) :: "
+        "sourceNode :: INTEGER, targetNode :: INTEGER, "
+        "relationshipWeightProperty :: STRING, xProperty :: STRING, "
+        "yProperty :: STRING, longitudeProperty :: STRING, "
+        "latitudeProperty :: STRING) :: "
         "(sourceNode :: INTEGER, targetNode :: INTEGER, totalCost :: FLOAT)"
     ),
     description="A* single-pair shortest path over x/y node coordinates",
-    defaults={
-        "relationshipWeightProperty": None,
-        "xProperty": "x", "yProperty": "y",
-        "longitudeProperty": None, "latitudeProperty": None,
-    },
 )
 def _gds_astar_stream(
     spark: SparkSession, graphName: str = "", sourceNode: int = 0,
@@ -1795,18 +1925,11 @@ def _gds_astar_stream(
     over projected coordinate properties. GDS's haversine lat/long config
     maps onto the planar x/y heuristic (admissibility stays the caller's
     contract, as in GDS)."""
-    from ..operators import gds
-
     src_id = _node_arg(sourceNode, "sourceNode")
     tgt_id = _node_arg(targetNode, "targetNode")
     xp = longitudeProperty or xProperty
     yp = latitudeProperty or yProperty
-    cat = _graphs_for(spark)
-    if graphName not in cat:
-        raise ValueError(
-            f"Graph with name '{graphName}' does not exist in the catalog"
-        )
-    nodes = cat[graphName][0]
+    nodes = _catalog_entry(spark, graphName)[0]
     missing = [p for p in (xp, yp) if p not in nodes.columns]
     if missing:
         raise ValueError(
@@ -1818,12 +1941,8 @@ def _gds_astar_stream(
         F.col(xp).cast("double").alias("x"),
         F.col(yp).cast("double").alias("y"),
     )
-    if relationshipWeightProperty is not None:
-        _, edges = _projected_graph(
-            spark, graphName, str(relationshipWeightProperty)
-        )
-    else:
-        _, edges = _projected_graph(spark, graphName)
+    _, edges = _projected_graph(spark, graphName, relationshipWeightProperty)
+    if relationshipWeightProperty is None:
         edges = edges.withColumn("weight", F.lit(1.0))
     out = gds.astar(edges, coords, src_id, tgt_id, weight_col="weight")
     return out.select(
@@ -1840,7 +1959,6 @@ def _gds_astar_stream(
         "INTEGER) :: (nodeId :: INTEGER, embedding :: LIST)"
     ),
     description="FastRP node embeddings (deterministic sparse random projection)",
-    defaults={"embeddingDimension": 8},
 )
 def _gds_fastrp_stream(
     spark: SparkSession, graphName: str = "", embeddingDimension: int = 8
@@ -1849,8 +1967,6 @@ def _gds_fastrp_stream(
     pivots to one array per node with a single groupBy (dimension order
     by j; the long form is the scale design, the pivot is the wire
     shape)."""
-    from ..operators import gds
-
     nodes, edges = _projected_graph(spark, graphName)
     out = gds.fastrp(edges, nodes, dim=int(embeddingDimension))
     return (
@@ -1866,35 +1982,6 @@ def _gds_fastrp_stream(
 
 
 @procedure(
-    "gds.closeness.harmonic.stream",
-    signature=(
-        "gds.closeness.harmonic.stream(graphName :: STRING) :: "
-        "(nodeId :: INTEGER, centrality :: FLOAT)"
-    ),
-    description="Harmonic centrality (sum of inverse distances) over a projected graph",
-)
-def _gds_harmonic_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    """``gds.closeness.harmonic.stream`` (r12) — Σ 1/d over the shared
-    multi-source BFS walk; unreachable pairs contribute 0 (harmonic's
-    disconnected-graph grace)."""
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    walk = gds.closeness_walk(edges, nodes.select("id"), max_depth=20)
-    out = walk.where(F.col("dist") > 0).groupBy(
-        F.col("source").alias("nodeId")
-    ).agg(F.sum(F.lit(1.0) / F.col("dist")).alias("centrality"))
-    return nodes.select(F.col("id").alias("nodeId")).join(
-        out, "nodeId", "left"
-    ).select(
-        "nodeId",
-        F.coalesce(F.col("centrality"), F.lit(0.0)).cast("double").alias(
-            "centrality"
-        ),
-    )
-
-
-@procedure(
     "gds.randomWalk.stream",
     signature=(
         "gds.randomWalk.stream(graphName :: STRING, sourceNode :: INTEGER, "
@@ -1902,7 +1989,6 @@ def _gds_harmonic_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
         "nodeIds :: LIST)"
     ),
     description="Deterministic hash-seeded random walks from the source nodes",
-    defaults={"walkLength": 5, "sourceNode": None},
 )
 def _gds_random_walk_stream(
     spark: SparkSession, graphName: str = "",
@@ -1913,8 +1999,6 @@ def _gds_random_walk_stream(
     walk kernel (reproducible across runs/engines, replica-minhash
     convention); one walk per source (every node when sourceNode is
     omitted), streamed as the ordered node-id list."""
-    from ..operators import gds
-
     nodes, edges = _projected_graph(spark, graphName)
     if sourceNode is not None:
         srcs = local_df(
@@ -1938,7 +2022,6 @@ def _gds_random_walk_stream(
         "(nodeId :: INTEGER, communityIds :: LIST)"
     ),
     description="Speaker-Listener LPA (overlapping communities) over a projected graph",
-    defaults={"maxIterations": 5},
 )
 def _gds_sllpa_stream(
     spark: SparkSession, graphName: str = "", maxIterations: int = 5
@@ -1946,36 +2029,10 @@ def _gds_sllpa_stream(
     """``gds.sllpa.stream`` (r12) — overlapping community memberships
     from the deterministic speaker-listener kernel; each node streams
     its sorted community-id list (GDS's pending-communities shape)."""
-    from ..operators import gds
-
     nodes, edges = _projected_graph(spark, graphName)
     out = gds.sllpa(edges, nodes.select("id"), rounds=int(maxIterations))
     return out.groupBy(F.col("id").alias("nodeId")).agg(
         F.array_sort(F.collect_list(F.col("label"))).alias("communityIds")
-    )
-
-
-@procedure(
-    "gds.dag.topologicalSort.stream",
-    signature=(
-        "gds.dag.topologicalSort.stream(graphName :: STRING) :: "
-        "(nodeId :: INTEGER, maxDistanceFromSource :: INTEGER)"
-    ),
-    description="Topological layering of a DAG (longest distance from any source)",
-)
-def _gds_topological_sort_stream(
-    spark: SparkSession, graphName: str = ""
-) -> DataFrame:
-    """``gds.dag.topologicalSort.stream`` (r12) — the level-scheduling
-    layering: layer(v) = longest path from a source, the order GDS's
-    maxDistanceFromSource yields."""
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.topological_layers(edges, nodes.select("id"))
-    return out.select(
-        F.col("id").alias("nodeId"),
-        F.col("layer").cast("long").alias("maxDistanceFromSource"),
     )
 
 
@@ -1990,8 +2047,6 @@ def _gds_topological_sort_stream(
 def _gds_bfs_stream(
     spark: SparkSession, graphName: str = "", sourceNode: int = 0
 ) -> DataFrame:
-    from ..operators import gds
-
     _, edges = _projected_graph(spark, graphName)
     src = local_df(spark, [(int(sourceNode),)], "id long")
     out = gds.bfs(edges, src)
@@ -2018,7 +2073,6 @@ _KNN_BUCKET_CAP = 4096
         "K-nearest neighbours by cosine over projected node properties "
         "(exact; ties break on neighbour id)"
     ),
-    defaults={"topK": 10, "nodeProperties": None},
 )
 def _gds_knn_stream(
     spark: SparkSession, graphName: str = "",
@@ -2039,12 +2093,7 @@ def _gds_knn_stream(
     from pyspark.sql import Window
     from ..operators.similarity import dot, l2_norm
 
-    cat = _graphs_for(spark)
-    if graphName not in cat:
-        raise ValueError(
-            f"Graph with name '{graphName}' does not exist in the catalog"
-        )
-    nodes, _, node_count, _ = cat[graphName]
+    nodes, _, node_count, _ = _catalog_entry(spark, graphName)
     props = (
         [nodeProperties]
         if isinstance(nodeProperties, str)
@@ -2157,13 +2206,10 @@ def _gds_knn_stream(
     "gds.nodeSimilarity.stream",
     signature="gds.nodeSimilarity.stream(graphName :: STRING, similarityCutoff :: FLOAT) :: (node1 :: INTEGER, node2 :: INTEGER, similarity :: FLOAT)",
     description="Jaccard node similarity over a projected graph (bucket-join, never all-pairs)",
-    defaults={"similarityCutoff": 0.0},
 )
 def _gds_node_similarity_stream(
     spark: SparkSession, graphName: str = "", similarityCutoff: float = 0.0
 ) -> DataFrame:
-    from ..operators import gds
-
     _, edges = _projected_graph(spark, graphName)
     out = gds.node_similarity(edges, min_jaccard=float(similarityCutoff))
     return out.select(
@@ -2862,384 +2908,6 @@ def _apoc_schema_assert(spark: SparkSession, indexes=None, constraints=None, sto
     )
 
 
-# ---- r12: wider GDS CALL surface — more streams, stats and mutate modes ----
-# Same contract as the r11 block: every procedure runs the DataFrame
-# kernels from operators/gds.py over _projected_graph's cached frames —
-# the CALL layer is argument plumbing only, never a second algorithm.
-
-
-@procedure(
-    "gds.betweenness.stream",
-    signature=(
-        "gds.betweenness.stream(graphName :: STRING, samplingSize :: INTEGER)"
-        " :: (nodeId :: INTEGER, score :: FLOAT)"
-    ),
-    description="Betweenness centrality (sampled-source Brandes) over a projected graph",
-    defaults={"samplingSize": 64},
-)
-def _gds_betweenness_stream(
-    spark: SparkSession, graphName: str = "", samplingSize: int = 64
-) -> DataFrame:
-    """Bounded source set (GDS samplingSize contract — exact only when it
-    covers every node; a landmark set is the honest 100 TB shape); the
-    undirected dependency sums halve like the catalog row does."""
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    srcs = nodes.orderBy("id").limit(int(samplingSize)).select("id")
-    out = gds.betweenness(edges, srcs)
-    return nodes.join(out, "id", "left").select(
-        F.col("id").alias("nodeId"),
-        (F.coalesce(F.col("bc"), F.lit(0.0)) / F.lit(2.0))
-        .cast("double")
-        .alias("score"),
-    )
-
-
-@procedure(
-    "gds.triangleCount.stream",
-    signature=(
-        "gds.triangleCount.stream(graphName :: STRING) :: "
-        "(nodeId :: INTEGER, triangleCount :: INTEGER)"
-    ),
-    description="Per-node triangle counts over a projected graph",
-)
-def _gds_triangle_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.local_clustering(edges)
-    return nodes.join(out, "id", "left").select(
-        F.col("id").alias("nodeId"),
-        F.coalesce(F.col("triangles"), F.lit(0)).cast("long").alias("triangleCount"),
-    )
-
-
-@procedure(
-    "gds.localClusteringCoefficient.stream",
-    signature=(
-        "gds.localClusteringCoefficient.stream(graphName :: STRING) :: "
-        "(nodeId :: INTEGER, localClusteringCoefficient :: FLOAT)"
-    ),
-    description="Local clustering coefficient over a projected graph",
-)
-def _gds_lcc_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.local_clustering(edges)
-    return nodes.join(out, "id", "left").select(
-        F.col("id").alias("nodeId"),
-        F.coalesce(F.col("coeff"), F.lit(0.0))
-        .cast("double")
-        .alias("localClusteringCoefficient"),
-    )
-
-
-@procedure(
-    "gds.scc.stream",
-    signature=(
-        "gds.scc.stream(graphName :: STRING) :: "
-        "(nodeId :: INTEGER, componentId :: INTEGER)"
-    ),
-    description="Strongly connected components over a projected (directed) graph",
-)
-def _gds_scc_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.scc(edges, nodes)
-    return out.select(
-        F.col("id").alias("nodeId"), F.col("component").alias("componentId")
-    )
-
-
-@procedure(
-    "gds.eigenvector.stream",
-    signature=(
-        "gds.eigenvector.stream(graphName :: STRING, maxIterations :: INTEGER)"
-        " :: (nodeId :: INTEGER, score :: FLOAT)"
-    ),
-    description="Eigenvector centrality over a projected graph",
-    defaults={"maxIterations": 15},
-)
-def _gds_eigenvector_stream(
-    spark: SparkSession, graphName: str = "", maxIterations: int = 15
-) -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.eigenvector(edges, nodes, iterations=int(maxIterations))
-    return out.select(
-        F.col("id").alias("nodeId"), F.col("score").cast("double").alias("score")
-    )
-
-
-@procedure(
-    "gds.articleRank.stream",
-    signature=(
-        "gds.articleRank.stream(graphName :: STRING, maxIterations :: INTEGER,"
-        " dampingFactor :: FLOAT) :: (nodeId :: INTEGER, score :: FLOAT)"
-    ),
-    description="ArticleRank over a projected graph",
-    defaults={"maxIterations": 15, "dampingFactor": 0.85},
-)
-def _gds_articlerank_stream(
-    spark: SparkSession, graphName: str = "",
-    maxIterations: int = 15, dampingFactor: float = 0.85,
-) -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.article_rank(
-        edges, nodes, iterations=int(maxIterations), damping=float(dampingFactor)
-    )
-    return out.select(
-        F.col("id").alias("nodeId"), F.col("pr").cast("double").alias("score")
-    )
-
-
-@procedure(
-    "gds.closeness.stream",
-    signature=(
-        "gds.closeness.stream(graphName :: STRING) :: "
-        "(nodeId :: INTEGER, score :: FLOAT)"
-    ),
-    description="Closeness centrality over a projected graph",
-)
-def _gds_closeness_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.closeness(edges, nodes.select("id"))
-    return nodes.join(out, "id", "left").select(
-        F.col("id").alias("nodeId"),
-        F.coalesce(F.col("closeness"), F.lit(0.0)).cast("double").alias("score"),
-    )
-
-
-@procedure(
-    "gds.kcore.stream",
-    signature=(
-        "gds.kcore.stream(graphName :: STRING) :: "
-        "(nodeId :: INTEGER, coreValue :: INTEGER)"
-    ),
-    description="K-core decomposition (core value per node) over a projected graph",
-)
-def _gds_kcore_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    """Core value by layered peeling: coreValue(v) = max k with
-    v ∈ k-core. Each layer is the fixed-k peel kernel; the loop is
-    bounded by the degeneracy of the graph (≤ ~log-scale for real
-    graphs; a 64-layer cap guards the pathological clique case)."""
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    core = nodes.select(F.col("id"), F.lit(0).alias("coreValue"))
-    with scope() as loop:
-        for k in range(1, 65):
-            members = gds.kcore(edges, k=k)
-            if members.isEmpty():
-                break
-            core = loop.advance(
-                loop.ckpt(
-                    core.join(members.select("id", F.lit(1).alias("_in")), "id", "left")
-                    .select(
-                        "id",
-                        F.when(F.col("_in").isNotNull(), F.lit(k))
-                        .otherwise(F.col("coreValue"))
-                        .alias("coreValue"),
-                    )
-                )
-            )
-            loop.free(members)  # the layer, now folded into core
-        return loop.result(
-            core.select(
-                F.col("id").alias("nodeId"), F.col("coreValue").cast("long").alias("coreValue")
-            )
-        )
-
-
-@procedure(
-    "gds.leiden.stream",
-    signature=(
-        "gds.leiden.stream(graphName :: STRING) :: "
-        "(nodeId :: INTEGER, communityId :: INTEGER)"
-    ),
-    description="Leiden community detection over a projected graph",
-)
-def _gds_leiden_stream(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.leiden(edges, nodes)
-    return out.select(
-        F.col("id").alias("nodeId"), F.col("community").alias("communityId")
-    )
-
-
-# ---- stats modes ---------------------------------------------------------
-
-
-@procedure(
-    "gds.wcc.stats",
-    signature=(
-        "gds.wcc.stats(graphName :: STRING) :: "
-        "(componentCount :: INTEGER, nodeCount :: INTEGER)"
-    ),
-    description="WCC summary statistics over a projected graph",
-)
-def _gds_wcc_stats(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.wcc(edges, nodes)
-    comps = out.select("comp").distinct().count()
-    n = out.count()
-    return local_df(spark, [(comps, n)], "componentCount long, nodeCount long")
-
-
-@procedure(
-    "gds.pageRank.stats",
-    signature=(
-        "gds.pageRank.stats(graphName :: STRING, maxIterations :: INTEGER, "
-        "dampingFactor :: FLOAT) :: (ranIterations :: INTEGER, "
-        "nodeCount :: INTEGER)"
-    ),
-    description="PageRank summary statistics over a projected graph",
-    defaults={"maxIterations": 15, "dampingFactor": 0.85},
-)
-def _gds_pagerank_stats(
-    spark: SparkSession, graphName: str = "",
-    maxIterations: int = 15, dampingFactor: float = 0.85,
-) -> DataFrame:
-    nodes, _ = _projected_graph(spark, graphName)
-    return local_df(
-        spark, [(int(maxIterations), nodes.count())],
-        "ranIterations long, nodeCount long",
-    )
-
-
-@procedure(
-    "gds.louvain.stats",
-    signature=(
-        "gds.louvain.stats(graphName :: STRING) :: "
-        "(communityCount :: INTEGER, nodeCount :: INTEGER)"
-    ),
-    description="Louvain summary statistics over a projected graph",
-)
-def _gds_louvain_stats(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.louvain(edges, nodes)
-    return local_df(
-        spark,
-        [(out.select("community").distinct().count(), out.count())],
-        "communityCount long, nodeCount long",
-    )
-
-
-@procedure(
-    "gds.triangleCount.stats",
-    signature=(
-        "gds.triangleCount.stats(graphName :: STRING) :: "
-        "(globalTriangleCount :: INTEGER, nodeCount :: INTEGER)"
-    ),
-    description="Global triangle count over a projected graph",
-)
-def _gds_triangle_stats(spark: SparkSession, graphName: str = "") -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    tri = gds.triangle_count(edges).collect()[0][0]
-    return local_df(
-        spark, [(int(tri), nodes.count())],
-        "globalTriangleCount long, nodeCount long",
-    )
-
-
-# ---- mutate mode + projected-property readback -----------------------------
-
-
-def _mutate_node_property(
-    spark: SparkSession, graphName: str, prop_frame: DataFrame, prop: str
-):
-    """Attach (id, <prop>) to the named projection's node frame — GDS
-    mutate semantics: visible to later algorithms on the SAME projection,
-    never written to the database. The new node frame replaces the old
-    one in the catalog, which frees the old frame and the kernel result
-    ``prop_frame`` reads: the caller must be done with that result."""
-    cat = _graphs_for(spark)
-    if graphName not in cat:
-        raise ValueError(
-            f"Graph with name '{graphName}' does not exist in the catalog"
-        )
-    nodes = cat[graphName][0]
-    if prop in nodes.columns:
-        raise ValueError(
-            f"Node property '{prop}' already exists in graph '{graphName}'"
-        )
-    _store_projection(
-        spark, graphName, nodes.join(prop_frame, "id", "left"), consumed=prop_frame
-    )
-
-
-@procedure(
-    "gds.wcc.mutate",
-    signature=(
-        "gds.wcc.mutate(graphName :: STRING, mutateProperty :: STRING) :: "
-        "(componentCount :: INTEGER, nodePropertiesWritten :: INTEGER)"
-    ),
-    description="WCC with the component id stored on the in-catalog projection",
-    defaults={"mutateProperty": "componentId"},
-)
-def _gds_wcc_mutate(
-    spark: SparkSession, graphName: str = "", mutateProperty: str = "componentId"
-) -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.wcc(edges, nodes)
-    row = (out.select("comp").distinct().count(), out.count())
-    _mutate_node_property(
-        spark, graphName, out.select("id", F.col("comp").alias(mutateProperty)),
-        mutateProperty,
-    )
-    return local_df(
-        spark, [row], "componentCount long, nodePropertiesWritten long",
-    )
-
-
-@procedure(
-    "gds.pageRank.mutate",
-    signature=(
-        "gds.pageRank.mutate(graphName :: STRING, mutateProperty :: STRING, "
-        "maxIterations :: INTEGER, dampingFactor :: FLOAT) :: "
-        "(nodePropertiesWritten :: INTEGER, ranIterations :: INTEGER)"
-    ),
-    description="PageRank with scores stored on the in-catalog projection",
-    defaults={"mutateProperty": "pagerank", "maxIterations": 15, "dampingFactor": 0.85},
-)
-def _gds_pagerank_mutate(
-    spark: SparkSession, graphName: str = "", mutateProperty: str = "pagerank",
-    maxIterations: int = 15, dampingFactor: float = 0.85,
-) -> DataFrame:
-    from ..operators import gds
-
-    nodes, edges = _projected_graph(spark, graphName)
-    out = gds.pagerank(
-        edges, nodes, iterations=int(maxIterations), damping=float(dampingFactor)
-    )
-    row = (out.count(), int(maxIterations))
-    _mutate_node_property(
-        spark, graphName, out.select("id", F.col("pr").alias(mutateProperty)),
-        mutateProperty,
-    )
-    return local_df(
-        spark, [row], "nodePropertiesWritten long, ranIterations long",
-    )
-
-
 @procedure(
     "gds.graph.nodeProperties.stream",
     signature=(
@@ -3252,12 +2920,7 @@ def _gds_pagerank_mutate(
 def _gds_graph_node_props_stream(
     spark: SparkSession, graphName: str = "", nodeProperties=None
 ) -> DataFrame:
-    cat = _graphs_for(spark)
-    if graphName not in cat:
-        raise ValueError(
-            f"Graph with name '{graphName}' does not exist in the catalog"
-        )
-    nodes = cat[graphName][0]
+    nodes = _catalog_entry(spark, graphName)[0]
     props = (
         [nodeProperties] if isinstance(nodeProperties, str) else list(nodeProperties or [])
     )
@@ -3370,7 +3033,6 @@ def _db_ping(spark: SparkSession) -> DataFrame:
     "db.awaitIndexes",
     signature="db.awaitIndexes(timeoutSeconds :: INTEGER) :: ()",
     description="Wait for indexes to come online (indexes here are metadata + dump-time clustering, so this returns immediately)",
-    defaults={"timeoutSeconds": 300},
 )
 def _db_await_indexes(spark: SparkSession, timeoutSeconds: int = 300) -> DataFrame:
     return local_df(spark, [], "ok string")
@@ -3429,7 +3091,6 @@ def _dbms_info(spark: SparkSession) -> DataFrame:
         "elseQuery :: STRING, params :: MAP) :: (value :: MAP)"
     ),
     description="Run ifQuery when the condition holds, elseQuery otherwise; yield its rows as `value` maps",
-    defaults={"elseQuery": "", "params": None},
 )
 def _apoc_do_when(
     spark: SparkSession, condition=None, ifQuery: str = "",
@@ -3454,7 +3115,6 @@ def _apoc_do_when(
         "params :: MAP) :: (value :: MAP)"
     ),
     description="Run the query of the first true condition in [cond1, query1, cond2, query2, ...]",
-    defaults={"elseQuery": "", "params": None},
 )
 def _apoc_case(
     spark: SparkSession, conditionals=None, elseQuery: str = "",
@@ -3508,7 +3168,6 @@ def _db_indexes(spark: SparkSession, store=None) -> DataFrame:
         "properties :: INTEGER)"
     ),
     description="Export the whole graph as runnable Cypher CREATE statements",
-    defaults={"config": None},
 )
 def _apoc_export_cypher_all(
     spark: SparkSession, file: str = "", config=None, graph=None

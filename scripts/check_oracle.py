@@ -12,13 +12,15 @@ Usage: python scripts/check_oracle.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not an installed copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region",

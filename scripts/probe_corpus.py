@@ -22,7 +22,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not an installed copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FAILS: list[tuple[str, str]] = []
 _S = None

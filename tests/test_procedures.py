@@ -917,3 +917,114 @@ def test_gds_orientation_projections_and_new_surface(spark, sf_dir):
         "RETURN count(*) AS n, max(cost) AS far"
     ).collect()[0]
     assert (dj.n, dj.far) == (6, 2.0)  # self + region + 4 siblings
+
+
+def _signature_parts(signature: str, name: str) -> tuple[list[str], list[str]]:
+    """(parameter names, YIELD column names) of a SHOW PROCEDURES
+    signature ``name(p :: T, q = v :: T) :: (a :: T, …)``."""
+    import re
+
+    params, _, outs = signature[len(name):].partition(") :: (")
+
+    def names(part: str) -> list[str]:
+        return [re.split(r"\s*(?:=|::)", p.strip())[0] for p in part.split(",") if p.strip()]
+
+    return names(params.lstrip("(")), names(outs.rstrip(")"))
+
+
+def test_signatures_list_every_accepted_parameter():
+    """SHOW PROCEDURES advertises exactly the parameters a CALL binds, in
+    binding order: the procedure function's parameters minus the ones
+    the engine injects."""
+    import inspect
+
+    from docker_neo4j_spark.procedures.registry import _CONTEXT_PARAMS, _REGISTRY
+
+    wrong = {}
+    for name, proc in _REGISTRY.items():
+        accepted = [
+            p for p in inspect.signature(proc.fn).parameters
+            if p != "spark" and p not in _CONTEXT_PARAMS
+        ]
+        advertised, _ = _signature_parts(proc.signature, name)
+        if advertised != accepted:
+            wrong[name] = (advertised, accepted)
+    assert wrong == {}
+
+
+_GDS_MODES = [
+    *(f"gds.{a}.stream" for a in (
+        "pageRank", "wcc", "labelPropagation", "louvain", "degree",
+        "betweenness", "triangleCount", "localClusteringCoefficient", "scc",
+        "eigenvector", "articleRank", "closeness", "closeness.harmonic",
+        "kcore", "leiden", "dag.topologicalSort",
+    )),
+    *(f"gds.{a}.write" for a in ("wcc", "pageRank", "labelPropagation", "louvain", "degree")),
+    *(f"gds.{a}.stats" for a in ("wcc", "pageRank", "louvain", "triangleCount")),
+    *(f"gds.{a}.mutate" for a in ("wcc", "pageRank")),
+]
+
+# the Spark type each write/mutate mode stores its property as
+_STORED_TYPE = {
+    "gds.wcc.write": "bigint", "gds.pageRank.write": "double",
+    "gds.labelPropagation.write": "bigint", "gds.louvain.write": "bigint",
+    "gds.degree.write": "double",
+    "gds.wcc.mutate": "bigint", "gds.pageRank.mutate": "double",
+}
+
+
+@pytest.fixture(scope="module")
+def nation_region(spark, sf_dir):
+    """A Session over the sf0.001 store with the 30-node Nation/Region
+    projection ``nr`` (25 nations, 5 regions)."""
+    from docker_neo4j_spark.cypher.session import Session
+    from docker_neo4j_spark.procedures.registry import _graphs_for
+    from docker_neo4j_spark.sources.tpch import build_graph
+    from docker_neo4j_spark.storage.store import GraphStore
+
+    _graphs_for(spark).pop("nr", None)
+    s = Session(spark, store=GraphStore(spark, build_graph(spark, sf_dir)))
+    s.run("CALL gds.graph.project('nr', ['Nation', 'Region'], ['IN_REGION'])")
+    yield s
+    s.run("CALL gds.graph.drop('nr')")
+
+
+@pytest.mark.parametrize("name", _GDS_MODES)
+def test_gds_mode_yields_its_signature(spark, nation_region, name):
+    """Every GDS node-algorithm mode yields the columns its signature
+    advertises, in order: a stream one row per projected node, write,
+    stats and mutate one summary row; write and mutate store the
+    property with the algorithm's type."""
+    from docker_neo4j_spark.procedures.registry import _REGISTRY, _graphs_for
+
+    mode = name.rsplit(".", 1)[1]
+    prop = "p_" + name.replace(".", "_")
+    arg = f", '{prop}'" if mode in ("write", "mutate") else ""
+    out = nation_region.run(f"CALL {name}('nr'{arg})")
+    rows = out.collect()
+    _, yields = _signature_parts(_REGISTRY[name].signature, name)
+    assert out.columns == yields
+    assert len(rows) == (30 if mode == "stream" else 1)
+    if mode == "write":
+        stored = dict(nation_region.store.graph.nodes.dtypes)[prop]
+    elif mode == "mutate":
+        stored = dict(_graphs_for(spark)["nr"][0].dtypes)[prop]
+    else:
+        return
+    assert stored == _STORED_TYPE[name]
+
+
+def test_gds_stats_free_the_kernel_result(spark, nation_region):
+    """A stats mode keeps nothing pinned once its row is built: the
+    persistent-RDD count returns to its start after wcc.stats and
+    louvain.stats."""
+
+    def pinned():
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    start = pinned()
+    wcc = nation_region.run("CALL gds.wcc.stats('nr')").collect()[0]
+    assert (wcc.componentCount, wcc.nodeCount) == (5, 30)
+    assert pinned() == start
+    nation_region.run("CALL gds.louvain.stats('nr')").collect()
+    assert pinned() == start

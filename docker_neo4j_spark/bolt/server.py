@@ -76,7 +76,9 @@ def _iso_duration(td: datetime.timedelta) -> str:
 
 
 def _bolt_value(v):
-    """Row value → PackStream-packable (subset: temporals as ISO strings)."""
+    """Row value → PackStream-packable and JSON-serializable: the one
+    result-value converter of both wire layers (Bolt records, HTTP rows).
+    Temporals render as ISO strings, decimals as floats."""
     if isinstance(v, datetime.timedelta):
         return _iso_duration(v)
     if isinstance(v, (datetime.date, datetime.datetime)):
@@ -90,7 +92,7 @@ def _bolt_value(v):
     if hasattr(v, "asDict"):
         # nested struct Row (entity serialization — r10): a Row is a
         # tuple, so this must precede the sequence branch or the field
-        # names (id/labels/properties) would be lost on the wire
+        # names (id/labels/properties) would be lost on the wire / in JSON
         return {k: _bolt_value(x) for k, x in v.asDict().items()}
     if isinstance(v, (list, tuple)):
         return [_bolt_value(x) for x in v]

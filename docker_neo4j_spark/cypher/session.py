@@ -95,6 +95,106 @@ def _split_pipeline(src: str) -> tuple[list[str], list[str]]:
     return parts, kws
 
 
+# a statement's terminal clauses: the write verbs and RETURN
+_TERMINALS = (
+    ("CREATE",), ("MERGE",), ("SET",), ("REMOVE",), ("DETACH", "DELETE"),
+    ("DELETE",), ("FOREACH",), ("RETURN",),
+)
+
+
+def _find_terminal(src: str) -> tuple[int, int, str] | None:
+    """``(start, end, verb)`` of the first depth-0 write verb or RETURN in
+    ``src``; None when there is none."""
+    hits = [
+        (h[0], h[1], " ".join(words))
+        for words in _TERMINALS
+        if (h := _find_kw(src, *words))
+    ]
+    return min(hits) if hits else None
+
+
+_CLAUSE_KWS = frozenset(
+    ("WITH", "UNWIND", "RETURN", "MATCH", "OPTIONAL", "CALL")
+    + tuple(words[0] for words in _TERMINALS)
+)
+
+
+def _clause_end(src: str) -> int:
+    """Offset of the first depth-0 clause keyword in ``src`` (``len(src)``
+    when none): where a SET/REMOVE/DELETE item list, a CREATE pattern or
+    a YIELD list ends. ``STARTS WITH`` / ``ENDS WITH`` predicates, dotted
+    names and label segments are not clauses."""
+    from .lexer import _CLOSE, _OPEN, tokenize
+
+    depth, prev = 0, None
+    for t in tokenize(src):
+        if t.kind == "punct":
+            depth += 1 if t.text in _OPEN else (-1 if t.text in _CLOSE else 0)
+        elif (
+            depth == 0
+            and t.kind == "ident"
+            and t.text.upper() in _CLAUSE_KWS
+            and not (prev is not None and prev.kind == "punct" and prev.text in ".:")
+            and not (
+                t.text.upper() == "WITH"
+                and prev is not None
+                and prev.text.upper() in ("STARTS", "ENDS")
+            )
+        ):
+            return t.pos
+        prev = t
+    return len(src)
+
+
+def _split_yield(src: str) -> tuple[str | None, str | None, str]:
+    """``YIELD cols [WHERE pred] <rest>`` → ``(cols, pred, rest)``: the
+    YIELD list runs to the first depth-0 clause keyword, and ``rest`` is
+    the clause tail after it. ``(None, None, src)`` when ``src`` does not
+    open with YIELD."""
+    src = src.strip()
+    m = re.match(r"YIELD\b", src, re.IGNORECASE)
+    if m is None:
+        return None, None, src
+    rest = src[m.end():]
+    cut = _clause_end(rest)
+    cols, rest = rest[:cut].strip(), rest[cut:].strip()
+    h_w = _find_kw(cols, "WHERE")
+    if h_w is None:
+        return cols, None, rest
+    return cols[: h_w[0]].strip(), cols[h_w[1]:].strip(), rest
+
+
+def _next_read(src: str) -> int:
+    """Offset of the first depth-0 ``[OPTIONAL] MATCH`` or ``CALL { … }``
+    in ``src`` (``len(src)`` when none) — the reading clauses that may
+    follow a WITH/UNWIND stage."""
+    hits = [
+        h[0]
+        for h in (_find_kw(src, "OPTIONAL", "MATCH"), _find_kw(src, "MATCH"))
+        if h
+    ]
+    h_call = _find_kw(src, "CALL")
+    if h_call and src[h_call[1]:].lstrip().startswith("{"):
+        hits.append(h_call[0])
+    return min(hits, default=len(src))
+
+
+def _split_braced(src: str) -> tuple[str, str]:
+    """``{ body } rest`` → ``(body, rest)``: the brace block ``src`` opens
+    with (nested braces balanced) and the text after it."""
+    depth = 0
+    for i, ch in enumerate(src):
+        depth += (ch == "{") - (ch == "}")
+        if depth == 0:
+            return src[1:i].strip(), src[i + 1:]
+    raise ValueError("unbalanced braces in CALL subquery")
+
+
+_IN_TRANSACTIONS = re.compile(
+    r"\s*IN\s+TRANSACTIONS(?:\s+OF\s+\d+\s+ROWS?)?", re.IGNORECASE
+)
+
+
 def _has_count_subquery(src: str) -> bool:
     """True when a ``COUNT { … }`` subquery token pair appears anywhere
     outside string literals (any bracket depth — COUNT{} may sit inside a
@@ -1565,30 +1665,9 @@ class Session:
             )
         if head == "FOREACH":
             return self._foreach(q)
-        if head == "UNWIND":
-            h_m = _find_kw(q, "MATCH")
-            h_r = _find_kw(q, "RETURN")
-            if h_m and (not h_r or h_m[0] < h_r[0]):
-                # UNWIND … MATCH … — the unit-row pipeline (r12)
-                return self._leading_pipeline(q)
-            if h_r and _find_kw(q[: h_r[0]], "WITH"):
-                # UNWIND … WITH … pipelines share the standalone-WITH
-                # stage machinery (r10)
-                return self._standalone_with(q)
-            return self._standalone_unwind(q)
-        if head == "WITH":
-            h_r = _find_kw(q, "RETURN")
-            scope = q[: h_r[0]] if h_r else q
-            if any(
-                _find_kw(scope, *w)
-                for w in (
-                    ("MATCH",), ("CREATE",), ("MERGE",), ("FOREACH",),
-                    ("DELETE",),
-                )
-            ):
-                # WITH … MATCH / write clauses — unit-row pipeline (r12)
-                return self._leading_pipeline(q)
-            return self._standalone_with(q)
+        if head in ("WITH", "UNWIND", "RETURN"):
+            # no driving clause: the pipeline runs over one unit row
+            return self._clause_tail(self.spark.range(1).select(), q, [])
         if head == "SHOW" and q.upper().startswith("SHOW PROCEDURES"):
             from ..procedures.registry import show_procedures
 
@@ -1692,8 +1771,6 @@ class Session:
             if re.match(r"CALL\s*\{", q, re.IGNORECASE):
                 return self._call_subquery(q)
             return self._call(q)
-        if head == "RETURN":
-            return self._bare_return(q)
         if head == "CREATE":
             return self._create(q[len("CREATE"):].strip(), anchors={})
         if head == "MERGE":
@@ -1740,8 +1817,9 @@ class Session:
         '<c>'] <tail>`` (r12) — THE Cypher import idiom, Spark-first: the
         file reads through ``spark.read.csv`` (distributed, splittable —
         never a driver parse), ``row`` binds as a struct (headers) or
-        string array (positional), and the tail is either a read pipeline
-        (RETURN/WITH) or a SET-BASED node write (one merge/append per
+        string array (positional), and the tail is either a clause tail
+        that opens with RETURN/WITH/UNWIND (``_clause_tail`` over the row
+        frame) or a SET-BASED node write (one merge/append per
         statement, the same one-join batch shape UNWIND $rows uses —
         Neo4j itself needs PERIODIC COMMIT for what one Spark job does
         here). All fields are strings (the openCypher LOAD CSV
@@ -1766,29 +1844,8 @@ class Session:
             )
         if not tail:
             raise ValueError("LOAD CSV requires a RETURN or a write clause")
-        # read pipeline: [WITH …]* RETURN …
-        up = tail.upper()
-        if up.startswith("RETURN") or up.startswith("WITH") or up.startswith("UNWIND"):
-            parts, stage_kws = _split_pipeline(" " + tail)
-            pipeline = [
-                (stage_kws[i], parts[i + 1].strip())
-                for i in range(len(stage_kws))
-            ]
-            ret_src = None
-            if pipeline:
-                last_kw, last_src = pipeline[-1]
-                h_lr = _find_kw(last_src, "RETURN")
-                if h_lr:
-                    ret_src = last_src[h_lr[1]:].strip()
-                    pipeline[-1] = (last_kw, last_src[: h_lr[0]].strip())
-                frame = self._run_with_stages(frame, pipeline)
-            if ret_src is None:
-                h_r = _find_kw(tail, "RETURN")
-                if h_r is None:
-                    raise ValueError("LOAD CSV pipeline requires RETURN")
-                if not pipeline:
-                    ret_src = tail[h_r[1]:].strip()
-            return self._project_match(frame, ret_src, [], _frame_resolver(frame))
+        if re.match(r"(?:RETURN|WITH|UNWIND)\b", tail, re.IGNORECASE):
+            return self._clause_tail(frame, tail, [])
         # write tail: MERGE/CREATE of one node pattern, props from row
         mw = re.match(r"(MERGE|CREATE)\s+(.*)$", tail, re.IGNORECASE | re.DOTALL)
         if not mw:
@@ -2426,116 +2483,19 @@ class Session:
                 col = F.explode(_compile_expr(expr, _frame_resolver(bound)))
         return bound.withColumn(var, col)
 
-    def _standalone_unwind(self, q: str) -> DataFrame:
-        """``UNWIND [..] AS x [UNWIND ..] RETURN ...`` with no MATCH — the
-        pipeline runs over a one-row seed frame. A terminal WRITE verb
-        (r11: ``UNWIND ['x','y'] AS w CREATE (:W {t: w})``) dispatches
-        the exploded frame through the shared set-based write tails."""
-        h_ret = _find_kw(q, "RETURN")
-        h_call = _find_kw(q, "CALL")
-        if h_call and (not h_ret or h_call[0] < h_ret[0]):
-            rest = q[h_call[1]:].strip()
-            if rest.startswith("{"):
-                # ``UNWIND … CALL { WITH x … RETURN … } RETURN …`` (r13):
-                # explode first, then the shared correlated-subquery stage
-                depth, i = 1, 1
-                while i < len(rest) and depth:
-                    if rest[i] == "{":
-                        depth += 1
-                    elif rest[i] == "}":
-                        depth -= 1
-                    i += 1
-                if depth:
-                    raise ValueError("unbalanced braces in CALL subquery")
-                inner, tail2 = rest[1:i - 1].strip(), rest[i:].strip()
-                m_tx = re.match(
-                    r"IN\s+TRANSACTIONS(?:\s+OF\s+\d+\s+ROWS?)?\s*",
-                    tail2, re.IGNORECASE,
-                )
-                if m_tx:
-                    tail2 = tail2[m_tx.end():].strip()
-                bound = self.spark.range(1).select(F.lit(1).alias("_seed"))
-                for stage in _split_top(q[: h_call[0]], "UNWIND"):
-                    if stage.strip():
-                        bound = self._unwind_stage(bound, stage.strip())
-                bound = bound.drop("_seed")
-                bound = self._apply_call_subquery_stage(bound, inner)
-                m_r = re.match(r"RETURN\b", tail2, re.IGNORECASE)
-                if not m_r:
-                    raise ValueError(
-                        "UNWIND … CALL {} must end with RETURN"
-                    )
-                return self._project_match(
-                    bound, tail2[m_r.end():].strip(), [],
-                    _frame_resolver(bound),
-                )
-        w_hits = [
-            (h[0], h[1], " ".join(words))
-            for words in (
-                ("CREATE",), ("MERGE",), ("SET",), ("REMOVE",),
-                ("DETACH", "DELETE"), ("DELETE",),
-            )
-            if (h := _find_kw(q, *words))
-        ]
-        h_write = min(w_hits) if w_hits else None
-        if h_write and (not h_ret or h_write[0] < h_ret[0]):
-            body, verb = q[: h_write[0]], h_write[2]
-            tail = q[h_write[1]:].strip()
-        elif not h_ret:
-            raise ValueError("UNWIND without RETURN or a write clause")
-        else:
-            body, verb, tail = q[: h_ret[0]], None, None
-            ret = q[h_ret[1]:].strip()
-        stages = _split_top(body, "UNWIND")
-        bound = self.spark.range(1).select(F.lit(1).alias("_seed"))
-        for stage in stages:
-            if stage.strip():
-                bound = self._unwind_stage(bound, stage.strip())
-        bound = bound.drop("_seed")
-        if verb == "CREATE":
-            return self._create_from_binding(tail, bound)
-        if verb == "MERGE":
-            return self._merge_from_binding(tail, bound)
-        if verb == "FOREACH":
-            return self._foreach_from_binding(tail, bound)
-        if verb == "SET":
-            return self._set_from_binding(tail, bound, [], remove=False)
-        if verb == "REMOVE":
-            return self._set_from_binding(tail, bound, [], remove=True)
-        if verb in ("DELETE", "DETACH DELETE"):
-            return self._delete_from_binding(tail, bound, [], detach="DETACH" in verb)
-        return self._project_match(bound, ret, [], _frame_resolver(bound))
-
     def _call_subquery(self, q: str) -> DataFrame:
         """``CALL { <inner query> } RETURN …`` — the uncorrelated subquery
         composition (SURVEY §2.B.6): the braced statement runs as its own
-        query; the outer RETURN projects/aggregates over its result."""
-        start = q.index("{")
-        depth, i = 1, start + 1
-        while i < len(q) and depth:
-            if q[i] == "{":
-                depth += 1
-            elif q[i] == "}":
-                depth -= 1
-            i += 1
-        inner, rest = q[start + 1 : i - 1].strip(), q[i:].strip()
+        query; the clause tail after it runs over its result."""
+        inner, rest = _split_braced(q[q.index("{"):])
         # ``CALL { … } IN TRANSACTIONS [OF n ROWS]`` — neo4j's batched
         # write-commit syntax (the modern apoc.periodic.iterate). Frames
         # are immutable snapshots with per-statement atomic swaps, so the
         # batching knob changes commit granularity the engine doesn't
         # have, not the result: accept and strip it.
-        m_tx = re.match(
-            r"IN\s+TRANSACTIONS(?:\s+OF\s+\d+\s+ROWS?)?\s*", rest, re.IGNORECASE
-        )
-        if m_tx:
-            rest = rest[m_tx.end():].strip()
+        rest = rest[m.end():] if (m := _IN_TRANSACTIONS.match(rest)) else rest
         frame = self.run(inner)
-        m_ret = re.match(r"RETURN\b", rest, re.IGNORECASE)
-        if not m_ret:
-            return frame
-        return self._project_match(
-            frame, rest[m_ret.end():].strip(), [], _frame_resolver(frame)
-        )
+        return self._clause_tail(frame, rest, []) if rest.strip() else frame
 
     # ---- batch-UNWIND write shapes (token-stream parsed, r9) -----------
     # The four driver-guide bulk shapes intercepted before the literal
@@ -3028,78 +2988,18 @@ class Session:
         raise ValueError(f"Unbalanced parentheses in CALL arguments: {rest!r}")
 
     def _call(self, q: str) -> DataFrame:
+        """``CALL <proc>(args) [YIELD cols [WHERE pred]] [<clause tail>]``:
+        the procedure's output frame drives the clause tail (MATCH, WITH,
+        UNWIND, a write or RETURN — ``_clause_tail``); with no tail the
+        output itself is the result."""
         from ..procedures.registry import call
 
         m0 = re.match(r"CALL\s+(?P<name>[A-Za-z_][\w.]*)\s*", q, re.IGNORECASE)
         if not m0:
             raise ValueError(f"Unsupported CALL syntax: {q!r}")
         raw, rest = self._scan_call_args(q[m0.end():].strip())
-        # keyword-split the tail (r11 — replacing the key=value-only WHERE
-        # regex): YIELD cols [WHERE <any expression>] [RETURN items]
-        rest = rest.strip()
-        # `CALL … YIELD cols [WHERE p] WITH … [UNWIND …] RETURN …` (r12):
-        # pipeline stages after the YIELD run through the shared WITH
-        # machinery over the yielded frame
-        pipeline = []
-        h_p = None
-        from .lexer import tokenize as _tokenize2
-
-        _ptoks = _tokenize2(rest)
-        _depth = 0
-        for _i, _t in enumerate(_ptoks):
-            if _t.kind == "punct":
-                _depth += _t.text in "([{"
-                _depth -= _t.text in ")]}"
-                continue
-            if _depth or _t.kind != "ident":
-                continue
-            up_t = _t.text.upper()
-            if up_t == "UNWIND":
-                h_p = (_t.pos, _t.pos)
-                break
-            if up_t == "WITH":
-                prev = _ptoks[_i - 1] if _i else None
-                if prev is not None and prev.kind == "ident" and prev.text.upper() in (
-                    "STARTS", "ENDS"
-                ):
-                    continue  # STARTS WITH / ENDS WITH predicate, not a stage
-                h_p = (_t.pos, _t.pos)
-                break
-        if h_p:
-            stage_src = rest[h_p[0]:].strip()
-            rest = rest[: h_p[0]].strip()
-            parts, stage_kws = _split_pipeline(" " + stage_src)
-            if parts[0].strip():
-                raise ValueError(
-                    f"unexpected text before CALL pipeline stage: {parts[0]!r}"
-                )
-            pipeline = [
-                (stage_kws[i], parts[i + 1].strip())
-                for i in range(len(stage_kws))
-            ]
-        ret_src = where_src = None
-        if pipeline:
-            # a RETURN after pipeline stages belongs to the LAST stage's
-            # text — split it off there
-            last_kw, last_src = pipeline[-1]
-            h_lr = _find_kw(last_src, "RETURN")
-            if h_lr:
-                ret_src = last_src[h_lr[1]:].strip()
-                pipeline[-1] = (last_kw, last_src[: h_lr[0]].strip())
-        else:
-            h_r = _find_kw(rest, "RETURN")
-            if h_r:
-                ret_src = rest[h_r[1]:].strip()
-                rest = rest[: h_r[0]].strip()
-        h_w = _find_kw(rest, "WHERE")
-        if h_w:
-            where_src = rest[h_w[1]:].strip()
-            rest = rest[: h_w[0]].strip()
-        yield_src = None
-        m_y = re.match(r"YIELD\s+(.+)$", rest, re.IGNORECASE | re.DOTALL)
-        if m_y:
-            yield_src = m_y.group(1).strip()
-        elif rest:
+        yield_src, where_src, rest = _split_yield(rest)
+        if rest and _clause_end(rest):
             raise ValueError(f"Unsupported CALL syntax: {q!r}")
         name = m0.group("name")
         if name == "dbms.changePassword":
@@ -3118,13 +3018,11 @@ class Session:
         if yield_src and yield_src != "*":
             # YIELD * keeps every output column (Cypher's shorthand)
             yield_cols = [c.strip() for c in yield_src.split(",")]
-        where = None
         out = call(
             self.spark,
             name,
             args=args or None,
             yield_cols=yield_cols,
-            where=where,
             context={
                 "graph": self.store.graph,
                 "store": self.store,
@@ -3136,201 +3034,7 @@ class Session:
             # was restricted to one key = value equality), resolved
             # against the procedure's actual output frame
             out = out.where(_compile_where(where_src, _frame_resolver(out)))
-        if pipeline:
-            out = self._run_with_stages(out, pipeline)
-        if ret_src:
-            # full projection surface over the procedure's columns —
-            # expressions, aggregates, ORDER BY/SKIP/LIMIT (r10; was a
-            # bare column-name select)
-            out = self._project_match(out, ret_src, [], _frame_resolver(out))
-        return out
-
-    # ---- RETURN <expr> ------------------------------------------------
-    def _bare_return(self, q: str) -> DataFrame:
-        expr = q[len("RETURN"):].strip()
-        # trailing clauses: LIMIT / SKIP / ORDER BY (applied post-select,
-        # keys resolve against the projected aliases)
-        limit, expr = _trailing_int_kw(expr, "LIMIT")
-        skip, expr = _trailing_int_kw(expr, "SKIP")
-        order_by = None
-        h_ob = _find_kw(expr, "ORDER", "BY")
-        if h_ob:
-            order_by = expr[h_ob[1]:].strip()
-            expr = expr[: h_ob[0]].strip()
-
-        def _unbound(name: str) -> F.Column:
-            raise ValueError(f"unbound name in bare RETURN: {name!r}")
-
-        cols = []
-        for item in [i.strip() for i in _split_top(expr, ",")]:
-            m_as = re.search(r"\s+AS\s+(`[^`]+`|[A-Za-z_]\w*)\s*$", item, re.IGNORECASE)
-            alias, body = (
-                (m_as.group(1).strip("`"), item[: m_as.start()].strip())
-                if m_as
-                else (item, item)
-            )
-            col = None
-            if body.startswith("{") and body.endswith("}"):
-                try:
-                    col = _lit_map(_parse_value(body))
-                except ValueError:
-                    col = None  # `{..} = {..}` etc. — the compiler's job
-            agg_m = re.match(
-                r"(min|max|sum|avg|collect|count)\((.+)\)$", body, re.IGNORECASE
-            )
-            if col is None and agg_m:
-                # aggregates over the bare-RETURN's single implicit row
-                # (`RETURN min('b')` → 'b'; count(x) → 1 when non-null)
-                kind = agg_m.group(1).lower()
-                inner_src = agg_m.group(2).strip()
-                if kind == "count" and inner_src == "*":
-                    col = F.lit(1).cast("long")
-                else:
-                    inner = _compile_expr(inner_src, _unbound)
-                    if kind == "collect":
-                        col = F.array(inner)
-                    elif kind == "count":
-                        col = F.when(inner.isNotNull(), F.lit(1)).otherwise(
-                            F.lit(0)
-                        ).cast("long")
-                    else:
-                        col = inner
-            fn_m = re.match(r"([A-Za-z_][\w.]*)\((.*)\)$", body)
-            if fn_m and col is None:
-                # registered plugin/scalar functions (apoc.version, …) win;
-                # the Cypher expression compiler is the fallback
-                from ..procedures.registry import fn
-
-                try:
-                    from .lexer import ExprText as _ET
-
-                    raw = fn_m.group(2).strip()
-                    args = [
-                        _parse_value(p.strip()) for p in _split_top(raw, ",") if p.strip()
-                    ] if raw else []
-                    def _has_expr(v):
-                        # ExprText may hide INSIDE a parsed list/map (a
-                        # comprehension element, a computed value — r13)
-                        if isinstance(v, _ET):
-                            return True
-                        if isinstance(v, list):
-                            return any(_has_expr(x) for x in v)
-                        if isinstance(v, dict):
-                            return any(_has_expr(x) for x in v.values())
-                        return False
-
-                    if any(_has_expr(a) for a in args):
-                        raise ValueError("expression args: compiler path")
-                    col = fn(fn_m.group(1), *args)
-                except (KeyError, ValueError):
-                    col = None
-            if col is None:
-                col = _value_of(body, _unbound)
-            cols.append(col.alias(alias))
-        out = self.spark.range(1).select(cols)
-        if order_by:
-            out = out.orderBy(*_order_keys(order_by, lambda k: F.col(f"`{k}`")))
-        if skip is not None:
-            out = out.offset(skip)
-        return _client_collectable(out if limit is None else out.limit(limit))
-
-    def _standalone_with(self, q: str) -> DataFrame:
-        """``WITH <items> [WHERE pred] [WITH …|UNWIND …]* RETURN …`` with
-        no pattern anchor (r9): stage one evaluates its items (closed
-        expressions) over a single unit row; later stages rebind frames
-        exactly like the MATCH-anchored pipeline, UNWIND explodes."""
-
-        def _closed(name: str) -> F.Column:
-            raise ValueError(f"unbound name in standalone WITH: {name!r}")
-
-        frame: DataFrame | None = None
-        src = q.strip()
-        while True:
-            up = src.upper()
-            kw = "WITH" if up.startswith("WITH") else (
-                "UNWIND" if up.startswith("UNWIND") else None
-            )
-            if kw is None:
-                break
-            src = src[len(kw):].strip()
-            ends = [
-                h for h in (
-                    _find_kw(src, "WITH"),
-                    _find_kw(src, "UNWIND"),
-                    _find_kw(src, "RETURN"),
-                ) if h
-            ]
-            cut = min(ends)[0] if ends else len(src)
-            stage, src = src[:cut].strip(), src[cut:].strip()
-            resolve = _frame_resolver(frame) if frame is not None else _closed
-            if kw == "UNWIND":
-                m = re.match(
-                    r"(?P<expr>.+?)\s+AS\s+(?P<var>[A-Za-z_]\w*)\s*$",
-                    stage,
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if not m:
-                    raise ValueError(f"UNWIND needs `expr AS var`: {stage!r}")
-                base = frame if frame is not None else self.spark.range(1)
-                frame = base.select(
-                    *[c for c in base.columns if c != "id" or frame is not None],
-                    F.explode(_compile_expr(m.group("expr"), resolve)).alias(
-                        m.group("var")
-                    ),
-                )
-                continue
-            wh = _split_kw(stage, "WHERE")
-            items = wh[0].strip()
-            # `WITH DISTINCT <items>` as a statement opener (r13 —
-            # VERDICT r12 wrong #3): strip/apply the prefix exactly
-            # like the clause-anchored WITH path does
-            st_distinct = bool(re.match(r"DISTINCT\b", items, re.IGNORECASE))
-            if st_distinct:
-                items = items[len("DISTINCT"):].strip()
-            # items [ORDER BY] [SKIP] [LIMIT] inside a standalone WITH
-            # stage — the mid-pipeline top-k idiom, mirrored from the
-            # clause-anchored WITH path (r14)
-            st_order = None
-            st_limit, items = _trailing_int_kw(items, "LIMIT")
-            st_skip, items = _trailing_int_kw(items, "SKIP")
-            h_ob = _find_kw(items, "ORDER", "BY")
-            if h_ob:
-                st_order = items[h_ob[1]:].strip()
-                items = items[: h_ob[0]].strip()
-            keys, aggs, post, _ents = _parse_items(items, resolve)
-            base = frame if frame is not None else self.spark.range(1)
-            if aggs:
-                frame = (
-                    base.groupBy([c for _, c in keys]).agg(*aggs)
-                    if keys
-                    else base.agg(*aggs)
-                )
-                if post is not None:
-                    frame = _apply_post_items(frame, post)
-            else:
-                frame = base.select([c for _, c in keys])
-                if st_distinct:
-                    frame = frame.dropDuplicates()
-            if st_order:
-                frame = frame.orderBy(
-                    *_order_keys(st_order, _frame_resolver(frame))
-                )
-            if st_skip is not None:
-                frame = frame.offset(st_skip)
-            if st_limit is not None:
-                frame = frame.limit(st_limit)
-            if len(wh) > 1:
-                frame = frame.where(
-                    _compile_expr(wh[1].strip(), _frame_resolver(frame))
-                )
-        h_ret = _find_kw(src, "RETURN")
-        if h_ret is None or h_ret[0] != 0:
-            raise ValueError(f"standalone WITH requires a terminal RETURN: {q!r}")
-        if frame is None:
-            raise ValueError(f"standalone WITH parsed no stage: {q!r}")
-        return self._project_match(
-            frame, src[h_ret[1]:].strip(), [], _frame_resolver(frame)
-        )
+        return self._clause_tail(out, rest, []) if rest else out
 
     def _resolve_dynamic_labels(self, cypher: str) -> str:
         """Neo4j 5.24 dynamic labels/types ``:$(expr)`` (r12): the
@@ -3403,88 +3107,25 @@ class Session:
             i = m
         return "".join(out)
 
-    def _leading_pipeline(self, q: str) -> DataFrame:
-        """A statement that OPENS with WITH/UNWIND but continues into
-        MATCH or write clauses — ``WITH 1 AS x MATCH (n) RETURN n.k + x``
-        (r12, a common parameter-binding idiom). The whole statement runs
-        as a stage pipeline over one unit row through the same
-        ``_run_with_stages`` machinery the MATCH-anchored pipeline uses;
-        the first stage's items evaluate as closed expressions."""
-        body = q.strip()
-        w_hits = [
-            (h[0], h[1], " ".join(words))
-            for words in (
-                ("CREATE",), ("MERGE",), ("SET",), ("REMOVE",),
-                ("DETACH", "DELETE"), ("DELETE",), ("FOREACH",),
-            )
-            if (h := _find_kw(body, *words))
-        ]
-        h_write = min(w_hits) if w_hits else None
-        h_return = _find_kw(body, "RETURN")
-        verb = tail = ret = None
-        if h_write and (not h_return or h_write[0] < h_return[0]):
-            head_src = body[: h_write[0]].strip()
-            verb, tail = h_write[2], body[h_write[1]:].strip()
-        elif h_return:
-            head_src = body[: h_return[0]].strip()
-            ret = body[h_return[1]:].strip()
-        else:
-            raise ValueError("pipeline requires RETURN or a write clause")
-        parts, stage_kws = _split_pipeline(head_src)
-        if parts[0].strip():
-            raise ValueError(
-                f"unexpected prefix before WITH/UNWIND: {parts[0]!r}"
-            )
-        pipeline = [
-            (stage_kws[i], parts[i + 1].strip()) for i in range(len(stage_kws))
-        ]
-        bound = self._run_with_stages(self.spark.range(1).select(), pipeline)
-        if verb == "CREATE":
-            return self._create_from_binding(tail, bound)
-        if verb == "MERGE":
-            return self._merge_from_binding(tail, bound)
-        if verb == "FOREACH":
-            return self._foreach_from_binding(tail, bound)
-        if verb in ("SET", "REMOVE"):
-            return self._set_from_binding(tail, bound, [], remove=verb == "REMOVE")
-        if verb in ("DELETE", "DETACH DELETE"):
-            return self._delete_from_binding(
-                tail, bound, [], detach="DETACH" in verb
-            )
-        if _has_count_subquery(ret):
-            bound, ret = self._apply_count_subqueries(bound, ret)
-        return self._project_match(bound, ret, [], _frame_resolver(bound))
-
     def _show_tail(self, out: DataFrame, tail: str) -> DataFrame:
-        """``SHOW … [YIELD cols [WHERE pred] [RETURN items]]`` — the
-        listing-command projection tail (r10)."""
+        """``SHOW … [YIELD cols [WHERE pred] [<clause tail>]]`` — the
+        listing-command projection tail (r10): the listing frame drives
+        the clause tail (``_clause_tail``), as a CALL's output does."""
         tail = tail.strip()
-        if not tail:
-            return out
         if tail.upper().startswith("WHERE"):
             # `SHOW … WHERE pred` — the YIELD-less filter form (r12)
             return out.where(
                 _compile_where(tail[len("WHERE"):].strip(), _frame_resolver(out))
             )
-        if not tail.upper().startswith("YIELD"):
+        cols_src, wh, rest = _split_yield(tail)
+        if cols_src is None and tail:
             raise ValueError(f"expected YIELD after SHOW: {tail!r}")
-        rest = tail[len("YIELD"):].strip()
-        ret = None
-        h_ret = _find_kw(rest, "RETURN")
-        if h_ret:
-            ret, rest = rest[h_ret[1]:].strip(), rest[: h_ret[0]].strip()
-        wh = None
-        h_wh = _find_kw(rest, "WHERE")
-        if h_wh:
-            wh, rest = rest[h_wh[1]:].strip(), rest[: h_wh[0]].strip()
-        cols = [c.strip() for c in rest.split(",") if c.strip()]
+        cols = [c.strip() for c in (cols_src or "").split(",") if c.strip()]
         if cols and cols != ["*"]:
             out = out.select(*cols)
         if wh:
             out = out.where(_compile_expr(wh, _frame_resolver(out)))
-        if ret:
-            out = self._project_match(out, ret, [], _frame_resolver(out))
-        return out
+        return self._clause_tail(out, rest, []) if rest else out
 
     # ---- database DDL (r10: CREATE/DROP + the lifecycle verbs) --------
     def _database_ddl(self, q: str) -> DataFrame:
@@ -3848,35 +3489,12 @@ class Session:
             body = self._rewrite_varlen_rel_list(body)
         if re.match(r"\w+\s*=\s*\(", body):
             return self._path_binding(body)
-        # terminal write verb (CREATE/MERGE/SET/REMOVE/DELETE) or RETURN
-        w_hits = [
-            (h[0], h[1], " ".join(words))
-            for words in (
-                ("CREATE",), ("MERGE",), ("SET",), ("REMOVE",),
-                ("DETACH", "DELETE"), ("DELETE",), ("FOREACH",),
-            )
-            if (h := _find_kw(body, *words))
-        ]
-        h_write = min(w_hits) if w_hits else None
-        h_return = _find_kw(body, "RETURN")
-        verb = tail = None
-        if h_write and (not h_return or h_write[0] < h_return[0]):
-            pattern_src = body[: h_write[0]].strip()
-            verb = h_write[2]
-            tail = body[h_write[1]:].strip()
-        elif h_return:
-            pattern_src = body[: h_return[0]].strip()
-            ret = body[h_return[1]:].strip()
-        else:
-            raise ValueError("MATCH without RETURN or a write clause")
-        # WITH / UNWIND pipeline stages trail the pattern clauses
-        # (`STARTS WITH` / `ENDS WITH` kept intact by the splitter's
-        # preceding-ident guard)
-        parts, stage_kws = _split_pipeline(pattern_src)
-        pattern_src = parts[0].strip()
-        pipeline = [
-            (stage_kws[i], parts[i + 1].strip()) for i in range(len(stage_kws))
-        ]
+        # the pattern clauses end where the clause tail begins: the first
+        # WITH/UNWIND stage, write verb or RETURN (`STARTS WITH` / `ENDS
+        # WITH` kept intact by the splitter's preceding-ident guard)
+        h = _find_terminal(body)
+        pattern_src = _split_pipeline(body[: h[0]] if h else body)[0][0]
+        tail = body[len(pattern_src):]
         # correlated CALL { [WITH imports] … RETURN … } after the pattern
         # (r10): extract the braced subquery before the OPTIONAL-MATCH /
         # WHERE splits — inner clauses are brace-guarded from them
@@ -3885,21 +3503,10 @@ class Session:
         if h_call:
             seg = pattern_src[h_call[1]:].lstrip()
             if seg.startswith("{"):
-                start = len(pattern_src) - len(seg)
-                depth, i = 1, start + 1
-                while i < len(pattern_src) and depth:
-                    if pattern_src[i] == "{":
-                        depth += 1
-                    elif pattern_src[i] == "}":
-                        depth -= 1
-                    i += 1
-                if depth:
-                    raise ValueError("unbalanced braces in CALL subquery")
-                call_sub = pattern_src[start + 1 : i - 1].strip()
-                trailing = pattern_src[i:].strip()
-                if trailing:
+                call_sub, trailing = _split_braced(seg)
+                if trailing.strip():
                     raise ValueError(
-                        f"unsupported clause after CALL subquery: {trailing!r}"
+                        f"unsupported clause after CALL subquery: {trailing.strip()!r}"
                     )
                 pattern_src = pattern_src[: h_call[0]].strip()
             elif re.match(r"\(", seg) is None:
@@ -3932,46 +3539,26 @@ class Session:
                 raise ValueError(f"trailing content after MATCH pattern: {rest!r}")
             groups.append(gelems)
         elems = [el for g in groups for el in g]
-        # a DELETE of a relationship variable needs the rel id columns that
-        # match_chain would otherwise statically prune
-        rel_ids_needed = None
-        if verb in ("DELETE", "DETACH DELETE"):
-            del_vars = {v.strip() for v in _split_top(tail, "RETURN")[0].split(",")}
-            if any(
-                isinstance(el, _Rel) and el.var in del_vars for el in elems
+        # a bare rel-var reference downstream (DELETE r / RETURN r /
+        # collect(r) / id(r) / ORDER BY r) needs the rel id column
+        # match_chain prunes by default (r10 — entity serialization), and
+        # so does RETURN * / WITH *, which serializes EVERY variable (r14)
+        probe = f"{tail} {where_src or ''}"
+        rel_ids_needed = True if re.search(
+            r"\b(?:RETURN|WITH)\s+(?:DISTINCT\s+)?\*(?:\s|,|$)", tail, re.IGNORECASE
+        ) else None
+        writes = bool(_find_kw(tail, "SET") or _find_kw(tail, "REMOVE"))
+        for el in elems:
+            if rel_ids_needed or not (isinstance(el, _Rel) and el.var):
+                continue
+            if re.search(
+                rf"(?<![\w.]){re.escape(el.var)}(?![\w])(?!\s*\.)", probe
+            ) or (
+                # `SET r.w = …` — rel-property writes resolve the rel by
+                # id, so the id columns must survive (r12)
+                writes and re.search(rf"(?<![\w.]){re.escape(el.var)}\s*\.", tail)
             ):
                 rel_ids_needed = True
-        if rel_ids_needed is None:
-            # a bare rel-var reference downstream (RETURN r / collect(r) /
-            # id(r) / ORDER BY r) needs the rel id column match_chain
-            # prunes by default (r10 — entity serialization)
-            probe = " ".join(
-                [(tail or "") if verb else ret, where_src or ""]
-                + [s for _, s in pipeline]
-            )
-            star_texts = [(tail or "") if verb else ret, *(s for _, s in pipeline)]
-            if any(
-                re.match(r"\s*(?:DISTINCT\s+)?\*(?:\s|,|$)", t or "")
-                for t in star_texts
-            ):
-                # RETURN * / WITH * serializes EVERY variable, rel vars
-                # included — their id columns must survive (r14)
-                rel_ids_needed = True
-            for el in elems:
-                if not (isinstance(el, _Rel) and el.var):
-                    continue
-                if re.search(
-                    rf"(?<![\w.]){re.escape(el.var)}(?![\w])(?!\s*\.)", probe
-                ):
-                    rel_ids_needed = True
-                    break
-                if verb in ("SET", "REMOVE") and re.search(
-                    rf"(?<![\w.]){re.escape(el.var)}\s*\.", tail or ""
-                ):
-                    # `SET r.w = …` — rel-property writes resolve the rel
-                    # by id, so the id columns must survive (r12)
-                    rel_ids_needed = True
-                    break
         bound = None
         for gelems in groups:
             gbound = self._bind(gelems, with_rel_ids=rel_ids_needed)
@@ -4000,165 +3587,207 @@ class Session:
         if call_proc is not None:
             bound = self._apply_call_proc_stage(bound, call_proc)
 
-        bound = self._run_with_stages(bound, pipeline)
+        return self._clause_tail(bound, tail, elems, path_vars=extra_pvars)
 
+    def _clause_tail(
+        self, bound: DataFrame, src: str, elems: list, path_vars=None
+    ) -> DataFrame:
+        """Everything a statement does after its driving frame ``bound`` —
+        a MATCH binding, a CALL's output, LOAD CSV's rows, a write's
+        binding, or one unit row when the statement opens with WITH,
+        UNWIND or RETURN (openCypher: a query with no MATCH starts from
+        one empty row).
+
+        ``src`` is split at depth 0: leading ``[OPTIONAL] MATCH`` /
+        ``CALL { … }`` clauses bind on the frame, WITH/UNWIND stages run
+        through ``_run_with_stages``, and the terminal clause goes to its
+        handler — RETURN to ``_project_match`` (COUNT{} applied first), a
+        write verb to its ``_*_from_binding`` handler, which hands what
+        follows its own clause back here (write-then-continue). With no
+        terminal clause the result is the empty ``ok`` frame. ``elems``
+        is the driving pattern (DELETE tells rel variables by it);
+        ``path_vars`` names shortestPath variables for RETURN's path
+        functions."""
+        h = _find_terminal(src)
+        parts, kws = _split_pipeline(src[: h[0]] if h else src)
+        bound = self._bind_reads(bound, parts[0])
+        bound = self._run_with_stages(
+            bound, [(kw, parts[i + 1].strip()) for i, kw in enumerate(kws)]
+        )
+        if h is None:
+            return local_df(self.spark, [], "ok string")
+        verb, rest = h[2], src[h[1]:].strip()
+        if verb == "RETURN":
+            if _has_count_subquery(rest):
+                bound, rest = self._apply_count_subqueries(bound, rest)
+            resolve = _frame_resolver(bound)
+            if path_vars:
+                # length(sp)/nodes(sp) land as literal columns; the path-fn
+                # dispatch needs to know sp names a path (r12)
+                resolve.path_vars = path_vars
+            return self._project_match(bound, rest, elems, resolve)
         if verb == "CREATE":
-            return self._create_from_binding(tail, bound)
+            return self._create_from_binding(rest, bound)
         if verb == "MERGE":
-            return self._merge_from_binding(tail, bound)
+            return self._merge_from_binding(rest, bound)
         if verb == "FOREACH":
-            return self._foreach_from_binding(tail, bound)
-        if verb == "SET":
-            return self._set_from_binding(tail, bound, elems, remove=False)
-        if verb == "REMOVE":
-            return self._set_from_binding(tail, bound, elems, remove=True)
-        if verb in ("DELETE", "DETACH DELETE"):
-            return self._delete_from_binding(tail, bound, elems, detach="DETACH" in verb)
+            return self._foreach_from_binding(rest, bound)
+        if verb in ("SET", "REMOVE"):
+            return self._set_from_binding(rest, bound, elems, remove=verb == "REMOVE")
+        return self._delete_from_binding(
+            rest, bound, elems, detach=verb == "DETACH DELETE"
+        )
 
-        if _has_count_subquery(ret):
-            bound, ret = self._apply_count_subqueries(bound, ret)
-        resolve = _frame_resolver(bound)
-        if extra_pvars:
-            # length(sp)/nodes(sp) land as literal columns; the path-fn
-            # dispatch needs to know sp names a path (r12)
-            resolve.path_vars = extra_pvars
-        return self._project_match(bound, ret, elems, resolve)
+    def _bind_reads(self, bound: DataFrame, src: str) -> DataFrame:
+        """Bind ``src``'s ``[OPTIONAL] MATCH …`` and ``CALL { … }`` clauses
+        on ``bound``, in order: a MATCH joins back on the variables it
+        shares with the frame (``_bind_additional``; left for OPTIONAL), a
+        subquery goes through ``_apply_call_subquery_stage``. Each MATCH
+        names its anonymous pattern variables from the session counter: a
+        name reused by a later clause of the same statement (a tail after
+        a write restarts its stages) would join as a shared variable."""
+        src = src.strip()
+        while src:
+            m = re.match(r"(OPTIONAL\s+)?MATCH\b|CALL\s*(?=\{)", src, re.IGNORECASE)
+            if m is None:
+                raise ValueError(f"unsupported clause: {src[:80]!r}")
+            rest = src[m.end():]
+            if m.group(0)[0] in "cC":
+                sub, rest = _split_braced(rest.lstrip())
+                rest = rest[t.end():] if (t := _IN_TRANSACTIONS.match(rest)) else rest
+                bound = self._apply_call_subquery_stage(bound, sub)
+            else:
+                cut = _next_read(rest)
+                # above the fixed keys _match and CALL {} use (< 1000)
+                k, self._anon = 1000 + self._anon, self._anon + 1
+                bound = self._bind_additional(
+                    bound, rest[:cut].strip(), bool(m.group(1)), k
+                )
+                rest = rest[cut:]
+            src = rest.strip()
+        return bound
 
     def _run_with_stages(self, bound: DataFrame, pipeline: list) -> DataFrame:
         """WITH pipelines: each WITH stage projects/aggregates, an optional
         WHERE filters the stage output (Cypher's HAVING), and later stages
         resolve against the stage's aliases; UNWIND stages explode a list
-        into rows (SURVEY §2.B.6). Shared by the MATCH pipeline and (r11)
-        write-then-continue statements (``MATCH … SET … WITH … RETURN``)."""
-        for k2, (kind, stage_src) in enumerate(pipeline):
+        into rows (SURVEY §2.B.6). A stage may end in ``[OPTIONAL] MATCH``
+        and ``CALL { … }`` clauses, which bind on its output
+        (``_bind_reads``) — the multi-MATCH pipeline. ``_clause_tail``
+        runs every pipeline, whatever frame drives it."""
+        for kind, stage_src in pipeline:
+            cut = _next_read(stage_src)
+            own = stage_src[:cut].strip()
             if kind == "UNWIND":
-                # an UNWIND stage may also be followed by [OPTIONAL] MATCH
-                # (``UNWIND xs AS x MATCH (n {k: x}) …`` — r12)
-                h_om2 = _find_kw(stage_src, "OPTIONAL", "MATCH")
-                h_m2 = _find_kw(stage_src, "MATCH")
-                h2 = h_om2 if (h_om2 and (not h_m2 or h_om2[0] <= h_m2[0])) else h_m2
-                mtail = None
-                if h2:
-                    mtail = (h2 == h_om2, stage_src[h2[1]:].strip())
-                    stage_src = stage_src[: h2[0]].strip()
-                bound = self._unwind_stage(bound, stage_src)
-                if mtail is not None:
-                    bound = self._bind_additional(
-                        bound, mtail[1], mtail[0], 100 + k2
-                    )
+                bound = self._unwind_stage(bound, own)
+            else:
+                bound = self._with_stage(bound, own)
+            bound = self._bind_reads(bound, stage_src[cut:])
+        return bound
+
+    def _with_stage(self, bound: DataFrame, stage_src: str) -> DataFrame:
+        """One ``WITH [DISTINCT] items [ORDER BY …] [SKIP n] [LIMIT n]
+        [WHERE …]`` stage over ``bound``."""
+        h_w = _find_kw(stage_src, "WHERE")
+        where_part = stage_src[h_w[1]:].strip() if h_w else None
+        items_src = stage_src[: h_w[0]].strip() if h_w else stage_src.strip()
+        st_distinct = bool(re.match(r"DISTINCT\b", items_src, re.IGNORECASE))
+        if st_distinct:
+            items_src = items_src[len("DISTINCT"):].strip()
+        # openCypher clause order inside WITH: items [ORDER BY] [SKIP]
+        # [LIMIT] [WHERE] — the mid-pipeline top-k idiom
+        st_order = st_skip = None
+        st_limit, items_src = _trailing_int_kw(items_src, "LIMIT")
+        st_skip, items_src = _trailing_int_kw(items_src, "SKIP")
+        h_ob = _find_kw(items_src, "ORDER", "BY")
+        if h_ob:
+            st_order = items_src[h_ob[1]:].strip()
+            items_src = items_src[: h_ob[0]].strip()
+        # COUNT{} / EXISTS{} subqueries in WITH-item position (r13):
+        # same decorrelated rewrite as RETURN position — each becomes
+        # a per-binding column, the item text references it
+        if re.search(r"COUNT\s*\{", items_src, re.IGNORECASE):
+            bound, items_src = self._apply_count_subqueries(
+                bound, items_src
+            )
+        if re.search(r"EXISTS\s*\{", items_src, re.IGNORECASE):
+            bound, items_src = self._apply_exists_subqueries(
+                bound, items_src
+            )
+        # `WITH a` for a bound pattern variable carries the WHOLE
+        # binding forward (all a_* columns), so later MATCH / RETURN
+        # clauses can keep expanding from it — Cypher's variable
+        # passthrough, not a projection to one column
+        var_items: list[str] = []
+        expr_items: list[str] = []
+        star = False
+        for it in (i.strip() for i in _split_top(items_src, ",")):
+            if it == "*":
+                # WITH * — carry the entire binding forward (r12);
+                # extra items (`WITH *, expr AS x`) compose
+                star = True
                 continue
-            # a WITH stage may be followed by another [OPTIONAL] MATCH —
-            # the multi-MATCH pipeline (SURVEY §2.B.6); the new pattern
-            # joins back on the stage's still-bound variables
-            tail_match = None
-            h_om, h_m = _find_kw(stage_src, "OPTIONAL", "MATCH"), _find_kw(stage_src, "MATCH")
-            h_any = h_om if (h_om and (not h_m or h_om[0] <= h_m[0])) else h_m
-            if h_any:
-                tail_match = (h_any == h_om, stage_src[h_any[1]:].strip())
-                stage_src = stage_src[: h_any[0]].strip()
-            h_w = _find_kw(stage_src, "WHERE")
-            where_part = stage_src[h_w[1]:].strip() if h_w else None
-            items_src = stage_src[: h_w[0]].strip() if h_w else stage_src.strip()
-            st_distinct = bool(re.match(r"DISTINCT\b", items_src, re.IGNORECASE))
-            if st_distinct:
-                items_src = items_src[len("DISTINCT"):].strip()
-            # openCypher clause order inside WITH: items [ORDER BY] [SKIP]
-            # [LIMIT] [WHERE] — the mid-pipeline top-k idiom
-            st_order = st_skip = None
-            st_limit, items_src = _trailing_int_kw(items_src, "LIMIT")
-            st_skip, items_src = _trailing_int_kw(items_src, "SKIP")
-            h_ob = _find_kw(items_src, "ORDER", "BY")
-            if h_ob:
-                st_order = items_src[h_ob[1]:].strip()
-                items_src = items_src[: h_ob[0]].strip()
-            # COUNT{} / EXISTS{} subqueries in WITH-item position (r13):
-            # same decorrelated rewrite as RETURN position — each becomes
-            # a per-binding column, the item text references it
-            if re.search(r"COUNT\s*\{", items_src, re.IGNORECASE):
-                bound, items_src = self._apply_count_subqueries(
-                    bound, items_src
-                )
-            if re.search(r"EXISTS\s*\{", items_src, re.IGNORECASE):
-                bound, items_src = self._apply_exists_subqueries(
-                    bound, items_src
-                )
-            # `WITH a` for a bound pattern variable carries the WHOLE
-            # binding forward (all a_* columns), so later MATCH / RETURN
-            # clauses can keep expanding from it — Cypher's variable
-            # passthrough, not a projection to one column
-            var_items: list[str] = []
-            expr_items: list[str] = []
-            star = False
-            for it in (i.strip() for i in _split_top(items_src, ",")):
-                if it == "*":
-                    # WITH * — carry the entire binding forward (r12);
-                    # extra items (`WITH *, expr AS x`) compose
-                    star = True
-                    continue
-                if re.fullmatch(r"[A-Za-z_]\w*", it) and f"{it}_id" in bound.columns:
-                    var_items.append(it)
-                    continue
-                m_ren = re.fullmatch(
-                    r"([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)", it, re.IGNORECASE
-                )
-                if m_ren and f"{m_ren.group(1)}_id" in bound.columns:
-                    # `WITH n AS m` over a bound entity is a variable
-                    # RENAME (the whole binding carries forward under the
-                    # new name), not a projection to one column (r10)
-                    src_v, dst_v = m_ren.group(1), m_ren.group(2)
-                    for c in list(bound.columns):
-                        if c == f"{src_v}_id" or c.startswith(f"{src_v}_"):
-                            bound = bound.withColumnRenamed(
-                                c, f"{dst_v}_{c[len(src_v) + 1 :]}"
-                            )
-                    var_items.append(dst_v)
-                    continue
-                expr_items.append(it)
-            var_cols = (
-                [F.col(c) for c in bound.columns]
+            if re.fullmatch(r"[A-Za-z_]\w*", it) and f"{it}_id" in bound.columns:
+                var_items.append(it)
+                continue
+            m_ren = re.fullmatch(
+                r"([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)", it, re.IGNORECASE
+            )
+            if m_ren and f"{m_ren.group(1)}_id" in bound.columns:
+                # `WITH n AS m` over a bound entity is a variable
+                # RENAME (the whole binding carries forward under the
+                # new name), not a projection to one column (r10)
+                src_v, dst_v = m_ren.group(1), m_ren.group(2)
+                for c in list(bound.columns):
+                    if c == f"{src_v}_id" or c.startswith(f"{src_v}_"):
+                        bound = bound.withColumnRenamed(
+                            c, f"{dst_v}_{c[len(src_v) + 1 :]}"
+                        )
+                var_items.append(dst_v)
+                continue
+            expr_items.append(it)
+        var_cols = (
+            [F.col(c) for c in bound.columns]
+            if star
+            else [
+                F.col(c)
+                for v in var_items
+                for c in bound.columns
+                if c == f"{v}_id" or c.startswith(f"{v}_")
+            ]
+        )
+        keys, aggs, post, _ents = (
+            _parse_items(", ".join(expr_items), _frame_resolver(bound))
+            if expr_items
+            else ([], [], None, [])
+        )
+        if aggs:
+            kept = (
+                list(bound.columns)
                 if star
                 else [
-                    F.col(c)
+                    c
                     for v in var_items
                     for c in bound.columns
                     if c == f"{v}_id" or c.startswith(f"{v}_")
                 ]
             )
-            keys, aggs, post, _ents = (
-                _parse_items(", ".join(expr_items), _frame_resolver(bound))
-                if expr_items
-                else ([], [], None, [])
-            )
-            if aggs:
-                kept = (
-                    list(bound.columns)
-                    if star
-                    else [
-                        c
-                        for v in var_items
-                        for c in bound.columns
-                        if c == f"{v}_id" or c.startswith(f"{v}_")
-                    ]
-                )
-                group_cols = var_cols + [c for _, c in keys]
-                bound = bound.groupBy(group_cols).agg(*aggs) if group_cols else bound.agg(*aggs)
-                if post is not None:
-                    bound = _apply_post_items(bound, post, extra_cols=kept)
-            else:
-                bound = bound.select(var_cols + [c for _, c in keys])
-                if st_distinct:
-                    bound = bound.distinct()
-            if st_order:
-                bound = bound.orderBy(*_order_keys(st_order, _frame_resolver(bound)))
-            if st_skip is not None:
-                bound = bound.offset(st_skip)
-            if st_limit is not None:
-                bound = bound.limit(st_limit)
-            if where_part:
-                bound = self._apply_where(bound, where_part, _frame_resolver(bound))
-            if tail_match is not None:
-                optional, msrc = tail_match
-                bound = self._bind_additional(bound, msrc, optional, 100 + k2)
+            group_cols = var_cols + [c for _, c in keys]
+            bound = bound.groupBy(group_cols).agg(*aggs) if group_cols else bound.agg(*aggs)
+            if post is not None:
+                bound = _apply_post_items(bound, post, extra_cols=kept)
+        else:
+            bound = bound.select(var_cols + [c for _, c in keys])
+            if st_distinct:
+                bound = bound.distinct()
+        if st_order:
+            bound = bound.orderBy(*_order_keys(st_order, _frame_resolver(bound)))
+        if st_skip is not None:
+            bound = bound.offset(st_skip)
+        if st_limit is not None:
+            bound = bound.limit(st_limit)
+        if where_part:
+            bound = self._apply_where(bound, where_part, _frame_resolver(bound))
         return bound
 
     def _apply_where(self, bound: DataFrame, where_src: str, resolve=None) -> DataFrame:
@@ -4735,11 +4364,11 @@ class Session:
         arithmetic over other properties, CASE, function calls.
 
         Write-then-continue (r11 — VERDICT r10 missing #5): ``MATCH … SET
-        … WITH … [MATCH …] RETURN …`` — WITH/UNWIND stages after the SET
-        items run through the shared stage machinery over the overlaid
-        binding (read-your-writes), so a write mid-pipeline no longer has
-        to end the statement."""
-        tail, pipeline, ret = self._split_write_tail(tail)
+        … WITH … [MATCH …] RETURN …`` — what follows the SET items is a
+        clause tail over the overlaid binding (read-your-writes), so a
+        write mid-pipeline no longer has to end the statement."""
+        cut = _clause_end(tail)
+        tail, after = tail[:cut], tail[cut:]
         resolve = _frame_resolver(bound)
         per_var: dict[str, dict] = {}
         label_ops: dict[str, tuple[list, list]] = {}  # var -> (add, remove)
@@ -4825,19 +4454,17 @@ class Session:
             # read-your-writes inside this statement's RETURN
             for prop, col in props.items():
                 bound = bound.withColumn(f"{var}_{_esc(prop)}", col)
-        if pipeline:
-            bound = self._run_with_stages(bound, pipeline)
-        if ret is None:
-            return local_df(self.spark, [], "ok string")
-        return self._project_match(bound, ret, elems, _frame_resolver(bound))
+        return self._clause_tail(bound, after, elems)
 
     def _delete_from_binding(
         self, tail: str, bound: DataFrame, elems: list, detach: bool
     ) -> DataFrame:
         """Set-based ``MATCH … [DETACH] DELETE v[, w]`` — matched ids are
         anti-joined out of the store in one swap per variable. Plain DELETE
-        of a node that still has relationships raises, matching Cypher."""
-        tail, pipeline, ret = self._split_write_tail(tail)
+        of a node that still has relationships raises, matching Cypher.
+        What follows the DELETE items is a clause tail over the binding."""
+        cut = _clause_end(tail)
+        tail, after = tail[:cut], tail[cut:]
         rel_vars = {el.var for el in elems if isinstance(el, _Rel) and el.var}
         for var in (v.strip() for v in tail.split(",")):
             if f"{var}_id" not in bound.columns:
@@ -4847,11 +4474,7 @@ class Session:
                 self.store.delete_rels_by_ids(ids)
             else:
                 self.store.delete_nodes_by_ids(ids, detach=detach)
-        if pipeline:
-            bound = self._run_with_stages(bound, pipeline)
-        if ret is None:
-            return local_df(self.spark, [], "ok string")
-        return self._project_match(bound, ret, elems, _frame_resolver(bound))
+        return self._clause_tail(bound, after, elems)
 
     @staticmethod
     def _unify_props(ent: F.Column, fields) -> F.Column:
@@ -5398,12 +5021,11 @@ class Session:
         appended in ONE batch per pattern element — the binding frame is
         never collected to the driver, so a 10⁶-row MATCH binds fine.
 
-        Write-then-continue (r11): ``MATCH … CREATE … WITH … RETURN``
-        runs the shared stage machinery over the post-write binding."""
-        from .lexer import ExprText as _ET
-
-        tail, pipeline, ret = self._split_write_tail(tail)
-        elems, rest = _parse_pattern(tail)
+        Write-then-continue (r11): what follows the pattern
+        (``MATCH … CREATE … WITH … RETURN``) is a clause tail over the
+        post-write binding."""
+        cut = _clause_end(tail)
+        elems, rest = _parse_pattern(tail[:cut])
         if rest:
             raise ValueError(f"trailing content after CREATE pattern: {rest!r}")
         if any(isinstance(el, _Rel) and el.undirected for el in elems):
@@ -5461,30 +5083,7 @@ class Session:
                     ],
                 )
             )
-        if pipeline:
-            frame = self._run_with_stages(frame.drop("_idx"), pipeline)
-        if ret is None:
-            return local_df(self.spark, [], "ok string")
-        out = frame.drop("_idx") if "_idx" in frame.columns else frame
-        return self._project_match(out, ret, elems, _frame_resolver(out))
-
-    @staticmethod
-    def _split_write_tail(tail: str) -> tuple[str, list, str | None]:
-        """RETURN + WITH/UNWIND stage extraction shared by the write
-        tails (r11 write-then-continue): returns (clause_src, pipeline,
-        ret) where pipeline is [(kind, stage_src), …]."""
-        ret = None
-        parts = _split_top(tail, "RETURN")
-        if len(parts) > 1:
-            tail, ret = parts[0].strip(), parts[1].strip()
-        stages, kws = _split_pipeline(tail)
-        pipeline = []
-        if kws:
-            tail = stages[0].strip()
-            pipeline = [
-                (kws[i], stages[i + 1].strip()) for i in range(len(kws))
-            ]
-        return tail, pipeline, ret
+        return self._clause_tail(frame.drop("_idx"), tail[cut:], elems)
 
     @staticmethod
     def _split_on_set(tail: str) -> tuple[str, dict, dict]:
@@ -6227,17 +5826,8 @@ class Session:
             raise ValueError(f"Unsupported CALL after MATCH: {seg!r}")
         name = m0.group(1)
         raw, rest = self._scan_call_args(seg[m0.end():].strip())
-        rest = rest.strip()
-        yield_src = where_src = None
-        m_y = re.match(r"YIELD\s+(.+)$", rest, re.IGNORECASE | re.DOTALL)
-        if m_y:
-            ytext = m_y.group(1).strip()
-            h_w = _find_kw(ytext, "WHERE")
-            if h_w:
-                where_src = ytext[h_w[1]:].strip()
-                ytext = ytext[: h_w[0]].strip()
-            yield_src = ytext
-        elif rest:
+        yield_src, where_src, rest = _split_yield(rest)
+        if rest:
             raise ValueError(
                 f"unsupported text after CALL {name}(…): {rest!r}"
             )

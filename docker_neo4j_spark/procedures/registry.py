@@ -1778,7 +1778,10 @@ def _gds_graph_exists(spark: SparkSession, graphName: str = "") -> DataFrame:
         "relationshipWeightProperty :: STRING) :: "
         "(sourceNode :: INTEGER, targetNode :: INTEGER, totalCost :: FLOAT)"
     ),
-    description="Shortest-path cost from a source over a projected graph (unit weights)",
+    description=(
+        "Shortest-path cost from a source over a projected graph: weighted "
+        "by relationshipWeightProperty when given, else hop counts"
+    ),
 )
 def _gds_dijkstra_stream(
     spark: SparkSession, graphName: str = "",

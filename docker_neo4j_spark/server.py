@@ -16,39 +16,13 @@ DataFrame API; a 100 TB batch job would never round-trip rows over HTTP.
 
 from __future__ import annotations
 
-import datetime
-import decimal
 import json
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from .bolt.server import _bolt_value
 from .cypher.session import Session
-
-
-def _jsonable(v):
-    """Row value → JSON-serializable (dates/decimals/arrays)."""
-    if isinstance(v, datetime.timedelta):
-        from .bolt.server import _iso_duration
-
-        return _iso_duration(v)
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if hasattr(v, "toPython"):
-        # VariantVal (typed entity properties — r11): decode to native
-        return _jsonable(v.toPython())
-    if hasattr(v, "asDict"):
-        # nested struct Row (entity serialization — r10): a Row is a
-        # tuple, so this must precede the sequence branch or the field
-        # names (id/labels/properties) would be lost in the JSON body
-        return {k: _jsonable(x) for k, x in v.asDict().items()}
-    if isinstance(v, (list, tuple)):
-        return [_jsonable(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _jsonable(x) for k, x in v.items()}
-    return v
 
 
 MAX_RESULT_ROWS = 10_000
@@ -75,7 +49,7 @@ def run_statements(
             result = {
                 "columns": list(df.columns),
                 "data": [
-                    {"row": [_jsonable(v) for v in r]} for r in rows[:max_rows or None]
+                    {"row": [_bolt_value(v) for v in r]} for r in rows[:max_rows or None]
                 ],
             }
             if has_more:

@@ -1555,8 +1555,8 @@ def test_temporal_map_constructors(session):
 def test_label_mutation_read_your_writes_and_unwind_with(session):
     """RETURN after SET/REMOVE label mutations reflects the mutation in
     the same statement (labels mirrored like property updates — r10);
-    UNWIND … WITH … pipelines route through the standalone stage
-    machinery."""
+    UNWIND … WITH … pipelines run through the same clause tail as a MATCH
+    pipeline, over one unit row."""
     session.run("CREATE (:L1 {name:'x'})")
     ls = session.run(
         "MATCH (a:L1) REMOVE a:L1 RETURN labels(a) AS ls"
@@ -1996,3 +1996,100 @@ def test_with_star_passthrough(spark):
     assert s.run(
         "MATCH (n:Ws) WITH * WHERE n.k > 1 RETURN n.v AS v"
     ).collect()[0].v == "b"
+
+
+# One clause tail after every driving frame: stages, then a write verb or
+# RETURN, the same whether a MATCH, a CALL, LOAD CSV, a write or one unit
+# row (a statement opening with WITH/UNWIND/RETURN) drives them. Each shape
+# below once failed or differed on one of the separate pipelines.
+_CLAUSE_TAIL_SHAPES = [
+    pytest.param(
+        "WITH [1,2] AS l UNWIND l AS y CALL { WITH y RETURN y * 2 AS z } "
+        "RETURN sum(z) AS s",
+        None, [(6,)], id="with-unwind-call-subquery",
+    ),
+    pytest.param(
+        "UNWIND [1,2] AS x WITH x CREATE (:T {v: x})",
+        "MATCH (t:T) RETURN t.v AS v ORDER BY v", [(1,), (2,)],
+        id="unwind-with-create",
+    ),
+    pytest.param(
+        "UNWIND [1,2] AS x WITH x * 10 AS y MERGE (:W {v: y})",
+        "MATCH (w:W) RETURN w.v AS v ORDER BY v", [(10,), (20,)],
+        id="unwind-with-merge",
+    ),
+    pytest.param(
+        "MATCH (p:P {name:'a'}) SET p.v = 10 WITH p CREATE (:X {v: p.v})",
+        "MATCH (x:X) RETURN x.v AS v", [(10,)], id="set-with-create",
+    ),
+    pytest.param(
+        "CALL db.labels() YIELD label WITH label CREATE (:L {n: label})",
+        "MATCH (l:L) RETURN l.n AS n ORDER BY n", [("P",), ("Q",)],
+        id="call-yield-with-create",
+    ),
+    pytest.param(
+        "LOAD CSV WITH HEADERS FROM 'file://{csv}' AS row "
+        "WITH row CREATE (:D {name: row.name})",
+        "MATCH (d:D) RETURN d.name AS n ORDER BY n", [("x",), ("y",)],
+        id="load-csv-with-create",
+    ),
+    pytest.param("RETURN DISTINCT 1 AS one", None, [(1,)], id="return-distinct"),
+    pytest.param("RETURN avg(4) AS a", None, [(4.0,)], id="return-avg"),
+    pytest.param("RETURN collect(null) AS c", None, [([],)], id="return-collect-null"),
+]
+
+
+@pytest.mark.parametrize("stmt, check, want", _CLAUSE_TAIL_SHAPES)
+def test_clause_tail_shapes(session, tmp_path, stmt, check, want):
+    """Each statement returns the rows (or writes what) its unit-row
+    pipeline form does; ``avg`` over one row is a double, as over many."""
+    csv = tmp_path / "rows.csv"
+    csv.write_text("name\nx\ny\n")
+    session.run("CREATE (:P {name: 'a'}), (:P {name: 'b'}), (:Q {name: 'c'})")
+    out = session.run(stmt.replace("{csv}", str(csv)))
+    rows = out.collect()
+    if check is not None:
+        assert rows == []
+        out = session.run(check)
+        rows = out.collect()
+    assert [tuple(r) for r in rows] == want
+    if "avg" in stmt:
+        assert dict(out.dtypes)["a"] == "double"
+
+
+def test_yield_list_ends_at_clause_keyword(session):
+    """The YIELD list ends at the first clause keyword: a MATCH after it
+    binds on the yielded frame (cartesian here, correlated by WHERE
+    below) instead of being read as a YIELD column, and SHOW's YIELD
+    continues into the same clause tail as CALL's."""
+    session.run("CREATE (:P {name: 'a'}), (:P {name: 'b'}), (:Q {name: 'c'})")
+    n = session.run(
+        "CALL db.labels() YIELD label MATCH (p:P) RETURN count(*) AS n"
+    ).collect()[0]["n"]
+    assert n == 4
+    rows = session.run(
+        "CALL db.labels() YIELD label WHERE label STARTS WITH 'P' "
+        "OPTIONAL MATCH (n) WHERE label IN labels(n) "
+        "RETURN label, count(n) AS c ORDER BY label"
+    ).collect()
+    assert [tuple(r) for r in rows] == [("P", 2)]
+    n = session.run(
+        "SHOW PROCEDURES YIELD name WITH name WHERE name STARTS WITH 'gds.wcc.' "
+        "RETURN count(*) AS n"
+    ).collect()[0]["n"]
+    assert n == 4
+
+
+def test_write_then_continue_keeps_anonymous_variables_apart(session):
+    """A clause tail after a write restarts its stages; the MATCH in the
+    later stage must not reuse an anonymous node name an earlier stage
+    carried forward with WITH *, or the two would join as one variable
+    (the count was 1: only the path through the earlier neighbour)."""
+    session.run(
+        "CREATE (a:An {k: 'A'}), (b:An {k: 'B'}), (c:An {k: 'C'}), "
+        "(d:An {k: 'D'}), (a)-[:R]->(b), (a)-[:R]->(c), (b)-[:R]->(d)"
+    )
+    tail = "WITH * MATCH (a)-->()-->() RETURN count(*) AS c"
+    read = session.run(f"MATCH (a:An) WITH * MATCH (a)-->() {tail}")
+    written = session.run(f"MATCH (a:An) WITH * MATCH (a)-->() SET a.x = 1 {tail}")
+    assert read.collect()[0]["c"] == written.collect()[0]["c"] == 2

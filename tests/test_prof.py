@@ -96,3 +96,42 @@ def test_ab_imports_the_engine_from_each_tree(tmp_path):
     # one row per side: 2 runs, and the same 1 job / 1 stage / 1 task in each
     assert [r[1] for r in rows] == ["A", "B"]
     assert all(r[5].endswith("/2") and r[6] == "1/1/1" and len(r) == 9 for r in rows), out.stdout
+
+
+_CODELINES = Path(__file__).resolve().parents[1] / "scripts" / "codelines.py"
+_cl_spec = importlib.util.spec_from_file_location("codelines", _CODELINES)
+codelines = importlib.util.module_from_spec(_cl_spec)
+_cl_spec.loader.exec_module(codelines)
+
+
+def test_codelines_skips_docstrings_comments_and_blank_lines():
+    """A line counts when it holds a token other than a comment, a line
+    break or an indent change, outside module/class/function docstrings;
+    a multi-line string that is not a docstring counts every line."""
+    src = (
+        '"""Module\n'
+        'docstring."""\n'
+        "\n"
+        "# a comment\n"
+        "import os  # trailing comment\n"
+        "\n"
+        "\n"
+        "class C:\n"
+        '    """Class docstring."""\n'
+        "\n"
+        "    def f(self, x):\n"
+        '        """Function\n'
+        "        docstring.\n"
+        '        """\n'
+        "        y = (x +\n"
+        "             1)\n"
+        '        s = """not a\n'
+        '        docstring"""\n'
+        '        "a bare string after the first statement"\n'
+        "        return y, s\n"
+    )
+    # import, class, def, the two lines of y, both lines of s, the bare
+    # string, return
+    assert codelines.count(src) == 9
+    assert codelines.count("") == 0
+    assert codelines.docstring_lines(src) == {1, 2, 9, 12, 13, 14}

@@ -62,88 +62,60 @@ def _parse_pattern(src: str):
     return elems, rest
 
 
-def _split_pipeline(src: str) -> tuple[list[str], list[str]]:
-    """Depth-0, quote-safe split of a clause body on WITH / UNWIND stage
-    keywords (``STARTS WITH`` / ``ENDS WITH`` predicates kept intact by
-    the preceding-ident guard) — the token-stream port of the
-    lookbehind-regex splitter."""
+# the clause keywords a statement splits on; OPTIONAL and DETACH open the
+# two-word clauses OPTIONAL MATCH and DETACH DELETE
+_CLAUSE_KWS = frozenset((
+    "WITH", "UNWIND", "RETURN", "MATCH", "OPTIONAL", "CALL", "CREATE",
+    "MERGE", "SET", "REMOVE", "DETACH", "DELETE", "FOREACH",
+))
+# a statement's terminal clauses: the write verbs and RETURN
+_TERMINALS = frozenset((
+    "CREATE", "MERGE", "SET", "REMOVE", "DETACH DELETE", "DELETE",
+    "FOREACH", "RETURN",
+))
+_SHORTEST_RE = re.compile(
+    r"(?:\w+\s*=\s*)?(?:allShortestPaths|shortestPath)\s*\(", re.IGNORECASE
+)
+
+
+def _clauses(src: str) -> list[tuple[int, int, str]]:
+    """``(start, end, keyword)`` of every depth-0 clause keyword in
+    ``src``, in order and quote-safe; ``OPTIONAL MATCH`` and ``DETACH
+    DELETE`` come as one keyword. ``STARTS WITH`` / ``ENDS WITH``
+    predicates, dotted names and label segments are not clauses."""
     from .lexer import _CLOSE, _OPEN, tokenize
 
-    parts: list[str] = []
-    kws: list[str] = []
-    depth = start = 0
-    prev_ident: str | None = None
-    for t in tokenize(src):
+    toks = tokenize(src)
+    out: list[tuple[int, int, str]] = []
+    depth = 0
+    for i, t in enumerate(toks):
         if t.kind == "punct":
             depth += 1 if t.text in _OPEN else (-1 if t.text in _CLOSE else 0)
-            prev_ident = None
             continue
-        if t.kind == "ident":
-            up = t.text.upper()
-            if (
-                depth == 0
-                and up in ("WITH", "UNWIND")
-                and not (up == "WITH" and prev_ident in ("STARTS", "ENDS"))
-            ):
-                parts.append(src[start : t.pos])
-                kws.append(up)
-                start = t.end
-            prev_ident = up
+        up = t.text.upper()
+        prev = toks[i - 1] if i else None
+        if (
+            depth
+            or t.kind != "ident"
+            or up not in _CLAUSE_KWS
+            or (prev and prev.kind == "punct" and prev.text in (".", ":"))
+            or (up == "WITH" and prev and prev.text.upper() in ("STARTS", "ENDS"))
+        ):
+            continue
+        pair = f"{out[-1][2]} {up}" if out and out[-1][0] == prev.pos else ""
+        if pair in ("OPTIONAL MATCH", "DETACH DELETE"):
+            out[-1] = (out[-1][0], t.end, pair)
         else:
-            prev_ident = None
-    parts.append(src[start:])
-    return parts, kws
-
-
-# a statement's terminal clauses: the write verbs and RETURN
-_TERMINALS = (
-    ("CREATE",), ("MERGE",), ("SET",), ("REMOVE",), ("DETACH", "DELETE"),
-    ("DELETE",), ("FOREACH",), ("RETURN",),
-)
-
-
-def _find_terminal(src: str) -> tuple[int, int, str] | None:
-    """``(start, end, verb)`` of the first depth-0 write verb or RETURN in
-    ``src``; None when there is none."""
-    hits = [
-        (h[0], h[1], " ".join(words))
-        for words in _TERMINALS
-        if (h := _find_kw(src, *words))
-    ]
-    return min(hits) if hits else None
-
-
-_CLAUSE_KWS = frozenset(
-    ("WITH", "UNWIND", "RETURN", "MATCH", "OPTIONAL", "CALL")
-    + tuple(words[0] for words in _TERMINALS)
-)
+            out.append((t.pos, t.end, up))
+    return out
 
 
 def _clause_end(src: str) -> int:
     """Offset of the first depth-0 clause keyword in ``src`` (``len(src)``
-    when none): where a SET/REMOVE/DELETE item list, a CREATE pattern or
-    a YIELD list ends. ``STARTS WITH`` / ``ENDS WITH`` predicates, dotted
-    names and label segments are not clauses."""
-    from .lexer import _CLOSE, _OPEN, tokenize
-
-    depth, prev = 0, None
-    for t in tokenize(src):
-        if t.kind == "punct":
-            depth += 1 if t.text in _OPEN else (-1 if t.text in _CLOSE else 0)
-        elif (
-            depth == 0
-            and t.kind == "ident"
-            and t.text.upper() in _CLAUSE_KWS
-            and not (prev is not None and prev.kind == "punct" and prev.text in ".:")
-            and not (
-                t.text.upper() == "WITH"
-                and prev is not None
-                and prev.text.upper() in ("STARTS", "ENDS")
-            )
-        ):
-            return t.pos
-        prev = t
-    return len(src)
+    when none): where a pattern, a SET/REMOVE/DELETE item list, a WITH or
+    UNWIND stage or a YIELD list ends."""
+    hits = _clauses(src)
+    return hits[0][0] if hits else len(src)
 
 
 def _split_yield(src: str) -> tuple[str | None, str | None, str]:
@@ -162,21 +134,6 @@ def _split_yield(src: str) -> tuple[str | None, str | None, str]:
     if h_w is None:
         return cols, None, rest
     return cols[: h_w[0]].strip(), cols[h_w[1]:].strip(), rest
-
-
-def _next_read(src: str) -> int:
-    """Offset of the first depth-0 ``[OPTIONAL] MATCH`` or ``CALL { … }``
-    in ``src`` (``len(src)`` when none) — the reading clauses that may
-    follow a WITH/UNWIND stage."""
-    hits = [
-        h[0]
-        for h in (_find_kw(src, "OPTIONAL", "MATCH"), _find_kw(src, "MATCH"))
-        if h
-    ]
-    h_call = _find_kw(src, "CALL")
-    if h_call and src[h_call[1]:].lstrip().startswith("{"):
-        hits.append(h_call[0])
-    return min(hits, default=len(src))
 
 
 def _split_braced(src: str) -> tuple[str, str]:
@@ -3479,7 +3436,7 @@ class Session:
 
     def _match(self, q: str) -> DataFrame:
         body = q[len("MATCH"):].strip()
-        if re.match(r"(?:\w+\s*=\s*)?(?:allShortestPaths|shortestPath)\s*\(", body, re.IGNORECASE):
+        if _SHORTEST_RE.match(body):
             return self._shortest_path(body)
         if (
             "*" in body
@@ -3489,42 +3446,11 @@ class Session:
             body = self._rewrite_varlen_rel_list(body)
         if re.match(r"\w+\s*=\s*\(", body):
             return self._path_binding(body)
-        # the pattern clauses end where the clause tail begins: the first
-        # WITH/UNWIND stage, write verb or RETURN (`STARTS WITH` / `ENDS
-        # WITH` kept intact by the splitter's preceding-ident guard)
-        h = _find_terminal(body)
-        pattern_src = _split_pipeline(body[: h[0]] if h else body)[0][0]
-        tail = body[len(pattern_src):]
-        # correlated CALL { [WITH imports] … RETURN … } after the pattern
-        # (r10): extract the braced subquery before the OPTIONAL-MATCH /
-        # WHERE splits — inner clauses are brace-guarded from them
-        call_sub = call_proc = None
-        h_call = _find_kw(pattern_src, "CALL")
-        if h_call:
-            seg = pattern_src[h_call[1]:].lstrip()
-            if seg.startswith("{"):
-                call_sub, trailing = _split_braced(seg)
-                if trailing.strip():
-                    raise ValueError(
-                        f"unsupported clause after CALL subquery: {trailing.strip()!r}"
-                    )
-                pattern_src = pattern_src[: h_call[0]].strip()
-            elif re.match(r"\(", seg) is None:
-                # non-braced procedure CALL after the pattern (r12) —
-                # the canonical GDS shape: ``MATCH (source:…)
-                # CALL gds.x.y('g', {sourceNode: source}) YIELD …``
-                call_proc = self._parse_call_proc_stage(seg)
-                pattern_src = pattern_src[: h_call[0]].strip()
-        # OPTIONAL MATCH segments follow the main pattern (and its WHERE)
-        segments = _split_kw(pattern_src, "OPTIONAL", "MATCH")
-        pattern_src, optionals = segments[0].strip(), [s.strip() for s in segments[1:]]
-        # consecutive plain MATCH clauses with no WITH between (r11):
-        # ``MATCH p1 [WHERE …] MATCH p2 [WHERE …]`` — each later clause
-        # binds via the shared additional-match join (inner on shared
-        # variables, cartesian when disconnected — the Cypher rule)
-        plain_segs = _split_kw(pattern_src, "MATCH")
-        pattern_src = plain_segs[0].strip()
-        extra_matches = [s.strip() for s in plain_segs[1:]]
+        # the pattern groups and their WHERE end at the first depth-0
+        # clause keyword; the clause tail binds every later clause
+        tail_hits = _clauses(body)
+        cut = tail_hits[0][0] if tail_hits else len(body)
+        pattern_src, tail = body[:cut].strip(), body[cut:]
         where_src = None
         h_where = _find_kw(pattern_src, "WHERE")
         if h_where:
@@ -3547,7 +3473,7 @@ class Session:
         rel_ids_needed = True if re.search(
             r"\b(?:RETURN|WITH)\s+(?:DISTINCT\s+)?\*(?:\s|,|$)", tail, re.IGNORECASE
         ) else None
-        writes = bool(_find_kw(tail, "SET") or _find_kw(tail, "REMOVE"))
+        writes = any(kw in ("SET", "REMOVE") for _, _, kw in tail_hits)
         for el in elems:
             if rel_ids_needed or not (isinstance(el, _Rel) and el.var):
                 continue
@@ -3565,32 +3491,10 @@ class Session:
             bound = gbound if bound is None else bound.crossJoin(gbound)
         if where_src:
             bound = self._apply_where(bound, where_src)
-        extra_pvars: set[str] = set()
-        for j, seg in enumerate(extra_matches):
-            if re.match(
-                r"(?:\w+\s*=\s*)?(?:allShortestPaths|shortestPath)\s*\(",
-                seg,
-                re.IGNORECASE,
-            ):
-                # shortestPath over endpoints the previous MATCH bound (r12)
-                bound, pv = self._shortest_path_additional(bound, seg)
-                if pv:
-                    extra_pvars.add(pv)
-                continue
-            bound = self._bind_additional(bound, seg, False, 300 + j)
-        for k, opt in enumerate(optionals):
-            # RETURN/ORDER BY resolve purely by column name, so the new
-            # `{var}_{prop}` columns are visible without touching `elems`
-            bound = self._bind_optional(bound, opt, k)
-        if call_sub is not None:
-            bound = self._apply_call_subquery_stage(bound, call_sub)
-        if call_proc is not None:
-            bound = self._apply_call_proc_stage(bound, call_proc)
-
-        return self._clause_tail(bound, tail, elems, path_vars=extra_pvars)
+        return self._clause_tail(bound, tail, elems)
 
     def _clause_tail(
-        self, bound: DataFrame, src: str, elems: list, path_vars=None
+        self, bound: DataFrame, src: str, elems: list, wrote: bool = False
     ) -> DataFrame:
         """Everything a statement does after its driving frame ``bound`` —
         a MATCH binding, a CALL's output, LOAD CSV's rows, a write's
@@ -3598,36 +3502,47 @@ class Session:
         UNWIND or RETURN (openCypher: a query with no MATCH starts from
         one empty row).
 
-        ``src`` is split at depth 0: leading ``[OPTIONAL] MATCH`` /
-        ``CALL { … }`` clauses bind on the frame, WITH/UNWIND stages run
+        ``src`` is split at depth 0: leading ``[OPTIONAL] MATCH`` / ``CALL``
+        clauses bind on the frame (``_bind_reads``), WITH/UNWIND stages run
         through ``_run_with_stages``, and the terminal clause goes to its
         handler — RETURN to ``_project_match`` (COUNT{} applied first), a
         write verb to its ``_*_from_binding`` handler, which hands what
-        follows its own clause back here (write-then-continue). With no
-        terminal clause the result is the empty ``ok`` frame. ``elems``
-        is the driving pattern (DELETE tells rel variables by it);
-        ``path_vars`` names shortestPath variables for RETURN's path
-        functions."""
-        h = _find_terminal(src)
-        parts, kws = _split_pipeline(src[: h[0]] if h else src)
-        bound = self._bind_reads(bound, parts[0])
+        follows its own clause back here (write-then-continue, ``wrote``).
+        A statement must end in RETURN or a write, as in Cypher; only the
+        rest of a write may end without one, and then the result is the
+        empty ``ok`` frame. ``elems`` is the driving pattern (DELETE tells
+        rel variables by it)."""
+        hits = _clauses(src)
+        n = next((i for i, h in enumerate(hits) if h[2] in _TERMINALS), len(hits))
+        stages = [h for h in hits[:n] if h[2] in ("WITH", "UNWIND")]
+        ends = [h[0] for h in stages] + [hits[n][0] if n < len(hits) else len(src)]
+        bound = self._bind_reads(bound, src[: ends[0]])
         bound = self._run_with_stages(
-            bound, [(kw, parts[i + 1].strip()) for i, kw in enumerate(kws)]
+            bound,
+            [(kw, src[e : ends[j + 1]].strip()) for j, (_, e, kw) in enumerate(stages)],
         )
-        if h is None:
-            return local_df(self.spark, [], "ok string")
-        verb, rest = h[2], src[h[1]:].strip()
+        if n == len(hits):
+            if wrote:
+                return local_df(self.spark, [], "ok string")
+            # an empty tail follows a MATCH pattern
+            last = hits[-1][2] if hits else "MATCH"
+            raise ValueError(
+                f"Query cannot conclude with {last} "
+                "(must be a RETURN clause or a write clause)"
+            )
+        verb, rest = hits[n][2], src[hits[n][1]:].strip()
         if verb == "RETURN":
             if _has_count_subquery(rest):
                 bound, rest = self._apply_count_subqueries(bound, rest)
             resolve = _frame_resolver(bound)
+            # shortestPath in a later MATCH lands length(sp)/nodes(sp) as
+            # columns; the path-fn dispatch needs to know sp names a path
+            path_vars = {c[6:-1] for c in bound.columns if c.startswith("nodes(")}
             if path_vars:
-                # length(sp)/nodes(sp) land as literal columns; the path-fn
-                # dispatch needs to know sp names a path (r12)
                 resolve.path_vars = path_vars
             return self._project_match(bound, rest, elems, resolve)
         if verb == "CREATE":
-            return self._create_from_binding(rest, bound)
+            return self._create_from_binding(rest, bound, elems)
         if verb == "MERGE":
             return self._merge_from_binding(rest, bound)
         if verb == "FOREACH":
@@ -3639,32 +3554,40 @@ class Session:
         )
 
     def _bind_reads(self, bound: DataFrame, src: str) -> DataFrame:
-        """Bind ``src``'s ``[OPTIONAL] MATCH …`` and ``CALL { … }`` clauses
-        on ``bound``, in order: a MATCH joins back on the variables it
-        shares with the frame (``_bind_additional``; left for OPTIONAL), a
-        subquery goes through ``_apply_call_subquery_stage``. Each MATCH
-        names its anonymous pattern variables from the session counter: a
-        name reused by a later clause of the same statement (a tail after
-        a write restarts its stages) would join as a shared variable."""
-        src = src.strip()
-        while src:
-            m = re.match(r"(OPTIONAL\s+)?MATCH\b|CALL\s*(?=\{)", src, re.IGNORECASE)
-            if m is None:
-                raise ValueError(f"unsupported clause: {src[:80]!r}")
-            rest = src[m.end():]
-            if m.group(0)[0] in "cC":
-                sub, rest = _split_braced(rest.lstrip())
+        """Bind ``src``'s reading clauses on ``bound``, in order: a MATCH
+        joins back on the variables it shares with the frame
+        (``_bind_additional``; left for OPTIONAL) or, for shortestPath,
+        searches between endpoints the frame bound; ``CALL { … }`` goes
+        through ``_apply_call_subquery_stage`` and a procedure CALL through
+        ``_apply_call_proc_stage``. Each MATCH names its anonymous pattern
+        variables from the session counter: a name reused by a later
+        clause of the same statement (a tail after a write restarts its
+        stages) would join as a shared variable."""
+        hits = _clauses(src)
+        if src[: hits[0][0] if hits else len(src)].strip():
+            raise ValueError(f"unsupported clause: {src.strip()[:80]!r}")
+        for j, (_, e, kw) in enumerate(hits):
+            body = src[e : hits[j + 1][0] if j + 1 < len(hits) else len(src)].strip()
+            if kw == "CALL" and body.startswith("{"):
+                sub, rest = _split_braced(body)
                 rest = rest[t.end():] if (t := _IN_TRANSACTIONS.match(rest)) else rest
+                if rest.strip():
+                    raise ValueError(
+                        f"unsupported clause after CALL subquery: {rest.strip()!r}"
+                    )
                 bound = self._apply_call_subquery_stage(bound, sub)
-            else:
-                cut = _next_read(rest)
-                # above the fixed keys _match and CALL {} use (< 1000)
-                k, self._anon = 1000 + self._anon, self._anon + 1
-                bound = self._bind_additional(
-                    bound, rest[:cut].strip(), bool(m.group(1)), k
+            elif kw == "CALL":
+                bound = self._apply_call_proc_stage(
+                    bound, self._parse_call_proc_stage(body)
                 )
-                rest = rest[cut:]
-            src = rest.strip()
+            elif kw == "MATCH" and _SHORTEST_RE.match(body):
+                bound = self._shortest_path_additional(bound, body)
+            elif kw in ("MATCH", "OPTIONAL MATCH"):
+                # above the fixed keys CALL {} uses (< 1000)
+                k, self._anon = 1000 + self._anon, self._anon + 1
+                bound = self._bind_additional(bound, body, kw != "MATCH", k)
+            else:
+                raise ValueError(f"unsupported clause: {kw}")
         return bound
 
     def _run_with_stages(self, bound: DataFrame, pipeline: list) -> DataFrame:
@@ -3672,11 +3595,11 @@ class Session:
         WHERE filters the stage output (Cypher's HAVING), and later stages
         resolve against the stage's aliases; UNWIND stages explode a list
         into rows (SURVEY §2.B.6). A stage may end in ``[OPTIONAL] MATCH``
-        and ``CALL { … }`` clauses, which bind on its output
-        (``_bind_reads``) — the multi-MATCH pipeline. ``_clause_tail``
-        runs every pipeline, whatever frame drives it."""
+        and ``CALL`` clauses, which bind on its output (``_bind_reads``) —
+        the multi-MATCH pipeline. ``_clause_tail`` runs every pipeline,
+        whatever frame drives it."""
         for kind, stage_src in pipeline:
-            cut = _next_read(stage_src)
+            cut = _clause_end(stage_src)
             own = stage_src[:cut].strip()
             if kind == "UNWIND":
                 bound = self._unwind_stage(bound, own)
@@ -4454,7 +4377,7 @@ class Session:
             # read-your-writes inside this statement's RETURN
             for prop, col in props.items():
                 bound = bound.withColumn(f"{var}_{_esc(prop)}", col)
-        return self._clause_tail(bound, after, elems)
+        return self._clause_tail(bound, after, elems, wrote=True)
 
     def _delete_from_binding(
         self, tail: str, bound: DataFrame, elems: list, detach: bool
@@ -4474,7 +4397,7 @@ class Session:
                 self.store.delete_rels_by_ids(ids)
             else:
                 self.store.delete_nodes_by_ids(ids, detach=detach)
-        return self._clause_tail(bound, after, elems)
+        return self._clause_tail(bound, after, elems, wrote=True)
 
     @staticmethod
     def _unify_props(ent: F.Column, fields) -> F.Column:
@@ -4939,9 +4862,7 @@ class Session:
             joined = joined.where(_compile_where(where_src, resolve))
         return self._project_match(joined, ret, elems, resolve)
 
-    def _shortest_path_additional(
-        self, bound: DataFrame, seg: str
-    ) -> tuple[DataFrame, str | None]:
+    def _shortest_path_additional(self, bound: DataFrame, seg: str) -> DataFrame:
         """``MATCH (a:…), (b:…) MATCH sp = shortestPath((a)-[*..k]-(b))``
         (r12) — shortestPath whose endpoints a PREVIOUS clause bound. The
         BSP path search runs once over the DISTINCT endpoint id sets and
@@ -5013,9 +4934,11 @@ class Session:
             & (F.col(f"{b.var}_id") == F.col("_spb")),
             "inner",
         ).drop("_spa", "_spb")
-        return joined, pvar
+        return joined
 
-    def _create_from_binding(self, tail: str, bound: DataFrame) -> DataFrame:
+    def _create_from_binding(
+        self, tail: str, bound: DataFrame, driving: list
+    ) -> DataFrame:
         """Set-based ``MATCH … CREATE …`` (SURVEY §2.B.13): one new node/rel
         per binding row, id-assigned distributed (``stage_indexed``) and
         appended in ONE batch per pattern element — the binding frame is
@@ -5023,7 +4946,8 @@ class Session:
 
         Write-then-continue (r11): what follows the pattern
         (``MATCH … CREATE … WITH … RETURN``) is a clause tail over the
-        post-write binding."""
+        post-write binding; it keeps the ``driving`` pattern, so a later
+        ``DELETE r`` still knows ``r`` for a relationship."""
         cut = _clause_end(tail)
         elems, rest = _parse_pattern(tail[:cut])
         if rest:
@@ -5083,7 +5007,9 @@ class Session:
                     ],
                 )
             )
-        return self._clause_tail(frame.drop("_idx"), tail[cut:], elems)
+        return self._clause_tail(
+            frame.drop("_idx"), tail[cut:], [*driving, *elems], wrote=True
+        )
 
     @staticmethod
     def _split_on_set(tail: str) -> tuple[str, dict, dict]:

@@ -2093,3 +2093,55 @@ def test_write_then_continue_keeps_anonymous_variables_apart(session):
     read = session.run(f"MATCH (a:An) WITH * MATCH (a)-->() {tail}")
     written = session.run(f"MATCH (a:An) WITH * MATCH (a)-->() SET a.x = 1 {tail}")
     assert read.collect()[0]["c"] == written.collect()[0]["c"] == 2
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "MATCH (a)-[r:R]->(b) CREATE (a)-[:S]->(b) DELETE r",
+        "MATCH (a)-[r:R]->(b) CREATE (a)-[:S]->(b) SET a.moved = true DELETE r",
+    ],
+    ids=["create-delete", "create-set-delete"],
+)
+def test_create_then_delete_relationship_variable(session, stmt):
+    """Changing a relationship's type: the clauses after CREATE still know
+    ``r`` for a relationship of the MATCH, so DELETE removes the old
+    relationship and no node."""
+    session.run("CREATE (:P {name: 'a'})-[:R]->(:P {name: 'b'}), (:Q {name: 'c'})")
+    session.run(stmt).collect()
+
+    def count(q):
+        return session.run(q).collect()[0]["c"]
+
+    assert count("MATCH ()-[r:R]->() RETURN count(r) AS c") == 0
+    assert count("MATCH (:P {name: 'a'})-[s:S]->(:P {name: 'b'}) RETURN count(s) AS c") == 1
+    assert count("MATCH (n) RETURN count(n) AS c") == 3
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    ["MATCH (n)", "MATCH (n) OPTIONAL MATCH (n)-->(m)", "WITH 1 AS x",
+     "UNWIND [1] AS x", "CALL db.labels() YIELD label WITH label"],
+)
+def test_statement_must_conclude_with_return_or_write(session, stmt):
+    """A query that ends in a reading clause is rejected, as in Cypher;
+    the rest of a write may end without RETURN."""
+    session.run("CREATE (:P {name: 'a'})")
+    with pytest.raises(ValueError, match="cannot conclude"):
+        session.run(stmt)
+    assert session.run("MATCH (n:P) SET n.x = 1 WITH n").collect() == []
+
+
+def test_reading_clauses_bind_in_statement_order(session):
+    """MATCH, OPTIONAL MATCH and CALL after the first pattern bind in the
+    order written: the MATCH after the OPTIONAL MATCH drops the row whose
+    optional ``x`` is null, and sees ``x`` as the bound variable."""
+    session.run(
+        "CREATE (a:P {name: 'a'})-[:R]->(x:X {name: 'x1'})-[:S]->(:Y {name: 'y1'}), "
+        "(:P {name: 'b'}), (:X {name: 'x2'})-[:S]->(:Y {name: 'y2'})"
+    )
+    rows = session.run(
+        "MATCH (p:P) OPTIONAL MATCH (p)-[:R]->(x) MATCH (x)-[:S]->(y) "
+        "RETURN p.name AS p, y.name AS y ORDER BY p, y"
+    ).collect()
+    assert [tuple(r) for r in rows] == [("a", "y1")]

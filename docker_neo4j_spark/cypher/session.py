@@ -82,12 +82,13 @@ def _clauses(src: str) -> list[tuple[int, int, str]]:
     """``(start, end, keyword)`` of every depth-0 clause keyword in
     ``src``, in order and quote-safe; ``OPTIONAL MATCH`` and ``DETACH
     DELETE`` come as one keyword. ``STARTS WITH`` / ``ENDS WITH``
-    predicates, dotted names and label segments are not clauses."""
+    predicates, dotted names, label segments and MERGE's ``ON CREATE
+    SET`` / ``ON MATCH SET`` are not clauses."""
     from .lexer import _CLOSE, _OPEN, tokenize
 
     toks = tokenize(src)
     out: list[tuple[int, int, str]] = []
-    depth = 0
+    depth, on_set = 0, False
     for i, t in enumerate(toks):
         if t.kind == "punct":
             depth += 1 if t.text in _OPEN else (-1 if t.text in _CLOSE else 0)
@@ -101,6 +102,13 @@ def _clauses(src: str) -> list[tuple[int, int, str]]:
             or (prev and prev.kind == "punct" and prev.text in (".", ":"))
             or (up == "WITH" and prev and prev.text.upper() in ("STARTS", "ENDS"))
         ):
+            continue
+        # MERGE's ON CREATE SET / ON MATCH SET belong to the MERGE clause
+        if up in ("CREATE", "MATCH") and prev and prev.text.upper() == "ON":
+            on_set = True
+            continue
+        if on_set and up == "SET":
+            on_set = False
             continue
         pair = f"{out[-1][2]} {up}" if out and out[-1][0] == prev.pos else ""
         if pair in ("OPTIONAL MATCH", "DETACH DELETE"):
@@ -686,6 +694,33 @@ def _frame_resolver(frame: DataFrame):
         return _default_resolver(name)
 
     return resolve
+
+
+def _is_rel_var(frame: DataFrame, var: str) -> bool:
+    """Whether ``var`` binds a relationship in ``frame``: only a
+    relationship carries a ``var_type`` column (a property named ``type``
+    stores escaped). SET, REMOVE, DELETE and FOREACH write by it."""
+    return f"{var}_type" in frame.columns
+
+
+def _rel_ids_needed(elems: list, rest: str) -> bool | None:
+    """True when the binding of ``elems`` must keep the relationship id
+    columns ``match_chain`` prunes by default, given ``rest``, the text
+    the pattern's binding feeds (its WHERE and every later clause): a bare
+    relationship variable (DELETE r / RETURN r / collect(r) / id(r) /
+    ORDER BY r — entity serialization), a relationship property SET or
+    REMOVE (the write finds the relationship by id), or RETURN * / WITH *,
+    which serializes every variable. None keeps match_chain's default."""
+    if re.search(r"\b(?:RETURN|WITH)\s+(?:DISTINCT\s+)?\*(?:\s|,|$)", rest, re.IGNORECASE):
+        return True
+    writes = any(kw in ("SET", "REMOVE") for _, _, kw in _clauses(rest))
+    for el in elems:
+        if isinstance(el, _Rel) and el.var and (
+            re.search(rf"(?<![\w.]){re.escape(el.var)}(?![\w])(?!\s*\.)", rest)
+            or writes and re.search(rf"(?<![\w.]){re.escape(el.var)}\s*\.", rest)
+        ):
+            return True
+    return None
 
 
 def _compile_where(src: str, resolve=None) -> F.Column:
@@ -1455,16 +1490,6 @@ def _eval_elem_props(spark: SparkSession, elems: list) -> list:
     return elems
 
 
-def _static_rel_info(elems: list) -> dict:
-    """Named rel elements of a write pattern → {var: {type, props}} for
-    post-write projection (type(r)/r.prop are statically known)."""
-    return {
-        el.var: {"type": el.rel_type, "props": el.props or {}}
-        for el in elems
-        if isinstance(el, _Rel) and el.var
-    }
-
-
 def _looks_like_pattern(src: str) -> bool:
     """A WHERE term that is itself a relationship pattern, e.g.
     ``(a)-[:T]->(b)`` or the bracketless ``(a)-->(b)`` — node paren
@@ -1624,7 +1649,7 @@ class Session:
             return self._foreach(q)
         if head in ("WITH", "UNWIND", "RETURN"):
             # no driving clause: the pipeline runs over one unit row
-            return self._clause_tail(self.spark.range(1).select(), q, [])
+            return self._clause_tail(self.spark.range(1).select(), q)
         if head == "SHOW" and q.upper().startswith("SHOW PROCEDURES"):
             from ..procedures.registry import show_procedures
 
@@ -1729,7 +1754,7 @@ class Session:
                 return self._call_subquery(q)
             return self._call(q)
         if head == "CREATE":
-            return self._create(q[len("CREATE"):].strip(), anchors={})
+            return self._create(q[len("CREATE"):].strip())
         if head == "MERGE":
             return self._merge(q[len("MERGE"):].strip())
         if head == "MATCH":
@@ -1774,13 +1799,12 @@ class Session:
         '<c>'] <tail>`` (r12) — THE Cypher import idiom, Spark-first: the
         file reads through ``spark.read.csv`` (distributed, splittable —
         never a driver parse), ``row`` binds as a struct (headers) or
-        string array (positional), and the tail is either a clause tail
-        that opens with RETURN/WITH/UNWIND (``_clause_tail`` over the row
-        frame) or a SET-BASED node write (one merge/append per
-        statement, the same one-join batch shape UNWIND $rows uses —
-        Neo4j itself needs PERIODIC COMMIT for what one Spark job does
-        here). All fields are strings (the openCypher LOAD CSV
-        contract); cast with toInteger()/toFloat()."""
+        string array (positional), and the tail — RETURN, WITH, UNWIND or
+        a write such as MERGE/CREATE — is a clause tail over the row frame
+        (``_clause_tail``): writes are set-based, one batch per pattern
+        element for the whole file (Neo4j itself needs PERIODIC COMMIT for
+        what one Spark job does here). All fields are strings (the
+        openCypher LOAD CSV contract); cast with toInteger()/toFloat()."""
         m = self._LOAD_CSV_RE.match(q)
         if not m:
             raise ValueError(f"Unsupported LOAD CSV syntax: {q!r}")
@@ -1801,61 +1825,7 @@ class Session:
             )
         if not tail:
             raise ValueError("LOAD CSV requires a RETURN or a write clause")
-        if re.match(r"(?:RETURN|WITH|UNWIND)\b", tail, re.IGNORECASE):
-            return self._clause_tail(frame, tail, [])
-        # write tail: MERGE/CREATE of one node pattern, props from row
-        mw = re.match(r"(MERGE|CREATE)\s+(.*)$", tail, re.IGNORECASE | re.DOTALL)
-        if not mw:
-            raise ValueError(
-                f"unsupported LOAD CSV tail (RETURN/WITH/MERGE/CREATE): {tail!r}"
-            )
-        verb = mw.group(1).upper()
-        body = mw.group(2).strip()
-        ret_src = None
-        h_r = _find_kw(body, "RETURN")
-        if h_r:
-            ret_src = body[h_r[1]:].strip()
-            body = body[: h_r[0]].strip()
-        elems, rest = _parse_pattern(body)
-        if rest:
-            raise ValueError(f"trailing content after LOAD CSV pattern: {rest!r}")
-        if len(elems) != 1 or not isinstance(elems[0], _Node):
-            raise ValueError(
-                "LOAD CSV write tails support a single node pattern "
-                "(build relationships with a follow-up MATCH … MERGE)"
-            )
-        el = elems[0]
-        if not el.props:
-            raise ValueError("LOAD CSV node writes need at least one property")
-        resolver = _frame_resolver(frame)
-        from .lexer import ExprText as _ET
-
-        sel = []
-        for k, v in el.props.items():
-            col = (
-                _compile_expr(v.src, resolver)
-                if isinstance(v, _ET)
-                else F.lit(v)
-            )
-            sel.append(col.alias(k))
-        props_df = frame.select(*sel)
-        labels = _create_labels(el)
-        if verb == "MERGE":
-            n = self.store.merge_nodes(labels[0], props_df, list(el.props))
-        else:
-            n = self.store.create_nodes_frame(labels, props_df)
-        if ret_src:
-            mcount = re.fullmatch(
-                r"count\(\s*\*\s*\)(?:\s+AS\s+(\w+))?", ret_src, re.IGNORECASE
-            )
-            if not mcount:
-                raise ValueError(
-                    "LOAD CSV write tails support RETURN count(*) only"
-                )
-            alias = mcount.group(1) or "count"
-            total = props_df.count()
-            return local_df(self.spark, [(total,)], f"{alias} long")
-        return local_df(self.spark, [], "ok string")
+        return self._clause_tail(frame, tail)
 
     def _foreach(self, q: str) -> DataFrame:
         """Standalone ``FOREACH (x IN <list-expr> | <update clause>)`` —
@@ -2013,17 +1983,14 @@ class Session:
                 is_rel = "type" in el_dt.fieldNames()
             else:
                 key = F.col(f"{tvar}_id")
-                is_rel = f"{tvar}_type" in ex.columns
+                is_rel = _is_rel_var(ex, tvar)
             vals = g.groupBy(key.alias("id")).agg(
                 *[
                     F.max_by(F.col(f"_set_{p}"), F.col(pos_col)).alias(_esc(p))
                     for p in assigns
                 ]
             )
-            if is_rel:
-                self.store.set_rel_props_from_frame(vals, list(assigns))
-            else:
-                self.store.set_props_from_frame(vals, list(assigns))
+            self.store.set_props_from_frame(vals, list(assigns), rels=is_rel)
         return local_df(self.spark, [], "ok string")
 
     _CREATE_CONSTRAINT_RE = re.compile(
@@ -2452,7 +2419,7 @@ class Session:
         # have, not the result: accept and strip it.
         rest = rest[m.end():] if (m := _IN_TRANSACTIONS.match(rest)) else rest
         frame = self.run(inner)
-        return self._clause_tail(frame, rest, []) if rest.strip() else frame
+        return self._clause_tail(frame, rest) if rest.strip() else frame
 
     # ---- batch-UNWIND write shapes (token-stream parsed, r9) -----------
     # The four driver-guide bulk shapes intercepted before the literal
@@ -2720,97 +2687,18 @@ class Session:
             return local_df(self.spark, [], "ok string")
         return local_df(self.spark, [(n,)], f"{alias} long")
 
-    def _merge(self, pattern_src: str) -> DataFrame:
-        """``MERGE (n:L {props})[-[:T]->(m:M {props})]`` — openCypher atomic
-        pattern semantics: MERGE matches the WHOLE pattern, and on any miss
-        creates the ENTIRE pattern (including fresh nodes for parts that
-        would individually match). Single-node MERGE degenerates to the
-        familiar match-or-create. ``ON CREATE SET`` / ``ON MATCH SET``
-        apply their assignments to the branch actually taken."""
-        # standalone MERGE with a WITH continuation (r12):
-        # ``MERGE (z:Z {k:1}) WITH z MATCH … CREATE …`` — execute the
-        # MERGE, then re-anchor the (now guaranteed) pattern as a MATCH
-        # and run the rest of the pipeline over it
-        from .lexer import tokenize as _tokenize
-
-        toks = _tokenize(pattern_src)
-        depth = 0
-        for i, t in enumerate(toks):
-            if t.kind == "punct":
-                depth += t.text in "([{"
-                depth -= t.text in ")]}"
-                continue
-            if depth or t.kind != "ident" or t.text.upper() != "WITH":
-                continue
-            prev = toks[i - 1] if i else None
-            if prev is not None and prev.kind == "ident" and prev.text.upper() in (
-                "STARTS", "ENDS"
-            ):
-                continue
-            head, cont = pattern_src[: t.pos].strip(), pattern_src[t.pos:].strip()
-            self._merge(head).collect()
-            pat = head
-            h_on = _find_kw(pat, "ON")
-            if h_on:
-                pat = pat[: h_on[0]].strip()
-            return self.run("MATCH " + pat + " " + cont)
-        ret = None
-        h_ret = _find_kw(pattern_src, "RETURN")
-        if h_ret:
-            ret = pattern_src[h_ret[1]:].strip()
-            pattern_src = pattern_src[: h_ret[0]].strip()
-        on_create: dict[str, dict] = {}
-        on_match: dict[str, dict] = {}
-        for kind, target in (("CREATE", on_create), ("MATCH", on_match)):
-            h_on = _find_kw(pattern_src, "ON", kind, "SET")
-            if not h_on:
-                continue
-            tail_src = pattern_src[h_on[1]:]
-            nxt = [
-                h for h in (
-                    _find_kw(tail_src, "ON", "CREATE", "SET"),
-                    _find_kw(tail_src, "ON", "MATCH", "SET"),
-                ) if h
-            ]
-            h_next = min(nxt) if nxt else None
-            assigns = tail_src[: h_next[0]] if h_next else tail_src
-            pattern_src = (
-                pattern_src[: h_on[0]] + (tail_src[h_next[0]:] if h_next else "")
-            ).strip()
-            for item in _split_top(assigns, ","):
-                it = item.strip()
-                m_pe = re.match(
-                    r"([A-Za-z_]\w*)\s*\+=\s*(\{.*\})\s*$", it, re.DOTALL
-                )
-                if m_pe:
-                    # `ON … SET var += {map}` merges each key (r12)
-                    for p, vsrc in _parse_map_srcs(m_pe.group(2)).items():
-                        target.setdefault(m_pe.group(1), {})[p] = _parse_value(
-                            vsrc
-                        )
-                    continue
-                lhs, rhs = it.split("=", 1)
-                var, prop = lhs.strip().split(".", 1)
-                target.setdefault(var, {})[prop] = _parse_value(rhs.strip())
-        # plain `SET …` continuation → both branches (r12)
-        h_set = _find_kw(pattern_src, "SET")
-        if h_set:
-            assigns = pattern_src[h_set[1]:]
-            pattern_src = pattern_src[: h_set[0]].strip()
-            for item in _split_top(assigns, ","):
-                it = item.strip()
-                m_pe = re.match(
-                    r"([A-Za-z_]\w*)\s*\+=\s*(\{.*\})\s*$", it, re.DOTALL
-                )
-                if m_pe:
-                    for p, vsrc in _parse_map_srcs(m_pe.group(2)).items():
-                        on_create.setdefault(m_pe.group(1), {})[p] = _parse_value(vsrc)
-                        on_match.setdefault(m_pe.group(1), {})[p] = _parse_value(vsrc)
-                    continue
-                lhs, rhs = it.split("=", 1)
-                var, prop = lhs.strip().split(".", 1)
-                on_create.setdefault(var, {})[prop] = _parse_value(rhs.strip())
-                on_match.setdefault(var, {})[prop] = _parse_value(rhs.strip())
+    def _merge(self, body: str) -> DataFrame:
+        """``MERGE <pattern> [ON CREATE SET …] [ON MATCH SET …] <rest>`` with
+        no driving clause — openCypher atomic pattern semantics: MERGE
+        matches the WHOLE pattern, and on a miss creates the ENTIRE pattern
+        (fresh nodes even for parts that would match on their own). One
+        key, so the write stays driver-side: one ``take(1)`` matches, a
+        miss creates literal rows, and the branch's ON CREATE / ON MATCH
+        assignments evaluate to literals over that one row (the ON MATCH
+        values inside the same ``take(1)``). The rest of the statement is a
+        clause tail over a one-row binding of the written ids."""
+        cut = _clause_end(body)
+        pattern_src, on_create, on_match = self._split_on_set(body[:cut])
         elems, rest = _parse_pattern(pattern_src)
         if rest:
             raise ValueError(f"trailing content after MERGE pattern: {rest!r}")
@@ -2824,102 +2712,87 @@ class Session:
                         f"{'relationship' if isinstance(el, _Rel) else 'node'}"
                         f" because of null property value for {k!r}"
                     )
-        for el in elems:
             if isinstance(el, _Rel) and el.undirected:
                 raise ValueError("MERGE requires a directed relationship pattern")
-            if isinstance(el, _Node) and not el.var:
+            if not el.var:
                 el.var = f"_anon{self._anon}"
                 self._anon += 1
-        ids = self._match_whole_pattern(elems)
-        created = ids is None
-        rel_vars = {el.var for el in elems if isinstance(el, _Rel) and el.var}
+        rel_vars = {el.var for el in elems[1::2]}
+        id_cols = [f"{v}_id" for v in dict.fromkeys(el.var for el in elems)]
+        node_cols = set(self.store.graph.nodes.columns)
+        row = None
+        if all(_esc(k) in node_cols for el in elems[0::2] for k in el.props):
+            found = self._bind(elems, with_rel_ids=True)
+            targets, cols = self._assign_cols(found, self._exprs_of(on_match))
+            row = next(iter(found.select(*id_cols, *cols).take(1)), None)
+        created = row is None
         if created:
-            ids = {}
-            for el in elems:
-                if isinstance(el, _Node) and el.var not in ids:
+            # a miss (or a property no write has introduced): create it all
+            lits: dict[str, object] = {}
+            for el in elems[0::2]:
+                if f"{el.var}_id" not in lits:
                     # a repeated variable ((a)-[:X]->(a)) is ONE node
-                    (nid,) = self.store.create_nodes(_create_labels(el), [el.props])
-                    ids[el.var] = nid
+                    (lits[f"{el.var}_id"],) = self.store.create_nodes(
+                        _create_labels(el), [el.props]
+                    )
+                    lits.update({f"{el.var}_{_esc(k)}": v for k, v in el.props.items()})
             for i in range(1, len(elems), 2):
                 rel, left, right = elems[i], elems[i - 1], elems[i + 1]
-                s, d = ids[left.var], ids[right.var]
+                s, d = lits[f"{left.var}_id"], lits[f"{right.var}_id"]
                 if rel.reversed:
                     s, d = d, s
-                props = dict(rel.props or {})
-                if rel.var and rel.var in on_create:
-                    # ON CREATE SET on the REL variable folds into the
-                    # create itself — one write, no post-hoc rel update
-                    props.update(on_create.pop(rel.var))
-                    rel.props = props  # projection sees the final props
-                self.store.create_rels(rel.rel_type or "_", [(s, d)], [props])
-        for var, props in (on_create if created else on_match).items():
-            if var in rel_vars:
-                if created:
-                    continue  # folded into create_rels above
-                raise ValueError(
-                    f"ON MATCH SET on the relationship variable {var!r} is "
-                    "unsupported in standalone MERGE — use MATCH … SET"
+                (lits[f"{rel.var}_id"],) = self.store.create_rels(
+                    rel.rel_type or "_", [(s, d)], [rel.props]
                 )
+                lits.update({f"{rel.var}_{_esc(k)}": v for k, v in rel.props.items()})
+            row = lits
+            targets, cols = [], []
+            if self._exprs_of(on_create):
+                one = local_df(self.spark, [(1,)], "_u int").select(
+                    *[_prop_col(v, _no_var_resolver).alias(c) for c, v in lits.items()]
+                )
+                targets, cols = self._assign_cols(one, self._exprs_of(on_create))
+                # a projection of a local row collects without a Spark job
+                row = one.select(*id_cols, *cols).collect()[0]
+        ids = {c[:-3]: row[c] for c in id_cols}
+        per_var: dict[str, dict] = {}
+        for var, props in (on_create if created else on_match).items():
+            for prop, src in props.items():
+                per_var.setdefault(var, {})[prop] = _parse_value(src)
+        for j, (var, prop) in enumerate(targets):
+            per_var[var][prop] = row[f"_set{j}"]
+        for var, props in per_var.items():
             if var not in ids:
-                raise ValueError(f"ON {'CREATE' if created else 'MATCH'} SET variable {var!r} is not in the pattern")
-            self._set_props_on_id(var, ids[var], props)
-        if ret is None:
-            return local_df(self.spark, [], "ok string")
-        return self._project_bound(ret, ids, rels=_static_rel_info(elems))
+                raise ValueError(f"ON SET variable {var!r} is not in the pattern")
+            self.store.set_props_by_ids([ids[var]], props, rels=var in rel_vars)
+        return self._write_tail(ids, rel_vars, body[cut:])
 
-    def _set_props_on_id(self, var: str, nid: int, props: dict) -> None:
-        """Apply a parsed SET property map to ONE node id (MERGE ON-SET /
-        post-CREATE SET tails). Literal values go through the broadcast
-        id update; self-referencing expression values (the counter idiom
-        ``x.n = x.n + 1`` — r13) compile against the node's stored
-        property columns and flow through the set-based
-        conditional-column update."""
-        props = _eval_prop_map(self.spark, props)
-        from .lexer import ExprText as _ET
+    @staticmethod
+    def _exprs_of(assigns: dict) -> dict:
+        """The assignments of ``assigns`` whose value is not a scalar
+        literal (expressions, lists and maps compile through Spark)."""
+        out: dict[str, dict] = {}
+        for var, props in assigns.items():
+            for prop, src in props.items():
+                if not isinstance(_parse_value(src), (str, int, float, bool, type(None))):
+                    out.setdefault(var, {})[prop] = src
+        return out
 
-        if not any(isinstance(v, _ET) for v in props.values()):
-            self.store.set_props_by_ids(
-                local_df(self.spark, [(nid,)], "id long"), props
-            )
-            return
-        node_frame = self.store.graph.nodes.where(F.col("id") == nid)
-        cols = set(node_frame.columns)
-
-        def _self_resolve(name: str) -> F.Column:
-            if name.startswith(f"{var}."):
-                prop = name[len(var) + 1:]
-                return F.col(f"`{prop}`") if prop in cols else F.lit(None)
-            if name == var:
-                return F.col("id")
-            raise ValueError(f"unbound name in SET expression: {name!r}")
-
-        _self_resolve.frame = node_frame
-        vals = node_frame.select(
-            F.col("id"),
-            *[
-                (
-                    _compile_expr(v.src, _self_resolve)
-                    if isinstance(v, _ET)
-                    else _prop_col(v, _self_resolve)
-                ).alias(_esc(k))
-                for k, v in props.items()
-            ],
-        )
-        self.store.set_props_from_frame(vals, list(props))
-
-    def _match_whole_pattern(self, elems: list) -> dict[str, int] | None:
-        """Bind the full pattern against the store; first match's node ids,
-        or None when the pattern (as a whole) has no binding."""
-        node_cols = set(self.store.graph.nodes.columns)
-        for el in elems:
-            if isinstance(el, _Node) and any(k not in node_cols for k in el.props):
-                return None  # property no write has introduced → no match
-        bound = self._bind(elems)
-        vars_ = [el.var for el in elems if isinstance(el, _Node)]
-        rows = bound.select([F.col(f"{v}_id").alias(v) for v in vars_]).take(1)
-        if not rows:
-            return None
-        return {v: rows[0][v] for v in vars_}
+    @staticmethod
+    def _assign_cols(frame: DataFrame, assigns: dict) -> tuple[list, list]:
+        """ON CREATE / ON MATCH assignments (``var -> {prop: source}``)
+        compiled over ``frame``: the ``(var, prop)`` targets and their
+        value columns, named ``_set<j>``. A variable outside the pattern
+        fails loud."""
+        resolve = _frame_resolver(frame)
+        targets = [(var, p) for var, props in assigns.items() for p in props]
+        for var, _ in targets:
+            if f"{var}_id" not in frame.columns:
+                raise ValueError(f"ON SET variable {var!r} is not in the pattern")
+        return targets, [
+            _compile_expr(assigns[var][p], resolve).alias(f"_set{j}")
+            for j, (var, p) in enumerate(targets)
+        ]
 
     # ---- CALL ---------------------------------------------------------
     @staticmethod
@@ -2991,7 +2864,7 @@ class Session:
             # was restricted to one key = value equality), resolved
             # against the procedure's actual output frame
             out = out.where(_compile_where(where_src, _frame_resolver(out)))
-        return self._clause_tail(out, rest, []) if rest else out
+        return self._clause_tail(out, rest) if rest else out
 
     def _resolve_dynamic_labels(self, cypher: str) -> str:
         """Neo4j 5.24 dynamic labels/types ``:$(expr)`` (r12): the
@@ -3082,7 +2955,7 @@ class Session:
             out = out.select(*cols)
         if wh:
             out = out.where(_compile_expr(wh, _frame_resolver(out)))
-        return self._clause_tail(out, rest, []) if rest else out
+        return self._clause_tail(out, rest) if rest else out
 
     # ---- database DDL (r10: CREATE/DROP + the lifecycle verbs) --------
     def _database_ddl(self, q: str) -> DataFrame:
@@ -3133,260 +3006,107 @@ class Session:
         return local_df(self.spark, [], "ok string")
 
     # ---- CREATE -------------------------------------------------------
-    def _create(self, pattern_src: str, anchors: dict[str, int]) -> DataFrame:
-        ret = None
-        h_ret = _find_kw(pattern_src, "RETURN")
-        if h_ret:
-            ret = pattern_src[h_ret[1]:].strip()
-            pattern_src = pattern_src[: h_ret[0]].strip()
-        # ``CREATE (n:L) SET n.k = <expr> [RETURN …]`` (r13): the SET
-        # tail applies to the just-created ids through the shared
-        # single-id setter (self-referencing RHS supported)
-        set_items: list[tuple[str, str, str]] = []
-        set_labels: list[tuple[str, list[str]]] = []
-        rem_props: list[tuple[str, str]] = []
-        rem_labels: list[tuple[str, list[str]]] = []
-        h_rem = _find_kw(pattern_src, "REMOVE")
-        if h_rem:
-            # ``CREATE … [SET …] REMOVE n.prop / n:Label [RETURN …]``
-            # (r14): property removes write null (the engine's remove
-            # semantics), label removes go through the set-based update
-            rem_src = pattern_src[h_rem[1]:].strip()
-            pattern_src = pattern_src[: h_rem[0]].strip()
-            for item in _split_top(rem_src, ","):
-                it = item.strip()
-                m_lbl = re.fullmatch(
-                    r"([A-Za-z_]\w*)((?:\s*:\s*`?[A-Za-z_]\w*`?)+)", it
-                )
-                if m_lbl:
-                    rem_labels.append(
-                        (
-                            m_lbl.group(1),
-                            [
-                                seg.strip().strip("`")
-                                for seg in m_lbl.group(2).split(":")
-                                if seg.strip()
-                            ],
-                        )
-                    )
-                    continue
-                m_p = re.fullmatch(r"([A-Za-z_]\w*)\.([\w`]+)", it)
-                if not m_p:
-                    raise ValueError(
-                        f"unsupported REMOVE item after CREATE: {it!r}"
-                    )
-                rem_props.append((m_p.group(1), m_p.group(2).strip("`")))
-        h_set = _find_kw(pattern_src, "SET")
-        if h_set:
-            set_src = pattern_src[h_set[1]:].strip()
-            pattern_src = pattern_src[: h_set[0]].strip()
-            for item in _split_top(set_src, ","):
-                it = item.strip()
-                # `SET n:Label[:More]` — label add on the created node (r14)
-                m_lbl = re.fullmatch(
-                    r"([A-Za-z_]\w*)((?:\s*:\s*`?[A-Za-z_]\w*`?)+)", it
-                )
-                if m_lbl:
-                    set_labels.append(
-                        (
-                            m_lbl.group(1),
-                            [
-                                seg.strip().strip("`")
-                                for seg in m_lbl.group(2).split(":")
-                                if seg.strip()
-                            ],
-                        )
-                    )
-                    continue
-                # `SET var += {map}` merges each key (r14 — this tail used
-                # to split on '=' and silently create a property 'a +')
-                m_pe = re.match(
-                    r"([A-Za-z_]\w*)\s*\+=\s*(\{.*\})\s*$", it, re.DOTALL
-                )
-                if m_pe:
-                    for p, vsrc in _parse_map_srcs(m_pe.group(2)).items():
-                        set_items.append((m_pe.group(1), p, vsrc))
-                    continue
-                if re.match(r"[A-Za-z_]\w*(?:\.[\w`]+)?\s*\+=", it):
-                    raise ValueError(
-                        f"unsupported SET form after CREATE: {it!r} "
-                        "(+= applies to maps: SET n += {{…}})"
-                    )
-                m_rep = re.match(
-                    r"([A-Za-z_]\w*)\s*=\s*(\{.*\})\s*$", it, re.DOTALL
-                )
-                if m_rep:
-                    # `SET n = {map}` on a JUST-created node: replace ==
-                    # merge (no pre-existing properties beyond the CREATE
-                    # pattern's own, which the map overwrites key-wise —
-                    # keys outside the map survive; Neo4j clears them, but
-                    # a just-created node has only pattern props, so warn
-                    # loudly instead of silently diverging)
-                    raise ValueError(
-                        f"unsupported SET form after CREATE: {it!r} "
-                        "(property replace: write the full map in the "
-                        "CREATE pattern, or use SET n += {{…}} to merge)"
-                    )
-                if "=" not in it or "." not in it.split("=", 1)[0]:
-                    raise ValueError(
-                        f"unsupported SET item after CREATE: {it!r}"
-                    )
-                lhs, rhs = it.split("=", 1)
-                tvar, prop = lhs.strip().split(".", 1)
-                set_items.append((tvar, prop.strip().strip("`"), rhs.strip()))
+    def _create(self, body: str) -> DataFrame:
+        """``CREATE <pattern>[, <pattern>…] [CREATE …]… <rest>`` with no
+        driving clause. Consecutive CREATE clauses and comma-separated
+        pattern groups share their variables (the ``:play movies`` script
+        shape) and write driver-side literal batches: one ``create_nodes``
+        per node, one ``create_rels`` per (type, property shape). The rest
+        of the statement is a clause tail over a one-row binding of the
+        written ids."""
+        hits = _clauses(body)
+        n = next((i for i, h in enumerate(hits) if h[2] != "CREATE"), len(hits))
+        cut = hits[n][0] if n < len(hits) else len(body)
+        pattern_src, rest = body[:cut].strip(), body[cut:]
         # `CREATE p = (a)-[:R]->(b)` (r12): a created pattern has a
         # statically-known shape, so the path accessors fold to literals
         m_pv = re.match(r"(\w+)\s*=\s*(?=\()", pattern_src)
         if m_pv:
             pvar = m_pv.group(1)
             pattern_src = pattern_src[m_pv.end():]
-            if ret is not None:
-                n_rels_txt = str(pattern_src.count("]-"))
-                ret = re.sub(
-                    rf"length\(\s*{re.escape(pvar)}\s*\)", n_rels_txt, ret
+            rest = re.sub(
+                rf"length\(\s*{re.escape(pvar)}\s*\)",
+                str(pattern_src.count("]-")),
+                rest,
+            )
+            if re.search(rf"(?<![\w.]){re.escape(pvar)}(?![\w])", rest):
+                raise ValueError(
+                    f"CREATE path variable {pvar!r} supports length() "
+                    "only (a just-created fixed pattern has no other "
+                    "path accessors)"
                 )
-                if re.search(rf"(?<![\w.]){re.escape(pvar)}(?![\w])", ret):
-                    raise ValueError(
-                        f"CREATE path variable {pvar!r} supports length() "
-                        "only (a just-created fixed pattern has no other "
-                        "path accessors)"
-                    )
-        # the `:play movies` statement shapes (r12): consecutive CREATE
-        # clauses in ONE statement and comma-separated pattern groups,
-        # both with variable carry-over — split depth-0, share the ids
         groups: list[list] = []
         for seg in _split_kw(pattern_src, "CREATE"):
-            seg = seg.strip()
-            if not seg:
-                continue
             for gsrc in _split_top(seg, ","):
-                gsrc = gsrc.strip()
-                if not gsrc:
+                if not gsrc.strip():
                     continue
-                elems, rest = _parse_pattern(gsrc)
-                if rest:
+                elems, tail = _parse_pattern(gsrc.strip())
+                if tail:
                     raise ValueError(
-                        f"trailing content after CREATE pattern: {rest!r}"
+                        f"trailing content after CREATE pattern: {tail!r}"
                     )
                 if any(isinstance(el, _Rel) and el.undirected for el in elems):
                     raise ValueError(
                         "CREATE requires a directed relationship pattern"
                     )
                 groups.append(elems)
-        created: dict[str, tuple[int, dict]] = {}
-        ids: dict[str, int] = dict(anchors)
-        # pass 1: nodes across every group (anchored/earlier vars reused)
+        ids: dict[str, int] = {}
+        # pass 1: nodes across every group (earlier variables reused)
         for elems in groups:
-            for el in elems:
-                if isinstance(el, _Node):
-                    var = el.var or f"_anon{self._anon}"
-                    el.var = var  # anonymous nodes stay addressable
+            for el in elems[0::2]:
+                if not el.var:
+                    el.var = f"_anon{self._anon}"  # stays addressable
                     self._anon += 1
-                    if var in ids:
-                        continue
-                    (nid,) = self.store.create_nodes(
+                if el.var not in ids:
+                    (ids[el.var],) = self.store.create_nodes(
                         _create_labels(el), [el.props]
                     )
-                    ids[var] = nid
-                    created[var] = (nid, el.props)
-        # pass 2: relationships (endpoints may come from ANY group)
+        # pass 2: relationships (endpoints may come from ANY group), one
+        # create_rels batch per (type, prop-shape) — a 100-pattern movies
+        # script is a handful of appends, not 100
         rel_batches: dict[tuple, list] = {}
         for elems in groups:
             for i in range(1, len(elems), 2):
                 rel, left, right = elems[i], elems[i - 1], elems[i + 1]
-                if left.var not in ids or right.var not in ids:
-                    raise ValueError(
-                        f"CREATE relationship endpoint {left.var!r}/"
-                        f"{right.var!r} is not bound"
-                    )
                 s, d = ids[left.var], ids[right.var]
                 if rel.reversed:
                     s, d = d, s
-                key = (rel.rel_type or "_", tuple(sorted((rel.props or {}).keys())))
-                rel_batches.setdefault(key, []).append((s, d, rel.props or {}))
-        # one create_rels batch per (type, prop-shape) — a 100-pattern
-        # movies script is a handful of appends, not 100
+                key = (rel.rel_type or "_", tuple(sorted(rel.props or {})))
+                rel_batches.setdefault(key, []).append((s, d, rel.props or {}, rel.var))
+        rel_vars: set[str] = set()
         for (rtype, _shape), rows in rel_batches.items():
-            self.store.create_rels(
-                rtype, [(s, d) for s, d, _ in rows], [p for _, _, p in rows]
+            rids = self.store.create_rels(
+                rtype, [(s, d) for s, d, _, _ in rows], [p for _, _, p, _ in rows]
             )
-        if set_items:
-            from .lexer import ExprText as _ET
+            for (_, _, _, var), rid in zip(rows, rids):
+                if var:
+                    ids[var] = rid
+                    rel_vars.add(var)
+        return self._write_tail(ids, rel_vars, rest)
 
-            per_var: dict[str, dict] = {}
-            for tvar, prop, rhs in set_items:
-                if tvar not in ids:
-                    raise ValueError(
-                        f"SET variable {tvar!r} is not in the CREATE pattern"
-                    )
-                try:
-                    per_var.setdefault(tvar, {})[prop] = _parse_value(rhs)
-                except ValueError:
-                    per_var.setdefault(tvar, {})[prop] = _ET(rhs)
-            for tvar, props in per_var.items():
-                self._set_props_on_id(tvar, ids[tvar], props)
-        for tvar, labels in set_labels:
-            if tvar not in ids:
-                raise ValueError(
-                    f"SET variable {tvar!r} is not in the CREATE pattern"
-                )
-            self.store.set_labels_by_ids(
-                local_df(self.spark, [(ids[tvar],)], "id long"),
-                add=tuple(labels),
-            )
-        for tvar, prop in rem_props:
-            if tvar not in ids:
-                raise ValueError(
-                    f"REMOVE variable {tvar!r} is not in the CREATE pattern"
-                )
-            self._set_props_on_id(tvar, ids[tvar], {prop: None})
-        for tvar, labels in rem_labels:
-            if tvar not in ids:
-                raise ValueError(
-                    f"REMOVE variable {tvar!r} is not in the CREATE pattern"
-                )
-            self.store.set_labels_by_ids(
-                local_df(self.spark, [(ids[tvar],)], "id long"),
-                remove=tuple(labels),
-            )
-        if ret is None:
+    def _write_tail(self, ids: dict[str, int], rel_vars: set, rest: str) -> DataFrame:
+        """What follows a standalone CREATE/MERGE: ``rest`` as a clause tail
+        over a one-row binding of the written ids (``var_*`` prefixed
+        entity columns read back from the store, relationships by id
+        too), or the empty ``ok`` frame when nothing follows."""
+        if not rest.strip():
             return local_df(self.spark, [], "ok string")
-        flat = [el for elems in groups for el in elems]
-        return self._project_bound(ret, ids, rels=_static_rel_info(flat))
-
-    def _project_bound(
-        self, ret: str, ids: dict[str, int], rels: dict | None = None
-    ) -> DataFrame:
-        """RETURN over freshly written node ids (CREATE/MERGE tails):
-        build the one-row binding frame (``var_*`` prefixed node columns)
-        and reuse the shared projection funnel — bare ``RETURN p``
-        serializes the created entity, expressions/aliases all work
-        (r10, replacing the var.prop-only literal reader). ``rels`` maps
-        a pattern rel variable to its statically-known type/props so
-        ``type(r)`` / ``r.prop`` resolve after a write."""
         from ..graph import prefix_columns
 
-        nodes = self.store.graph.nodes
+        g = self.store.graph
         bound = None
-        for var, nid in ids.items():
+        for var, eid in ids.items():
             # Each binding frame is exactly one row, but it is filtered out
-            # of the store's nodes frame, which accumulates partitions with
-            # every write-batch union. Coalesce the first to one task and
+            # of the store's frames, which accumulate partitions with every
+            # write-batch union. Coalesce the first to one task and
             # BROADCAST every subsequent side: a plain crossJoin here plans
             # a CartesianProduct over all partition PAIRS (measured 9,216
             # tasks / 133 s for a two-node CREATE…RETURN on a warmed store;
             # broadcast → 2 s). Plan pinned by test_plan_audit.
-            nf = prefix_columns(nodes.where(F.col("id") == nid), var)
-            bound = nf.coalesce(1) if bound is None else bound.crossJoin(F.broadcast(nf))
-        for var, info in (rels or {}).items():
-            cols = [F.lit(info.get("type")).alias(f"{var}_type")]
-            for k, v in (info.get("props") or {}).items():
-                cols.append(F.lit(v).alias(f"{var}_{k}"))
-            rf = self.spark.range(1).coalesce(1).select(*cols)
-            bound = rf if bound is None else bound.crossJoin(F.broadcast(rf))
-        if bound is None:
-            raise ValueError(f"RETURN after CREATE with no bound variables: {ret!r}")
-        return self._project_match(bound, ret, [], _frame_resolver(bound))
+            frame = g.rels if var in rel_vars else g.nodes
+            one = prefix_columns(frame.where(F.col("id") == eid), var)
+            bound = one.coalesce(1) if bound is None else bound.crossJoin(F.broadcast(one))
+        return self._clause_tail(bound, rest, wrote=True)
 
     # ---- MATCH --------------------------------------------------------
     @staticmethod
@@ -3465,36 +3185,17 @@ class Session:
                 raise ValueError(f"trailing content after MATCH pattern: {rest!r}")
             groups.append(gelems)
         elems = [el for g in groups for el in g]
-        # a bare rel-var reference downstream (DELETE r / RETURN r /
-        # collect(r) / id(r) / ORDER BY r) needs the rel id column
-        # match_chain prunes by default (r10 — entity serialization), and
-        # so does RETURN * / WITH *, which serializes EVERY variable (r14)
-        probe = f"{tail} {where_src or ''}"
-        rel_ids_needed = True if re.search(
-            r"\b(?:RETURN|WITH)\s+(?:DISTINCT\s+)?\*(?:\s|,|$)", tail, re.IGNORECASE
-        ) else None
-        writes = any(kw in ("SET", "REMOVE") for _, _, kw in tail_hits)
-        for el in elems:
-            if rel_ids_needed or not (isinstance(el, _Rel) and el.var):
-                continue
-            if re.search(
-                rf"(?<![\w.]){re.escape(el.var)}(?![\w])(?!\s*\.)", probe
-            ) or (
-                # `SET r.w = …` — rel-property writes resolve the rel by
-                # id, so the id columns must survive (r12)
-                writes and re.search(rf"(?<![\w.]){re.escape(el.var)}\s*\.", tail)
-            ):
-                rel_ids_needed = True
+        rel_ids_needed = _rel_ids_needed(elems, f"{tail} {where_src or ''}")
         bound = None
         for gelems in groups:
             gbound = self._bind(gelems, with_rel_ids=rel_ids_needed)
             bound = gbound if bound is None else bound.crossJoin(gbound)
         if where_src:
             bound = self._apply_where(bound, where_src)
-        return self._clause_tail(bound, tail, elems)
+        return self._clause_tail(bound, tail)
 
     def _clause_tail(
-        self, bound: DataFrame, src: str, elems: list, wrote: bool = False
+        self, bound: DataFrame, src: str, wrote: bool = False
     ) -> DataFrame:
         """Everything a statement does after its driving frame ``bound`` —
         a MATCH binding, a CALL's output, LOAD CSV's rows, a write's
@@ -3510,16 +3211,18 @@ class Session:
         follows its own clause back here (write-then-continue, ``wrote``).
         A statement must end in RETURN or a write, as in Cypher; only the
         rest of a write may end without one, and then the result is the
-        empty ``ok`` frame. ``elems`` is the driving pattern (DELETE tells
-        rel variables by it)."""
+        empty ``ok`` frame."""
         hits = _clauses(src)
         n = next((i for i, h in enumerate(hits) if h[2] in _TERMINALS), len(hits))
         stages = [h for h in hits[:n] if h[2] in ("WITH", "UNWIND")]
         ends = [h[0] for h in stages] + [hits[n][0] if n < len(hits) else len(src)]
-        bound = self._bind_reads(bound, src[: ends[0]])
+        bound = self._bind_reads(bound, src[: ends[0]], src[ends[0]:])
         bound = self._run_with_stages(
             bound,
-            [(kw, src[e : ends[j + 1]].strip()) for j, (_, e, kw) in enumerate(stages)],
+            [
+                (kw, src[e : ends[j + 1]].strip(), src[ends[j + 1]:])
+                for j, (_, e, kw) in enumerate(stages)
+            ],
         )
         if n == len(hits):
             if wrote:
@@ -3540,20 +3243,18 @@ class Session:
             path_vars = {c[6:-1] for c in bound.columns if c.startswith("nodes(")}
             if path_vars:
                 resolve.path_vars = path_vars
-            return self._project_match(bound, rest, elems, resolve)
+            return self._project_match(bound, rest, resolve)
         if verb == "CREATE":
-            return self._create_from_binding(rest, bound, elems)
+            return self._create_from_binding(rest, bound)
         if verb == "MERGE":
             return self._merge_from_binding(rest, bound)
         if verb == "FOREACH":
             return self._foreach_from_binding(rest, bound)
         if verb in ("SET", "REMOVE"):
-            return self._set_from_binding(rest, bound, elems, remove=verb == "REMOVE")
-        return self._delete_from_binding(
-            rest, bound, elems, detach=verb == "DETACH DELETE"
-        )
+            return self._set_from_binding(rest, bound, remove=verb == "REMOVE")
+        return self._delete_from_binding(rest, bound, detach=verb == "DETACH DELETE")
 
-    def _bind_reads(self, bound: DataFrame, src: str) -> DataFrame:
+    def _bind_reads(self, bound: DataFrame, src: str, after: str = "") -> DataFrame:
         """Bind ``src``'s reading clauses on ``bound``, in order: a MATCH
         joins back on the variables it shares with the frame
         (``_bind_additional``; left for OPTIONAL) or, for shortestPath,
@@ -3562,12 +3263,15 @@ class Session:
         ``_apply_call_proc_stage``. Each MATCH names its anonymous pattern
         variables from the session counter: a name reused by a later
         clause of the same statement (a tail after a write restarts its
-        stages) would join as a shared variable."""
+        stages) would join as a shared variable. ``after`` is the
+        statement text that follows ``src`` (what decides whether a MATCH
+        keeps relationship ids, ``_rel_ids_needed``)."""
         hits = _clauses(src)
         if src[: hits[0][0] if hits else len(src)].strip():
             raise ValueError(f"unsupported clause: {src.strip()[:80]!r}")
         for j, (_, e, kw) in enumerate(hits):
-            body = src[e : hits[j + 1][0] if j + 1 < len(hits) else len(src)].strip()
+            end = hits[j + 1][0] if j + 1 < len(hits) else len(src)
+            body = src[e:end].strip()
             if kw == "CALL" and body.startswith("{"):
                 sub, rest = _split_braced(body)
                 rest = rest[t.end():] if (t := _IN_TRANSACTIONS.match(rest)) else rest
@@ -3585,7 +3289,9 @@ class Session:
             elif kw in ("MATCH", "OPTIONAL MATCH"):
                 # above the fixed keys CALL {} uses (< 1000)
                 k, self._anon = 1000 + self._anon, self._anon + 1
-                bound = self._bind_additional(bound, body, kw != "MATCH", k)
+                bound = self._bind_additional(
+                    bound, body, kw != "MATCH", k, f"{src[end:]} {after}"
+                )
             else:
                 raise ValueError(f"unsupported clause: {kw}")
         return bound
@@ -3598,14 +3304,14 @@ class Session:
         and ``CALL`` clauses, which bind on its output (``_bind_reads``) —
         the multi-MATCH pipeline. ``_clause_tail`` runs every pipeline,
         whatever frame drives it."""
-        for kind, stage_src in pipeline:
+        for kind, stage_src, after in pipeline:
             cut = _clause_end(stage_src)
             own = stage_src[:cut].strip()
             if kind == "UNWIND":
                 bound = self._unwind_stage(bound, own)
             else:
                 bound = self._with_stage(bound, own)
-            bound = self._bind_reads(bound, stage_src[cut:])
+            bound = self._bind_reads(bound, stage_src[cut:], after)
         return bound
 
     def _with_stage(self, bound: DataFrame, stage_src: str) -> DataFrame:
@@ -4278,7 +3984,7 @@ class Session:
         )
 
     def _set_from_binding(
-        self, tail: str, bound: DataFrame, elems: list, remove: bool
+        self, tail: str, bound: DataFrame, remove: bool
     ) -> DataFrame:
         """Set-based ``MATCH … SET v.k = <expr>`` / ``REMOVE v.k`` — the
         matched binding drives one conditional column update per variable
@@ -4332,8 +4038,9 @@ class Session:
                     raise ValueError(f"SET = expects a map literal: {item!r}")
                 mapping = _eval_prop_map(self.spark, mapping)
                 props = {k: F.lit(v) for k, v in mapping.items()}
-                for c in self.store.graph.nodes.columns:
-                    if c not in ("id", "labels") and c not in mapping:
+                rel = _is_rel_var(bound, var)
+                for c in (self.store.graph.rels if rel else self.store.graph.nodes).columns:
+                    if c not in ("id", "labels", "src", "dst", "type") and c not in mapping:
                         props[c] = F.lit(None)
                 per_var.setdefault(var, {}).update(props)
                 continue
@@ -4366,6 +4073,15 @@ class Session:
                         lcol, F.array(*[F.lit(rm) for rm in rems])
                     )
                 bound = bound.withColumn(f"{var}_labels", lcol)
+        return self._clause_tail(self._write_props(bound, per_var), after, wrote=True)
+
+    def _write_props(self, bound: DataFrame, per_var: dict) -> DataFrame:
+        """Set-based property writes from a binding (SET, REMOVE, MERGE's
+        ON CREATE / ON MATCH): per variable, one ``(id, prop…)`` change
+        frame to the relationships or the nodes frame (``_is_rel_var``),
+        then the binding's own columns take the new values, so the rest of
+        the statement reads its writes. ``per_var`` maps a variable to
+        ``{prop: value column}``; variables apply in order."""
         for var, props in per_var.items():
             if f"{var}_id" not in bound.columns:
                 raise ValueError(f"SET/REMOVE variable {var!r} is not bound")
@@ -4373,14 +4089,16 @@ class Session:
                 F.col(f"{var}_id").alias("id"),
                 *[col.alias(_esc(p)) for p, col in props.items()],
             )
-            self.store.set_props_from_frame(vals, list(props))
-            # read-your-writes inside this statement's RETURN
-            for prop, col in props.items():
-                bound = bound.withColumn(f"{var}_{_esc(prop)}", col)
-        return self._clause_tail(bound, after, elems, wrote=True)
+            self.store.set_props_from_frame(
+                vals, list(props), rels=_is_rel_var(bound, var)
+            )
+            bound = bound.withColumns(
+                {f"{var}_{_esc(p)}": col for p, col in props.items()}
+            )
+        return bound
 
     def _delete_from_binding(
-        self, tail: str, bound: DataFrame, elems: list, detach: bool
+        self, tail: str, bound: DataFrame, detach: bool
     ) -> DataFrame:
         """Set-based ``MATCH … [DETACH] DELETE v[, w]`` — matched ids are
         anti-joined out of the store in one swap per variable. Plain DELETE
@@ -4388,16 +4106,15 @@ class Session:
         What follows the DELETE items is a clause tail over the binding."""
         cut = _clause_end(tail)
         tail, after = tail[:cut], tail[cut:]
-        rel_vars = {el.var for el in elems if isinstance(el, _Rel) and el.var}
         for var in (v.strip() for v in tail.split(",")):
             if f"{var}_id" not in bound.columns:
                 raise ValueError(f"DELETE variable {var!r} is not bound")
             ids = bound.select(F.col(f"{var}_id").alias("id"))
-            if var in rel_vars:
+            if _is_rel_var(bound, var):
                 self.store.delete_rels_by_ids(ids)
             else:
                 self.store.delete_nodes_by_ids(ids, detach=detach)
-        return self._clause_tail(bound, after, elems, wrote=True)
+        return self._clause_tail(bound, after, wrote=True)
 
     @staticmethod
     def _unify_props(ent: F.Column, fields) -> F.Column:
@@ -4675,7 +4392,7 @@ class Session:
             joined = joined.where(_compile_where(where_src, resolve))
         if foreach_src is not None:
             return self._path_foreach(joined, pvar, foreach_src)
-        return self._project_match(joined, ret, elems, resolve)
+        return self._project_match(joined, ret, resolve)
 
     def _path_foreach(
         self, joined: DataFrame, pvar: str, foreach_src: str
@@ -4771,7 +4488,7 @@ class Session:
         resolve.path_vars = {pvar}
         if where_src:
             frame = frame.where(_compile_where(where_src, resolve))
-        return self._project_match(frame, ret, elems, resolve)
+        return self._project_match(frame, ret, resolve)
 
     def _shortest_path(self, body: str) -> DataFrame:
         """``MATCH p = shortestPath((a)-[:T*..k]->(b)) RETURN …`` — wired to
@@ -4860,7 +4577,7 @@ class Session:
             resolve.path_vars = {pvar}
         if where_src:
             joined = joined.where(_compile_where(where_src, resolve))
-        return self._project_match(joined, ret, elems, resolve)
+        return self._project_match(joined, ret, resolve)
 
     def _shortest_path_additional(self, bound: DataFrame, seg: str) -> DataFrame:
         """``MATCH (a:…), (b:…) MATCH sp = shortestPath((a)-[*..k]-(b))``
@@ -4936,9 +4653,7 @@ class Session:
         ).drop("_spa", "_spb")
         return joined
 
-    def _create_from_binding(
-        self, tail: str, bound: DataFrame, driving: list
-    ) -> DataFrame:
+    def _create_from_binding(self, tail: str, bound: DataFrame) -> DataFrame:
         """Set-based ``MATCH … CREATE …`` (SURVEY §2.B.13): one new node/rel
         per binding row, id-assigned distributed (``stage_indexed``) and
         appended in ONE batch per pattern element — the binding frame is
@@ -4946,8 +4661,8 @@ class Session:
 
         Write-then-continue (r11): what follows the pattern
         (``MATCH … CREATE … WITH … RETURN``) is a clause tail over the
-        post-write binding; it keeps the ``driving`` pattern, so a later
-        ``DELETE r`` still knows ``r`` for a relationship."""
+        post-write binding, which binds the created nodes and named
+        relationships."""
         cut = _clause_end(tail)
         elems, rest = _parse_pattern(tail[:cut])
         if rest:
@@ -4995,21 +4710,20 @@ class Session:
             if rel.reversed:
                 s, d = d, s
             base_r = self.store.reserve_rel_ids(n)
-            self.store.append_rels(
-                frame.select(
-                    (F.col("_idx") + F.lit(base_r)).alias("id"),
-                    s.alias("src"),
-                    d.alias("dst"),
-                    F.lit(rel.rel_type or "_").alias("type"),
-                    *[
-                        _prop_col(v, _frame_resolver(frame)).alias(_esc(k))
-                        for k, v in rel.props.items()
-                    ],
-                )
-            )
-        return self._clause_tail(
-            frame.drop("_idx"), tail[cut:], [*driving, *elems], wrote=True
-        )
+            cols = {
+                "id": F.col("_idx") + F.lit(base_r),
+                "src": s,
+                "dst": d,
+                "type": F.lit(rel.rel_type or "_"),
+                **{
+                    _esc(k): _prop_col(v, _frame_resolver(frame))
+                    for k, v in rel.props.items()
+                },
+            }
+            self.store.append_rels(frame.select(*[c.alias(k) for k, c in cols.items()]))
+            if rel.var:
+                frame = frame.withColumns({f"{rel.var}_{k}": c for k, c in cols.items()})
+        return self._clause_tail(frame.drop("_idx"), tail[cut:], wrote=True)
 
     @staticmethod
     def _split_on_set(tail: str) -> tuple[str, dict, dict]:
@@ -5049,699 +4763,182 @@ class Session:
         return tail, on_create, on_match
 
     def _merge_from_binding(self, tail: str, bound: DataFrame) -> DataFrame:
-        """Set-based ``MATCH … MERGE …`` write tail (r11) — get-or-create an
-        edge between matched nodes, the most common idempotent write in real
-        Cypher (the reference's own graph-building pattern is MATCH-then-
-        write, DatabaseIO.java:63). Whole-statement set semantics, never a
-        per-row loop:
+        """``… MERGE <pattern> [ON CREATE SET …] [ON MATCH SET …] <rest>``
+        over a driving frame — one set-based whole-pattern MERGE for any
+        pattern (a node, a relationship, a chain; endpoints bound or not),
+        never a per-row loop:
 
-        - relationship MERGE with both endpoints bound: distinct
-          (src, dst[, rel key props]) tuples left-anti-joined against the
-          pre-statement rels snapshot; missing tuples append in ONE batch
-          (``store.merge_rels`` — the machinery the UNWIND batch path uses).
-        - node MERGE (one node element, unbound var): per-row get-or-create
-          keyed on the computed property values (``store.merge_nodes``).
-        - ``ON CREATE SET`` / ``ON MATCH SET`` branch per distinct pattern
-          key: a key absent from the pre-statement snapshot takes the CREATE
-          branch for every binding row carrying it. (Neo4j's row-sequential
-          processing would give later duplicate rows the MATCH branch; a
-          set-based distributed write pins the branch per key instead —
-          deterministic, documented divergence.)
-        - RETURN tails re-join the post-write store so ``r`` / ``type(r)`` /
-          ``r.prop`` project through the shared entity funnel; immutable
-          frame snapshots make the pre/post comparison free.
+        - the key of a binding row is its bound node ids plus every
+          element's key properties evaluated over the row;
+        - the pattern binds on the pre-statement snapshot
+          (``_merge_instances``): bound nodes enter as bare ids and node
+          frames join only for unbound nodes, so a relationship between two
+          bound nodes reads only the relationship frame;
+        - the distinct keys with no match take one ``stage_indexed`` id
+          block, then one append per unbound node element and one per
+          relationship element — a miss creates the ENTIRE pattern, fresh
+          nodes included (the openCypher contract);
+        - every row then joins the instances of its key on the post-write
+          snapshot (several matches fan out, MERGE-as-MATCH cardinality);
+          ids from this statement's blocks flag the rows that took the
+          CREATE branch, and one applier writes ON CREATE / ON MATCH SET
+          (``_write_props``). The branch is pinned per distinct key: Neo4j's
+          row-sequential processing would give later duplicate rows the
+          MATCH branch.
 
-        Unbound relationship ENDPOINTS (atomic whole-pattern get-or-create)
-        are rejected loud."""
-        from .lexer import ExprText as _ET
-
-        ret = None
-        h_ret = _find_kw(tail, "RETURN")
-        if h_ret:
-            ret = tail[h_ret[1]:].strip()
-            tail = tail[: h_ret[0]].strip()
-        tail, on_create, on_match = self._split_on_set(tail)
-        # a plain `SET …` continuation applies on BOTH branches (Cypher:
-        # MERGE (…) SET r.w = 9 sets matched-or-created — r12)
-        h_set = _find_kw(tail, "SET")
-        if h_set:
-            assigns = tail[h_set[1]:]
-            tail = tail[: h_set[0]].strip()
-            for item in _split_top(assigns, ","):
-                it = item.strip()
-                m_pe = re.match(
-                    r"([A-Za-z_]\w*)\s*\+=\s*(\{.*\})\s*$", it, re.DOTALL
-                )
-                if m_pe:
-                    for p, vsrc in _parse_map_srcs(m_pe.group(2)).items():
-                        on_create.setdefault(m_pe.group(1), {})[p] = vsrc
-                        on_match.setdefault(m_pe.group(1), {})[p] = vsrc
-                    continue
-                lhs, rhs = it.split("=", 1)
-                var, prop = lhs.strip().split(".", 1)
-                on_create.setdefault(var, {})[prop] = rhs.strip()
-                on_match.setdefault(var, {})[prop] = rhs.strip()
-        elems, rest = _parse_pattern(tail)
+        What follows the clause is a clause tail over that binding."""
+        cut = _clause_end(tail)
+        pattern_src, on_create, on_match = self._split_on_set(tail[:cut])
+        elems, rest = _parse_pattern(pattern_src)
         if rest:
             raise ValueError(f"trailing content after MERGE pattern: {rest!r}")
         if any(isinstance(el, _Rel) and el.undirected for el in elems):
             raise ValueError("MERGE requires a directed relationship pattern")
-        if len(elems) == 1:
-            return self._merge_node_tail(elems[0], bound, on_create, on_match, ret)
-        if len(elems) >= 5 and len(elems) % 2 == 1:
-            # multi-relationship chain (r12): MERGE (a)-[:X]->(b)-[:Y]->(c)
-            return self._merge_chain(bound, elems, on_create, on_match, ret)
-        if len(elems) != 3:
-            raise ValueError(
-                "MATCH … MERGE supports a node, relationship, or chain pattern"
-            )
-        left, rel, right = elems
-        l_bound = bool(left.var and f"{left.var}_id" in bound.columns)
-        r_bound = bool(right.var and f"{right.var}_id" in bound.columns)
-        if l_bound != r_bound:
-            # one unbound endpoint: atomic whole-pattern get-or-create
-            # per anchor row (r11 — the openCypher MERGE contract: a miss
-            # creates the ENTIRE pattern including a fresh leaf node,
-            # even if a node with those properties exists elsewhere)
-            return self._merge_rel_grow(
-                bound, left, rel, right, l_bound, on_create, on_match, ret
-            )
-        if not (l_bound and r_bound):
-            raise ValueError(
-                "MATCH … MERGE needs at least one endpoint bound by the MATCH"
-            )
-        for el in (left, right):
-            if el.label or el.props:
+        for el in elems:
+            if not el.var:
+                el.var = f"_anon{self._anon}"
+                self._anon += 1
+        is_bound = {el.var: f"{el.var}_id" in bound.columns for el in elems}
+        for el in elems:
+            if is_bound[el.var] and isinstance(el, _Rel):
+                raise ValueError(f"relationship variable {el.var!r} already bound")
+            if is_bound[el.var] and len(elems) == 1:
+                raise ValueError(
+                    f"MERGE on the already-bound variable {el.var!r} — "
+                    "rebinding a matched node is a no-op; drop the MERGE"
+                )
+            if is_bound[el.var] and (el.label or el.props):
                 raise ValueError(
                     "MERGE cannot re-specify label/properties on the bound "
                     f"variable {el.var!r}"
                 )
-        if rel.var and f"{rel.var}_id" in bound.columns:
-            raise ValueError(f"relationship variable {rel.var!r} already bound")
-        rtype = rel.rel_type or "_"
-        rvar = rel.var or f"_anonr{self._anon}"
-        self._anon += 1
-        key_props = list((rel.props or {}).keys())
         frame = bound
-        for k, v in (rel.props or {}).items():
-            frame = frame.withColumn(
-                f"_mrg_{k}",
-                _prop_col(v, _frame_resolver(frame)),
+        keys = [f"{v}_id" for v in dict.fromkeys(v for v, b in is_bound.items() if b)]
+        guards = {}
+        for el in elems:
+            kind = "relationship" if isinstance(el, _Rel) else "node"
+            for k, v in (el.props or {}).items():
+                col = f"{el.var}_{_esc(k)}"
+                frame = frame.withColumn(col, _prop_col(v, _frame_resolver(frame)))
+                keys.append(col)
+                # Neo4j refuses null MERGE keys: a null never matches, so
+                # it is always missing, and the guard raises inside
+                # stage_indexed's materialization (no extra job). It sits
+                # above the anti join, where no filter pushes it below a
+                # label filter onto other nodes' nulls.
+                guards[col] = F.when(F.col(col).isNull(), F.raise_error(F.lit(
+                    f"Cannot merge the following {kind} because of null "
+                    f"property value for {k!r}"
+                ))).otherwise(F.col(col)).alias(col)
+        if not keys:
+            frame, keys = frame.withColumn("_mrg_unit", F.lit(0)), ["_mrg_unit"]
+        pre = self._merge_instances(self.store.graph, elems, is_bound, keys)
+        want = frame.select(*keys).dropDuplicates(keys)
+        missing, n = self.store.stage_indexed(
+            want.join(
+                self.store.graph.maybe_broadcast(None, pre.select(*keys)), keys, "left_anti"
+            ).select(
+                *[guards.get(k, F.col(k)) for k in keys]
             )
-        s_col, d_col = F.col(f"{left.var}_id"), F.col(f"{right.var}_id")
-        if rel.reversed:
-            s_col, d_col = d_col, s_col
-        pairs = frame.select(
-            s_col.alias("src"),
-            d_col.alias("dst"),
-            *[F.col(f"_mrg_{k}").alias(k) for k in key_props],
         )
-        rels_before = self.store.graph.rels  # immutable snapshot
-        self.store.merge_rels(rtype, pairs, key_props=tuple(key_props))
-
-        if not (on_create or on_match) and ret is None:
+        # rows whose instance holds an id from this statement's blocks
+        # took the CREATE branch
+        created = F.lit(False)
+        new_ids: dict[str, F.Column] = {}
+        for el in elems[0::2] if n else ():
+            if is_bound[el.var] or el.var in new_ids:
+                continue
+            base = self.store.reserve_node_ids(n)
+            new_ids[el.var] = F.col("_idx") + F.lit(base)
+            self.store.append_nodes(missing.select(
+                new_ids[el.var].alias("id"),
+                F.array(*[F.lit(x) for x in _create_labels(el)]).alias("labels"),
+                *[F.col(f"{el.var}_{_esc(k)}").alias(_esc(k)) for k in el.props],
+            ))
+            created = F.col(f"{el.var}_id") >= F.lit(base)
+        for i in range(1, len(elems), 2) if n else ():
+            rel, left, right = elems[i], elems[i - 1], elems[i + 1]
+            s, d = (new_ids.get(v.var, F.col(f"{v.var}_id")) for v in (left, right))
+            if rel.reversed:
+                s, d = d, s
+            base = self.store.reserve_rel_ids(n)
+            self.store.append_rels(missing.select(
+                (F.col("_idx") + F.lit(base)).alias("id"),
+                s.alias("src"),
+                d.alias("dst"),
+                F.lit(rel.rel_type or "_").alias("type"),
+                *[F.col(f"{rel.var}_{_esc(k)}").alias(_esc(k)) for k in rel.props],
+            ))
+            created = F.col(f"{rel.var}_id") >= F.lit(base)
+        if not (on_create or on_match or tail[cut:].strip()):
             return local_df(self.spark, [], "ok string")
-
-        def rel_join(rels_frame: DataFrame) -> DataFrame:
-            """Per-binding-row rel binding: equi-join the (src, dst, keys)
-            tuple back to the store's rels — fans out if multiple rels
-            match, exactly Cypher's MERGE-as-MATCH cardinality."""
-            post = rels_frame.where(F.col("type") == rtype)
-            prop_cols = [
-                c for c in post.columns if c not in ("id", "src", "dst", "type")
-            ]
-            post_sel = post.select(
-                F.col("src").alias("_mrg_jsrc"),
-                F.col("dst").alias("_mrg_jdst"),
-                F.col("id").alias(f"{rvar}_id"),
-                F.col("type").alias(f"{rvar}_type"),
-                *[F.col(c).alias(f"{rvar}_{c}") for c in prop_cols],
-            )
-            j = frame.withColumn("_mrg_src", s_col).withColumn("_mrg_dst", d_col)
-            cond = (F.col("_mrg_src") == F.col("_mrg_jsrc")) & (
-                F.col("_mrg_dst") == F.col("_mrg_jdst")
-            )
-            for k in key_props:
-                cond = cond & F.col(f"_mrg_{k}").eqNullSafe(
-                    F.col(f"{rvar}_{_esc(k)}")
-                )
-            return j.join(post_sel, cond, "inner").drop(
-                "_mrg_jsrc", "_mrg_jdst", "_mrg_src", "_mrg_dst",
-                *[f"_mrg_{k}" for k in key_props],
-            )
-
+        post = frame.join(
+            self._merge_instances(self.store.graph, elems, is_bound, keys), keys
+        ).drop("_mrg_unit")
         if on_create or on_match:
-            joined = rel_join(self.store.graph.rels)
-            keys = ["src", "dst", *[_esc(k) for k in key_props]]
-            existing_b = rels_before.where(F.col("type") == rtype)
-            if all(k in existing_b.columns for k in keys):
-                pre = existing_b.select(
-                    F.col("src").alias("_pre_src"),
-                    F.col("dst").alias("_pre_dst"),
-                    *[F.col(_esc(k)).alias(f"_pre_{k}") for k in key_props],
-                ).dropDuplicates().withColumn("_pre_hit", F.lit(True))
-                # rebuild the endpoint ids from the binding side (the join
-                # dropped the store's src/dst columns)
-                j2 = joined.withColumn("_f_src", s_col).withColumn("_f_dst", d_col)
-                cond = (F.col("_f_src") == F.col("_pre_src")) & (
-                    F.col("_f_dst") == F.col("_pre_dst")
-                )
-                for k in key_props:
-                    cond = cond & F.col(f"{rvar}_{_esc(k)}").eqNullSafe(
-                        F.col(f"_pre_{k}")
-                    )
-                j2 = j2.join(pre, cond, "left")
-                flagged = j2.withColumn(
-                    "_mrg_created", F.coalesce(~F.col("_pre_hit"), F.lit(True))
-                ).drop(
-                    "_pre_hit", "_pre_src", "_pre_dst", "_f_src", "_f_dst",
-                    *[f"_pre_{k}" for k in key_props],
-                )
-            else:
-                flagged = joined.withColumn("_mrg_created", F.lit(True))
-            for created_branch, assigns in ((True, on_create), (False, on_match)):
-                if not assigns:
-                    continue
-                subset = flagged.where(F.col("_mrg_created") == created_branch)
-                for var, props in assigns.items():
-                    g = subset
-                    for p, rhs_src in props.items():
-                        g = g.withColumn(
-                            f"_set_{p}", _compile_expr(rhs_src, _frame_resolver(g))
-                        )
-                    vals = g.select(
-                        F.col(f"{var}_id").alias("id")
-                        if f"{var}_id" in g.columns
-                        else F.lit(None).alias("id"),
-                        *[F.col(f"_set_{p}").alias(_esc(p)) for p in props],
-                    )
-                    if f"{var}_id" not in g.columns:
-                        raise ValueError(
-                            f"ON SET variable {var!r} is not in the pattern"
-                        )
-                    if var == rvar:
-                        self.store.set_rel_props_from_frame(vals, list(props))
-                    else:
-                        self.store.set_props_from_frame(vals, list(props))
-        if ret is None:
-            return local_df(self.spark, [], "ok string")
-        # rebind against the FINAL snapshot so RETURN sees ON-SET values
-        final = rel_join(self.store.graph.rels)
-        # node entity columns may also have been ON-SET: refresh them
-        for el in (left, right):
-            set_vars = set(on_create) | set(on_match)
-            if el.var in set_vars:
-                final = self._refresh_node_binding(final, el.var)
-        return self._project_match(final, ret, elems, _frame_resolver(final))
+            # one applier for both branches: a property the other branch
+            # does not assign keeps its value
+            resolve = _frame_resolver(post)
+            targets = {}
+            for branch, assigns in ((True, on_create), (False, on_match)):
+                for (var, p), col in zip(*self._assign_cols(post, assigns)):
+                    targets.setdefault(var, {}).setdefault(p, {})[branch] = col
+            post = self._write_props(post, {
+                var: {
+                    p: F.when(
+                        created, by.get(True, resolve(f"{var}.{p}"))
+                    ).otherwise(by.get(False, resolve(f"{var}.{p}")))
+                    for p, by in props.items()
+                }
+                for var, props in targets.items()
+            })
+        return self._clause_tail(post, tail[cut:], wrote=True)
 
-    def _merge_chain(
-        self, bound, elems, on_create, on_match, ret
+    def _merge_instances(
+        self, g, elems: list, is_bound: dict, keys: list
     ) -> DataFrame:
-        """``MATCH … MERGE (a)-[:X]->(b)-[:Y]->(c)`` — whole-pattern MERGE
-        over a multi-relationship chain, all endpoints bound (r12).
-
-        openCypher atomicity: per binding row the ENTIRE chain either
-        matches or is created — a row whose pattern partially exists
-        (a-X->b present, b-Y->c missing) creates a fresh relationship for
-        EVERY element, including a duplicate X edge (the documented MERGE
-        contract; merging each hop independently would be two MERGE
-        clauses).
-
-        Set-based: per-row existence flags come from one left join per
-        relationship element against the pre-statement snapshot (distinct
-        (src,dst[,keys]) tuples, so no fan-out); missing distinct pattern
-        tuples take one ``stage_indexed`` id block and one append per
-        element. Same branch-per-distinct-key convention as the single-
-        relationship tail. ON SET on relationship variables of a chain is
-        rejected loud (node variables work); RETURN rebinds rel entities
-        against the post-write snapshot."""
-        from .lexer import ExprText as _ET
-
-        node_elems = elems[0::2]
-        rel_elems = elems[1::2]
-        for nd in node_elems:
-            if not (nd.var and f"{nd.var}_id" in bound.columns):
-                raise ValueError(
-                    "multi-relationship MERGE requires every node bound by "
-                    f"the MATCH (unbound: {nd.var or '(anonymous)'!r})"
-                )
-            if nd.label or nd.props:
-                raise ValueError(
-                    "MERGE cannot re-specify label/properties on the bound "
-                    f"variable {nd.var!r}"
-                )
-        rvars = []
-        for r in rel_elems:
-            if r.var and f"{r.var}_id" in bound.columns:
-                raise ValueError(
-                    f"relationship variable {r.var!r} already bound"
-                )
-            rvars.append(r.var or f"_anonr{self._anon}")
-            self._anon += 1
-        set_vars = set(on_create) | set(on_match)
-        if set_vars & set(rvars):
-            raise ValueError(
-                "ON CREATE/ON MATCH SET on a relationship variable is not "
-                "supported for multi-relationship MERGE patterns"
-            )
-
-        frame = bound
-        key_cols: list[str] = []
-        rel_meta = []  # (rvar, rtype, src_col, dst_col, key_props, idx)
-        for i, r in enumerate(rel_elems):
-            rtype = r.rel_type or "_"
-            s_name = f"{node_elems[i].var}_id"
-            d_name = f"{node_elems[i + 1].var}_id"
-            if r.reversed:
-                s_name, d_name = d_name, s_name
-            kp = list((r.props or {}).keys())
-            for k, v in (r.props or {}).items():
-                frame = frame.withColumn(
-                    f"_mrg{i}_{k}",
-                    _prop_col(v, _frame_resolver(frame)),
-                )
-            rel_meta.append((rvars[i], rtype, s_name, d_name, kp, i))
-            key_cols += [s_name, d_name, *[f"_mrg{i}_{k}" for k in kp]]
-        key_cols = list(dict.fromkeys(key_cols))
-
-        rels_before = self.store.graph.rels  # immutable snapshot
-
-        flagged = frame
-        for rvar, rtype, s, d, kp, i in rel_meta:
-            flag = f"_hit{i}"
-            ex = rels_before.where(F.col("type") == rtype)
-            if not all(_esc(k) in ex.columns for k in kp):
-                # a key-prop column no rel carries yet ⇒ nothing matches
-                flagged = flagged.withColumn(flag, F.lit(False))
-                continue
-            sel = (
-                ex.select(
-                    F.col("src").alias("_h_src"),
-                    F.col("dst").alias("_h_dst"),
-                    *[F.col(_esc(k)).alias(f"_h_{k}") for k in kp],
-                )
-                .dropDuplicates()
-                .withColumn(flag, F.lit(True))
-            )
-            cond = (F.col(s) == F.col("_h_src")) & (F.col(d) == F.col("_h_dst"))
-            for k in kp:
-                cond = cond & F.col(f"_mrg{i}_{k}").eqNullSafe(F.col(f"_h_{k}"))
-            flagged = (
-                flagged.join(sel, cond, "left")
-                .withColumn(flag, F.coalesce(F.col(flag), F.lit(False)))
-                .drop("_h_src", "_h_dst", *[f"_h_{k}" for k in kp])
-            )
-        whole = F.lit(True)
-        for _, _, _, _, _, i in rel_meta:
-            whole = whole & F.col(f"_hit{i}")
-        flagged = flagged.withColumn("_mrg_created", ~whole).drop(
-            *[f"_hit{m[5]}" for m in rel_meta]
-        )
-
-        miss = (
-            flagged.where(F.col("_mrg_created"))
-            .select(*key_cols)
-            .dropDuplicates(key_cols)
-        )
-        indexed, n = self.store.stage_indexed(miss)
-        if n:
-            base = self.store.reserve_rel_ids(n * len(rel_meta))
-            for j, (rvar, rtype, s, d, kp, i) in enumerate(rel_meta):
-                self.store.append_rels(
-                    indexed.select(
-                        (F.col("_idx") + F.lit(base + j * n)).alias("id"),
-                        F.col(s).alias("src"),
-                        F.col(d).alias("dst"),
-                        F.lit(rtype).alias("type"),
-                        *[F.col(f"_mrg{i}_{k}").alias(_esc(k)) for k in kp],
-                    )
-                )
-
-        for created_branch, assigns in ((True, on_create), (False, on_match)):
-            if not assigns:
-                continue
-            subset = flagged.where(F.col("_mrg_created") == created_branch)
-            for var, props in assigns.items():
-                if f"{var}_id" not in subset.columns:
-                    raise ValueError(
-                        f"ON SET variable {var!r} is not in the pattern"
-                    )
-                g = subset
-                for p, rhs_src in props.items():
-                    g = g.withColumn(
-                        f"_set_{p}", _compile_expr(rhs_src, _frame_resolver(g))
-                    )
-                self.store.set_props_from_frame(
-                    g.select(
-                        F.col(f"{var}_id").alias("id"),
-                        *[F.col(f"_set_{p}").alias(_esc(p)) for p in props],
-                    ),
-                    list(props),
-                )
-
-        if ret is None:
-            return local_df(self.spark, [], "ok string")
-        final = flagged
-        post = self.store.graph.rels
-        for rvar, rtype, s, d, kp, i in rel_meta:
-            pr = post.where(F.col("type") == rtype)
-            prop_cols = [
-                c for c in pr.columns if c not in ("id", "src", "dst", "type")
-            ]
-            sel = pr.select(
-                F.col("src").alias("_j_src"),
-                F.col("dst").alias("_j_dst"),
-                F.col("id").alias(f"{rvar}_id"),
-                F.col("type").alias(f"{rvar}_type"),
-                *[F.col(c).alias(f"{rvar}_{c}") for c in prop_cols],
-            )
-            cond = (F.col(s) == F.col("_j_src")) & (F.col(d) == F.col("_j_dst"))
-            for k in kp:
-                cond = cond & F.col(f"_mrg{i}_{k}").eqNullSafe(
-                    F.col(f"{rvar}_{_esc(k)}")
-                )
-            final = final.join(sel, cond, "inner").drop("_j_src", "_j_dst")
-        final = final.drop(*[c for c in final.columns if c.startswith("_mrg")])
-        for nd in node_elems:
-            if nd.var in set_vars:
-                final = self._refresh_node_binding(final, nd.var)
-        return self._project_match(final, ret, elems, _frame_resolver(final))
-
-    def _merge_rel_grow(
-        self, bound, left, rel, right, l_bound, on_create, on_match, ret
-    ) -> DataFrame:
-        """``MATCH (a) MERGE (a)-[:T]->(b:L {k: expr})`` — relationship
-        MERGE with one UNBOUND endpoint (r11): openCypher atomic
-        whole-pattern semantics, per anchor row. A row whose ENTIRE
-        pattern (typed edge + leaf label + leaf/rel key properties) is
-        absent creates the whole pattern — a FRESH leaf node even when a
-        node with those properties exists elsewhere (the MERGE contract;
-        matching only the leaf would be ``MERGE (b:L …)`` then
-        ``MERGE (a)-[:T]->(b)``).
-
-        Set-based: distinct (anchor, leaf keys, rel keys) tuples
-        left-anti-joined against the pre-statement pattern matches; one
-        ``stage_indexed`` id block + one node append + one rel append for
-        every missing tuple. Branch flags / RETURN re-join the post-write
-        snapshot — immutable frames make pre/post comparison free.
-
-        Divergence (documented): null merge-key values never match
-        (name-list join), so a null-keyed row re-creates per statement —
-        Neo4j rejects null MERGE keys outright."""
-        from .lexer import ExprText as _ET
+        """Every instance of a MERGE pattern in snapshot ``g``: ``var_*``
+        prefixed columns per element, a bound node by its id alone (read
+        off the adjacent relationship's endpoint, no node frame joined).
+        Key-property columns the store has never written are null, so
+        they match nothing."""
         from ..graph import prefix_columns
 
-        anchor, leaf = (left, right) if l_bound else (right, left)
-        if anchor.label or anchor.props:
-            raise ValueError(
-                "MERGE cannot re-specify label/properties on the bound "
-                f"variable {anchor.var!r}"
-            )
-        lvar = leaf.var or f"_anon{self._anon}"
-        self._anon += 1
-        rtype = rel.rel_type or "_"
-        if rel.var and f"{rel.var}_id" in bound.columns:
-            raise ValueError(f"relationship variable {rel.var!r} already bound")
-        rvar = rel.var or f"_anonr{self._anon}"
-        self._anon += 1
-        label = leaf.label or "_"
-        leaf_keys = list((leaf.props or {}).keys())
-        rel_keys = list((rel.props or {}).keys())
-        anchor_is_src = bool(l_bound) != bool(rel.reversed)
-
-        def compiled(v, cur):
-            return _prop_col(v, _frame_resolver(cur))
-
-        frame = bound
-        for k, v in (leaf.props or {}).items():
-            frame = frame.withColumn(f"_mlf_{k}", compiled(v, frame))
-        for k, v in (rel.props or {}).items():
-            frame = frame.withColumn(f"_mrl_{k}", compiled(v, frame))
-        aid = F.col(f"{anchor.var}_id")
-        key_cols = (
-            ["_aid"]
-            + [f"_exl_{k}" for k in leaf_keys]
-            + [f"_exr_{k}" for k in rel_keys]
-        )
-
-        def pattern_keys(g) -> DataFrame | None:
-            """Existing whole-pattern matches as distinct key tuples."""
-            rels_t = g.rels.where(F.col("type") == rtype)
-            leaf_n = (
-                g.nodes.where(F.array_contains(F.col("labels"), label))
-                if leaf.label
-                else g.nodes
-            )
-            if not all(
-                _esc(k) in leaf_n.columns for k in leaf_keys
-            ) or not all(_esc(k) in rels_t.columns for k in rel_keys):
-                return None  # a key column no write introduced → no match
-            leaf_sel = leaf_n.select(
-                F.col("id").alias("_lid"),
-                *[F.col(_esc(k)).alias(f"_exl_{k}") for k in leaf_keys],
-            )
-            rel_sel = rels_t.select(
-                "src", "dst",
-                *[F.col(_esc(k)).alias(f"_exr_{k}") for k in rel_keys],
-            )
-            leaf_side, anchor_side = (
-                ("dst", "src") if anchor_is_src else ("src", "dst")
-            )
-            return (
-                rel_sel.join(leaf_sel, F.col(leaf_side) == F.col("_lid"))
-                .select(
-                    F.col(anchor_side).alias("_aid"),
-                    *[F.col(f"_exl_{k}") for k in leaf_keys],
-                    *[F.col(f"_exr_{k}") for k in rel_keys],
-                )
-                .dropDuplicates(key_cols)
-            )
-
-        pre_keys = pattern_keys(self.store.graph)
-        want = frame.select(
-            aid.alias("_aid"),
-            *[F.col(f"_mlf_{k}").alias(f"_exl_{k}") for k in leaf_keys],
-            *[F.col(f"_mrl_{k}").alias(f"_exr_{k}") for k in rel_keys],
-        ).dropDuplicates(key_cols)
-        missing = (
-            want if pre_keys is None else want.join(pre_keys, key_cols, "left_anti")
-        )
-        indexed, n = self.store.stage_indexed(missing)
-        if n:
-            nb = self.store.reserve_node_ids(n)
-            self.store.append_nodes(
-                indexed.select(
-                    (F.col("_idx") + F.lit(nb)).alias("id"),
-                    F.array(F.lit(label)).alias("labels"),
-                    *[F.col(f"_exl_{k}").alias(_esc(k)) for k in leaf_keys],
-                )
-            )
-            rb = self.store.reserve_rel_ids(n)
-            new_id = F.col("_idx") + F.lit(nb)
-            s_col = F.col("_aid") if anchor_is_src else new_id
-            d_col = new_id if anchor_is_src else F.col("_aid")
-            self.store.append_rels(
-                indexed.select(
-                    (F.col("_idx") + F.lit(rb)).alias("id"),
-                    s_col.alias("src"),
-                    d_col.alias("dst"),
-                    F.lit(rtype).alias("type"),
-                    *[F.col(f"_exr_{k}").alias(_esc(k)) for k in rel_keys],
-                )
-            )
-        if not (on_create or on_match) and ret is None:
-            return local_df(self.spark, [], "ok string")
-
-        def pattern_join(g) -> DataFrame:
-            """Per-row pattern binding against a store snapshot: anchor
-            id + key props equi-joined to (rel × leaf) — fans out on
-            multiple matches, Cypher's MERGE-as-MATCH cardinality."""
-            rels_t = g.rels.where(F.col("type") == rtype)
-            leaf_n = (
-                g.nodes.where(F.array_contains(F.col("labels"), label))
-                if leaf.label
-                else g.nodes
-            )
-            pl = prefix_columns(leaf_n, lvar)
-            pr = prefix_columns(rels_t, rvar)
-            leaf_side, anchor_side = (
-                (f"{rvar}_dst", f"{rvar}_src")
-                if anchor_is_src
-                else (f"{rvar}_src", f"{rvar}_dst")
-            )
-            pat = pr.join(pl, F.col(leaf_side) == F.col(f"{lvar}_id"))
-            cond = F.col(anchor_side) == aid
-            for k in leaf_keys:
-                cond = cond & F.col(f"_mlf_{k}").eqNullSafe(
-                    F.col(f"{lvar}_{_esc(k)}")
-                )
-            for k in rel_keys:
-                cond = cond & F.col(f"_mrl_{k}").eqNullSafe(
-                    F.col(f"{rvar}_{_esc(k)}")
-                )
-            return frame.join(pat, cond).drop(
-                *[f"_mlf_{k}" for k in leaf_keys],
-                *[f"_mrl_{k}" for k in rel_keys],
-            )
-
-        if on_create or on_match:
-            joined = pattern_join(self.store.graph)
-            if pre_keys is None:
-                flagged = joined.withColumn("_mrg_created", F.lit(True))
+        def frame_of(el) -> DataFrame:
+            if isinstance(el, _Rel):
+                f = g.rels.where(F.col("type") == (el.rel_type or "_"))
             else:
-                pre_hit = pre_keys.select(
-                    F.col("_aid").alias("_ph_aid"),
-                    *[F.col(f"_exl_{k}").alias(f"_ph_l_{k}") for k in leaf_keys],
-                    *[F.col(f"_exr_{k}").alias(f"_ph_r_{k}") for k in rel_keys],
-                ).withColumn("_pre_hit", F.lit(True))
-                cond = aid == F.col("_ph_aid")
-                for k in leaf_keys:
-                    cond = cond & F.col(f"{lvar}_{_esc(k)}").eqNullSafe(
-                        F.col(f"_ph_l_{k}")
-                    )
-                for k in rel_keys:
-                    cond = cond & F.col(f"{rvar}_{_esc(k)}").eqNullSafe(
-                        F.col(f"_ph_r_{k}")
-                    )
-                flagged = joined.join(pre_hit, cond, "left").withColumn(
-                    "_mrg_created", F.coalesce(~F.col("_pre_hit"), F.lit(True))
-                ).drop(
-                    "_pre_hit", "_ph_aid",
-                    *[f"_ph_l_{k}" for k in leaf_keys],
-                    *[f"_ph_r_{k}" for k in rel_keys],
-                )
-            for created_branch, assigns in ((True, on_create), (False, on_match)):
-                if not assigns:
-                    continue
-                subset = flagged.where(F.col("_mrg_created") == created_branch)
-                for var, props in assigns.items():
-                    if f"{var}_id" not in subset.columns:
-                        raise ValueError(
-                            f"ON SET variable {var!r} is not in the pattern"
-                        )
-                    g2 = subset
-                    for p, rhs_src in props.items():
-                        g2 = g2.withColumn(
-                            f"_set_{p}", _compile_expr(rhs_src, _frame_resolver(g2))
-                        )
-                    vals = g2.select(
-                        F.col(f"{var}_id").alias("id"),
-                        *[F.col(f"_set_{p}").alias(_esc(p)) for p in props],
-                    )
-                    if var == rvar:
-                        self.store.set_rel_props_from_frame(vals, list(props))
-                    else:
-                        self.store.set_props_from_frame(vals, list(props))
-        if ret is None:
-            return local_df(self.spark, [], "ok string")
-        final = pattern_join(self.store.graph)
-        leaf.var = lvar  # entity metadata for the shared funnel
-        return self._project_match(
-            final, ret, [left, rel, right], _frame_resolver(final)
-        )
+                f = g.nodes
+                for lab in _create_labels(el) if el.label else ():
+                    f = f.where(F.array_contains(F.col("labels"), lab))
+            for k in el.props or {}:
+                if _esc(k) not in f.columns:
+                    f = f.withColumn(_esc(k), F.lit(None))
+            return prefix_columns(f, el.var)
 
-    def _refresh_node_binding(self, frame: DataFrame, var: str) -> DataFrame:
-        """Re-join a node variable's ``{var}_*`` columns from the CURRENT
-        nodes snapshot by id — used after an ON CREATE/ON MATCH SET so the
-        RETURN tail reads the post-write property values."""
-        nodes = self.store.graph.nodes
-        stale = [c for c in frame.columns if c.startswith(f"{var}_") and c != f"{var}_id"]
-        fresh = nodes.select(
-            F.col("id").alias(f"{var}_id"),
-            *[F.col(c).alias(f"{var}_{c}") for c in nodes.columns if c != "id"],
-        )
-        return frame.drop(*stale).join(fresh, f"{var}_id", "left")
-
-    def _merge_node_tail(
-        self, el, bound: DataFrame, on_create: dict, on_match: dict, ret: str | None
-    ) -> DataFrame:
-        """``MATCH … MERGE (v:Label {key: expr})`` — per-binding-row node
-        get-or-create keyed on the computed property values; ONE
-        ``store.merge_nodes`` batch (distinct keys → left-anti → append)."""
-        from .lexer import ExprText as _ET
-
-        if el.var and f"{el.var}_id" in bound.columns:
-            raise ValueError(
-                f"MERGE on the already-bound variable {el.var!r} — "
-                "rebinding a matched node is a no-op; drop the MERGE"
-            )
-        if not el.props:
-            raise ValueError("node MERGE in a write tail needs key properties")
-        var = el.var or f"_anon{self._anon}"
-        self._anon += 1
-        label = el.label or "_"
-        keys = list(el.props)
-        frame = bound
-        for k, v in el.props.items():
-            frame = frame.withColumn(
-                f"_mrgk_{k}",
-                _prop_col(v, _frame_resolver(frame)),
-            )
-        nodes_before = self.store.graph.nodes
-        self.store.merge_nodes(
-            label, frame.select(*[F.col(f"_mrgk_{k}").alias(k) for k in keys]), keys
-        )
-        if not (on_create or on_match) and ret is None:
-            return local_df(self.spark, [], "ok string")
-
-        def node_join(nodes_frame: DataFrame) -> DataFrame:
-            post = nodes_frame.where(F.array_contains(F.col("labels"), label))
-            prop_cols = [c for c in post.columns if c not in ("id",)]
-            post_sel = post.select(
-                F.col("id").alias(f"{var}_id"),
-                *[F.col(c).alias(f"{var}_{c}") for c in prop_cols],
-            )
-            cond = None
-            for k in keys:
-                # reserved key names compare their ESCAPED store column
-                # (`{id: row.id}` — r13), never the internal entity id
-                t = F.col(f"_mrgk_{k}").eqNullSafe(F.col(f"{var}_{_esc(k)}"))
-                cond = t if cond is None else cond & t
-            return frame.join(post_sel, cond, "inner").drop(
-                *[f"_mrgk_{k}" for k in keys]
-            )
-
-        if on_create or on_match:
-            joined = node_join(self.store.graph.nodes)
-            before = nodes_before.where(F.array_contains(F.col("labels"), label))
-            if all(_esc(k) in before.columns for k in keys):
-                pre = before.select(
-                    *[F.col(_esc(k)).alias(f"_pre_{k}") for k in keys]
-                ).dropDuplicates().withColumn("_pre_hit", F.lit(True))
-                cond = None
-                for k in keys:
-                    t = F.col(f"{var}_{_esc(k)}").eqNullSafe(F.col(f"_pre_{k}"))
-                    cond = t if cond is None else cond & t
-                flagged = joined.join(pre, cond, "left").withColumn(
-                    "_mrg_created", F.coalesce(~F.col("_pre_hit"), F.lit(True))
-                ).drop("_pre_hit", *[f"_pre_{k}" for k in keys])
+        first = elems[0]
+        inst = None if is_bound[first.var] else frame_of(first)
+        for i in range(1, len(elems), 2):
+            rel, left, right = elems[i], elems[i - 1], elems[i + 1]
+            rf = frame_of(rel)
+            s, d = F.col(f"{rel.var}_src"), F.col(f"{rel.var}_dst")
+            if rel.reversed:
+                s, d = d, s
+            if inst is None:
+                inst = rf.withColumn(f"{left.var}_id", s)
             else:
-                flagged = joined.withColumn("_mrg_created", F.lit(True))
-            for created_branch, assigns in ((True, on_create), (False, on_match)):
-                if not assigns:
-                    continue
-                subset = flagged.where(F.col("_mrg_created") == created_branch)
-                for v_, props in assigns.items():
-                    if f"{v_}_id" not in subset.columns:
-                        raise ValueError(
-                            f"ON SET variable {v_!r} is not in the pattern"
-                        )
-                    g = subset
-                    for p, rhs_src in props.items():
-                        g = g.withColumn(
-                            f"_set_{p}", _compile_expr(rhs_src, _frame_resolver(g))
-                        )
-                    self.store.set_props_from_frame(
-                        g.select(
-                            F.col(f"{v_}_id").alias("id"),
-                            *[F.col(f"_set_{p}").alias(_esc(p)) for p in props],
-                        ),
-                        list(props),
-                    )
-        if ret is None:
-            return local_df(self.spark, [], "ok string")
-        final = node_join(self.store.graph.nodes)
-        return self._project_match(final, ret, [el], _frame_resolver(final))
+                inst = inst.join(g.maybe_broadcast(None, rf), F.col(f"{left.var}_id") == s)
+            if f"{right.var}_id" in inst.columns:
+                inst = inst.where(F.col(f"{right.var}_id") == d)
+            elif is_bound[right.var]:
+                inst = inst.withColumn(f"{right.var}_id", d)
+            else:
+                inst = inst.join(
+                    g.maybe_broadcast(None, frame_of(right)), F.col(f"{right.var}_id") == d
+                )
+        if "_mrg_unit" in keys:
+            inst = inst.withColumn("_mrg_unit", F.lit(0))
+        return inst
 
     def _parse_call_proc_stage(self, seg: str):
         """``CALL <proc>(args) [YIELD cols [WHERE pred]]`` text after a
@@ -6006,7 +5203,7 @@ class Session:
         return out.distinct() if distinct else out
 
     def _bind_additional(
-        self, bound: DataFrame, src: str, optional: bool, k: int
+        self, bound: DataFrame, src: str, optional: bool, k: int, after: str = ""
     ) -> DataFrame:
         """A further ``[OPTIONAL] MATCH`` after a WITH stage: bind the new
         pattern and join it back on every variable shared with ``bound``
@@ -6057,7 +5254,11 @@ class Session:
                 pattern.append(_node_spec(el))
             else:
                 pattern.append(RelSpec(el.var or f"_mr{k}_{j}", el.rel_type, _direction(el), props=el.props or None))
-        sub = match_chain(self.store.graph, pattern)
+        sub = match_chain(
+            self.store.graph,
+            pattern,
+            with_rel_ids=_rel_ids_needed(elems, f"{where_src or ''} {after}"),
+        )
         anchors = [
             el.var
             for el in elems
@@ -6357,7 +5558,7 @@ class Session:
                 ret = ret[: m.start()] + var + ret[m.end() :]
 
     def _project_match(
-        self, bound: DataFrame, ret: str, elems: list, resolve=None
+        self, bound: DataFrame, ret: str, resolve=None
     ) -> DataFrame:
         # Pattern comprehensions rewrite BOTH the frame and the RETURN
         # text, so they hook here — the single funnel every RETURN

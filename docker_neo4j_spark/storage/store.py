@@ -29,7 +29,7 @@ from ..localframe import local_df
 
 import itertools
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import NODE_FIXED_COLS, REL_FIXED_COLS, PropertyGraph
@@ -562,26 +562,6 @@ class GraphStore:
         )
         return n
 
-    def create_nodes_frame(self, label: str | list[str], df: DataFrame) -> int:
-        """Set-based ``CREATE`` from a DataFrame of property columns
-        (the LOAD CSV ingest path — r12): one stable-index pass + one
-        reserved id block + one append; returns the row count. Unlike
-        ``merge_nodes`` there is no dedup — CREATE always inserts."""
-        labels = [label] if isinstance(label, str) else list(label)
-        df = df.toDF(*[esc_prop(c) for c in df.columns])
-        indexed, n = self.stage_indexed(df)
-        if n == 0:
-            return 0
-        base = self.reserve_node_ids(n)
-        self.append_nodes(
-            indexed.select(
-                (F.col("_idx") + F.lit(base)).alias("id"),
-                F.array(*[F.lit(x) for x in labels]).alias("labels"),
-                *[F.col(c) for c in df.columns],
-            )
-        )
-        return n
-
     def merge_rels(
         self, rel_type: str, pairs: DataFrame, key_props: tuple = ()
     ) -> int:
@@ -655,92 +635,110 @@ class GraphStore:
         replays on every later readback."""
         return F.broadcast(df) if self._is_small_interactive() else df
 
-    def set_rel_props_from_frame(self, vals: DataFrame, props: list[str]) -> None:
-        """Set-based relationship-property update (r11 — ``MATCH … MERGE …
-        ON CREATE/ON MATCH SET r.k = …``): ``vals`` carries (id, <prop…>)
-        computed over the match binding; one left join + conditional
-        column update per property, mirroring :meth:`set_props_from_frame`
-        on the rels frame (no uniqueness constraints apply to rels)."""
-        props = [esc_prop(p) for p in props]
-        sel = [F.col("id")] + [F.col(p).alias(f"_new_{p}") for p in props]
-        flagged = (
-            vals.select(*sel).dropDuplicates(["id"]).withColumn("_hit", F.lit(True))
-        )
-        rels = self.graph.rels.join(self._bc_small(flagged), "id", "left")
-        base_t, new_t = dict(self.graph.rels.dtypes), dict(flagged.dtypes)
-        for p in props:
-            newc = F.col(f"_new_{p}")
-            if p in self.graph.rels.columns:
-                tgt = self._reconcile_set_type(base_t[p], new_t[f"_new_{p}"], p)
-                old = F.col(p)
-                if tgt:
-                    old, newc = old.cast(tgt), newc.cast(tgt)
-            else:
-                old = F.lit(None)
-            rels = rels.withColumn(
-                p, F.when(F.col("_hit"), newc).otherwise(old)
+    # a change frame up to this many rows folds into the updated store
+    # frame as literals; a larger one is pinned and joined
+    FOLD_MAX_ROWS = 1024
+
+    def _changes(self, df: DataFrame):
+        """Cut a change frame (``id`` plus new values) off the store's own
+        plan. SET, REMOVE and DELETE compute it from a binding over the
+        store, so joining it back makes every update reference the store
+        twice: the plan doubles per update (2,048 leaf relations after ten
+        SETs of one node) and every later read plans all of it. Up to
+        ``FOLD_MAX_ROWS`` rows come back in one job (none for a driver-side
+        frame), one per id, as a list to fold into the update as literals:
+        no join and no new plan leaf. A larger frame, or one holding maps
+        or structs, comes back pinned by an eager localCheckpoint (one job,
+        one leaf) to join by id."""
+        if all(not t.startswith(("map", "struct", "variant")) for _, t in df.dtypes):
+            rows = df.limit(self.FOLD_MAX_ROWS + 1).collect()
+            if len(rows) <= self.FOLD_MAX_ROWS:
+                return list({r["id"]: r for r in rows}.values())
+        return df.dropDuplicates(["id"]).localCheckpoint(eager=True)
+
+    def _flagged(
+        self, base: DataFrame, changes, key: str = "id", types: dict | None = None
+    ) -> DataFrame:
+        """``base`` plus ``_hit`` (its ``key`` is one of the ``_changes``
+        ids) and ``_new_<p>``, the new value, for each property ``p`` of
+        ``types`` (property → Spark type)."""
+        types = types or {}
+        if not isinstance(changes, list):
+            return base.join(self._bc_small(changes.select(
+                F.col("id").alias(key),
+                *[F.col(p).alias(f"_new_{p}") for p in types],
+                F.lit(True).alias("_hit"),
+            )), key, "left")
+        cols = {"_hit": F.col(key).isin([r["id"] for r in changes])}
+        for p, t in types.items():
+            pairs = [
+                (F.lit(r["id"]).cast("long"), F.lit(r[p]) if t == "void" else F.lit(r[p]).cast(t))
+                for r in changes
+            ]
+            cols[f"_new_{p}"] = F.element_at(
+                F.create_map(*[c for pair in pairs for c in pair]), F.col(key)
             )
-        rels = rels.drop("_hit", *[f"_new_{p}" for p in props])
-        self._swap(rels=rels)
+        return base.withColumns(cols)
 
-    def set_props_by_ids(self, ids: DataFrame, new_props: dict) -> None:
-        """Set-based ``SET`` driven by a matched id frame: one left join +
-        conditional column update per property — the façade's
-        ``MATCH … SET`` path (no driver materialization of the match)."""
-        new_props = {esc_prop(k): v for k, v in new_props.items()}
-        flagged = ids.select("id").distinct().withColumn("_hit", F.lit(True))
-        nodes = self.graph.nodes.join(self._bc_small(flagged), "id", "left")
-        base_t = dict(self.graph.nodes.dtypes)
-        for k, v in new_props.items():
-            newc = F.lit(v)
-            if k in self.graph.nodes.columns:
-                in_tn = self._PY_DTYPES.get(type(v))
-                tgt = (
-                    self._reconcile_set_type(base_t[k], in_tn, k)
-                    if in_tn is not None and v is not None
-                    else None
-                )
-                old = F.col(k)
-                if tgt:
-                    old, newc = old.cast(tgt), newc.cast(tgt)
-            else:
-                old = F.lit(None)
-            nodes = nodes.withColumn(k, F.when(F.col("_hit"), newc).otherwise(old))
-        nodes = nodes.drop("_hit")
-        self._enforce_unique_post(nodes, set(new_props))
-        self._swap(nodes=nodes)
+    def _kept(self, base: DataFrame, changes, key: str = "id") -> DataFrame:
+        """``base`` without the rows whose ``key`` is one of the ``_changes`` ids."""
+        if isinstance(changes, list):
+            return base.where(~F.col(key).isin([r["id"] for r in changes]))
+        return base.join(changes.select(F.col("id").alias(key)), key, "left_anti")
 
-    def set_props_from_frame(self, vals: DataFrame, props: list[str]) -> None:
-        """Set-based ``SET`` with per-node COMPUTED values (r9): ``vals``
+    def set_props_from_frame(
+        self, vals: DataFrame, props: list[str], rels: bool = False
+    ) -> None:
+        """Set-based ``SET`` with per-entity COMPUTED values (r9): ``vals``
         carries (id, <prop…>) where each prop column is an arbitrary
-        expression evaluated over the match binding — one left join +
-        conditional column update per property, the same shape as
-        :meth:`set_props_by_ids` but joining values instead of
-        broadcasting a constant. Duplicate-id rows collapse to one
-        (Cypher leaves multi-match write order unspecified; a
-        distributed engine must pin a deterministic winner)."""
-        props = [esc_prop(p) for p in props]
-        sel = [F.col("id")] + [F.col(p).alias(f"_new_{p}") for p in props]
-        flagged = (
-            vals.select(*sel).dropDuplicates(["id"]).withColumn("_hit", F.lit(True))
-        )
-        nodes = self.graph.nodes.join(self._bc_small(flagged), "id", "left")
-        base_t, new_t = dict(self.graph.nodes.dtypes), dict(flagged.dtypes)
+        expression evaluated over the match binding; ``rels`` writes the
+        relationships frame. One conditional column update per property
+        (``_changes`` folds the values in or joins them). Duplicate-id
+        rows collapse to one (Cypher leaves multi-match write order
+        unspecified; a distributed engine must pin a deterministic
+        winner)."""
+        vals = vals.select("id", *[esc_prop(p) for p in props])
+        self._set_props(self._changes(vals), dict(vals.dtypes[1:]), rels)
+
+    def _set_props(self, changes, new_t: dict, rels: bool) -> None:
+        """One conditional column update per property of ``new_t``
+        (escaped name → Spark type) from ``_changes``-shaped ``changes``."""
+        if changes == []:
+            return
+        props = list(new_t)
+        base = self.graph.rels if rels else self.graph.nodes
+        base_t = dict(base.dtypes)
+        out = self._flagged(base, changes, types=new_t)
         for p in props:
             newc = F.col(f"_new_{p}")
-            if p in self.graph.nodes.columns:
-                tgt = self._reconcile_set_type(base_t[p], new_t[f"_new_{p}"], p)
+            if p in base.columns:
+                tgt = self._reconcile_set_type(base_t[p], new_t[p], p)
                 old = F.col(p)
                 if tgt:
                     old, newc = old.cast(tgt), newc.cast(tgt)
             else:
                 old = F.lit(None)
-            nodes = nodes.withColumn(
-                p, F.when(F.col("_hit"), newc).otherwise(old)
-            )
-        nodes = nodes.drop("_hit", *[f"_new_{p}" for p in props])
-        self._enforce_unique_post(nodes, set(props))
-        self._swap(nodes=nodes)
+            out = out.withColumn(p, F.when(F.col("_hit"), newc).otherwise(old))
+        out = out.drop("_hit", *[f"_new_{p}" for p in props])
+        if rels:
+            self._swap(rels=out)
+            return
+        self._enforce_unique_post(out, set(props))
+        self._swap(nodes=out)
+
+    def set_props_by_ids(
+        self, ids: DataFrame | list[int], new_props: dict, rels: bool = False
+    ) -> None:
+        """Set-based ``SET`` of literal values on matched ids (the
+        relationships frame when ``rels``): an id frame, or a list of ids
+        the driver already holds (no Spark job)."""
+        cols = [F.lit(v).alias(esc_prop(k)) for k, v in new_props.items()]
+        if isinstance(ids, DataFrame):
+            self.set_props_from_frame(ids.select("id", *cols), list(new_props), rels=rels)
+            return
+        types = dict(self.spark.range(0).select(*cols).dtypes)
+        rows = [Row(id=i, **{esc_prop(k): v for k, v in new_props.items()}) for i in ids]
+        self._set_props(rows, types, rels)
 
     def set_labels_by_ids(
         self, ids: DataFrame, add: tuple = (), remove: tuple = ()
@@ -748,8 +746,9 @@ class GraphStore:
         """Set-based ``SET n:Label`` / ``REMOVE n:Label`` (r9): matched
         ids drive one conditional labels-array update — union for adds
         (idempotent), except for removes."""
-        flagged = ids.select("id").distinct().withColumn("_hit", F.lit(True))
-        nodes = self.graph.nodes.join(self._bc_small(flagged), "id", "left")
+        changes = self._changes(ids.select("id"))
+        if changes == []:
+            return
         new_labels = F.col("labels")
         if add:
             new_labels = F.array_union(
@@ -757,7 +756,7 @@ class GraphStore:
             )
         for x in remove:
             new_labels = F.array_remove(new_labels, x)
-        nodes = nodes.withColumn(
+        nodes = self._flagged(self.graph.nodes, changes).withColumn(
             "labels",
             F.when(F.col("_hit"), new_labels).otherwise(F.col("labels")),
         ).drop("_hit")
@@ -766,31 +765,28 @@ class GraphStore:
     def delete_nodes_by_ids(self, ids: DataFrame, detach: bool = True) -> None:
         """Set-based ``[DETACH] DELETE`` driven by a matched id frame.
         Plain DELETE raises if any doomed node still has relationships
-        (Cypher's constraint); DETACH also anti-joins those rels away."""
-        doomed = ids.select("id").distinct()
+        (Cypher's constraint); DETACH also drops those rels."""
+        doomed = self._changes(ids.select("id"))
+        if doomed == []:
+            return
         rels = self.graph.rels
         if not detach:
-            touching = rels.join(
-                doomed.withColumnRenamed("id", "src"), "src", "left_semi"
-            ).unionByName(
-                rels.join(doomed.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            touching = self._flagged(rels, doomed, "src").where("_hit").unionByName(
+                self._flagged(rels, doomed, "dst").where("_hit")
             )
             if not touching.isEmpty():
                 raise ValueError(
                     "cannot DELETE nodes that still have relationships; use DETACH DELETE"
                 )
-            new_rels = rels
         else:
-            new_rels = rels.join(
-                doomed.withColumnRenamed("id", "src"), "src", "left_anti"
-            ).join(doomed.withColumnRenamed("id", "dst"), "dst", "left_anti").select(
-                rels.columns
-            )
-        self._swap(nodes=self.graph.nodes.join(doomed, "id", "left_anti"), rels=new_rels)
+            rels = self._kept(self._kept(rels, doomed, "src"), doomed, "dst")
+        self._swap(nodes=self._kept(self.graph.nodes, doomed), rels=rels)
 
     def delete_rels_by_ids(self, ids: DataFrame) -> None:
-        """``DELETE r`` for a matched relationship id frame — one anti-join."""
-        self._swap(rels=self.graph.rels.join(ids.select("id").distinct(), "id", "left_anti"))
+        """``DELETE r`` for a matched relationship id frame."""
+        doomed = self._changes(ids.select("id"))
+        if doomed != []:
+            self._swap(rels=self._kept(self.graph.rels, doomed))
 
     def delete_nodes(self, label: str, detach: bool = True, **props) -> None:
         """``MATCH (n:Label {props}) [DETACH] DELETE n``."""

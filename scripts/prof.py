@@ -18,7 +18,8 @@ usage: python scripts/prof.py [--repo TREE] COMMAND ARGS
   events Q              every localCheckpoint and isEmpty call inside Q's
                         build, timed, in each of two passes
   plans TAG [Q1,Q2]     .explain("formatted") of each query to
-                        plans/TAG/<query>.txt (default: bench.HEADLINE)
+                        plans/TAG/<query>.txt (default: bench.HEADLINE),
+                        normalised so two runs of one tree diff empty
   ab TREE_A TREE_B Q1,Q2 [runs]
                         `time Q1,Q2 2` once per tree and run (default 3
                         runs), each in its own process, alternating which
@@ -37,6 +38,7 @@ import contextlib
 import io
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -197,6 +199,22 @@ def cmd_events(spark, qs, sf, name) -> None:
             setattr(DataFrame, attr, fn)
 
 
+_PLAN_NOISE = (
+    (re.compile(r"#\d+"), "#N"),  # expression ids (name#123, id#45L)
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"graft_loadcsv_\w+"), "graft_loadcsv_X"),  # LOAD CSV temp dir
+)
+
+
+def normalise_plan(text: str) -> str:
+    """A formatted plan with its per-run tokens rewritten to stable ones:
+    expression ids, exchange ``plan_id``s and LOAD CSV's temp-directory
+    name."""
+    for pattern, token in _PLAN_NOISE:
+        text = pattern.sub(token, text)
+    return text
+
+
 def cmd_plans(spark, qs, sf, tag, names=None) -> None:
     outdir = os.path.join(ROOT, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
@@ -207,7 +225,7 @@ def cmd_plans(spark, qs, sf, tag, names=None) -> None:
             with contextlib.redirect_stdout(buf):
                 qs[name](spark, sf).explain("formatted")
             with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
-                f.write(buf.getvalue())
+                f.write(normalise_plan(buf.getvalue()))
             print(f"ok    {name}")
         except Exception as ex:  # noqa: BLE001 - report and continue
             print(f"ERROR {name}: {type(ex).__name__}: {str(ex)[:200]}")

@@ -135,3 +135,20 @@ def test_codelines_skips_docstrings_comments_and_blank_lines():
     assert codelines.count(src) == 9
     assert codelines.count("") == 0
     assert codelines.docstring_lines(src) == {1, 2, 9, 12, 13, 14}
+
+
+def test_plans_normalise_per_run_tokens():
+    """Two runs of one tree write the same plan text: expression ids,
+    exchange plan_ids and LOAD CSV's temp directory become fixed tokens,
+    and everything else is kept."""
+    run = (
+        "(1) Scan csv\nLocation: InMemoryFileIndex [file:/tmp/graft_loadcsv_{d}/rows.csv]\n"
+        "Output [2]: [name#{a}, age#{b}L]\n"
+        "Arguments: rangepartitioning(n#{a} ASC NULLS LAST, 32), ENSURE_REQUIREMENTS, "
+        "[plan_id={p}]\n[codegen id : 3]\n"
+    )
+    first = prof.normalise_plan(run.format(d="5l2ejwwt", a=14412, b=7, p=19036))
+    second = prof.normalise_plan(run.format(d="q0x_91ab", a=212, b=77, p=16721))
+    assert first == second
+    assert "#N" in first and "plan_id=N" in first and "graft_loadcsv_X" in first
+    assert "[codegen id : 3]" in first and "32), ENSURE_REQUIREMENTS" in first

@@ -537,9 +537,10 @@ def test_match_merge_node_tail(spark):
     assert [r.o for r in got] == ["Arne"]
 
 
-def test_match_merge_needs_an_anchor(spark):
-    """An unbound endpoint grows the pattern (r11) — but a MERGE tail
-    with NO bound endpoint at all still fails loud."""
+def test_match_merge_without_an_anchor(spark):
+    """An unbound endpoint grows the pattern (r11); a MERGE tail with NO
+    bound endpoint is the same whole-pattern get-or-create: created on
+    the first run, matched on the second."""
     from docker_neo4j_spark.cypher.session import Session
 
     s = Session(spark)
@@ -548,8 +549,10 @@ def test_match_merge_needs_an_anchor(spark):
     for _ in range(2):
         s.run("MATCH (a:UDog) MERGE (a)-[:T]->(b:UOther {k: 1})")
     assert s.run("MATCH (:UDog)-[r:T]->(:UOther) RETURN count(r) AS n").collect()[0].n == 1
-    with pytest.raises(ValueError, match="at least one endpoint"):
+    for _ in range(2):
         s.run("MATCH (a:UDog) MERGE (x:UX)-[:T]->(y:UY)")
+    assert s.run("MATCH (:UX)-[r:T]->(:UY) RETURN count(r) AS n").collect()[0].n == 1
+    assert s.run("MATCH (x:UX) RETURN count(x) AS n").collect()[0].n == 1
 
 
 def test_foreach_expression_lists(spark):
@@ -717,13 +720,16 @@ def test_merge_chain_whole_pattern_atomic(spark):
     ).collect()
     assert {(r.t1, r.t2) for r in rows} == {("R1", "R2")}
     assert len(rows) == 2  # two R1 edges fan out, MERGE-as-MATCH cardinality
-    # unbound chain endpoints are rejected loud
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="every node bound"):
+    # an unbound chain endpoint is created with the whole pattern on the
+    # first run (a fresh R1 too) and matched on the second
+    for _ in range(2):
         s.run(
             "MATCH (a:Ct {idx: 0}), (b:Ct {idx: 1}) "
             "MERGE (a)-[:R1]->(b)-[:R9]->(z:Ct {idx: 9})"
         )
+    assert s.run("MATCH (z:Ct {idx: 9}) RETURN count(z) AS n").collect()[0].n == 1
+    assert s.run("MATCH ()-[r:R9]->() RETURN count(r) AS n").collect()[0].n == 1
+    assert s.run("MATCH ()-[r:R1]->() RETURN count(r) AS n").collect()[0].n == 3
 
 
 def test_property_type_conflict_fails_loud(spark):
@@ -769,3 +775,142 @@ def test_integer_family_conflict_widens_to_bigint_not_double(spark):
     assert dict(merged.dtypes)["big"] == "bigint"
     vals = {r.big for r in merged.select("big").collect()}
     assert 9007199254740993 in vals and 7 in vals  # exact, not floated
+
+
+# Statements whose MERGE, CREATE or LOAD CSV write hands the rest of the
+# statement to the clause tail: (setup, statements, checks). A check with
+# no query asserts the last statement's rows.
+_WRITE_TAILS = [
+    pytest.param(
+        [], ["MERGE (a:P {n:1}) MERGE (b:P {n:2}) MERGE (a)-[:K]->(b)"] * 2,
+        [("MATCH (:P {n:1})-[k:K]->(:P {n:2}) RETURN count(k) AS c", [(1,)]),
+         ("MATCH (p:P) RETURN count(p) AS c", [(2,)])],
+        id="merge-merge-merge-rel",
+    ),
+    pytest.param(
+        [], ["MERGE (a:P {n:1})-[r:K]->(b:P {n:2}) "
+             "ON CREATE SET r.w = 1 ON MATCH SET r.w = r.w + 1"] * 2,
+        [("MATCH ()-[r:K]->() RETURN r.w AS w", [(2,)])],
+        id="merge-rel-on-set",
+    ),
+    pytest.param(
+        ["CREATE (:P {n:1})"],
+        ["MATCH (a:P {n:1}) MERGE (b:Q {n:1}) WITH a, b RETURN a.n AS an, b.n AS bn"],
+        [(None, [(1, 1)])], id="match-merge-with",
+    ),
+    pytest.param(
+        ["CREATE (:P {n:1})"],
+        ["MATCH (a:P {n:1}) MERGE (a)-[:K3]->(b:Q {n:3}) "
+         "MERGE (b)-[:K4]->(c:Q {n:4}) RETURN c.n"],
+        [(None, [(4,)])], id="match-merge-merge-chain",
+    ),
+    pytest.param(
+        [], ["MERGE (a:P {n:9}) DELETE a"],
+        [("MATCH (a:P {n:9}) RETURN count(a) AS c", [(0,)])], id="merge-delete",
+    ),
+    pytest.param(
+        ["CREATE (:P {n:1})"],
+        ["MATCH (a:P {n:1}) MERGE (x:UX)-[:T]->(y:UY) RETURN count(*) AS c"],
+        [(None, [(1,)])], id="merge-unanchored-pattern",
+    ),
+    pytest.param(
+        ["CREATE (:Ct {idx:0}), (:Ct {idx:1})"],
+        ["MATCH (a:Ct {idx:0}), (b:Ct {idx:1}) "
+         "MERGE (a)-[:R1]->(b)-[:R9]->(z:Ct {idx:9}) RETURN z.idx"],
+        [(None, [(9,)])], id="merge-chain-unbound-end",
+    ),
+    pytest.param(
+        [], ["CREATE (a:C {n:1}) WITH a MATCH (b:C) RETURN count(b) AS c"],
+        [(None, [(1,)])], id="create-with-match",
+    ),
+    pytest.param(
+        [], ["CREATE (a:C {n:2}) MERGE (b:C {n:3}) RETURN b.n"],
+        [(None, [(3,)])], id="create-merge",
+    ),
+    pytest.param(
+        [], ["CREATE (a:C {n:4})-[r:CR]->(b:C {n:5}) DELETE r"],
+        [("MATCH ()-[r:CR]->() RETURN count(r) AS c", [(0,)]),
+         ("MATCH (c:C) RETURN count(c) AS c", [(2,)])],
+        id="create-delete-rel",
+    ),
+    pytest.param(
+        [], ["CREATE (n:C {n:6}) SET n = {n: 7} RETURN n.n"],
+        [(None, [(7,)])], id="create-set-replace",
+    ),
+    pytest.param(
+        [], ["LOAD CSV WITH HEADERS FROM 'file://{csv}' AS row "
+             "MERGE (x:Lx {k: row.k}) SET x.v = row.v"],
+        [("MATCH (x:Lx) RETURN x.k AS k, x.v AS v ORDER BY k",
+          [("a", "1"), ("b", "2"), ("c", "3")])],
+        id="load-csv-merge-set",
+    ),
+    pytest.param(
+        [], ["LOAD CSV WITH HEADERS FROM 'file://{csv}' AS row "
+             "MERGE (x:Lz {k: row.k}) RETURN x.k AS k ORDER BY k"],
+        [(None, [("a",), ("b",), ("c",)])], id="load-csv-merge-return",
+    ),
+]
+
+
+@pytest.mark.parametrize("setup, stmts, checks", _WRITE_TAILS)
+def test_write_clause_tails(spark, tmp_path, setup, stmts, checks):
+    from docker_neo4j_spark.cypher.session import Session
+
+    csv = tmp_path / "kv.csv"
+    csv.write_text("k,v\na,1\nb,2\nc,3\n")
+    s = Session(spark, store=GraphStore(spark))
+    for q in setup:
+        s.run(q)
+    for q in stmts:
+        last = s.run(q.replace("{csv}", str(csv))).collect()
+    for query, want in checks:
+        rows = last if query is None else s.run(query).collect()
+        assert [tuple(r) for r in rows] == want, query
+
+
+def test_set_and_remove_write_relationship_properties(spark):
+    """SET / REMOVE on a relationship variable update the stored
+    relationship, not a node with the same id."""
+    from docker_neo4j_spark.cypher.session import Session
+
+    s = Session(spark, store=GraphStore(spark))
+    s.run("CREATE (:S {n:1})-[:R {w:0}]->(:S {n:2})")
+    got = s.run("MATCH (a:S)-[r:R]->(b:S) SET r.w = 5 RETURN r.w AS w").collect()
+    assert [r.w for r in got] == [5]
+    assert [r.w for r in s.run("MATCH ()-[r:R]->() RETURN r.w AS w").collect()] == [5]
+    s.run("MATCH (a:S)-[r:R]->(b:S) REMOVE r.w")
+    assert [r.w for r in s.run("MATCH ()-[r:R]->() RETURN r.w AS w").collect()] == [None]
+    assert "w" not in s.store.graph.nodes.columns
+
+
+@pytest.mark.parametrize("stmt", [
+    "MATCH (a:P {name:'a'}) MATCH (a)-[r:R]->(b) DELETE r",
+    "MATCH (a:P {name:'a'}) WITH a MATCH (a)-[r:R]->(b) DELETE r",
+])
+def test_delete_relationship_bound_by_a_later_match(spark, stmt):
+    from docker_neo4j_spark.cypher.session import Session
+
+    s = Session(spark, store=GraphStore(spark))
+    s.run("CREATE (:P {name:'a'})-[:R]->(:P {name:'b'})")
+    s.run(stmt)
+    assert s.run("MATCH ()-[r:R]->() RETURN count(r) AS n").collect()[0].n == 0
+    assert s.run("MATCH (p:P) RETURN count(p) AS n").collect()[0].n == 2
+
+
+@pytest.mark.parametrize("fold_max_rows", [GraphStore.FOLD_MAX_ROWS, 0])
+def test_computed_sets_keep_the_store_plan_linear(spark, fold_max_rows):
+    """A SET computed from a binding over the store cuts its change frame
+    off the store's plan (folded in as literals, or pinned and joined when
+    larger than FOLD_MAX_ROWS): ten self-referencing SETs grow the nodes
+    plan by at most two leaf relations each, where each SET doubled it."""
+    from docker_neo4j_spark.cypher.session import Session
+
+    store = GraphStore(spark)
+    store.FOLD_MAX_ROWS = fold_max_rows
+    s = Session(spark, store=store)
+    s.run("CREATE (:X {k:1, v:0})")
+    for _ in range(10):
+        s.run("MATCH (a:X {k:1}) SET a.v = a.v + 1")
+    assert s.run("MATCH (a:X {k:1}) RETURN a.v AS v").collect()[0].v == 10
+    leaves = store.graph.nodes._jdf.queryExecution().analyzed().collectLeaves().size()
+    assert leaves <= 4 + 2 * 10

@@ -4778,13 +4778,13 @@ class Session:
           block, then one append per unbound node element and one per
           relationship element — a miss creates the ENTIRE pattern, fresh
           nodes included (the openCypher contract);
-        - every row then joins the instances of its key on the post-write
-          snapshot (several matches fan out, MERGE-as-MATCH cardinality);
-          ids from this statement's blocks flag the rows that took the
-          CREATE branch, and one applier writes ON CREATE / ON MATCH SET
-          (``_write_props``). The branch is pinned per distinct key: Neo4j's
-          row-sequential processing would give later duplicate rows the
-          MATCH branch.
+        - a row whose key was missing took the CREATE branch and binds the
+          elements its key's block made; any other row binds the
+          instances of its key on the pre-statement snapshot (several
+          matches fan out, MERGE-as-MATCH cardinality). One applier writes
+          ON CREATE / ON MATCH SET (``_write_props``). The branch is pinned
+          per distinct key: Neo4j's row-sequential processing would give
+          later duplicate rows the MATCH branch.
 
         What follows the clause is a clause tail over that binding."""
         cut = _clause_end(tail)
@@ -4841,40 +4841,58 @@ class Session:
                 *[guards.get(k, F.col(k)) for k in keys]
             )
         )
-        # rows whose instance holds an id from this statement's blocks
-        # took the CREATE branch
-        created = F.lit(False)
-        new_ids: dict[str, F.Column] = {}
+        # the columns a created element binds, by variable
+        made: dict[str, dict[str, F.Column]] = {}
         for el in elems[0::2] if n else ():
-            if is_bound[el.var] or el.var in new_ids:
+            if is_bound[el.var] or el.var in made:
                 continue
-            base = self.store.reserve_node_ids(n)
-            new_ids[el.var] = F.col("_idx") + F.lit(base)
+            labels = F.array(*[F.lit(x) for x in _create_labels(el)])
+            made[el.var] = {
+                "id": F.col("_idx") + F.lit(self.store.reserve_node_ids(n)),
+                "labels": labels,
+            }
             self.store.append_nodes(missing.select(
-                new_ids[el.var].alias("id"),
-                F.array(*[F.lit(x) for x in _create_labels(el)]).alias("labels"),
+                made[el.var]["id"].alias("id"),
+                labels.alias("labels"),
                 *[F.col(f"{el.var}_{_esc(k)}").alias(_esc(k)) for k in el.props],
             ))
-            created = F.col(f"{el.var}_id") >= F.lit(base)
         for i in range(1, len(elems), 2) if n else ():
             rel, left, right = elems[i], elems[i - 1], elems[i + 1]
-            s, d = (new_ids.get(v.var, F.col(f"{v.var}_id")) for v in (left, right))
+            s, d = (
+                made[v.var]["id"] if v.var in made else F.col(f"{v.var}_id")
+                for v in (left, right)
+            )
             if rel.reversed:
                 s, d = d, s
-            base = self.store.reserve_rel_ids(n)
+            made[rel.var] = {
+                "id": F.col("_idx") + F.lit(self.store.reserve_rel_ids(n)),
+                "src": s,
+                "dst": d,
+                "type": F.lit(rel.rel_type or "_"),
+            }
             self.store.append_rels(missing.select(
-                (F.col("_idx") + F.lit(base)).alias("id"),
-                s.alias("src"),
-                d.alias("dst"),
-                F.lit(rel.rel_type or "_").alias("type"),
+                *[c.alias(k) for k, c in made[rel.var].items()],
                 *[F.col(f"{rel.var}_{_esc(k)}").alias(_esc(k)) for k in rel.props],
             ))
-            created = F.col(f"{rel.var}_id") >= F.lit(base)
         if not (on_create or on_match or tail[cut:].strip()):
             return local_df(self.spark, [], "ok string")
-        post = frame.join(
-            self._merge_instances(self.store.graph, elems, is_bound, keys), keys
-        ).drop("_mrg_unit")
+        # the branch is the key's: a row whose key had no instance before
+        # the write took CREATE and binds the elements its key's id block
+        # made (a created key can also complete instances with older
+        # parts, which it must not bind); a matched key binds its
+        # instances on the pre-statement snapshot
+        if n:
+            post = frame.join(pre, keys, "left").join(
+                self.store.graph.maybe_broadcast(None, missing.select(*keys, "_idx")),
+                keys, "left",
+            ).withColumns({
+                f"{var}_{c}": F.coalesce(F.col(f"{var}_{c}"), col)
+                for var, cols in made.items() for c, col in cols.items()
+            })
+            created = F.col("_idx").isNotNull()
+        else:
+            post, created = frame.join(pre, keys), F.lit(False)
+        post = post.drop("_mrg_unit")
         if on_create or on_match:
             # one applier for both branches: a property the other branch
             # does not assign keeps its value
@@ -4892,7 +4910,7 @@ class Session:
                 }
                 for var, props in targets.items()
             })
-        return self._clause_tail(post, tail[cut:], wrote=True)
+        return self._clause_tail(post.drop("_idx"), tail[cut:], wrote=True)
 
     def _merge_instances(
         self, g, elems: list, is_bound: dict, keys: list

@@ -1423,8 +1423,8 @@ def _write(c: _ModeCall, yields) -> DataFrame:
     """The values land on the live store via one set-based conditional
     update (set_props_from_frame), readable by the next MATCH. The
     store's node frame reads the kernel result until compaction, so the
-    result stays pinned."""
-    c.store.set_props_from_frame(c.prop_frame(), [c.prop])
+    result stays pinned, and it joins the store as it is."""
+    c.store.set_props_from_frame(c.prop_frame(), [c.prop], detached=True)
     return c.summary(yields)
 
 

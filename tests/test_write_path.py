@@ -819,6 +819,31 @@ _WRITE_TAILS = [
          "MERGE (a)-[:R1]->(b)-[:R9]->(z:Ct {idx:9}) RETURN z.idx"],
         [(None, [(9,)])], id="merge-chain-unbound-end",
     ),
+    # a created key binds only the elements its MERGE made, never an
+    # older hop that also completes the pattern
+    pytest.param(
+        ["CREATE (:M {i:0}), (:M {i:1})-[:R1 {old: true}]->(:M {i:2})"],
+        ["MATCH (a:M {i:0}), (b:M {i:1}), (c:M {i:2}) "
+         "MERGE (a)-[:R0]->(b)-[r1:R1]->(c) "
+         "ON CREATE SET a.c = 1, r1.x = 1 ON MATCH SET a.m = 1, r1.y = 1 "
+         "RETURN a.c AS c, a.m AS m, r1.x AS x"],
+        [(None, [(1, None, 1)]),
+         ("MATCH (a:M {i:0}) RETURN a.c AS c, a.m AS m", [(1, None)]),
+         ("MATCH ()-[r:R1 {old: true}]->() RETURN r.x AS x, r.y AS y", [(None, None)]),
+         ("MATCH ()-[r:R1]->() WHERE r.old IS NULL RETURN r.x AS x, r.y AS y",
+          [(1, None)])],
+        id="merge-chain-old-last-hop-on-set",
+    ),
+    pytest.param(
+        ["CREATE (:M {i:0})-[:R1 {old: true}]->(:M {i:1}), (:M {i:2})"],
+        ["MATCH (a:M {i:0}), (b:M {i:1}), (c:M {i:2}) "
+         "MERGE (a)-[r1:R1]->(b)-[:R2]->(c) "
+         "ON CREATE SET r1.x = 1 ON MATCH SET r1.y = 1"],
+        [("MATCH ()-[r:R1 {old: true}]->() RETURN r.x AS x, r.y AS y", [(None, None)]),
+         ("MATCH ()-[r:R1]->() WHERE r.old IS NULL RETURN r.x AS x, r.y AS y",
+          [(1, None)])],
+        id="merge-chain-old-first-hop-on-set",
+    ),
     pytest.param(
         [], ["CREATE (a:C {n:1}) WITH a MATCH (b:C) RETURN count(b) AS c"],
         [(None, [(1,)])], id="create-with-match",

@@ -64,8 +64,8 @@ HEADLINE = [
     # first-run anchor in BASELINE.md
     "gds_dfs_preorder",
     # r11 breadth: the two families this round changed most — the
-    # interactive write tail (MATCH…MERGE through localframe +
-    # merge_rels) and entity-path materialization. First-run anchors
+    # interactive write tail (MATCH…MERGE, now the whole-pattern
+    # MERGE over the binding) and entity-path materialization. First-run anchors
     # (solo, min-of-2) in BASELINE.md.
     "cypher_match_merge_rel",
     "cypher_path_entities",

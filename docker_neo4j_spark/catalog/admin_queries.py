@@ -1374,9 +1374,9 @@ def cypher_list_comprehension(spark, sf_dir):
 )
 def write_merge_unwind_batch(spark, sf_dir):
     """Batch MERGE through the façade: ``UNWIND $rows AS r MERGE (…)``
-    with a 1,500-element parameter compiles to ONE set-based
-    ``store.merge_nodes`` (distinct → left-anti → append) — no per-row
-    driver round-trip. Two overlapping batches: 1,500 rows / 500 distinct
+    with a 1,500-element parameter starts from the parameter's rows and
+    runs ONE set-based whole-pattern MERGE over them (distinct keys →
+    left-anti → one id block → append) — no per-row driver round-trip. Two overlapping batches: 1,500 rows / 500 distinct
     keys insert 500; a second 500-row batch re-merging 300 of them plus
     200 new keys inserts exactly 200. Oracle = closed form: 700 nodes,
     Σck = Σ0..699 = 244650."""
@@ -1407,8 +1407,8 @@ def cypher_match_merge_rel(spark, sf_dir):
     CREATE/ON MATCH branches and idempotence on re-run. 3 left × 5 right
     anchors → 15 routes created on the first pass (all take the ON CREATE
     branch, flag 0), zero inserted on the second (all ON MATCH, flag 1 on
-    every route — sum 15). Each statement is ONE ``store.merge_rels``
-    left-anti batch, never a per-row loop (the reference's graph-building
+    every route — sum 15). Each statement is ONE set-based whole-pattern
+    MERGE (distinct keys → left-anti → append), never a per-row loop (the reference's graph-building
     pattern, DatabaseIO.java:63)."""
     from ..cypher.session import Session
     from ..storage.store import GraphStore
@@ -1471,8 +1471,8 @@ def cypher_merge_grow_pattern(spark, sf_dir):
 )
 def write_merge_rel_batch(spark, sf_dir):
     """Batch relationship MERGE through the façade: UNWIND $rows MATCH
-    endpoints by key, MERGE the edge — one ``store.merge_rels`` left-anti
-    batch. 100 pairs with duplicates collapse to the 30 distinct routes —
+    endpoints by key, MERGE the edge — one set-based whole-pattern MERGE
+    over the parameter's rows. 100 pairs with duplicates collapse to the 30 distinct routes —
     (i mod 10, i mod 6) has period lcm(10,6)=30 (closed form); re-running
     the same batch inserts nothing."""
     from ..cypher.session import Session

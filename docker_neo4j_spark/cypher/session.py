@@ -47,6 +47,7 @@ from .lexer import (  # r8: the positional-token lexer replaces the regex
     split_keyword as _split_kw,
     split_top as _split_top,
     strip_comments,
+    tokenize,
 )
 
 
@@ -76,6 +77,17 @@ _TERMINALS = frozenset((
 _SHORTEST_RE = re.compile(
     r"(?:\w+\s*=\s*)?(?:allShortestPaths|shortestPath)\s*\(", re.IGNORECASE
 )
+
+
+def _pattern_groups(src: str) -> list[list]:
+    """A MATCH clause's comma-separated pattern groups, each parsed."""
+    groups = []
+    for gsrc in _split_top(src, ","):
+        gelems, rest = _parse_pattern(gsrc.strip())
+        if rest:
+            raise ValueError(f"trailing content after MATCH pattern: {rest!r}")
+        groups.append(gelems)
+    return groups
 
 
 def _clauses(src: str) -> list[tuple[int, int, str]]:
@@ -1490,6 +1502,31 @@ def _eval_elem_props(spark: SparkSession, elems: list) -> list:
     return elems
 
 
+def _render_param(v) -> str:
+    """A parameter value as Cypher literal text."""
+    if isinstance(v, str):
+        return "'" + v.replace("'", "\\'") + "'"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, (list, tuple)):
+        return "[" + ", ".join(_render_param(x) for x in v) + "]"
+    if v is None:
+        return "null"
+    return repr(v)
+
+
+def _render_params(src: str, parameters: dict) -> str:
+    """``src`` with every ``$name`` parameter token that ``parameters``
+    names replaced by its value's literal text. A ``$name`` inside a
+    string literal or a quoted identifier is not a parameter and stays."""
+    out, at = [], 0
+    for t in tokenize(src):
+        if t.kind == "param" and t.text[1:] in parameters:
+            out += [src[at:t.pos], _render_param(parameters[t.text[1:]])]
+            at = t.end
+    return "".join(out) + src[at:]
+
+
 def _looks_like_pattern(src: str) -> bool:
     """A WHERE term that is itself a relationship pattern, e.g.
     ``(a)-[:T]->(b)`` or the bracketless ``(a)-->(b)`` — node paren
@@ -1529,8 +1566,10 @@ class Session:
     # ---- public API ---------------------------------------------------
     def run(self, cypher: str, parameters: dict | None = None) -> DataFrame:
         """Execute a Cypher string. ``parameters`` fills ``$name``
-        placeholders (the Bolt parameter convention); values render as
-        literals with strings quoted, lists bracketed.
+        placeholders (the Bolt parameter convention): a statement that
+        opens with ``UNWIND $p AS v``, ``$p`` a list of maps, starts from
+        the parameter's rows (``_param_rows``); every other value renders
+        as a literal, strings quoted, lists bracketed.
 
         Compile-time Spark analysis errors over prefixed binding columns
         re-raise as Cypher-shaped variable errors (r12 — `RETURN m` with
@@ -1557,6 +1596,32 @@ class Session:
             if shaped is not None:
                 raise shaped from exc
             raise
+
+    def _param_rows(self, cypher: str, parameters: dict):
+        """``UNWIND $p AS v <rest>`` with ``$p`` a non-empty list of maps
+        (the driver's batch idiom) starts from the parameter's rows: a
+        frame with one struct column ``v``, a JVM LocalRelation, and the
+        text of ``<rest>``. Any other statement has no such frame (None)
+        and keeps its text, whose parameters render as literals."""
+        toks = tokenize(cypher)[:4]
+        if (
+            [t.kind for t in toks] != ["ident", "param", "ident", "ident"]
+            or toks[0].text.upper() != "UNWIND"
+            or toks[2].text.upper() != "AS"
+            or len(_split_top(cypher, "UNION")) > 1
+        ):
+            return None, cypher
+        rows = parameters.get(toks[1].text[1:])
+        if not (
+            isinstance(rows, (list, tuple)) and rows
+            and all(isinstance(r, dict) for r in rows)
+        ):
+            return None, cypher
+        keys = list(dict.fromkeys(k for r in rows for k in r))
+        if not keys:
+            return None, cypher
+        flat = local_df(self.spark, [{k: r.get(k) for k in keys} for r in rows])
+        return flat.select(F.struct("*").alias(toks[3].text)), cypher[toks[3].end:]
 
     def _run_impl(self, cypher: str, parameters: dict | None = None) -> DataFrame:
         """``run``'s dispatch body (see the public wrapper above)."""
@@ -1599,24 +1664,10 @@ class Session:
         if ":$(" in cypher.replace(" ", ""):
             cypher = self._resolve_dynamic_labels(cypher)
         cypher = _rewrite_call_shapes(cypher)
+        driving = None
         if parameters:
-            batch = self._run_batch_spec(cypher, parameters)
-            if batch is not None:
-                return batch
-
-            def render(v):
-                if isinstance(v, str):
-                    return "'" + v.replace("'", "\\'") + "'"
-                if isinstance(v, bool):
-                    return "true" if v else "false"
-                if isinstance(v, (list, tuple)):
-                    return "[" + ", ".join(render(x) for x in v) + "]"
-                if v is None:
-                    return "null"
-                return repr(v)
-
-            for k in sorted(parameters, key=len, reverse=True):  # $ab before $a
-                cypher = cypher.replace(f"${k}", render(parameters[k]))
+            driving, cypher = self._param_rows(cypher, parameters)
+            cypher = _render_params(cypher, parameters)
         q = cypher.strip().rstrip(";").strip()
         head = q.split(None, 1)[0].upper() if q else ""
         # database admin commands run against the system database, so
@@ -1628,6 +1679,8 @@ class Session:
             return self._database_ddl(q)
         if self.dbms is not None:
             self.dbms.check_queryable(self.database)
+        if driving is not None:
+            return self._clause_tail(driving, q)
         union_parts = _split_top(q, "UNION")
         if len(union_parts) > 1:
             return self._union(union_parts)
@@ -2421,272 +2474,6 @@ class Session:
         frame = self.run(inner)
         return self._clause_tail(frame, rest) if rest.strip() else frame
 
-    # ---- batch-UNWIND write shapes (token-stream parsed, r9) -----------
-    # The four driver-guide bulk shapes intercepted before the literal
-    # renderer. One structured parser replaces the four _BATCH_*_RE
-    # regexes (and with them the last consumer of lexer.PROPS_BODY):
-    # quoted spans are atomic tokens, props nest arbitrarily, and a
-    # shape mismatch anywhere simply falls through to the renderer.
-
-    @staticmethod
-    def _parse_batch_spec(cypher: str) -> dict | None:
-        """Parse ``UNWIND $param AS var <write clause>`` off the token
-        stream into a spec dict, or None when the statement is any other
-        shape. Shapes (the Bolt driver-guide batch idioms):
-
-        - ``MERGE (n:L {k: r.k, …}) [RETURN count(*) AS a]``
-        - ``CREATE (n:L {k: r.k, …}) [RETURN count(*) AS a]``
-        - ``MATCH (n:L {k: r.k}) [DETACH] DELETE n``
-        - ``MATCH (a:L {k: r.x}), (b:M {k: r.y}) MERGE (a)-[:T]->(b)
-          [RETURN count(*) AS a]``
-        """
-        from .lexer import _Stream, _parse_value_stream, tokenize
-
-        src = cypher.strip().rstrip(";")
-        s = _Stream(tokenize(src), src)
-
-        def at_kw(word: str, ahead: int = 0) -> bool:
-            t = s.peek(ahead)
-            return t is not None and t.kind == "ident" and t.text.upper() == word
-
-        def take_ident() -> str:
-            return s.expect("ident").text
-
-        def props_with_refs(var: str) -> list:
-            """``{k: r.f, tag: 'x'}`` → [(key, ref_field | None, literal)]
-            — values are either ``var.field`` references into the batch
-            rows or literal scalars/lists/maps."""
-            s.expect("punct", "{")
-            out = []
-            while not s.at("punct", "}"):
-                key = take_ident()
-                s.expect("punct", ":")
-                if (
-                    s.at("ident")
-                    and s.peek().text == var
-                    and s.at("punct", ".", ahead=1)
-                ):
-                    s.take()
-                    s.take()
-                    out.append((key, take_ident(), None))
-                else:
-                    out.append((key, None, _parse_value_stream(s)))
-                if s.at("punct", ","):
-                    s.take()
-            s.take()  # }
-            return out
-
-        def node_pattern(var: str) -> tuple[str | None, str, list]:
-            """``(nvar? :Label {props})`` → (nvar, label, props)."""
-            s.expect("punct", "(")
-            nvar = s.take().text if s.at("ident") else None
-            s.expect("punct", ":")
-            label = take_ident()
-            props = props_with_refs(var) if s.at("punct", "{") else []
-            s.expect("punct", ")")
-            return nvar, label, props
-
-        def count_tail() -> str | None:
-            """Optional ``RETURN count(*|x) AS alias`` then end-of-input;
-            raises on any other tail (caller catches → not a batch)."""
-            alias = None
-            if at_kw("RETURN"):
-                s.take()
-                if not (s.at("ident") and s.peek().text.lower() == "count"):
-                    raise ValueError("batch tail is not count()")
-                s.take()
-                s.expect("punct", "(")
-                if s.at("punct", "*") or s.at("ident"):
-                    s.take()
-                s.expect("punct", ")")
-                if not at_kw("AS"):
-                    raise ValueError("batch count() without AS")
-                s.take()
-                alias = take_ident()
-            if s.peek() is not None:
-                raise ValueError("trailing input after batch statement")
-            return alias
-
-        try:
-            if not at_kw("UNWIND"):
-                return None
-            s.take()
-            if not s.at("param"):
-                return None
-            param = s.take().text[1:]
-            if not at_kw("AS"):
-                return None
-            s.take()
-            var = take_ident()
-            if at_kw("MERGE") or at_kw("CREATE"):
-                kind = "merge_node" if at_kw("MERGE") else "create_node"
-                s.take()
-                _, label, props = node_pattern(var)
-                if not props:
-                    return None
-                return {
-                    "kind": kind,
-                    "param": param,
-                    "var": var,
-                    "label": label,
-                    "props": props,
-                    "alias": count_tail(),
-                }
-            if not at_kw("MATCH"):
-                return None
-            s.take()
-            av, albl, aprops = node_pattern(var)
-            if s.at("punct", ","):
-                # two anchors → relationship MERGE
-                s.take()
-                bv, blbl, bprops = node_pattern(var)
-                if not at_kw("MERGE"):
-                    return None
-                s.take()
-                s.expect("punct", "(")
-                lv = take_ident()
-                s.expect("punct", ")")
-                s.expect("punct", "-")
-                s.expect("punct", "[")
-                s.expect("punct", ":")
-                rtype = take_ident()
-                s.expect("punct", "]")
-                s.expect("punct", "-")
-                s.expect("punct", ">")
-                s.expect("punct", "(")
-                rv = take_ident()
-                s.expect("punct", ")")
-                if lv != av or rv != bv:
-                    return None
-                if len(aprops) != 1 or len(bprops) != 1:
-                    return None
-                (ak, af, _), (bk, bf, _) = aprops[0], bprops[0]
-                if af is None or bf is None:
-                    return None
-                return {
-                    "kind": "merge_rel",
-                    "param": param,
-                    "var": var,
-                    "a": (albl, ak, af),
-                    "b": (blbl, bk, bf),
-                    "rtype": rtype,
-                    "alias": count_tail(),
-                }
-            # single anchor → batch DELETE
-            detach = at_kw("DETACH")
-            if detach:
-                s.take()
-            if not at_kw("DELETE"):
-                return None
-            s.take()
-            dvar = take_ident()
-            if s.peek() is not None or dvar != av:
-                return None
-            if len(aprops) != 1 or aprops[0][1] is None:
-                return None
-            return {
-                "kind": "delete",
-                "param": param,
-                "var": var,
-                "label": albl,
-                "key": aprops[0][0],
-                "field": aprops[0][1],
-                "detach": detach,
-            }
-        except ValueError:
-            return None
-
-    @staticmethod
-    def _batch_rows(spec: dict, parameters: dict):
-        rows = parameters.get(spec["param"])
-        if not isinstance(rows, (list, tuple)) or not rows or not all(
-            isinstance(r, dict) for r in rows
-        ):
-            return None
-        return rows
-
-    def _run_batch_spec(self, cypher: str, parameters: dict) -> DataFrame | None:
-        """Dispatch a parsed batch-UNWIND spec to its set-based store
-        path; None falls through to the literal renderer. Each shape is
-        O(1) Spark jobs regardless of batch size — one createDataFrame of
-        the rows plus one key-joined store write, never a per-row loop."""
-        spec = self._parse_batch_spec(cypher)
-        if spec is None:
-            return None
-        rows = self._batch_rows(spec, parameters)
-        if rows is None:
-            return None
-        kind = spec["kind"]
-        if kind == "merge_node":
-            # ONE store.merge_nodes call (distinct + left-anti + append)
-            sel, key_cols = [], []
-            for k, f, lit in spec["props"]:
-                sel.append(F.col(f).alias(k) if f is not None else F.lit(lit).alias(k))
-                key_cols.append(k)
-            df = local_df(self.spark, list(rows)).select(*sel)
-            self.store.merge_nodes(spec["label"], df, key_cols)
-            # Cypher cardinality: UNWIND emits one row per element and
-            # MERGE preserves it, so count(*) = len(rows)
-            return self._batch_count(spec["alias"], len(rows))
-        if kind == "create_node":
-            # bulk insert in ONE create_nodes append (no dedup — CREATE
-            # always inserts, the Cypher contract)
-            self.store.create_nodes(
-                spec["label"],
-                [
-                    {k: (r.get(f) if f is not None else lit) for k, f, lit in spec["props"]}
-                    for r in rows
-                ],
-            )
-            return self._batch_count(spec["alias"], len(rows))
-        if kind == "delete":
-            # one key-join resolves doomed ids, one set-based delete
-            field = spec["field"]
-            # key type from the first NON-None value; bail to the literal
-            # renderer on mixed-type batches (createDataFrame would raise)
-            vals = [r.get(field) for r in rows]
-            non_null = [v for v in vals if v is not None]
-            if non_null and not all(isinstance(v, type(non_null[0])) for v in non_null):
-                return None
-            ktype = "string" if non_null and isinstance(non_null[0], str) else "long"
-            keys = local_df(self.spark, [(v,) for v in vals], f"_key {ktype}")
-            nodes = self.store.match_nodes(spec["label"])
-            doomed = nodes.join(
-                keys, nodes[spec["key"]] == keys["_key"], "left_semi"
-            ).select("id")
-            self.store.delete_nodes_by_ids(doomed, detach=spec["detach"])
-            return local_df(self.spark, [], "ok string")
-        # merge_rel: two key-joins resolve endpoint ids, ONE merge_rels
-        albl, ak, af = spec["a"]
-        blbl, bk, bf = spec["b"]
-        df = local_df(self.spark, list(rows))
-        na = self.store.match_nodes(albl).select(
-            F.col("id").alias("_aid"), F.col(ak).alias("_akey")
-        )
-        nb = self.store.match_nodes(blbl).select(
-            F.col("id").alias("_bid"), F.col(bk).alias("_bkey")
-        )
-        pairs = (
-            df.join(na, df[af] == na["_akey"])
-            .join(nb, df[bf] == nb["_bkey"])
-            .select(F.col("_aid").alias("src"), F.col("_bid").alias("dst"))
-        )
-        alias = spec["alias"]
-        # Cypher cardinality: the intermediate MATCH drops UNWIND rows
-        # whose endpoints don't resolve (and multiplies on duplicate
-        # keys), so count(*) is the PRE-distinct joined-pair count, not
-        # len(rows). Counted before merge_rels distincts it.
-        n_out = pairs.count() if alias is not None else None
-        self.store.merge_rels(spec["rtype"], pairs)
-        if alias is None:
-            return local_df(self.spark, [], "ok string")
-        return local_df(self.spark, [(n_out,)], f"{alias} long")
-
-    def _batch_count(self, alias: str | None, n: int) -> DataFrame:
-        if alias is None:
-            return local_df(self.spark, [], "ok string")
-        return local_df(self.spark, [(n,)], f"{alias} long")
-
     def _merge(self, body: str) -> DataFrame:
         """``MERGE <pattern> [ON CREATE SET …] [ON MATCH SET …] <rest>`` with
         no driving clause — openCypher atomic pattern semantics: MERGE
@@ -3178,12 +2965,7 @@ class Session:
             pattern_src = pattern_src[: h_where[0]].strip()
         # comma-separated pattern groups are a cartesian product of their
         # bindings (Cypher MATCH (a), (b) — SURVEY §2.B.3 cartesian row)
-        groups = []
-        for gsrc in _split_top(pattern_src, ","):
-            gelems, rest = _parse_pattern(gsrc.strip())
-            if rest:
-                raise ValueError(f"trailing content after MATCH pattern: {rest!r}")
-            groups.append(gelems)
+        groups = _pattern_groups(pattern_src)
         elems = [el for g in groups for el in g]
         rel_ids_needed = _rel_ids_needed(elems, f"{tail} {where_src or ''}")
         bound = None
@@ -5223,11 +5005,12 @@ class Session:
     def _bind_additional(
         self, bound: DataFrame, src: str, optional: bool, k: int, after: str = ""
     ) -> DataFrame:
-        """A further ``[OPTIONAL] MATCH`` after a WITH stage: bind the new
-        pattern and join it back on every variable shared with ``bound``
-        (inner for MATCH, left for OPTIONAL MATCH; no shared variable →
-        cartesian, Cypher's disconnected-pattern rule)."""
-        from ..operators.patterns import NodeSpec, RelSpec, match_chain
+        """A further ``[OPTIONAL] MATCH`` after a WITH stage: bind each
+        comma-separated pattern group in turn and join it back on every
+        variable shared with the frame so far (inner for MATCH, left for
+        OPTIONAL MATCH; no shared variable → cartesian, Cypher's
+        disconnected-pattern rule)."""
+        from ..operators.patterns import RelSpec, match_chain
 
         if optional:
             return self._bind_optional(bound, src, k)
@@ -5236,9 +5019,8 @@ class Session:
         if h_w:
             where_src = src[h_w[1]:].strip()
             src = src[: h_w[0]].strip()
-        elems, rest = _parse_pattern(src)
-        if rest:
-            raise ValueError(f"trailing content after MATCH pattern: {rest!r}")
+        groups = _pattern_groups(src)
+        elems = [el for g in groups for el in g]
         # inline property maps that reference bound variables —
         # ``MATCH (m:Loc {v: x})`` after WITH/UNWIND — hoist into the
         # post-join WHERE (equivalent for the inner join; the pattern
@@ -5264,27 +5046,29 @@ class Session:
         if hoisted:
             conj = " AND ".join(hoisted)
             where_src = f"{conj} AND ({where_src})" if where_src else conj
-        pattern = []
+        specs = []
         for j, el in enumerate(elems):
             if isinstance(el, _Node):
                 if not el.var:
                     el.var = f"_m{k}_{j}"
-                pattern.append(_node_spec(el))
+                specs.append(_node_spec(el))
             else:
-                pattern.append(RelSpec(el.var or f"_mr{k}_{j}", el.rel_type, _direction(el), props=el.props or None))
-        sub = match_chain(
-            self.store.graph,
-            pattern,
-            with_rel_ids=_rel_ids_needed(elems, f"{where_src or ''} {after}"),
-        )
-        anchors = [
-            el.var
-            for el in elems
-            if isinstance(el, _Node) and f"{el.var}_id" in bound.columns
-        ]
-        if not anchors:
-            bound = bound.crossJoin(sub)
-        else:
+                specs.append(RelSpec(el.var or f"_mr{k}_{j}", el.rel_type, _direction(el), props=el.props or None))
+        rel_ids = _rel_ids_needed(elems, f"{where_src or ''} {after}")
+        at = 0
+        for gelems in groups:
+            sub = match_chain(
+                self.store.graph, specs[at : at + len(gelems)], with_rel_ids=rel_ids
+            )
+            at += len(gelems)
+            anchors = [
+                el.var
+                for el in gelems
+                if isinstance(el, _Node) and f"{el.var}_id" in bound.columns
+            ]
+            if not anchors:
+                bound = bound.crossJoin(sub)
+                continue
             dup = [
                 c
                 for c in sub.columns

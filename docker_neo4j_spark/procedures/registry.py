@@ -453,9 +453,9 @@ def _periodic_iterate(
     driver in ``batchSize`` slices (APOC itself is driver-batched — this
     is the published contract, not a Spark anti-pattern: the DATA path
     stays set-based because the inner statement receives each slice as
-    the ``$rows`` parameter, which the façade routes to the one-join
-    batch write paths — UNWIND $rows MERGE/CREATE/DELETE — so each batch
-    is O(1) Spark jobs, not O(rows)).
+    the ``$rows`` parameter, and ``UNWIND $rows AS r …`` starts from those
+    rows as one frame, so each batch is one set-based write of O(1) Spark
+    jobs, not O(rows)).
 
     Dialect note (documented divergence): APOC re-binds outer variables
     per row; here the inner statement uses ``UNWIND $rows AS r`` to

@@ -1,5 +1,5 @@
 """Storage layer: mutable graph store, dump/load snapshots, CSV import."""
 
-from .store import GraphStore, import_nodes_from_csv, load_csv
+from .store import GraphStore, load_csv
 
-__all__ = ["GraphStore", "import_nodes_from_csv", "load_csv"]
+__all__ = ["GraphStore", "load_csv"]

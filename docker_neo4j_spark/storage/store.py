@@ -31,6 +31,7 @@ import itertools
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..graph import NODE_FIXED_COLS, REL_FIXED_COLS, PropertyGraph
 
@@ -315,20 +316,33 @@ class GraphStore:
                 )
 
     def stage_indexed(self, df: DataFrame) -> tuple[DataFrame, int]:
-        """Pin ``df`` and attach a dense 0..n-1 ``_idx`` column; returns
+        """Attach a dense 0..n-1 ``_idx`` column to ``df``; returns
         (frame, n). The id-assignment backbone for every set-based write.
 
-        DataFrame-only (no ``.rdd`` — zipWithIndex would round-trip every
-        row through Python serialization on the bulk-ingest path):
-        ``monotonically_increasing_id`` packs (partition, row-in-partition)
-        into one long (partition id in the upper bits, consecutive record
-        number in the lower 33 — documented layout); an eager
-        localCheckpoint pins partitioning so ids are stable across
-        re-evaluation; per-partition counts (one row per partition, the
-        same tiny exchange zipWithIndex does JVM-side) become cumulative
-        offsets broadcast back; ``_idx = offset[pid] + row``. No global
+        A frame whose optimized plan is a ``LocalRelation`` (driver-held
+        rows, such as an ``UNWIND $rows`` parameter frame) is numbered on
+        the driver: collecting it runs no Spark job, and the result is a
+        one-partition local frame.
+
+        Any other frame stays DataFrame-only (no ``.rdd`` — zipWithIndex
+        would round-trip every row through Python serialization on the
+        bulk-ingest path): ``monotonically_increasing_id`` packs
+        (partition, row-in-partition) into one long (partition id in the
+        upper bits, consecutive record number in the lower 33 — documented
+        layout); a localCheckpoint pins partitioning so ids are stable
+        across re-evaluation; per-partition counts (one row per partition,
+        the same tiny exchange zipWithIndex does JVM-side) become
+        cumulative offsets folded into ``_idx`` as a literal ``CASE`` on
+        the partition id, so the store's plan gains no join. No global
         sort, no full-data shuffle, no Python hop."""
-        mask = (1 << 33) - 1
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if plan.getClass().getSimpleName() == "LocalRelation":
+            rows = [
+                {**r.asDict(recursive=True), "_idx": i}
+                for i, r in enumerate(df.collect())
+            ]
+            schema = StructType([*df.schema.fields, StructField("_idx", LongType(), False)])
+            return local_df(self.spark, rows, schema).coalesce(1), len(rows)
         # LAZY localCheckpoint: the offsets collect below materializes the
         # checkpoint and computes the per-partition counts in ONE job
         # (eager=True spent a separate job per write statement — r14,
@@ -337,26 +351,20 @@ class GraphStore:
         pinned = df.withColumn(
             "_mid", F.monotonically_increasing_id()
         ).localCheckpoint(eager=False)
+        pid = F.shiftright("_mid", 33)
         counts = sorted(
             (r["_pid"], r["_cnt"])
-            for r in pinned.groupBy(
-                F.shiftright("_mid", 33).alias("_pid")
-            ).agg(F.count(F.lit(1)).alias("_cnt")).collect()
+            for r in pinned.groupBy(pid.alias("_pid"))
+            .agg(F.count(F.lit(1)).alias("_cnt"))
+            .collect()
         )
-        n, offsets = 0, []
-        for pid, cnt in counts:
-            offsets.append((pid, n))
+        n, off = 0, None
+        for p, cnt in counts:
+            off = (F.when if off is None else off.when)(pid == p, F.lit(n))
             n += cnt
-        off_df = local_df(self.spark, offsets or [], "_pid long, _off long")
-        indexed = (
-            pinned.withColumn("_pid", F.shiftright("_mid", 33))
-            .join(F.broadcast(off_df), "_pid")
-            .select(
-                *df.columns,
-                (F.col("_off") + F.col("_mid").bitwiseAND(F.lit(mask))).alias("_idx"),
-            )
-        )
-        return indexed, n
+        row = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+        idx = row if off is None else off + row
+        return pinned.select(*df.columns, idx.alias("_idx")), n
 
     # every Nth frame swap checkpoints the union chain: without this a
     # long interactive session's plan grows one Union generation per
@@ -454,11 +462,10 @@ class GraphStore:
         """``MERGE (n:Label {key props})`` — create iff no match; returns id.
 
         SINGLETON path: one Spark job (``take(1)``) per call — correct but
-        O(jobs) in a driver-side loop. Batch merges belong on
-        ``merge_nodes`` (one left-anti join for the whole batch); the
-        Cypher façade already routes ``UNWIND $rows … MERGE`` there
-        (``cypher/session.py:_try_batch_unwind_merge``), so this path is
-        for genuinely one-off upserts, not ingest loops."""
+        O(jobs) in a driver-side loop. Batch merges belong on the Cypher
+        façade: ``UNWIND $rows AS r MERGE …`` is one set-based MERGE over
+        the parameter's rows (``cypher/session.py:_merge_from_binding``),
+        so this path is for genuinely one-off upserts, not ingest loops."""
         for k, v in key_props.items():
             if v is None:
                 # Neo4j refuses null MERGE keys — a null never equals
@@ -503,102 +510,6 @@ class GraphStore:
         """``MATCH (n:Label {match}) REMOVE n.k`` — null out the property
         on matching rows only (the column itself stays for other labels)."""
         self.set_props(label, match_props, {k: None for k in prop_names})
-
-    def merge_rel(self, rel_type: str, src: int, dst: int, props: dict | None = None) -> int:
-        """``MERGE (a)-[:TYPE]->(b)`` for known endpoints — create iff no
-        rel of this type already connects them; returns the rel id."""
-        existing = (
-            self.graph.rels.where(
-                (F.col("type") == rel_type) & (F.col("src") == src) & (F.col("dst") == dst)
-            )
-            .select("id")
-            .take(1)
-        )
-        if existing:
-            return existing[0]["id"]
-        return self.create_rels(rel_type, [(src, dst)], [props or {}])[0]
-
-    def merge_nodes(self, label: str, df: DataFrame, key_cols: list[str]) -> int:
-        """Bulk ``MERGE (n:Label {keys})`` — the documented batch path
-        (one left-anti join + one append, never O(n) driver round-trips).
-
-        Inserts one node per distinct ``key_cols`` row of ``df`` that has no
-        existing node with this label and key values; returns the number
-        inserted. Extra columns of ``df`` become properties of new nodes.
-        """
-        df = df.toDF(*[esc_prop(c) for c in df.columns])
-        key_cols = [esc_prop(k) for k in key_cols]
-        existing = self.match_nodes(label)
-        for k in key_cols:
-            # Neo4j refuses null MERGE keys (a null matches nothing and
-            # creates an unfindable node). Zero extra jobs: the guard
-            # raises inside stage_indexed's existing materialization, and
-            # the session error boundary translates USER_RAISED_EXCEPTION
-            kt = dict(df.dtypes)[k]
-            err = F.raise_error(
-                F.lit(
-                    f"Cannot merge the following node because of "
-                    f"null property value for {unesc_prop(k)!r}"
-                )
-            )
-            if kt != "void":
-                err = err.cast(kt)
-            df = df.withColumn(
-                k, F.when(F.col(k).isNull(), err).otherwise(F.col(k))
-            )
-        fresh = df.dropDuplicates(key_cols)
-        if all(k in existing.columns for k in key_cols):
-            fresh = fresh.join(existing.select(key_cols), key_cols, "left_anti")
-        indexed, n = self.stage_indexed(fresh)
-        if n == 0:
-            return 0
-        base = self.reserve_node_ids(n)
-        self.append_nodes(
-            indexed.select(
-                (F.col("_idx") + F.lit(base)).alias("id"),
-                F.array(F.lit(label)).alias("labels"),
-                *[F.col(c) for c in df.columns],
-            )
-        )
-        return n
-
-    def merge_rels(
-        self, rel_type: str, pairs: DataFrame, key_props: tuple = ()
-    ) -> int:
-        """Bulk ``MERGE (a)-[:TYPE {keys}]->(b)`` over a (src, dst[, key…])
-        frame — insert each distinct key tuple not already present for this
-        type; one left-anti join + one append. ``key_props`` columns of
-        ``pairs`` participate in the match AND become properties of
-        inserted rels (openCypher: rel props in a MERGE pattern are match
-        keys). Returns the number inserted."""
-        # reserved key-prop NAMES (id/type/…) live under escaped store
-        # columns (r13); src/dst in `pairs` are the endpoint ids, never
-        # renamed
-        ren = {k: esc_prop(k) for k in key_props if esc_prop(k) != k}
-        for old_c, new_c in ren.items():
-            pairs = pairs.withColumnRenamed(old_c, new_c)
-        key_props = tuple(esc_prop(k) for k in key_props)
-        keys = ["src", "dst", *key_props]
-        existing = self.graph.rels.where(F.col("type") == rel_type)
-        fresh = pairs.select(*keys).dropDuplicates(keys)
-        if all(k in existing.columns for k in keys):
-            # a key-prop column no rel carries yet ⇒ nothing can match
-            fresh = fresh.join(existing.select(*keys), keys, "left_anti")
-        indexed, n = self.stage_indexed(fresh)
-        if n == 0:
-            return 0
-        base = self.reserve_rel_ids(n)
-        self.append_rels(
-            indexed.select(
-                (F.col("_idx") + F.lit(base)).alias("id"),
-                F.col("src"),
-                F.col("dst"),
-                F.lit(rel_type).alias("type"),
-                *[F.col(k) for k in key_props],
-            )
-        )
-        return n
-
 
     _PY_DTYPES = {bool: "boolean", int: "bigint", float: "double", str: "string"}
 
@@ -942,23 +853,3 @@ def load_csv(
         .csv(path)
     )
 
-
-def import_nodes_from_csv(
-    store: GraphStore, path: str, label: str, **csv_opts
-) -> int:
-    """LOAD CSV → CREATE nodes, fully distributed (no driver collect).
-
-    Ids come from ``stage_indexed`` (per-partition offsets over a
-    contiguous reserved block — one tiny driver-side offset exchange, no
-    Python row hop, no global-sort window that would funnel the whole
-    import through one partition)."""
-    df = load_csv(store.spark, path, **csv_opts)
-    indexed, n = store.stage_indexed(df)
-    base = store.reserve_node_ids(n)
-    new = indexed.select(
-        (F.col("_idx") + F.lit(base)).alias("id"),
-        F.array(F.lit(label)).alias("labels"),
-        *[F.col(c) for c in df.columns],
-    )
-    store._swap(nodes=store._union_missing(store.graph.nodes, new))
-    return n

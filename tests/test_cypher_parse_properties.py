@@ -150,97 +150,3 @@ def test_find_keyword_skips_quotes_and_brackets():
         "a ",
         " b 'OPTIONAL MATCH' c",
     ]
-
-
-# ---- batch-UNWIND write clauses (r9: token-stream port) -------------------
-
-_field = st.from_regex(r"[a-z][a-z0-9_]{0,6}", fullmatch=True)
-_label = st.from_regex(r"[A-Z][A-Za-z0-9_]{0,8}", fullmatch=True)
-# prop values: a row-field reference (r.f) or a literal
-_prop_val = st.one_of(
-    _field.map(lambda f: ("ref", f)),
-    _scalar.map(lambda v: ("lit", v)),
-)
-_batch_props = st.dictionaries(_ident, _prop_val, min_size=1, max_size=5)
-
-
-def _render_batch_props(var: str, props: dict) -> str:
-    parts = []
-    for k, (kind, v) in props.items():
-        parts.append(f"{k}: {var}.{v}" if kind == "ref" else f"{k}: {_render_value(v)}")
-    return "{" + ", ".join(parts) + "}"
-
-
-@given(_batch_props, _label, st.sampled_from(["MERGE", "CREATE"]), st.one_of(st.none(), _ident))
-@settings(max_examples=300, deadline=None)
-def test_batch_node_write_spec_roundtrip(props, label, verb, alias):
-    """UNWIND $rows AS r MERGE/CREATE (n:L {…}) [RETURN count(*) AS a] —
-    the token-stream parser recovers exactly the generated param, var,
-    label, per-key ref/literal split, and count alias (r9: was
-    _BATCH_MERGE_RE/_BATCH_CREATE_RE over PROPS_BODY)."""
-    from docker_neo4j_spark.cypher.session import Session
-
-    tail = f" RETURN count(*) AS {alias}" if alias else ""
-    q = f"UNWIND $rows AS r {verb} (n:{label} {_render_batch_props('r', props)}){tail}"
-    spec = Session._parse_batch_spec(q)
-    assert spec is not None, q
-    assert spec["kind"] == ("merge_node" if verb == "MERGE" else "create_node")
-    assert spec["param"] == "rows" and spec["var"] == "r"
-    assert spec["label"] == label and spec["alias"] == alias
-    got = {k: (("ref", f) if f is not None else ("lit", lit)) for k, f, lit in spec["props"]}
-    assert got == props, q
-
-
-@given(_ident, _label, _ident, _field, st.booleans())
-@settings(max_examples=200, deadline=None)
-def test_batch_delete_spec_roundtrip(nvar, label, key, field, detach):
-    from docker_neo4j_spark.cypher.session import Session
-
-    d = "DETACH " if detach else ""
-    q = f"UNWIND $rows AS r MATCH ({nvar}:{label} {{{key}: r.{field}}}) {d}DELETE {nvar}"
-    spec = Session._parse_batch_spec(q)
-    assert spec is not None, q
-    assert spec["kind"] == "delete" and spec["label"] == label
-    assert spec["key"] == key and spec["field"] == field and spec["detach"] is detach
-    # a mismatched delete variable is NOT the batch shape
-    assert Session._parse_batch_spec(
-        f"UNWIND $rows AS r MATCH ({nvar}:{label} {{{key}: r.{field}}}) DELETE other_x"
-    ) is None
-
-
-@given(_label, _label, _ident, _field, _field, st.one_of(st.none(), _ident))
-@settings(max_examples=200, deadline=None)
-def test_batch_rel_merge_spec_roundtrip(albl, blbl, key, fa, fb, alias):
-    from docker_neo4j_spark.cypher.session import Session
-
-    tail = f" RETURN count(*) AS {alias}" if alias else ""
-    q = (
-        f"UNWIND $rows AS r MATCH (a:{albl} {{{key}: r.{fa}}}), "
-        f"(b:{blbl} {{{key}: r.{fb}}}) MERGE (a)-[:KNOWS]->(b){tail}"
-    )
-    spec = Session._parse_batch_spec(q)
-    assert spec is not None, q
-    assert spec["kind"] == "merge_rel" and spec["rtype"] == "KNOWS"
-    assert spec["a"] == (albl, key, fa) and spec["b"] == (blbl, key, fb)
-    assert spec["alias"] == alias
-    # endpoint variables must match the MATCH anchors
-    assert Session._parse_batch_spec(
-        f"UNWIND $rows AS r MATCH (a:{albl} {{{key}: r.{fa}}}), "
-        f"(b:{blbl} {{{key}: r.{fb}}}) MERGE (b)-[:KNOWS]->(a)"
-    ) is None or spec["a"] != spec["b"]
-
-
-@given(_batch_props, _label)
-@settings(max_examples=100, deadline=None)
-def test_batch_spec_quote_safety(props, label):
-    """Keywords and structural characters inside string literals never
-    change the parsed shape — the regex scanners' historic failure mode."""
-    from docker_neo4j_spark.cypher.session import Session
-
-    props = dict(props)
-    props["hostile"] = ("lit", "MERGE (x:Y {a: 1}) RETURN count(*) AS n")
-    q = f"UNWIND $rows AS r MERGE (n:{label} {_render_batch_props('r', props)})"
-    spec = Session._parse_batch_spec(q)
-    assert spec is not None and spec["label"] == label
-    got = dict((k, (("ref", f) if f is not None else ("lit", lit))) for k, f, lit in spec["props"])
-    assert got["hostile"] == ("lit", "MERGE (x:Y {a: 1}) RETURN count(*) AS n")

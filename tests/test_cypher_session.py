@@ -928,6 +928,89 @@ def test_batch_unwind_delete(session):
         )
 
 
+@pytest.mark.parametrize(
+    "q, n",
+    [
+        ("WITH 1 AS x MATCH (a:CmA), (b:CmB) RETURN count(*) AS c", 6),
+        ("MATCH (a:CmA {k: 1}) MATCH (b:CmB), (c:CmA) RETURN count(*) AS c", 6),
+        ("UNWIND [1, 2] AS x MATCH (a:CmA {k: x}), (b:CmB {k: x}) RETURN count(*) AS c", 2),
+    ],
+)
+def test_comma_patterns_in_later_match(session, q, n):
+    """A MATCH after the first clause binds comma-separated pattern groups
+    as the first one does."""
+    session.run("UNWIND [1, 2, 3] AS k CREATE (:CmA {k: k})")
+    session.run("UNWIND [1, 2] AS k CREATE (:CmB {k: k})")
+    assert session.run(q).collect()[0]["c"] == n
+
+
+def test_parameters_substitute_only_parameter_tokens(session):
+    """``$name`` inside a string literal is text, not a parameter."""
+    r = session.run(
+        "RETURN $s AS s, '$s' AS lit, $sx AS sx", {"s": "x", "sx": "$s"}
+    ).collect()
+    assert [tuple(x) for x in r] == [("x", "$s", "$s")]
+
+
+@pytest.mark.parametrize(
+    "q, rows, check, want",
+    [
+        (
+            "UNWIND $rows AS r MERGE (n:Ut {k: r.k}) SET n.v = r.v",
+            [{"k": 3, "v": "c"}, {"k": 4, "v": "d"}],
+            "MATCH (n:Ut) RETURN n.k AS k, n.v AS v ORDER BY k",
+            [(1, None), (2, None), (3, "c"), (4, "d")],
+        ),
+        (
+            "UNWIND $rows AS r MATCH (a:Ut {k: r.a}), (b:Ut {k: r.b}) "
+            "CREATE (a)-[:UR {w: r.w}]->(b)",
+            [{"a": 1, "b": 2, "w": 0.5}, {"a": 2, "b": 3, "w": 1.5}, {"a": 1, "b": 9, "w": 9.0}],
+            "MATCH (a:Ut)-[r:UR]->(b:Ut) RETURN a.k AS a, r.w AS w, b.k AS b ORDER BY a",
+            [(1, 0.5, 2), (2, 1.5, 3)],
+        ),
+        (
+            "UNWIND $rows AS r MATCH (n:Ut {k: r.k}) SET n.v = r.k * 10",
+            [{"k": 1}, {"k": 3}, {"k": 7}],
+            "MATCH (n:Ut) RETURN n.k AS k, n.v AS v ORDER BY k",
+            [(1, 10), (2, None), (3, 30)],
+        ),
+        (
+            "UNWIND $rows AS r MATCH (n:Ut {k: r.k}) DELETE n",
+            [{"k": 2}],
+            "MATCH (n:Ut) RETURN n.k AS k ORDER BY k",
+            [(1,), (3,)],
+        ),
+    ],
+    ids=["merge-set", "match-create-rel", "match-set", "match-delete"],
+)
+def test_unwind_rows_write_tails(session, q, rows, check, want):
+    """``UNWIND $rows AS r`` starts the statement from the parameter's rows;
+    any write clause and tail runs over them."""
+    session.run("UNWIND [1, 2, 3] AS k CREATE (:Ut {k: k})")
+    session.run(q, {"rows": rows})
+    assert [tuple(x) for x in session.run(check).collect()] == want
+
+
+def test_unwind_rows_hostile_string_and_null_key(session):
+    """Parameter rows are data: a value that reads as Cypher is stored as
+    it is, and a null MERGE key raises before anything is written."""
+    hostile = "MERGE (x:Y {a: 1}) RETURN count(*) AS n"
+    out = session.run(
+        "UNWIND $rows AS r MERGE (n:Hs {s: r.s}) RETURN count(*) AS n",
+        {"rows": [{"s": hostile}, {"s": "it's $rows"}, {"s": hostile}]},
+    ).collect()
+    assert out[0]["n"] == 3
+    got = session.run("MATCH (n:Hs) RETURN n.s AS s ORDER BY s").collect()
+    assert [r["s"] for r in got] == [hostile, "it's $rows"]
+    assert session.run("MATCH (y:Y) RETURN count(*) AS n").collect()[0]["n"] == 0
+    with pytest.raises(Exception, match="null property value"):
+        session.run(
+            "UNWIND $rows AS r MERGE (n:Hs {s: r.s})",
+            {"rows": [{"s": "new"}, {"s": None}]},
+        )
+    assert session.run("MATCH (n:Hs) RETURN count(*) AS n").collect()[0]["n"] == 2
+
+
 def test_explain_returns_physical_plan_rows(spark):
     from docker_neo4j_spark.cypher.session import Session
 

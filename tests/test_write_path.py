@@ -9,7 +9,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from docker_neo4j_spark.storage.store import GraphStore, import_nodes_from_csv, load_csv
+from docker_neo4j_spark.cypher.session import Session
+from docker_neo4j_spark.storage.store import GraphStore, load_csv
 
 
 def _dog_names(store: GraphStore) -> str:
@@ -168,8 +169,10 @@ def test_load_csv_import(spark, tmp_path):
     assert df.count() == 3 and set(df.columns) == {"name", "age"}
 
     store = GraphStore(spark)
-    n = import_nodes_from_csv(store, str(p), "dog")
-    assert n == 3
+    Session(spark, store=store).run(
+        f"LOAD CSV WITH HEADERS FROM 'file://{p}' AS row "
+        "CREATE (:dog {name: row.name, age: toInteger(row.age)})"
+    )
     assert store.match_nodes("dog").count() == 3
     oldest = store.match_nodes("dog").orderBy(F.desc("age")).first()
     assert oldest["name"] == "Arne"
@@ -208,34 +211,71 @@ def test_stage_indexed_dense_ids_no_python_rdd_hop(spark, monkeypatch):
     )
     assert n0 == 0 and empty.count() == 0 and "_idx" in empty.columns
     # the full batch-merge write path also stays JVM-side
-    assert store.merge_nodes("dog", df, ["k"]) == 500
+    Session(spark, store=store).run(
+        "UNWIND $rows AS r MERGE (:dog {k: r.k, name: r.name})",
+        {"rows": [{"k": i, "name": f"d{i}"} for i in range(500)]},
+    )
     assert store.match_nodes("dog").count() == 500
 
 
 def test_batch_merge_nodes_and_rels(spark):
+    """``UNWIND $rows`` MERGE of nodes and of relationships: a key repeated
+    in one batch merges once, a re-run inserts nothing, and only new keys
+    insert."""
     store = GraphStore(spark)
-    df = spark.createDataFrame(
-        [("Arne", 7), ("Bosse", 3), ("Arne", 7)], "name string, age long"
-    )
-    assert store.merge_nodes("dog", df, ["name"]) == 2  # input deduped
-    assert store.merge_nodes("dog", df, ["name"]) == 0  # idempotent
-    assert store.match_nodes("dog").count() == 2
+    s = Session(spark, store=store)
+    merge = "UNWIND $rows AS r MERGE (d:dog {name: r.name}) ON CREATE SET d.age = r.age"
+    rows = [{"name": "Arne", "age": 7}, {"name": "Bosse", "age": 3}, {"name": "Arne", "age": 7}]
+    s.run(merge, {"rows": rows})
+    assert store.match_nodes("dog").count() == 2  # input deduped
+    s.run(merge, {"rows": rows})
+    assert store.match_nodes("dog").count() == 2  # idempotent
 
     # new keys insert, existing keys don't
-    df2 = spark.createDataFrame([("Arne", 7), ("Cleo", 1)], "name string, age long")
-    assert store.merge_nodes("dog", df2, ["name"]) == 1
-    assert store.match_nodes("dog").count() == 3
+    s.run(merge, {"rows": [{"name": "Arne", "age": 8}, {"name": "Cleo", "age": 1}]})
+    ages = {r["name"]: r["age"] for r in store.match_nodes("dog").collect()}
+    assert ages == {"Arne": 7, "Bosse": 3, "Cleo": 1}
 
-    ids = {r["name"]: r["id"] for r in store.match_nodes("dog").collect()}
-    pairs = spark.createDataFrame(
-        [(ids["Arne"], ids["Bosse"]), (ids["Arne"], ids["Bosse"]), (ids["Bosse"], ids["Cleo"])],
-        "src long, dst long",
+    rel = (
+        "UNWIND $rows AS r MATCH (a:dog {name: r.a}), (b:dog {name: r.b}) "
+        "MERGE (a)-[:SNIFFS]->(b)"
     )
-    assert store.merge_rels("SNIFFS", pairs) == 2
-    assert store.merge_rels("SNIFFS", pairs) == 0
+    pairs = [
+        {"a": "Arne", "b": "Bosse"}, {"a": "Arne", "b": "Bosse"}, {"a": "Bosse", "b": "Cleo"},
+    ]
+    s.run(rel, {"rows": pairs})
+    assert store.graph.rels.count() == 2
+    s.run(rel, {"rows": pairs})
     assert store.graph.rels.count() == 2
     # rel ids unique
     assert store.graph.rels.select("id").distinct().count() == 2
+
+
+def test_unwind_rows_create_runs_no_spark_job(spark):
+    """``UNWIND $rows AS r CREATE …`` starts from the parameter's rows, a
+    LocalRelation, which ``stage_indexed`` numbers on the driver: the
+    write runs no Spark job."""
+    from docker_neo4j_spark.localframe import local_df
+
+    store = GraphStore(spark)
+    s = Session(spark, store=store)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-unwind-rows-create", "")
+    try:
+        s.run(
+            "UNWIND $rows AS r CREATE (:E {k: r.k})",
+            {"rows": [{"k": i} for i in range(25)]},
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("test-unwind-rows-create")) == 0
+    assert sorted(r["k"] for r in store.match_nodes("E").collect()) == list(range(25))
+    assert store.match_nodes("E").select("id").distinct().count() == 25
+    # a local frame is numbered densely into one partition
+    indexed, n = store.stage_indexed(local_df(spark, [(i,) for i in range(7)], "k long"))
+    assert n == 7 and indexed.rdd.getNumPartitions() == 1
+    assert sorted((r["k"], r["_idx"]) for r in indexed.collect()) == [(i, i) for i in range(7)]
 
 
 def test_set_based_create_from_match(spark):
@@ -270,13 +310,18 @@ def test_remove_props_and_merge_rel(spark):
     ages = {r["name"]: r["age"] for r in store.match_nodes("dog").collect()}
     assert ages == {"Arne": None, "Bosse": 3}
 
-    # MERGE rel: second call is a no-op returning the same id
-    r1 = store.merge_rel("SNIFFS", a, b)
-    r2 = store.merge_rel("SNIFFS", a, b)
+    # MERGE rel: a second run matches the first run's relationship
+    s = Session(spark, store=store)
+    merge = (
+        "MATCH (a:dog {name: 'Arne'}), (b:dog {name: 'Bosse'}) "
+        "MERGE (a)-[r:%s]->(b) RETURN id(r) AS rid"
+    )
+    r1 = s.run(merge % "SNIFFS").collect()[0].rid
+    r2 = s.run(merge % "SNIFFS").collect()[0].rid
     assert r1 == r2
     assert store.graph.rels.count() == 1
     # different type between same endpoints is a new rel
-    r3 = store.merge_rel("LIKES", a, b)
+    r3 = s.run(merge % "LIKES").collect()[0].rid
     assert r3 != r1
     assert store.graph.rels.count() == 2
 
@@ -313,21 +358,28 @@ from hypothesis import strategies as st
     b2=st.lists(st.integers(min_value=0, max_value=30), min_size=1, max_size=40),
 )
 def test_merge_nodes_batch_laws(spark, b1, b2):
-    """MERGE-batch laws for any pair of key batches: |nodes| equals the
-    distinct key union, insert counts decompose as |K1| + |K2∖K1|, and
+    """MERGE-batch laws for any pair of ``UNWIND $rows`` key batches: each
+    returns one row per element, |nodes| grows to |K1| and then to the
+    distinct key union (inserts decompose as |K1| + |K2∖K1|), and
     re-merging either batch inserts nothing (idempotence)."""
-    from docker_neo4j_spark.storage.store import GraphStore
+    s = Session(spark, store=GraphStore(spark))
 
-    store = GraphStore(spark)
-    df1 = spark.createDataFrame([(k,) for k in b1], "ck long")
-    df2 = spark.createDataFrame([(k,) for k in b2], "ck long")
-    n1 = store.merge_nodes("T", df1, ["ck"])
-    n2 = store.merge_nodes("T", df2, ["ck"])
-    assert n1 == len(set(b1))
-    assert n2 == len(set(b2) - set(b1))
-    assert store.match_nodes("T").count() == len(set(b1) | set(b2))
-    assert store.merge_nodes("T", df1, ["ck"]) == 0
-    assert store.merge_nodes("T", df2, ["ck"]) == 0
+    def merge(keys):
+        return s.run(
+            "UNWIND $rows AS r MERGE (t:T {ck: r.ck}) RETURN count(*) AS n",
+            {"rows": [{"ck": k} for k in keys]},
+        ).collect()[0].n
+
+    def size():
+        return s.run("MATCH (t:T) RETURN count(*) AS n").collect()[0].n
+
+    assert merge(b1) == len(b1)
+    assert size() == len(set(b1))
+    assert merge(b2) == len(b2)
+    assert size() == len(set(b1) | set(b2))
+    merge(b1)
+    merge(b2)
+    assert size() == len(set(b1) | set(b2))
 
 
 def test_index_ddl_create_show_drop_and_dump_clustering(spark, tmp_path):
@@ -466,7 +518,7 @@ def test_per_row_expression_props_in_bulk_create(spark):
 def test_match_merge_rel_tail_idempotent(spark):
     """r11: MATCH … MERGE (a)-[:T]->(b) — get-or-create an edge between
     matched anchors (the reference's DatabaseIO graph-building shape),
-    idempotent on re-run, one merge_rels batch per statement."""
+    idempotent on re-run, one set-based MERGE per statement."""
     from docker_neo4j_spark.cypher.session import Session
 
     s = Session(spark)
@@ -520,7 +572,7 @@ def test_match_merge_rel_key_props_distinct(spark):
 
 def test_match_merge_node_tail(spark):
     """MATCH … MERGE (k:Label {key: expr}) — per-row node get-or-create
-    keyed on computed values, one merge_nodes batch."""
+    keyed on computed values, one set-based MERGE per statement."""
     from docker_neo4j_spark.cypher.session import Session
 
     s = Session(spark)
